@@ -15,13 +15,15 @@ from pyspark.sql import functions as F
 from osmcoastline_spark import geom
 
 
-def close_antarctica_ring(open_rings: DataFrame, epsg: int) -> tuple[DataFrame, bool]:
-    """Returns (open_rings with the Antarctica ring closed, found_flag)."""
+def antarctica_window():
+    """Detection window of the Antarctica ring: an open ring that starts
+    just east of the antimeridian and ends just west of it, both ends
+    between 77°S and 78°S."""
     first_lon = F.element_at("xs", 1)
     last_lon = F.element_at("xs", -1)
     first_lat = F.element_at("ys", 1)
     last_lat = F.element_at("ys", -1)
-    cond = (
+    return (
         (first_lon > 179.99)
         & (last_lon < -179.99)
         & (first_lat < -77.0)
@@ -29,12 +31,28 @@ def close_antarctica_ring(open_rings: DataFrame, epsg: int) -> tuple[DataFrame, 
         & (last_lat < -77.0)
         & (last_lat > -78.0)
     )
-    matches = open_rings.filter(cond)
-    # min() instead of limit(1).collect(): collect-limit executes as an
-    # ESCALATING sequence of jobs (1 partition, then 4, ...) — on the
-    # common no-Antarctica input that is 3-4 driver-floor-priced jobs to
-    # learn "empty"; the aggregate is always exactly one parallel job
-    target = matches.select(F.min("ring_id")).first()[0]
+
+
+_PROBE = object()
+
+
+def close_antarctica_ring(
+    open_rings: DataFrame, epsg: int, target=_PROBE
+) -> tuple[DataFrame, bool]:
+    """Returns (open_rings with the Antarctica ring closed, found_flag).
+
+    `target` is the Antarctica ring's id, or None when there is none, if
+    the caller already knows it: min(ring_id) over the open rings inside
+    `antarctica_window()`, e.g. observed while materializing them. Without
+    it, one aggregate job finds it."""
+    if target is _PROBE:
+        # min() instead of limit(1).collect(): collect-limit executes as an
+        # ESCALATING sequence of jobs (1 partition, then 4, ...) — on the
+        # common no-Antarctica input that is 3-4 driver-floor-priced jobs to
+        # learn "empty"; the aggregate is always exactly one parallel job
+        target = (
+            open_rings.filter(antarctica_window()).select(F.min("ring_id")).first()[0]
+        )
     if target is None:
         return open_rings, False
 

@@ -207,21 +207,32 @@ def plan_close_rings(endpoints: list[dict], max_distance: float) -> CloseResult:
 
 
 def close_rings(
-    open_rings: DataFrame, max_distance: float, max_driver_endpoints: int = 1_000_000
+    open_rings: DataFrame,
+    max_distance: float,
+    max_driver_endpoints: int = 1_000_000,
+    max_rows: int | None = None,
 ) -> tuple[DataFrame, CloseResult]:
     """Apply R2 to the open rings; returns (rings after closing, CloseResult).
 
     Output rings keep schema ring_id, node_ids, xs, ys, nways, fixed; rings
     that are now closed have first==last node id.
+
+    `max_rows` is a known upper bound on the rows of `open_rings` (the
+    pipeline passes the open-ring count observed at assembly). The
+    endpoint collect is checked against `max_driver_endpoints` BEFORE any
+    row moves to the driver: a bound within the cap proves the collect
+    safe at no cost; otherwise (or with no bound) one bounded probe,
+    limit(cap + 1).count(), decides and an input over the cap raises.
     """
     spark = open_rings.sparkSession
-    # ONE endpoint pass: the old count()-then-collect() evaluated the
-    # endpoint projection twice (two driver-floor jobs); collecting first
-    # and checking len() gives the same loud-fail for one pass. The rows
-    # are endpoint-only (~60 B/ring); a pathological input beyond the cap
-    # still fails loudly BEFORE driver memory is at risk because collect()
-    # is bounded by spark.driver.maxResultSize (default 1 GB ≈ 16M
-    # endpoint rows >> the 1M cap) with its own named error.
+    if max_rows is None or max_rows > max_driver_endpoints:
+        n = open_rings.limit(max_driver_endpoints + 1).count()
+        if n > max_driver_endpoints:
+            raise RuntimeError(
+                f"more than max_driver_endpoints={max_driver_endpoints} open "
+                "rings; input data quality is pathological"
+            )
+    # endpoint-only rows (~60 B/ring), at most the cap checked above
     rows = open_rings.select(
         "ring_id",
         F.element_at("node_ids", 1).alias("first_id"),
@@ -232,14 +243,8 @@ def close_rings(
         F.element_at("ys", -1).alias("ly"),
         "nways",
     ).collect()
-    n = len(rows)
-    if n == 0:
+    if not rows:
         return open_rings, CloseResult([], [], [], [], 0, 0)
-    if n > max_driver_endpoints:
-        raise RuntimeError(
-            f"{n} open rings exceed max_driver_endpoints={max_driver_endpoints}; "
-            "input data quality is pathological"
-        )
 
     eps = [
         {

@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.cells import CELL_STRIDE, cell_id_expr
+from osmcoastline_spark.util import materialize
 
 DEFAULT_CELL_DEG = 1.0
 
@@ -178,26 +179,26 @@ class PolygonizeResult:
 def polygonize(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> PolygonizeResult:
     """Closed rings (npoints>3, OSM orientation) → polygons with holes."""
     spark = rings.sparkSession
-    rev = rings.select(
-        "ring_id",
-        F.reverse("xs").alias("xs"),
-        F.reverse("ys").alias("ys"),
-        "nways",
-        "fixed",
-    ).withColumn("area2", _area2_expr("xs", "ys")).localCheckpoint(eager=True)
-
-    # one aggregate over the fresh checkpoint decides the shape of the rest
-    # of the plan: with ZERO hole candidates (the common coastline case —
-    # islands are simple CCW rings) the containment join, the hole-in-hole
-    # check, the hole aggregation and the second full-array checkpoint all
-    # run over empty inputs, ~8 driver-floor jobs of nothing. Branching on
-    # the count produces identical output (every ring is a shell polygon
-    # with NULL hole columns and bad=false) for one small job.
-    cnt = rev.agg(
-        F.count("*").alias("nt"),
-        F.sum((F.col("area2") >= 0).cast("long")).alias("nh"),
-    ).first()
-    n_total, n_holes = int(cnt["nt"]), int(cnt["nh"] or 0)
+    # the shell and hole-candidate counts, observed while the checkpoint
+    # is written, decide the shape of the rest of the plan: with ZERO hole
+    # candidates (the common coastline case — islands are simple CCW
+    # rings) the containment join, the hole-in-hole check, the hole
+    # aggregation and the second full-array checkpoint all run over empty
+    # inputs, ~8 driver-floor jobs of nothing. Branching on the count
+    # produces identical output (every ring is a shell polygon with NULL
+    # hole columns and bad=false).
+    rev, seen = materialize(
+        rings.select(
+            "ring_id",
+            F.reverse("xs").alias("xs"),
+            F.reverse("ys").alias("ys"),
+            "nways",
+            "fixed",
+        ).withColumn("area2", _area2_expr("xs", "ys")),
+        n_shells=F.count_if(F.col("area2") < 0),
+        n_holes=F.count_if(F.col("area2") >= 0),
+    )
+    n_shells, n_holes = seen["n_shells"], seen["n_holes"]
 
     shells = rev.filter(F.col("area2") < 0)  # CW after reversal = outer
     hole_cands = rev.filter(F.col("area2") >= 0)
@@ -213,7 +214,7 @@ def polygonize(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> Polygoni
             .withColumn("hole_ring_ids", F.lit(None).cast("array<long>"))
             .withColumn("bad", F.lit(False))
         )
-        return _polygonize_result(spark, all_polys, n_bad=0, n_good=n_total)
+        return _polygonize_result(spark, all_polys, n_bad=0, n_good=n_shells)
 
     hole_pts = hole_cands.select(
         F.col("ring_id").alias("point_id"),
@@ -307,20 +308,15 @@ def polygonize(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> Polygoni
     )
 
     # ONE materialization point: everything above (containment join, hole
-    # aggregation, validity check) executes exactly once; the bad/good
-    # counts and all downstream consumers read the checkpoint
-    all_polys = (
-        shell_polys.select(*orphan_polys.columns)
-        .unionByName(orphan_polys)
-        .localCheckpoint(eager=True)
+    # aggregation, validity check) executes exactly once, the bad/good
+    # counts are observed in the same job, and all downstream consumers
+    # read the checkpoint
+    all_polys, seen = materialize(
+        shell_polys.select(*orphan_polys.columns).unionByName(orphan_polys),
+        n_bad=F.count_if(F.col("bad")),
+        n_good=F.count_if(~F.col("bad")),
     )
-
-    # one aggregate job for both counts (reads the fresh checkpoint)
-    agg = all_polys.agg(
-        F.sum(F.col("bad").cast("long")).alias("nb"), F.count("*").alias("nt")
-    ).first()
-    n_bad = int(agg["nb"] or 0)
-    n_good = int(agg["nt"]) - n_bad
+    n_bad, n_good = seen["n_bad"], seen["n_good"]
     return _polygonize_result(spark, all_polys, n_bad=n_bad, n_good=n_good)
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.operators.intersections import ring_segments, ring_self_intersections
+from osmcoastline_spark.util import materialize
 
 # rings larger than this are dropped un-repaired (the in-batch crossing
 # search is O(n²) bbox-filtered; genuinely invalid rings are data-error
@@ -219,16 +220,13 @@ def buffer0_triage(
         .unionByName(crossing_ids)
         .distinct()
     )
-    # checkpoint-then-count: the id set is tiny (usually empty) while `rings`
-    # carries full coordinate arrays — deciding emptiness with one small job
-    # avoids shuffling every array through the anti-join + an empty Arrow
-    # stage in the clean case. Checkpointing BEFORE the count (round-5
-    # ADVICE) means the dirty path doesn't run the flag/crossing DAG a
-    # second time for the broadcast; the count on the checkpointed RDD is
-    # an in-memory scan of a handful of rows.
-    flagged_ids = flagged_ids.localCheckpoint(eager=True)
-    n_flagged = flagged_ids.count()
-    if n_flagged == 0:
+    # the id set is tiny (usually empty) while `rings` carries full
+    # coordinate arrays: counting it while it is checkpointed decides
+    # emptiness for free, so the clean case never shuffles every array
+    # through the anti-join + an empty Arrow stage, and the dirty path
+    # broadcasts the checkpoint instead of re-running the flag/crossing DAG
+    flagged_ids, seen = materialize(flagged_ids, n=F.count(F.lit(1)))
+    if seen["n"] == 0:
         return rings
     flagged_ids = F.broadcast(flagged_ids)
     clean = rings.join(flagged_ids, "ring_id", "left_anti")
@@ -267,11 +265,49 @@ def buffer0_triage(
     return clean.select(*cols).unionByName(repaired)
 
 
+def _shell_flags():
+    """(closed, base_flag) Columns over shell_x/shell_y: whether the shell
+    repeats its first vertex at the end, and whether it is invalid by a
+    column-level predicate (repeated vertex or zero area)."""
+    from osmcoastline_spark.operators.polygonize import _area2_expr
+
+    closed = (
+        F.element_at("shell_x", 1) == F.element_at("shell_x", -1)
+    ) & (F.element_at("shell_y", 1) == F.element_at("shell_y", -1))
+    pts = F.arrays_zip("shell_x", "shell_y")
+    degenerate = F.size("shell_x") != F.size(F.array_distinct(pts)) + F.when(
+        closed, F.lit(1)
+    ).otherwise(F.lit(0))
+    # shoelace needs the wraparound term when the closing vertex is absent
+    wrap = (
+        F.element_at("shell_x", -1) * F.element_at("shell_y", 1)
+        - F.element_at("shell_x", 1) * F.element_at("shell_y", -1)
+    )
+    area2 = _area2_expr("shell_x", "shell_y") + F.when(
+        closed, F.lit(0.0)
+    ).otherwise(wrap)
+    return closed, degenerate | (area2 == 0.0)
+
+
+def check_counts(suspect_col: str) -> dict:
+    """Per-row long Columns whose sums over the polygons are the two
+    numbers `check_polygons(..., suspect_col, counts=(nb, ns))` takes:
+    `nb` = rows invalid by a column-level predicate, `ns` = the other
+    rows flagged by `suspect_col`. A producer that materializes the
+    polygons can sum them in the same job (split_polygons' `observe`)."""
+    _closed, base_flag = _shell_flags()
+    return {
+        "nb": base_flag.cast("long"),
+        "ns": (F.col(suspect_col) & ~base_flag).cast("long"),
+    }
+
+
 def check_polygons(
     polys: DataFrame,
     cell_deg: float = 0.5,
     suspect_col: str | None = None,
     crossing_scan: bool = True,
+    counts: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, int]:
     """Post-split validity pass (reference src/coastline_polygons.cpp:444-467
     check_polygons, called from src/osmcoastline.cpp:398-399 AFTER the
@@ -295,40 +331,27 @@ def check_polygons(
     by construction (see geom.cut_ring_checked), so the distributed
     crossing kernel only needs to run over rows where the column is true —
     in the common all-clean case this whole pass is ONE small aggregate
-    job. Without it, `crossing_scan` toggles the full kernel over every
-    row (exhaustive mode, used by unit tests and the no-split pipeline
-    branch where inputs are already triage-validated).
+    job, or none when the caller passes `counts` = (nb, ns), the sums of
+    `check_counts(suspect_col)` over `polys` (the pipeline observes them
+    on split's round checkpoints). Without `suspect_col`, `crossing_scan`
+    toggles the full kernel over every row (exhaustive mode, used by unit
+    tests and the no-split pipeline branch where inputs are already
+    triage-validated).
 
     Returns (checked_polys, warning_count); all input columns preserved.
     """
-    from osmcoastline_spark.operators.polygonize import _area2_expr
-
-    closed = (
-        F.element_at("shell_x", 1) == F.element_at("shell_x", -1)
-    ) & (F.element_at("shell_y", 1) == F.element_at("shell_y", -1))
-    pts = F.arrays_zip("shell_x", "shell_y")
-    degenerate = F.size("shell_x") != F.size(F.array_distinct(pts)) + F.when(
-        closed, F.lit(1)
-    ).otherwise(F.lit(0))
-    # shoelace needs the wraparound term when the closing vertex is absent
-    wrap = (
-        F.element_at("shell_x", -1) * F.element_at("shell_y", 1)
-        - F.element_at("shell_x", 1) * F.element_at("shell_y", -1)
-    )
-    area2 = _area2_expr("shell_x", "shell_y") + F.when(
-        closed, F.lit(0.0)
-    ).otherwise(wrap)
-    base_flag = degenerate | (area2 == 0.0)
+    closed, base_flag = _shell_flags()
 
     cross_src = None
     n_base = None
     if suspect_col is not None:
         needs_kernel = F.col(suspect_col) & ~base_flag
-        agg = polys.agg(
-            F.sum(base_flag.cast("long")).alias("nb"),
-            F.sum(needs_kernel.cast("long")).alias("ns"),
-        ).collect()[0]
-        n_base, n_susp = int(agg["nb"] or 0), int(agg["ns"] or 0)
+        if counts is None:
+            agg = polys.agg(
+                *[F.sum(c).alias(k) for k, c in check_counts(suspect_col).items()]
+            ).collect()[0]
+            counts = agg["nb"], agg["ns"]
+        n_base, n_susp = int(counts[0] or 0), int(counts[1] or 0)
         if n_base == 0 and n_susp == 0:
             return polys, 0
         if n_susp:
@@ -356,13 +379,12 @@ def check_polygons(
             .select(F.col("ring_id").alias("poly_id"))
             .distinct()
         )
-        flagged_ids = (
-            base_ids.unionByName(crossing_ids).distinct().localCheckpoint(eager=True)
+        flagged_ids, seen = materialize(
+            base_ids.unionByName(crossing_ids).distinct(), n=F.count(F.lit(1))
         )
-        warnings = flagged_ids.count()
     else:
-        flagged_ids = base_ids.localCheckpoint(eager=True)
-        warnings = n_base if n_base is not None else flagged_ids.count()
+        flagged_ids, seen = materialize(base_ids, n=F.count(F.lit(1)))
+    warnings = seen["n"]
     if warnings == 0:
         return polys, 0
 

@@ -25,9 +25,12 @@ Iceberg-snapshot-per-round checkpoint in production — see sinks).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from osmcoastline_spark import util
+
 
 def _closed():
     return F.element_at("node_ids", 1) == F.element_at("node_ids", -1)
@@ -177,9 +180,15 @@ def assemble_rings(
     assume_materialized: bool = False,
     materialize: bool = True,
     max_chains_hint: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+    observe: dict[str, Column] | None = None,
+) -> tuple:
     """Returns (closed_rings, open_rings) with schema
     ring_id, node_ids, xs, ys, nways, fixed, lead.
+
+    `observe` ({name: aggregate Column}) is computed over the merged
+    chains (every ring that was open in `ways_loc`, after assembly) in
+    the same job as their checkpoint; the call then returns
+    (closed_rings, open_rings, {name: value}). Needs `materialize`.
 
     driver_threshold default (2M, raised from 200k in round 5): the
     sequential finish moves only (ring_id, first, last) triples — ~24
@@ -252,11 +261,12 @@ def assemble_rings(
     hint_ok = (
         max_chains_hint is not None and max_chains_hint <= driver_threshold
     )
+    n_known = None  # open-chain count of `ep`, when a checkpoint observed it
     for rnd in range(max_rounds):
         if hint_ok and rnd == 0:
             n_open = None
         else:
-            n_open = ep.count()
+            n_open = n_known if n_known is not None else ep.count()
             if n_open == 0:
                 break
         if n_open is None or n_open <= driver_threshold:
@@ -298,13 +308,19 @@ def assemble_rings(
             *[F.col(c).alias(f"b_{c}") for c in ep_cols],
             (coin == 1).alias("b_coin"),
         )
-        pairs_all = heads_all.join(
-            tails_all, heads_all.a_last_node == tails_all.b_first_node
-        ).filter(F.col("a_ring_id") != F.col("b_ring_id")).localCheckpoint(eager=True)
-        if pairs_all.isEmpty():
+        mate = F.col("a_coin") & F.col("b_coin")
+        pairs_all, seen = util.materialize(
+            heads_all.join(
+                tails_all, heads_all.a_last_node == tails_all.b_first_node
+            ).filter(F.col("a_ring_id") != F.col("b_ring_id")),
+            n_pairs=F.count(F.lit(1)),
+            n_mates=F.count_if(mate),
+        )
+        if seen["n_pairs"] == 0:
             break
-        pairs = pairs_all.filter(F.col("a_coin") & F.col("b_coin"))
-        if pairs.isEmpty():
+        pairs = pairs_all.filter(mate)
+        if seen["n_mates"] == 0:
+            n_known = n_open  # ep is unchanged
             continue
 
         merged = pairs.select(
@@ -317,8 +333,12 @@ def assemble_rings(
             pairs.select(F.col("b_ring_id").alias("ring_id"))
         )
         ep = ep.join(consumed, "ring_id", "left_anti").select(*ep_cols).unionByName(merged)
+        n_known = None
         if (rnd + 1) % checkpoint_every == 0:
-            ep = ep.localCheckpoint(eager=True)
+            ep, seen = util.materialize(
+                ep, n_open=F.count_if(F.col("first_node") != F.col("last_node"))
+            )
+            n_known = seen["n_open"]
         closed_groups.append(ep.filter(F.col("first_node") == F.col("last_node")))
         ep = ep.filter(F.col("first_node") != F.col("last_node"))
 
@@ -441,10 +461,16 @@ def assemble_rings(
     # (their size is unbounded).
     bcast = driver_plan is not None and not closed_groups
     merged = apply_merge_plan_df(open_, plan_df, fin_df, broadcast_plan=bcast)
-    if materialize:
+    if observe is not None:
+        if not materialize:
+            raise ValueError("observe needs the merged checkpoint (materialize=True)")
+        merged, seen = util.materialize(merged, **observe)
+    elif materialize:
         merged = merged.localCheckpoint(eager=True)
     closed = closed.unionByName(merged.filter(_closed()))
     open_ = merged.filter(~_closed())
+    if observe is not None:
+        return closed, open_, seen
     return closed, open_
 
 

@@ -26,11 +26,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.schemas import EXTENT_3857, EXTENT_4326
+from osmcoastline_spark.util import materialize
 
 
 from osmcoastline_spark.util import aslist as _aslist
@@ -197,14 +198,20 @@ def split_polygons(
     expand: float = 0.0001,
     epsg: int = 4326,
     max_rounds: int = 48,
-) -> DataFrame:
+    observe: dict[str, Column] | None = None,
+):
     """Iterative R4. Input/Output: POLYGONS_SCHEMA columns (lineage columns
     are preserved on finished rows via pass-through union), plus
     `own_minx/own_miny/own_maxx/own_maxy` — each piece's OWNED region box
     (the recursion's un-expanded midline cuts; ±inf where never cut).
     Sibling pieces overlap by the 2*expand band, but piece ∩ own-box
     regions tile the parent disjointly — even-odd consumers
-    (water_polygons) clip to them."""
+    (water_polygons) clip to them.
+
+    `observe` ({name: per-row numeric Column}) is summed over the output
+    rows with `was_split` set, in the jobs that checkpoint them; the call
+    then returns (polygons, sums), where sums also carries `rows_added`:
+    output rows minus input rows. Both cost no extra Spark job."""
     extent = EXTENT_4326 if epsg == 4326 else EXTENT_3857
     base_cols = [
         "poly_id", "shell_x", "shell_y", "holes_x", "holes_y",
@@ -225,19 +232,40 @@ def split_polygons(
     # re-checkpointing the accumulated set each round would be
     # O(rounds × data) snapshot I/O, the round-1 scaling killer.
     done_parts = [work.filter(F.col("npoints") <= max_points).withColumn("final", F.lit(True))]
-    todo = work.filter(F.col("npoints") > max_points)
+    # the oversized inputs are pinned once: the checkpoint job counts them
+    # (the loop's first emptiness test) and the first round reads only them
+    todo, seen = materialize(
+        work.filter(F.col("npoints") > max_points), n=F.count(F.lit(1))
+    )
+    n_todo = seen["n"]
 
     # levels handled INSIDE one Arrow batch per round: each distributed
-    # round pays an isEmpty probe + a mapInPandas stage + a checkpoint
-    # (~1 s of driver floor at bench scale), so recursing a few levels
-    # in-UDF divides the round count by LEVELS_PER_ROUND. Outputs are
-    # identical to one-level rounds (each level applies the same
-    # _split_one), and skew stays bounded: one task expands a polygon at
-    # most 2^LEVELS_PER_ROUND-fold before the next exchange rebalances.
+    # round pays a mapInPandas stage + a checkpoint (~1 s of driver floor
+    # at bench scale), so recursing a few levels in-UDF divides the round
+    # count by LEVELS_PER_ROUND. Outputs are identical to one-level rounds
+    # (each level applies the same _split_one), and skew stays bounded: one
+    # task expands a polygon at most 2^LEVELS_PER_ROUND-fold before the
+    # next exchange rebalances.
     LEVELS_PER_ROUND = 4
 
+    # every round's checkpoint counts which children are done and which
+    # loop again, and sums `observe` over the cut pieces of each side
+    # (depth > 0, the output's `was_split`): the loop test, the output row
+    # count and the caller's sums all come from the checkpoint jobs
+    is_done = F.col("final") | (F.col("npoints") <= max_points)
+    is_todo = ~F.col("final") & (F.col("npoints") > max_points)
+    observing = observe is not None
+    observe = observe or {}
+    metrics = {"n_done": F.count_if(is_done), "n_todo": F.count_if(is_todo)}
+    for side, pred in (("done", is_done), ("todo", is_todo)):
+        for k, c in observe.items():
+            metrics[f"{side}_{k}"] = F.sum(F.when(pred & (F.col("depth") > 0), c))
+    rows_added = -n_todo
+    sums = dict.fromkeys(observe, 0)
+    todo_sums = dict.fromkeys(observe, 0)
+
     for _ in range(max_rounds):
-        if todo.isEmpty():
+        if n_todo == 0:
             break
 
         def split_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -259,17 +287,27 @@ def split_polygons(
                 if rows:
                     yield pd.DataFrame(rows)
 
-        children = todo.withColumn("final", F.lit(False)).mapInPandas(
-            split_batch, _SPLIT_SCHEMA
-        ).localCheckpoint(eager=True)
-        done_parts.append(
-            children.filter(F.col("final") | (F.col("npoints") <= max_points))
+        children, seen = materialize(
+            todo.withColumn("final", F.lit(False)).mapInPandas(
+                split_batch, _SPLIT_SCHEMA
+            ),
+            **metrics,
         )
-        todo = children.filter(~F.col("final") & (F.col("npoints") > max_points))
+        done_parts.append(children.filter(is_done))
+        todo = children.filter(is_todo)
+        n_todo = seen["n_todo"]
+        rows_added += seen["n_done"]
+        for k in observe:
+            sums[k] += seen[f"done_{k}"] or 0
+            todo_sums[k] = seen[f"todo_{k}"] or 0
 
     # anything still oversized after max_rounds is kept as-is (refuse to loop
     # forever — mirrors the reference's give-up paths)
     done_parts.append(todo.withColumn("final", F.lit(True)))
+    if n_todo:
+        rows_added += n_todo
+        for k in observe:
+            sums[k] += todo_sums[k]
     done = done_parts[0]
     for part in done_parts[1:]:
         done = done.unionByName(part)
@@ -280,4 +318,7 @@ def split_polygons(
     # further: only pieces whose producing cut hit a degeneracy
     # (geom.cut_ring_checked) can be non-simple, so the expensive
     # distributed crossing scan is restricted to those.
-    return done.withColumn("was_split", F.col("depth") > 0).drop("final", "depth")
+    out = done.withColumn("was_split", F.col("depth") > 0).drop("final", "depth")
+    if observing:
+        return out, {**sums, "rows_added": rows_added}
+    return out

@@ -94,6 +94,62 @@ def tile_grid_overlap_4326(
     )
 
 
+OWN_FIELDS = ("own_minx", "own_miny", "own_maxx", "own_maxy")
+
+
+def tile_water(cell: int, tile: tuple, parts, clip_owned: bool) -> dict | None:
+    """tile − land for ONE cell: the output row dict, or None when the
+    tile is fully covered by land. `tile` = (minx, miny, maxx, maxy);
+    `parts` are the land polygons touching it, in a fixed order (hole
+    order and the float area summation follow it), each indexable by
+    field name (dict or Row) with shell_x, shell_y, holes_x, holes_y and,
+    when `clip_owned`, the owned-region box fields (OWN_FIELDS)."""
+    tminx, tminy, tmaxx, tmaxy = tile
+    tile_area2 = 2.0 * (tmaxx - tminx) * (tmaxy - tminy)
+    holes_x, holes_y = [], []
+    covered_area2 = 0.0
+    # split pieces OVERLAP their siblings in the 2*expand seam band
+    # (reference bbox_overlap) — under this tile's even-odd ring
+    # representation a twice-covered band point flips back to "water"
+    # and covered_area2 double-counts the band. Clipping every piece
+    # to its OWNED region box (split.py lineage: the un-expanded
+    # midline cuts) restores a disjoint land cover; parts without the
+    # lineage (no-split path) clip to the tile alone.
+    for row in parts:
+        cminx, cminy, cmaxx, cmaxy = tminx, tminy, tmaxx, tmaxy
+        if clip_owned:
+            cminx = max(cminx, float(row["own_minx"]))
+            cminy = max(cminy, float(row["own_miny"]))
+            cmaxx = min(cmaxx, float(row["own_maxx"]))
+            cmaxy = min(cmaxy, float(row["own_maxy"]))
+            if cminx >= cmaxx or cminy >= cmaxy:
+                continue
+        rings = [(np.asarray(row["shell_x"]), np.asarray(row["shell_y"]))]
+        for hx, hy in zip(_aslist(row["holes_x"]), _aslist(row["holes_y"])):
+            rings.append((np.asarray(hx), np.asarray(hy)))
+        for i, (rx, ry) in enumerate(rings):
+            for px, py in geom.clip_ring_rect(rx, ry, cminx, cminy, cmaxx, cmaxy):
+                a2 = abs(geom.signed_area2(px, py))
+                if a2 == 0.0:
+                    continue
+                covered_area2 += a2 if i == 0 else -a2
+                holes_x.append(px.tolist())
+                holes_y.append(py.tolist())
+    if covered_area2 >= tile_area2 - 1e-12:
+        return None
+    return {
+        "cell": cell,
+        "shell_x": [tminx, tminx, tmaxx, tmaxx],
+        "shell_y": [tminy, tmaxy, tmaxy, tminy],  # clockwise (GIS outer)
+        "holes_x": holes_x,
+        "holes_y": holes_y,
+        "env_minx": tminx,
+        "env_miny": tminy,
+        "env_maxx": tmaxx,
+        "env_maxy": tmaxy,
+    }
+
+
 def water_polygons(
     land: DataFrame, cell_deg: float, extent=(-180.0, -90.0, 180.0, 90.0),
     include_empty_tiles: bool = False, unit_per_deg: float = 1.0,
@@ -131,56 +187,6 @@ def water_polygons(
             (iy + 1) * cell + y0,
         )
 
-    def diff_one(cell: int, parts) -> dict | None:
-        """tile − land for ONE cell; parts arrive sorted (see below).
-        Returns the output row dict, or None when the tile is fully
-        covered by land."""
-        tminx, tminy, tmaxx, tmaxy = tile_bounds(cell)
-        tile_area2 = 2.0 * (tmaxx - tminx) * (tmaxy - tminy)
-        holes_x, holes_y = [], []
-        covered_area2 = 0.0
-        # split pieces OVERLAP their siblings in the 2*expand seam band
-        # (reference bbox_overlap) — under this tile's even-odd ring
-        # representation a twice-covered band point flips back to "water"
-        # and covered_area2 double-counts the band. Clipping every piece
-        # to its OWNED region box (split.py lineage: the un-expanded
-        # midline cuts) restores a disjoint land cover; rows without the
-        # lineage (no-split path) clip to the tile alone as before.
-        for row in parts:
-            cminx, cminy, cmaxx, cmaxy = tminx, tminy, tmaxx, tmaxy
-            own_minx = row.get("own_minx") if isinstance(row, dict) else None
-            if own_minx is not None:
-                cminx = max(cminx, float(own_minx))
-                cminy = max(cminy, float(row["own_miny"]))
-                cmaxx = min(cmaxx, float(row["own_maxx"]))
-                cmaxy = min(cmaxy, float(row["own_maxy"]))
-                if cminx >= cmaxx or cminy >= cmaxy:
-                    continue
-            rings = [(np.asarray(row["shell_x"]), np.asarray(row["shell_y"]))]
-            for hx, hy in zip(_aslist(row["holes_x"]), _aslist(row["holes_y"])):
-                rings.append((np.asarray(hx), np.asarray(hy)))
-            for i, (rx, ry) in enumerate(rings):
-                for px, py in geom.clip_ring_rect(rx, ry, cminx, cminy, cmaxx, cmaxy):
-                    a2 = abs(geom.signed_area2(px, py))
-                    if a2 == 0.0:
-                        continue
-                    covered_area2 += a2 if i == 0 else -a2
-                    holes_x.append(px.tolist())
-                    holes_y.append(py.tolist())
-        if covered_area2 >= tile_area2 - 1e-12:
-            return None
-        return {
-            "cell": cell,
-            "shell_x": [tminx, tminx, tmaxx, tmaxx],
-            "shell_y": [tminy, tmaxy, tmaxy, tminy],  # clockwise (GIS outer)
-            "holes_x": holes_x,
-            "holes_y": holes_y,
-            "env_minx": tminx,
-            "env_miny": tminy,
-            "env_maxx": tmaxx,
-            "env_maxy": tmaxy,
-        }
-
     schema = (
         "cell long, shell_x array<double>, shell_y array<double>, "
         "holes_x array<array<double>>, holes_y array<array<double>>, "
@@ -198,12 +204,13 @@ def water_polygons(
     # bit-identical across runs and across the flat/bucketed source paths.
     part_fields = [
         c
-        for c in (
-            "poly_id", "shell_x", "shell_y", "holes_x", "holes_y",
-            "own_minx", "own_miny", "own_maxx", "own_maxy",
-        )
+        for c in ("poly_id", "shell_x", "shell_y", "holes_x", "holes_y", *OWN_FIELDS)
         if c in covered.columns
     ]
+    # seam clipping is decided once, from the schema (every part has the
+    # same fields); a partial owned-region box then fails on the missing
+    # field instead of silently skipping the clip
+    clip_owned = any(f in part_fields for f in OWN_FIELDS)
     grouped = covered.groupBy("cell").agg(
         F.sort_array(F.collect_list(F.struct(*part_fields))).alias("parts")
     )
@@ -212,7 +219,7 @@ def water_polygons(
         for pdf in it:
             rows = []
             for cell, parts in zip(pdf["cell"], pdf["parts"]):
-                r = diff_one(int(cell), parts)
+                r = tile_water(int(cell), tile_bounds(cell), parts, clip_owned)
                 if r is not None:
                     rows.append(r)
             if rows:

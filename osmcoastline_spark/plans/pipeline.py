@@ -27,6 +27,7 @@ reference coastline_polygons.cpp:444-467). Known deviations:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
-from osmcoastline_spark.operators.antarctica import close_antarctica_ring
+from osmcoastline_spark.operators.antarctica import antarctica_window, close_antarctica_ring
 from osmcoastline_spark.operators.close import close_rings
 from osmcoastline_spark.operators.filter import coastline_ways, tagged_node_errors
 from osmcoastline_spark.operators.intersections import (
@@ -44,7 +45,7 @@ from osmcoastline_spark.operators.intersections import (
     ring_segments,
     ring_self_intersections,
 )
-from osmcoastline_spark.operators.repair import buffer0_triage, check_polygons
+from osmcoastline_spark.operators.repair import buffer0_triage, check_counts, check_polygons
 from osmcoastline_spark.operators.lines import rings_to_lines
 from osmcoastline_spark.operators.locations import (
     ways_with_locations,
@@ -52,10 +53,10 @@ from osmcoastline_spark.operators.locations import (
 )
 from osmcoastline_spark.operators.polygonize import fix_direction, polygonize
 from osmcoastline_spark.operators.questionable import questionable_rings
-from osmcoastline_spark.operators.rings import assemble_rings, route_rings
+from osmcoastline_spark.operators.rings import _closed, assemble_rings, route_rings
 from osmcoastline_spark.operators.split import split_polygons
 from osmcoastline_spark.operators.water import drop_antimeridian_slivers, water_polygons
-from osmcoastline_spark.util import run_concurrently
+from osmcoastline_spark.util import materialize, run_concurrently
 from osmcoastline_spark.schemas import (
     DEFAULT_BBOX_OVERLAP_3857,
     DEFAULT_BBOX_OVERLAP_4326,
@@ -123,13 +124,6 @@ from osmcoastline_spark.util import aslist as _aslist
 
 def _empty(spark: SparkSession, schema):
     return spark.createDataFrame([], schema)
-
-
-# one shared driver thread for the overlapped error-category count (the
-# submit sites never queue more than one task per pipeline run)
-from concurrent.futures import ThreadPoolExecutor as _TPE
-
-_acct_pool = _TPE(max_workers=2)
 
 
 def _count_error_categories(error_points: list, error_lines: list) -> list:
@@ -265,6 +259,29 @@ def run_pipeline(
     the already-coastline-filtered exploded (way_id, pos, node_id) rows)
     so the planet-sized node side joins with ZERO shuffle; `ways`/`nodes`
     args are then only used for the tagged-node error scan."""
+    # driver threads for the work that overlaps later stages (the
+    # intersection checkpoint, the error-category count), scoped to this
+    # run: when the run fails, queued work is cancelled and running work
+    # awaited before the error propagates, so no job outlives the call
+    pool = ThreadPoolExecutor(max_workers=2)
+    try:
+        return _run_pipeline(
+            spark, nodes, ways, options, mid_sink, preassembled, prebucketed, pool
+        )
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+
+
+def _run_pipeline(
+    spark: SparkSession,
+    nodes: DataFrame,
+    ways: DataFrame,
+    options: Options | None,
+    mid_sink,
+    preassembled: tuple | None,
+    prebucketed: tuple | None,
+    pool: ThreadPoolExecutor,
+) -> PipelineResult:
     import time as _time
 
     t0 = _time.time()
@@ -299,7 +316,8 @@ def run_pipeline(
     if preassembled is not None:
         closed, open_, pre_stats = preassembled
         res.stats.update(pre_stats)
-        n_closed_pre = None
+        n_closed_pre = n_open_pre = None
+        antarctica_kw = {}
         if opt.collect_stats:
             # a snapshot written with collect_stats=False has no stats_pre
             # (round-3 ADVICE): recompute the missing counts from the
@@ -318,8 +336,8 @@ def run_pipeline(
                 ) + int(open_.select(F.sum("nways")).first()[0] or 0)
     else:
         # pass 1+2: filter, locations — the location join materializes ONCE
-        # here; the J3 missing-location check is a tiny aggregate over the
-        # materialized result (round 1 paid a second full explode+join)
+        # here, and the J3 missing-location count is observed in the same
+        # job (round 1 paid a second full explode+join, round 6 a probe)
         if prebucketed is not None:
             refs_b, nodes_b = prebucketed
             # loud-fail contract check: refs must be the EXPLODED
@@ -343,28 +361,27 @@ def run_pipeline(
                 # the reference never produces — coastline ways always
                 # reference >=2 nodes). Documented divergence, not a bug.
                 res.stats["ways"] = refs_b.select("way_id").distinct().count()
-            ways_loc = ways_with_locations_from_refs(
-                refs_b, nodes_b, count_missing=True
-            ).localCheckpoint(eager=True)
+            located = ways_with_locations_from_refs(refs_b, nodes_b, count_missing=True)
         else:
             cways = coastline_ways(ways)
-            if opt.collect_stats:
-                # the ways count and the location-join materialization are
-                # independent DAGs over the same checkpointed inputs — run
-                # them concurrently so the count hides inside the join's
-                # wall time instead of paying its own job floor first
-                n_ways, ways_loc = run_concurrently(
-                    cways.count,
-                    lambda: ways_with_locations(
-                        cways, nodes, count_missing=True
-                    ).localCheckpoint(eager=True),
-                )
-                res.stats["ways"] = n_ways
-            else:
-                ways_loc = ways_with_locations(
-                    cways, nodes, count_missing=True
-                ).localCheckpoint(eager=True)
-        missing = ways_loc.agg(F.sum("nmiss")).first()[0] or 0
+            located = ways_with_locations(cways, nodes, count_missing=True)
+
+        def locate():
+            # closed_ways: the ways that are closed rings on their own
+            return materialize(
+                located, nmiss=F.sum("nmiss"), closed_ways=F.count_if(_closed())
+            )
+
+        if opt.collect_stats and prebucketed is None:
+            # the ways count and the location-join materialization are
+            # independent DAGs over the same checkpointed inputs — run
+            # them concurrently so the count hides inside the join's
+            # wall time instead of paying its own job floor first
+            n_ways, (ways_loc, loc_seen) = run_concurrently(cways.count, locate)
+            res.stats["ways"] = n_ways
+        else:
+            ways_loc, loc_seen = locate()
+        missing = loc_seen["nmiss"] or 0
         if missing:
             res.stats["missing_locations"] = int(missing)
             res.errors += 1
@@ -377,25 +394,34 @@ def run_pipeline(
         # The ways count — when collected — is an exact upper bound on the
         # chain count (one chain per way), letting assembly skip its
         # round-0 count job whenever the driver finish provably applies.
-        closed, open_ = assemble_rings(
+        # closed = the closed single ways of ways_loc + the closed merged
+        # chains, open = the open merged chains: the assembly stats, the
+        # open-ring bound for gap closing and the Antarctica ring id are
+        # all observed on the two checkpoints, no count job of their own
+        closed, open_, asm_seen = assemble_rings(
             ways_loc,
             assume_materialized=True,
             max_chains_hint=res.stats.get("ways") if opt.collect_stats else None,
+            observe={
+                "closed": F.count_if(_closed()),
+                "closed_single": F.count_if(_closed() & (F.col("nways") == 1)),
+                "open": F.count_if(~_closed()),
+                "antarctica": F.min(
+                    F.when(~_closed() & antarctica_window(), F.col("ring_id"))
+                ),
+            },
         )
-        n_closed_pre = None
+        antarctica_kw = {"target": asm_seen["antarctica"]}
+        n_open_pre = asm_seen["open"]
+        # the post-assembly closed count feeds stats["rings"]
+        # ARITHMETICALLY (closed-after-close = closed-now + antarctica +
+        # gap-close merges, all driver-known)
+        n_closed_pre = loc_seen["closed_ways"] + asm_seen["closed"]
         if opt.collect_stats:
-            # three independent floor-priced count jobs — overlap them; the
-            # post-assembly closed count feeds stats["rings"] ARITHMETICALLY
-            # (closed-after-close = closed-now + antarctica + gap-close
-            # merges, all driver-known) so the later dedicated count job
-            # disappears (round 6)
-            n1, n2, n_closed_pre = run_concurrently(
-                closed.filter(F.col("nways") == 1).count,
-                open_.count,
-                closed.count,
+            res.stats["rings_from_single_way"] = (
+                loc_seen["closed_ways"] + asm_seen["closed_single"]
             )
-            res.stats["rings_from_single_way"] = n1
-            res.stats["unconnected_nodes_before_close"] = n2 * 2
+            res.stats["unconnected_nodes_before_close"] = n_open_pre * 2
         if mid_sink is not None:
             pre = {
                 k: res.stats[k]
@@ -431,22 +457,23 @@ def run_pipeline(
     # segs/dup_counts; the result is joined right before its first
     # consumer. The 'intersection' error points slot into the error list
     # at this position (recorded index) so union order is unchanged.
-    ipairs_future = _acct_pool.submit(
+    ipairs_future = pool.submit(
         lambda: intersection_pairs(segs, opt.cell_deg).localCheckpoint(eager=True)
     )
     error_lines.append(overlaps)
     isects_pos = len(error_points)
     res.tables["segments"] = segs
 
-    # G12 Antarctica — its detection aggregate and the duplicate-segment
-    # count the gap-close block needs are independent single jobs over
-    # already-checkpointed frames: overlap them (guide §2.6)
+    # G12 Antarctica — the ring id was observed at assembly; a resumed
+    # run's detection aggregate overlaps the duplicate-segment count the
+    # gap-close block needs (independent jobs over checkpointed frames)
     if opt.close_distance > 0:
         (open_, found), n_dup_keys = run_concurrently(
-            lambda: close_antarctica_ring(open_, opt.epsg), dup_counts.count
+            lambda: close_antarctica_ring(open_, opt.epsg, **antarctica_kw),
+            dup_counts.count,
         )
     else:
-        open_, found = close_antarctica_ring(open_, opt.epsg)
+        open_, found = close_antarctica_ring(open_, opt.epsg, **antarctica_kw)
         n_dup_keys = None
     res.stats["antarctica_closed"] = found
     # rings whose GEOMETRY is new or changed after this point (Antarctica
@@ -472,8 +499,8 @@ def run_pipeline(
     # endpoint-map overwrite semantics (see invalid-duplicate-segments-1);
     # we detect them explicitly and exclude them from closing.
     if opt.close_distance > 0:
-        # n_dup_keys was materialized concurrently with the Antarctica
-        # aggregate above — if the input has no duplicate segments at all
+        # n_dup_keys was counted above — if the input has no duplicate
+        # segments at all
         # (the common healthy-data case) the whole orphan-detection branch
         # (explode + semi-join + two groupBys + an eager checkpoint, ~5
         # driver-floor jobs) is provably a no-op and is skipped; the count
@@ -503,7 +530,9 @@ def run_pipeline(
         else:
             orphans = None
             active = open_
-        merged, cres = close_rings(active, opt.close_distance)
+        # `active` is a subset of the open rings counted at assembly: that
+        # count bounds the endpoint collect without a probe
+        merged, cres = close_rings(active, opt.close_distance, max_rows=n_open_pre)
         if orphans is not None:
             merged = merged.unionByName(orphans)
         merged = merged.localCheckpoint(eager=True)
@@ -531,9 +560,9 @@ def run_pipeline(
     if opt.collect_stats:
         if n_closed_pre is not None:
             # exact arithmetic: post-close closed set = post-assembly closed
-            # set (counted concurrently with the other assembly stats) plus
-            # the driver-known closures (Antarctica + gap-close groups) —
-            # no dedicated count job
+            # set (observed on the assembly checkpoints) plus the
+            # driver-known closures (Antarctica + gap-close groups) — no
+            # dedicated count job
             res.stats["rings"] = n_closed_pre + n_closed_delta
         else:
             res.stats["rings"] = closed.count()
@@ -780,19 +809,24 @@ def run_pipeline(
                 # (round 6; the guard at the accounting site falls back to
                 # a synchronous count if a future edit appends later)
                 acct_sig = (len(error_points), len(error_lines))
-                acct_future = _acct_pool.submit(
+                acct_future = pool.submit(
                     _count_error_categories, list(error_points), list(error_lines)
                 )
 
                 if opt.split_large_polygons and opt.max_points_in_polygon > 0:
-                    polys = split_polygons(
+                    # split's round checkpoints observe its output row count
+                    # and check_polygons' two counts over the cut pieces
+                    polys, split_seen = split_polygons(
                         polys,
                         opt.max_points_in_polygon,
                         opt.effective_overlap(),
                         opt.epsg,
+                        observe=check_counts("cut_suspect"),
                     )
                     if opt.collect_stats:
-                        res.stats["land_polygons_after_split"] = polys.count()
+                        res.stats["land_polygons_after_split"] = (
+                            pres.good_count + split_seen["rows_added"]
+                        )
                     _trace("split")
 
                     # reference check_polygons (src/osmcoastline.cpp:398-399
@@ -819,9 +853,12 @@ def run_pipeline(
                     # cut_suspect (split's per-piece cut-degeneracy flag)
                     # limits the distributed crossing kernel to pieces whose
                     # cut could actually have produced a non-simple shell;
-                    # the all-clean case costs ONE aggregate job
+                    # the all-clean case costs no job at all
                     checked, cp_warnings = check_polygons(
-                        pieces, cp_cell, suspect_col="cut_suspect"
+                        pieces,
+                        cp_cell,
+                        suspect_col="cut_suspect",
+                        counts=(split_seen["nb"], split_seen["ns"]),
                     )
                     polys = untouched.unionByName(checked.drop("cut_suspect"))
                     res.stats["invalid_polygons_after_split"] = cp_warnings

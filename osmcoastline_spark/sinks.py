@@ -17,12 +17,21 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from osmcoastline_spark.cells import morton_interleave_expr
 
 MANIFEST = "_MANIFEST.json"
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with its row count observed by the write that executes it: the
+    observation is the top node of the write plan, so the count is taken
+    in the write's result stage (once per partition, even under task
+    retry) and costs no job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class CheckpointSink:
@@ -61,8 +70,9 @@ class CheckpointSink:
             out = df.withColumn("zorder", code).sortWithinPartitions(
                 "zorder"
             ).drop("zorder")
+        out, obs = _counted(out)
         out.write.mode("overwrite").parquet(path)
-        n = df.sparkSession.read.parquet(path).count()
+        n = obs.get["rows"]
         manifest = {
             "stage": stage,
             "rows": n,
@@ -141,16 +151,19 @@ class IcebergSink:
         # table whose DATA is from the new inputs but whose missing
         # fingerprint the legacy-accept path in checkpointed.py would
         # validate against ANY inputs. The informational rows/committed_at
-        # props still land in a post-commit ALTER (the count needs the
-        # committed snapshot); losing them to a crash costs manifest()
+        # props still land in a post-commit ALTER (the count is known only
+        # once the write ran); losing them to a crash costs manifest()
         # accuracy, never resume safety.
+        out, obs = _counted(out)
         (
             out.writeTo(name)
             .using("iceberg")
             .tableProperty("graft.lineage", json.dumps(lineage or {}))
             .createOrReplace()
         )
-        n = self.spark.table(name).count()
+        n = _observed_rows(df.sparkSession, obs)
+        if n is None:
+            n = self.spark.table(name).count()
         props = {
             "graft.rows": str(n),
             "graft.committed_at": str(time.time()),
@@ -189,6 +202,17 @@ class IcebergSink:
         )
         df = self.spark.createDataFrame([(payload,)], "meta_json string")
         df.writeTo(self._table("_run_meta")).using("iceberg").createOrReplace()
+
+
+def _observed_rows(spark: SparkSession, obs: Observation) -> int | None:
+    """The observed row count once the listener bus has delivered the
+    write's metrics, or None when that write path reported none (a
+    catalog whose write does not run the observed plan): unlike
+    `obs.get`, this never blocks on metrics that will not come."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    if not obs._jo.future().isCompleted():
+        return None
+    return obs.get["rows"]
 
 
 def make_sink(spark: SparkSession, root: str):

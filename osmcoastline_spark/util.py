@@ -5,6 +5,26 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.sql import Column, DataFrame, Observation
+
+
+def materialize(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """`df.localCheckpoint(eager=True)`, plus aggregate `metrics` computed
+    in the same Spark job: returns (checkpoint, {name: value}).
+
+    Each metric is an aggregate Column (count, sum, min, ...) over the rows
+    of `df`; an aggregate over zero rows gives what a separate action
+    would (count 0, sum/min None). The observation is the top node of
+    the plan the checkpoint executes, so it runs in the result stage,
+    where Spark applies accumulator updates once per partition even when
+    a task is retried — and a count that would otherwise be its own job
+    (two under AQE) costs nothing."""
+    if not metrics:
+        return df.localCheckpoint(eager=True), {}
+    obs = Observation()
+    observed = df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
+    return observed.localCheckpoint(eager=True), obs.get
+
 
 def run_concurrently(*thunks: Callable):
     """Run independent Spark actions in parallel driver threads and return
