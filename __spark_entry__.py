@@ -133,26 +133,23 @@ def _rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
     ~1 ms) instead of a Spark count() job (~0.2 s of scheduling floor per
     call — round-6 measurement). Several queries only need the count to
     SIZE their derived id range; the value is identical to count() by the
-    parquet spec (footers carry exact row counts). Falls back to the Spark
-    job for any layout pyarrow can't read."""
-    import glob
-
+    parquet spec (footers carry exact row counts). Only a single file or a
+    flat directory of part files is read this way: a directory with
+    subdirectories (partitioned or nested layouts, which Spark does not
+    read as the union of every file below it) and any layout pyarrow
+    can't read take the Spark count."""
     try:
         import pyarrow.parquet as pq
 
         path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(path):
-            files = sorted(
-                f
-                for f in glob.glob(os.path.join(path, "*.parquet"))
-                if not os.path.basename(f).startswith(("_", "."))
-            )
-            if not files:
-                raise FileNotFoundError(path)
-            return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        return pq.ParquetFile(path).metadata.num_rows
+        if not os.path.isdir(path):
+            return pq.ParquetFile(path).metadata.num_rows
+        entries = [e for e in os.scandir(path) if not e.name.startswith(("_", "."))]
+        if entries and not any(e.is_dir() for e in entries):
+            return sum(pq.ParquetFile(e.path).metadata.num_rows for e in entries)
     except Exception:
-        return _read(spark, sf_dir, name).count()
+        pass
+    return _read(spark, sf_dir, name).count()
 
 
 def _node_cells(nodes: DataFrame, n: int) -> DataFrame:
@@ -690,7 +687,8 @@ def q_questionable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(xi, xi, xi + 0.01, xi + 0.01, xi).alias("shell_x"),
         F.array(yi, yi + 0.01, yi + 0.01, yi, yi).alias("shell_y"),
     )
-    return questionable_rings(rings, polys).select("osm_id", "error")
+    frame, _count = questionable_rings(rings, polys)
+    return frame.select("osm_id", "error")
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,89 +9,116 @@ while its twin is marked outer in invalid-duplicate-segments-1). Closed,
 not-outer rings with 3 < npoints < 10000 ⇒ error_lines('questionable'),
 NOT reversed (add_error_line(..., false)). 4326 only.
 
-Spark shape: the lower_bound over a global sort is a union of 'query' events
-(polygon starts) and 'ring' events ordered by (x, y, kind, ring_id) with a
-forward-looking window picking the next ring event. Scale: the sort is
-RANGE-PARTITIONED by x-bucket — a per-bucket O(rows) running window plus a
-boundary fix-up over the bucket spine (≤ 360/width rows, a constant): a
-query with no ring event at-or-after it inside its own bucket takes the
-first ring event of the nearest later bucket. No global single-task sort
-over the (data-proportional) event list remains.
+Spark shape: polygon starts are 'query' events (kind 0) and ring starts are
+'ring' events (kind 1), in one global ascending order (x, y, kind,
+ring_id) — queries sort before rings at equal locations, so `>=` holds.
+A ring is outer exactly when the event right before it is a query: the
+first ring at or after a query is that query's lower_bound, and only
+queries can sit between two consecutive ring events. So no lower_bound
+is ever searched for; the predecessor's kind decides.
+
+The order is range-partitioned by x-bucket (bucket order agrees with x
+order), and one window per bucket computes each event's predecessor kind
+and whether it is the bucket's last event — one exchange, one
+materialization of scalar events. Observed in that same job: the
+candidates whose predecessor is a ring (questionable), each bucket's last
+event kind (the spine: at most 360/width + 1 rows, a constant), and the
+buckets whose first event is a candidate. The driver resolves those
+bucket-first rings: the predecessor is the last event of the nearest
+earlier non-empty bucket, so the ring is outer when that bucket ends with
+a query. The questionable count is exact on the driver; the error frame
+is a semi-join of the rings on the questionable ids, or an empty frame
+when there are none.
 """
 
 from __future__ import annotations
+
+from bisect import bisect_left
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from osmcoastline_spark.schemas import QUESTIONABLE_NPOINTS_CAP
+from osmcoastline_spark.util import materialize
+
+_QUERY, _RING = 0, 1
 
 
 def questionable_rings(
     rings: DataFrame, polygons: DataFrame, bucket_width: float = 5.0
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """rings: ALL assembled rings (closed and open, OSM orientation).
-    polygons: output polygons (GIS orientation)."""
+    polygons: output polygons (GIS orientation).
+
+    Returns (error_lines frame of the questionable rings, its row count).
+    Runs one exchange and one checkpoint when called; the frame is lazy,
+    and Catalyst prunes it as empty when the count is 0."""
+    closed = F.element_at("node_ids", 1) == F.element_at("node_ids", -1)
+    npoints = F.size("node_ids")
     ring_events = rings.select(
         F.element_at("xs", 1).alias("x"),
         F.element_at("ys", 1).alias("y"),
-        F.lit(1).alias("kind"),  # ring events sort after queries at equal loc
+        F.lit(_RING).alias("kind"),
         "ring_id",
+        (closed & (npoints > 3) & (npoints < QUESTIONABLE_NPOINTS_CAP)).alias("cand"),
     )
     query_events = polygons.select(
         F.element_at("shell_x", 1).alias("x"),
         F.element_at("shell_y", 1).alias("y"),
-        F.lit(0).alias("kind"),
+        F.lit(_QUERY).alias("kind"),
         F.lit(None).cast("long").alias("ring_id"),
+        F.lit(False).alias("cand"),
     )
-    bucket = F.floor((F.col("x") + F.lit(180.0)) / F.lit(bucket_width))
-    events = ring_events.unionByName(query_events).withColumn("bucket", bucket)
-
-    # Pass 1 — per-bucket lower_bound: nearest ring event at-or-after the
-    # query in ascending (x, y, kind, ring_id) order, computed as a RUNNING
-    # last() over the DESCENDING order (an O(n) frame; unboundedFollowing
-    # would be O(n²) per partition).
-    w_in = Window.partitionBy("bucket").orderBy(
-        F.desc("x"), F.desc("y"), F.desc("kind"), F.desc_nulls_last("ring_id")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events = events.withColumn("marked", F.last("ring_id", ignorenulls=True).over(w_in))
-
-    # Pass 2 — boundary fix-up: per-bucket FIRST ring event (ascending),
-    # then, over the bucket spine only (constant-sized), the nearest later
-    # bucket's first ring event for queries whose own bucket ran dry.
-    firsts = (
-        ring_events.withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(F.min(F.struct("x", "y", "ring_id")).alias("f"))
-    )
-    spine = events.select("bucket").distinct().join(firsts, "bucket", "left")
-    w_spine = Window.orderBy(F.desc("bucket")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    nxt = spine.withColumn("nf", F.last("f", ignorenulls=True).over(w_spine)).select(
-        "bucket", F.col("nf.ring_id").alias("next_ring")
-    )
-    # no .distinct(): the left-anti join below is an existence check, so
-    # duplicate ids on the build side change nothing — dropping the
-    # distinct removes one exchange (round 6)
-    outer_ids = (
-        events.filter(F.col("kind") == 0)
-        .join(F.broadcast(nxt), "bucket", "left")
-        .select(F.coalesce("marked", "next_ring").alias("ring_id"))
-        .dropna()
-    )
-
-    closed = F.element_at("node_ids", 1) == F.element_at("node_ids", -1)
-    return (
-        rings.join(outer_ids, "ring_id", "left_anti")
-        .filter(closed)
-        .withColumn("npoints", F.size("node_ids"))
-        .filter((F.col("npoints") > 3) & (F.col("npoints") < QUESTIONABLE_NPOINTS_CAP))
+    w = Window.partitionBy("bucket").orderBy("x", "y", "kind", "ring_id")
+    events = (
+        ring_events.unionByName(query_events)
+        .withColumn("bucket", F.floor((F.col("x") + 180.0) / bucket_width))
         .select(
-            F.col("ring_id").alias("osm_id"),
-            F.lit("questionable").alias("error"),
-            "xs",
-            "ys",
+            "ring_id",
+            "bucket",
+            "kind",
+            "cand",
+            F.lag("kind").over(w).alias("prev"),
+            F.lead("kind").over(w).isNull().alias("last"),
         )
     )
+    events, seen = materialize(
+        events,
+        after_ring=F.count_if(F.col("cand") & (F.col("prev") == _RING)),
+        spine=F.collect_list(F.when(F.col("last"), F.struct("bucket", "kind"))),
+        first_cands=F.collect_list(
+            F.when(F.col("cand") & F.col("prev").isNull(), F.col("bucket"))
+        ),
+    )
+
+    last_kind = dict(seen["spine"])
+    if None in last_kind:
+        raise ValueError("questionable_rings: a ring or polygon has no start location")
+    buckets = sorted(last_kind)
+    max_buckets = int(360 / bucket_width) + 2
+    if len(buckets) > max_buckets:
+        raise ValueError(
+            f"questionable_rings: events span {len(buckets)} x-buckets of width "
+            f"{bucket_width}, more than the {max_buckets} that x in [-180, 180] allows"
+        )
+    q_buckets = []
+    for b in seen["first_cands"]:
+        i = bisect_left(buckets, b)  # b's own index: the earlier bucket is i-1
+        if i == 0 or last_kind[buckets[i - 1]] != _QUERY:
+            q_buckets.append(b)
+    count = seen["after_ring"] + len(q_buckets)
+
+    frame = rings.select(
+        F.col("ring_id").alias("osm_id"),
+        F.lit("questionable").alias("error"),
+        "xs",
+        "ys",
+    )
+    if count == 0:
+        # an empty LocalRelation to Catalyst: pruned from any union it joins
+        return frame.limit(0), 0
+    first_q = F.col("prev").isNull() & F.col("bucket").isin(q_buckets)
+    ids = events.filter(F.col("cand") & ((F.col("prev") == _RING) | first_q))
+    ids = ids.select(F.col("ring_id").alias("osm_id"))
+    return frame.join(F.broadcast(ids), "osm_id", "left_semi"), count

@@ -310,6 +310,9 @@ def _run_pipeline(
 
     error_points = [tagged_node_errors(nodes)]
     error_lines = [_empty(spark, ERROR_LINES_SCHEMA)]
+    # error -> (error_lines frame, row count) for frames whose count the
+    # driver already knows: they join the table, not the counting aggregate
+    counted_lines: dict[str, tuple[DataFrame, int]] = {}
     acct_future = None
     acct_sig = None
 
@@ -798,9 +801,8 @@ def _run_pipeline(
             if opt.output_polygons != "none":
                 if opt.epsg == 4326:
                     all_rings = closed.unionByName(open_)
-                    q = questionable_rings(all_rings, polys)
-                    error_lines.append(q.select("osm_id", "error", "xs", "ys"))
-                    _trace("questionable_plan")
+                    counted_lines["questionable"] = questionable_rings(all_rings, polys)
+                    _trace("questionable")
 
                 # error tables are COMPLETE here (split/check/water add
                 # warnings as ints, never error rows) — launch the
@@ -914,7 +916,7 @@ def _run_pipeline(
     for df in error_points[1:]:
         ep = ep.unionByName(df)
     el = error_lines[0]
-    for df in error_lines[1:]:
+    for df in error_lines[1:] + [df for df, _n in counted_lines.values()]:
         el = el.unionByName(df)
     # single-JOB warning accounting: the exit-code contract only needs the
     # per-category COUNTS, and counting needs only the `error` column — so
@@ -934,6 +936,7 @@ def _run_pipeline(
         counts = _count_error_categories(error_points, error_lines)
     epc = {r["error"]: r["count"] for r in counts if r["kind"] == "p"}
     elc = {r["error"]: r["count"] for r in counts if r["kind"] == "l"}
+    elc.update((error, n) for error, (_df, n) in counted_lines.items())
     ep = ep.persist()
     el = el.persist()
     res.persisted += [ep, el]

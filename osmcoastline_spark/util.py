@@ -60,7 +60,7 @@ def ensure_min_parallelism(df, factor: int = 2):
         cur = df.rdd.getNumPartitions()
     except Exception:
         return df
-    if cur * factor <= target:
+    if cur * factor < target:
         return df.repartition(target)
     return df
 

@@ -245,32 +245,207 @@ def test_ngram_jaccard_doc_freq_cap(spark):
     assert capped.count() == 0
 
 
+_RINGS_SCHEMA = "ring_id long, node_ids array<long>, xs array<double>, ys array<double>"
+_POLYS_SCHEMA = "shell_x array<double>, shell_y array<double>"
+
+
+def _square_ring(rid, x, y=0.0, closed=True, npoints=5):
+    ids = [rid * 10 + k for k in range(npoints)]
+    if closed:
+        ids[-1] = ids[0]
+    return (rid, ids, [x] + [x + 0.01] * (npoints - 1), [y] + [y + 0.01] * (npoints - 1))
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
 def test_questionable_bucket_boundary_fixup(spark):
-    """A polygon whose bucket has no ring event at-or-after it must take
-    the FIRST ring event of the next bucket (two-pass lower_bound)."""
+    """A polygon whose bucket has no ring event at-or-after it must mark
+    the FIRST ring event of the next non-empty bucket."""
     from osmcoastline_spark.operators.questionable import questionable_rings
 
-    def ring(rid, x):
-        return (
-            rid,
-            [rid * 10, rid * 10 + 1, rid * 10 + 2, rid * 10 + 3, rid * 10],
-            [x, x + 0.01, x + 0.01, x, x],
-            [0.0, 0.0, 0.01, 0.01, 0.0],
-        )
-
     # ring 1 at x=20 (bucket 40 with width 5), ring 2 at x=31 (bucket 42)
-    rings = spark.createDataFrame(
-        [ring(1, 20.0), ring(2, 31.0)],
-        "ring_id long, node_ids array<long>, xs array<double>, ys array<double>",
-    )
+    rings = spark.createDataFrame([_square_ring(1, 20.0), _square_ring(2, 31.0)], _RINGS_SCHEMA)
     # polygon starts at x=24 — bucket 40, AFTER ring 1: lower_bound must
     # cross the bucket boundary and mark ring 2 as outer
-    polys = spark.createDataFrame(
-        [([24.0, 24.0, 24.01], [0.0, 0.01, 0.0])],
-        "shell_x array<double>, shell_y array<double>",
+    polys = spark.createDataFrame([([24.0, 24.0, 24.01], [0.0, 0.01, 0.0])], _POLYS_SCHEMA)
+    frame, count = questionable_rings(rings, polys, bucket_width=5.0)
+    assert [r.osm_id for r in frame.collect()] == [1]  # ring 2 outer, ring 1 questionable
+    assert count == 1
+
+
+def _questionable_oracle(rings, polys):
+    """The reference's marking by brute force: rings sorted by
+    (x, y, ring_id); each polygon start marks the first ring at or after
+    it (bisect_left of (x, y) sorts before any (x, y, ring_id))."""
+    import bisect
+
+    from osmcoastline_spark.schemas import QUESTIONABLE_NPOINTS_CAP
+
+    order = sorted((xs[0], ys[0], rid) for rid, _ids, xs, ys in rings)
+    outer = set()
+    for sx, sy in polys:
+        i = bisect.bisect_left(order, (sx[0], sy[0]))
+        if i < len(order):
+            outer.add(order[i][2])
+    return {
+        rid
+        for rid, ids, _xs, _ys in rings
+        if ids[0] == ids[-1] and 3 < len(ids) < QUESTIONABLE_NPOINTS_CAP and rid not in outer
+    }
+
+
+@pytest.mark.parametrize("seed", range(16))
+def test_questionable_matches_bisect_oracle(spark, seed):
+    """Ties at equal start locations, x exactly on bucket edges, empty
+    buckets, polygons past the last ring, open and short rings, and no
+    rings or no polygons at all."""
+    import random
+
+    from osmcoastline_spark.operators.questionable import questionable_rings
+
+    rnd = random.Random(seed)
+    width = rnd.choice([1.0, 5.0, 30.0])
+    edges = [-180.0 + k * width for k in (0, 1, 2, 7)] + [180.0 - width, 180.0]
+    xs = [rnd.choice(edges) if rnd.random() < 0.4 else float(rnd.randint(-180, 179)) for _ in range(8)]
+    ys = [0.0, 1.0, 2.0]
+    n_rings = 0 if seed == 0 else rnd.randint(1, 30)
+    n_polys = 0 if seed == 1 else rnd.randint(1, 30)
+    rings = [
+        _square_ring(
+            rnd.randrange(10**6) * 100 + i,
+            rnd.choice(xs),
+            rnd.choice(ys),
+            closed=rnd.random() < 0.8,
+            npoints=rnd.choice([3, 4, 5, 6]),
+        )
+        for i in range(n_rings)
+    ]
+    polys = [([rnd.choice(xs + [179.5])], [rnd.choice(ys)]) for _ in range(n_polys)]
+    frame, count = questionable_rings(
+        spark.createDataFrame(rings, _RINGS_SCHEMA),
+        spark.createDataFrame(polys, _POLYS_SCHEMA),
+        bucket_width=width,
     )
-    q = questionable_rings(rings, polys, bucket_width=5.0).collect()
-    assert [r.osm_id for r in q] == [1]  # ring 2 marked outer, ring 1 questionable
+    got = [r.osm_id for r in frame.collect()]
+    assert sorted(got) == sorted(_questionable_oracle(rings, polys))
+    assert count == len(got)
+
+
+def test_questionable_job_count(spark):
+    """Two jobs (one exchange, one checkpoint) when called; with no
+    questionable ring the frame is an empty relation Catalyst prunes, so
+    it adds no job to the error-table union it joins."""
+    from osmcoastline_spark.operators.questionable import questionable_rings
+
+    rings = spark.createDataFrame(
+        [_square_ring(i, float(i % 300) - 150.0, float(i // 300)) for i in range(600)],
+        _RINGS_SCHEMA,
+    )
+    starts = [(float(i % 300) - 150.0, float(i // 300)) for i in range(600)]
+    polys = spark.createDataFrame([([x], [y]) for x, y in starts], _POLYS_SCHEMA)
+    j = _next_job_id(spark)
+    frame, count = questionable_rings(rings, polys)
+    assert _next_job_id(spark) - j <= 2
+    assert count == 0
+
+    base = rings.select(
+        F.col("ring_id").alias("osm_id"), F.lit("other").alias("error"), "xs", "ys"
+    ).localCheckpoint()
+    base.count()
+    j = _next_job_id(spark)
+    base.count()
+    alone = _next_job_id(spark) - j
+    j = _next_job_id(spark)
+    assert base.unionByName(frame).count() == 600
+    assert _next_job_id(spark) - j == alone
+
+    # polygons at the y=0 starts only: the 300 rings at y=1 follow a ring
+    j = _next_job_id(spark)
+    frame, count = questionable_rings(rings, polys.filter(F.element_at("shell_y", 1) == 0.0))
+    assert _next_job_id(spark) - j <= 2
+    assert count == frame.count() == 300
+
+
+def test_questionable_rejects_unbounded_spine(spark):
+    """x outside [-180, 180] spreads the events over more x-buckets than
+    the driver-side spine allows: fail before building the id frame."""
+    from osmcoastline_spark.operators.questionable import questionable_rings
+
+    rings = spark.createDataFrame(
+        [_square_ring(i, -180.0 + 10.0 * i) for i in range(80)], _RINGS_SCHEMA
+    )
+    polys = spark.createDataFrame([([0.0], [0.0])], _POLYS_SCHEMA)
+    with pytest.raises(ValueError, match="x-buckets"):
+        questionable_rings(rings, polys, bucket_width=5.0)
+    # the same count of buckets inside the world extent passes
+    frame, count = questionable_rings(rings.filter("ring_id < 37"), polys, bucket_width=5.0)
+    assert count == frame.count() == 36
+
+
+def test_questionable_rejects_null_start(spark):
+    from osmcoastline_spark.operators.questionable import questionable_rings
+
+    rings = spark.createDataFrame([_square_ring(1, 0.0)], _RINGS_SCHEMA)
+    polys = spark.createDataFrame([([None, 1.0], [0.0, 0.0])], _POLYS_SCHEMA)
+    with pytest.raises(ValueError, match="no start location"):
+        questionable_rings(rings, polys)
+
+
+def test_ensure_min_parallelism_no_op(spark):
+    """An input with at least defaultParallelism/factor partitions comes
+    back as the same object with no exchange; a one-partition input is
+    spread over defaultParallelism partitions."""
+    from osmcoastline_spark.util import ensure_min_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    for factor in (1, 2):
+        df = spark.range(0, 100, 1, numPartitions=-(-target // factor))
+        assert ensure_min_parallelism(df, factor=factor) is df
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+    one = spark.range(0, 100, 1, numPartitions=1)
+    spread = ensure_min_parallelism(one)
+    assert spread.rdd.getNumPartitions() == target
+    assert "Exchange" in spread._jdf.queryExecution().executedPlan().toString()
+
+
+def test_rowcount_nested_layout_matches_spark_count(spark, tmp_path):
+    """The footer shortcut must equal spark.read.parquet(...).count() on a
+    flat directory, a single file, and directories holding both part files
+    and subdirectories."""
+    import importlib.util
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "entry_rowcount", os.path.join(root, "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+
+    def write(rel, n):
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"a": list(range(n))}), str(path))
+
+    write("flat.parquet/part-0.parquet", 3)
+    write("flat.parquet/part-1.parquet", 4)
+    (tmp_path / "flat.parquet" / "_SUCCESS").touch()
+    write("single.parquet", 5)
+    write("mixed_kv.parquet/part-0.parquet", 3)
+    write("mixed_kv.parquet/k=1/part-0.parquet", 2)
+    write("mixed_plain.parquet/part-0.parquet", 3)
+    write("mixed_plain.parquet/more/part-0.parquet", 2)
+    write("kv.parquet/k=1/part-0.parquet", 2)
+    write("kv.parquet/k=2/part-0.parquet", 6)
+    for name in ("flat", "single", "mixed_kv", "mixed_plain", "kv"):
+        want = spark.read.parquet(str(tmp_path / f"{name}.parquet")).count()
+        assert entry._rowcount(spark, str(tmp_path), name) == want, name
 
 
 def test_nodes_from_images_input_hint(spark):
