@@ -40,7 +40,7 @@ ways = ways.localCheckpoint(eager=True)
 t0 = time.time()
 res = run_pipeline(spark, nodes, ways,
                    Options(output_polygons="both", water_cell_deg=4.0,
-                           max_points_in_polygon=500, collect_stats=False))
+                           max_points_in_polygon=500))
 rings = res.stats.get("rings", 0)
 land = res.tables["land_polygons"].count() if "land_polygons" in res.tables else 0
 tiles = res.tables["water_polygons"].count() if "water_polygons" in res.tables else 0

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Scaling evidence for the round-5 sketch-family kernels (N vs 4N cores,
-same protocol as run_cluster_kernel_scaling.py: identical input, fresh JVM
+same protocol as the other run_*_kernel_scaling.py scripts: identical input, fresh JVM
 per level, interleaved best-of-N, per-kernel MIN per level, probe-bracketed).
 
 Kernels (all over amplified sf0.1 events — amplified copies offset
@@ -10,8 +10,8 @@ regime sketches exist for):
              projection + one model-sized groupBy exchange (≤ 4096 register
              rows per group survive partial agg).
   cms      — cms_sketch d=4 w=1024 + broadcast estimate readout for the
-             BASE table's distinct keys (fixed query panel, the
-             queries ≪ corpus posture of the ivfpq kernel).
+             BASE table's distinct keys (fixed query panel,
+             queries ≪ corpus).
   bloom    — bloom_build over the filtered orders keys + bloom_prune of the
              amplified lineitem probe side: the probe side is the corpus
              (never shuffled — the kernel measures the broadcast bit-join

@@ -14,24 +14,19 @@ the DuckDB oracle can verify spatial operators without a spatial extension):
                 n-gram jaccard, text features, fingerprints, language guess,
                 corpus-LM familiarity, stratified mixing sampler, Gopher
                 rule gates, hashed linear quality classifier, embedding
-                cosine top-k (brute force + LSH + IVF, heuristic and
-                trained quantizers, residual IVF-PQ with ADC code-only
-                candidate joins), exact-integer k-means, SemDeDup,
+                cosine top-k (brute force + LSH + heuristic IVF),
                 phash multi-index Hamming near-dup, cleaning family
                 (line dedup, C4 filters, PII, chunking, packing),
                 the mergeable sketch family (HLL distinct, KMV
                 distinct-sample, count-min frequency, Bloom join
                 pruning, deterministic-sample quantiles),
-                curation chain, BPE training/encoding, vocab counts,
-                duplicated-substring spans, fuzzy-dedup clustering
+                curation chain, vocab counts, duplicated-substring spans
   spatial-idx : raster→vector run-merge (empty-tile water slabs),
                 H3/S2-style quadtree compact()/uncompact() round trip,
                 gridDisk k-ring (coastal-halo candidate tiles),
                 radius-bounded spatial kNN join (oracle = brute force),
                 zoom-pyramid tile rollup (single-exchange ancestor
                 explode; oracle = per-level UNION ALL)
-  ranking     : BM25 / TF-IDF relevance top-k (rational-idf oracle
-                bit-exact; classic ln-idf pytest-verified)
   temporal    : gap sessionization; as-of join (joinless union+window,
                 oracle = DuckDB's native ASOF JOIN); binned range join
                 (oracle = DuckDB's native inequality join)
@@ -161,7 +156,6 @@ def _node_cells(nodes: DataFrame, n: int) -> DataFrame:
         F.least(F.lit(n - 1), F.floor((F.col("lon") + 180.0) / (360.0 / n))).alias("tx"),
         F.least(F.lit(n - 1), F.floor((F.col("lat") + 90.0) / (180.0 / n))).alias("ty"),
     )
-
 
 
 # Deterministic synthetic geometry derived from table keys (identical
@@ -727,59 +721,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(docs.unionByName(clones), k=8, threshold=0.2)
 
 
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy-dedup clustering: MinHash-LSH candidate pairs -> connected
-    components (alternating large-star/small-star) -> min-id cluster
-    labels.  Two truncated clones per base doc (+1e6 / +2e6, -40 / -80
-    chars) guarantee transitive chains base~c1, base~c2, so components of
-    size >= 3 exist and the closure step is non-vacuous.  Oracle: the
-    same LSH pairs SQL as q_minhash_lsh_pairs feeding a recursive-CTE
-    min-label propagation."""
-    docs = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 25 == 0)
-        .select("doc_id", "text")
-    )
-
-    def clone(offset: int, cut: int) -> DataFrame:
-        return docs.select(
-            (F.col("doc_id") + offset).alias("doc_id"),
-            F.substring(
-                "text", F.lit(1), F.greatest(F.length("text") - cut, F.lit(16))
-            ).alias("text"),
-        )
-
-    alldocs = docs.unionByName(clone(1000000, 40)).unionByName(clone(2000000, 80))
-    edges = D.minhash_lsh_pairs(alldocs, n_hashes=4, bands=2, k=5)
-    return D.dedup_clusters(edges, alldocs.select("doc_id"))
-
-
-def q_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs edit-distance join (dedup.fuzzy_pairs): every
-    unordered pair within Levenshtein distance 2, via lossless
-    Ed-Join-style set-prefix filtering (d*q+1 rarest distinct q-grams
-    per string) + an exhaustive small tier — never a cross join. The
-    corpus is the 24-char document prefixes plus a deterministic
-    single-char mutation of every fifth doc (id + 1_000_000), so ~100
-    planted ed-1 pairs exist alongside any natural prefix clones. The
-    oracle is DuckDB's brute-force self-join + native levenshtein():
-    definitional vs algorithmic, like q_spatial_knn."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.select(
-        "doc_id",
-        F.substring("text", 1, 24).alias("s"),
-        (F.col("doc_id") % 20).cast("int").alias("p"),
-    )
-    mut = base.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(
-            F.expr("left(s, p)"), F.lit("Z"), F.expr("substring(s, p + 2)")
-        ).alias("s"),
-    )
-    corpus = base.select("doc_id", "s").unionByName(mut)
-    return D.fuzzy_pairs(corpus, text_col="s", id_col="doc_id", d=2, q=3)
-
-
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-crawl URL curation chain (functions/urls.py): canonicalize →
     keep-first URL dedup → skew-safe per-domain top-10 cap (C4's "limit
@@ -1221,41 +1162,6 @@ def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivf_topk(emb, k=3, nprobe=2)
 
 
-def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd k-means (cluster.kmeans_quantized): an ITERATIVE
-    algorithm with a full value-hash oracle — every step is integer/IEEE
-    exact (grid-quantized embeddings, int64 distances, floor(S/n + 0.5)
-    re-centering), so DuckDB replays the 3 unrolled iterations and agrees
-    bit-for-bit. The Spark plan is the broadcast-model shape: narrow Arrow
-    assignment (zero shuffle) + a k·dim-row partial-agg re-center."""
-    from osmcoastline_spark.functions import cluster as KM
-
-    emb = _read(spark, sf_dir, "embeddings")
-    return KM.kmeans_quantized(emb, k=8, iters=3)
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (cluster.semantic_dedup): k-means buckets the space, the
-    cosine near-dup join runs ONLY within a cluster — the bucketed
-    never-all-pairs shape. The base embeddings carry no true near-dups
-    (max pairwise cosine ≈ 0.6), so the query plants them: a 0.9×-scaled
-    copy of every 5th vector (float multiply — exact double product,
-    single-rounded to float identically on both engines) has quantized
-    cosine ≈ 1 with its original and must be the exact drop set at the
-    realistic 0.95 threshold."""
-    from osmcoastline_spark.functions import cluster as KM
-
-    emb = _read(spark, sf_dir, "embeddings")
-    copies = emb.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: (x * F.lit(0.9).cast("float")).cast("float")
-        ).alias("embedding"),
-        "label",
-    )
-    return KM.semantic_dedup(emb.unionByName(copies), k=8, iters=3, threshold=0.95)
-
-
 def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image near-dup pairs via multi-index Hamming
     (image.phash_near_dup_pairs): 15-bit bands → 4-band lossless candidate
@@ -1289,36 +1195,6 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return IM.phash_near_dup_pairs(
         base.unionByName(copies), max_distance=3, band_bits=15
-    )
-
-
-def q_embedding_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a TRAINED coarse quantizer (cluster.ivf_topk_trained):
-    k-means centroids replace the dominant-dimension heuristic of
-    q_embedding_ivf_topk — the FAISS-IVFFlat shape. Fully oracle-able
-    because training, probe ranking and cosine are all exact: the DuckDB
-    twin unrolls the Lloyd iterations, ranks probe cells by (int d2, id)
-    and re-ranks within lists with the fixed double cosine."""
-    from osmcoastline_spark.functions import cluster as KM
-
-    emb = _read(spark, sf_dir, "embeddings")
-    return KM.ivf_topk_trained(emb, k=3, k_cells=8, iters=3, nprobe=2)
-
-
-def q_embedding_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN (cluster.ivfpq_topk): the production 100-TB index shape
-    (FAISS IVFPQ, public) — trained coarse cells bucket the space, and
-    inside the lists the database side is an m-byte RESIDUAL product-
-    quantization code, never the vector; queries score candidates with
-    asymmetric ADC lookup tables built in the same narrow Arrow pass that
-    picks their probe cells.  Every step (quantization, both Lloyd
-    trainings, residuals, LUT sums) is int64-exact, so the DuckDB twin
-    unrolls coarse AND per-subspace training and matches bit-for-bit."""
-    from osmcoastline_spark.functions import cluster as KM
-
-    emb = _read(spark, sf_dir, "embeddings")
-    return KM.ivfpq_topk(
-        emb, k=3, k_cells=8, iters=2, nprobe=2, m=4, k_sub=16, pq_iters=2
     )
 
 
@@ -1536,32 +1412,6 @@ def q_water_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training (bpe.bpe_train): the classic
-    Sennrich merge loop in the vocabulary-bounded shape — ONE corpus
-    shuffle seeds the distinct-word table, then each of the 8 merge steps
-    is a vocab-bounded pair-count aggregate + a single-ROW argmax collect
-    + a pure-Catalyst ONE-replace apply (the two-space symbol gap makes
-    merge occurrences character-disjoint, so one LTR replace pass IS the
-    classic greedy merge — functions/bpe.py module docstring)."""
-    from osmcoastline_spark.functions import bpe as B
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return B.bpe_train(docs, num_merges=8)
-
-
-def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train BPE on the corpus then tokenize it (bpe.bpe_token_counts):
-    per-document word and BPE-token counts under the 8 learned merges.
-    Tokenization is a broadcast join against the vocabulary-bounded
-    tokenized-word table — the corpus is scanned twice total regardless
-    of merge count."""
-    from osmcoastline_spark.functions import bpe as B
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return B.bpe_token_counts(docs, num_merges=8)
-
-
 def q_vectorize_water(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster→vector: the J15 "no coastline ⇒ all water" tile set
     (reference src/coastline_polygons.cpp:322-360 emits one rectangle PER
@@ -1744,23 +1594,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("event_id", F.col("w_win_id").alias("win_id"), "overlap_us")
 
 
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-on-read JSON extraction (semistruct.json_field_stats):
-    per-event-type stats over props.$.k with malformed accounting —
-    get_json_object runs JVM-side map-side; every tenth event's blob is
-    corrupted deterministically in the query so n_bad is non-vacuous and
-    the ANSI-safe try_cast path executes. Exact int64 stats."""
-    from osmcoastline_spark.functions.semistruct import json_field_stats
-
-    ev = _read(spark, sf_dir, "events").select(
-        "event_type",
-        F.when(
-            F.col("event_id") % 10 == 0, F.concat(F.lit("broken"), F.col("props"))
-        ).otherwise(F.col("props")).alias("props"),
-    )
-    return json_field_stats(ev)
-
-
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binned range join (functions/temporal.py:range_join): every click
     within the 6-hour attribution window [err.ts, err.ts + 6h) after
@@ -1815,82 +1648,6 @@ def q_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_join(points, sites, k=3, radius=5.0, cell_deg=5.0)
 
 
-# BM25 query terms — mid-frequency corpus words so idf varies and the
-# doc-length normalization is exercised; fixed order (the score is a
-# fixed-order sum, so term order is part of the contract).
-BM25_TERMS = ["spark", "hash", "customer", "vector"]
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 relevance top-k (functions/ranking.py): per-doc tf as pure
-    string-length expressions (zero corpus shuffle), ONE single-row corpus
-    aggregate broadcast back, TakeOrdered top-25. The rational-idf variant
-    keeps the whole score in +-*/ double arithmetic so the DuckDB oracle is
-    bit-exact; the classic log-idf form is pytest-verified instead
-    (ln() differs by 1 ULP between the engines)."""
-    from osmcoastline_spark.functions.ranking import bm25_topk
-
-    docs = _read(spark, sf_dir, "documents")
-    return bm25_topk(docs, BM25_TERMS, k=25)
-
-
-def _bm25_oracle_sql(terms: list[str], k: int) -> str:
-    """DuckDB twin of functions/ranking.bm25_topk(idf='rational').
-
-    Every subexpression mirrors the Column tree's association order so the
-    double arithmetic is IEEE-bit-identical (no ln(), no reassociation):
-    tf via the same space-doubling length trick, ONE stats row, fixed-order
-    score sum, ORDER BY score DESC, doc_id LIMIT k.
-    """
-    pad = "' ' || replace(n, ' ', '  ') || ' '"
-    tf_cols = ",\n    ".join(
-        f"CAST((length({pad}) - length(replace({pad}, ' {t} ', ''))) / {len(t) + 2} "
-        f"AS BIGINT) AS tf_{t}"
-        for t in terms
-    )
-    df_cols = ",\n    ".join(
-        f"sum(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS df_{t}" for t in terms
-    )
-    # the CASE mirrors ranking.bm25's degenerate-corpus guard (sum_dl = 0
-    # would make dl/avgdl NaN); on real data both engines take the same
-    # division, so the doubles stay bit-identical
-    avgdl = (
-        "(CASE WHEN s.sum_dl > 0 "
-        "THEN CAST(s.sum_dl AS DOUBLE) / CAST(s.n_docs AS DOUBLE) "
-        "ELSE 1.0 END)"
-    )
-    dl_norm = f"(1.0 - 0.75 + 0.75 * (CAST(p.dl AS DOUBLE) / {avgdl}))"
-
-    def w(t: str) -> str:
-        nd = "CAST(s.n_docs AS DOUBLE)"
-        df = f"CAST(s.df_{t} AS DOUBLE)"
-        tf = f"CAST(p.tf_{t} AS DOUBLE)"
-        return (
-            f"(({nd} - {df} + 0.5) / ({df} + 0.5) + 1.0)"
-            f" * ({tf} * (1.2 + 1.0)) / ({tf} + 1.2 * {dl_norm})"
-        )
-
-    score = " + ".join(w(t) for t in terms)
-    tf_out = ", ".join(f"p.tf_{t}" for t in terms)
-    return f"""
-WITH nrm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS n
-  FROM documents),
-perdoc AS (
-  SELECT doc_id,
-    CAST(CASE WHEN length(n) = 0 THEN 0
-              ELSE length(n) - length(replace(n, ' ', '')) + 1 END AS BIGINT) AS dl,
-    {tf_cols}
-  FROM nrm),
-stats AS (
-  SELECT count(*) AS n_docs, sum(dl) AS sum_dl,
-    {df_cols}
-  FROM perdoc)
-SELECT p.doc_id, p.dl, {tf_out}, {score} AS score
-FROM perdoc p, stats s
-ORDER BY score DESC, p.doc_id LIMIT {k}"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "q_filter_ways": q_filter_ways,
@@ -1919,8 +1676,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_minhash_signatures": q_minhash_signatures,
         "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
         "q_ngram_jaccard": q_ngram_jaccard,
-        "q_dedup_clusters": q_dedup_clusters,
-        "q_fuzzy_dedup": q_fuzzy_dedup,
         "q_url_dedup": q_url_dedup,
         "q_simhash": q_simhash,
         "q_text_features": q_text_features,
@@ -1949,12 +1704,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_embedding_lsh_exact": q_embedding_lsh_exact,
         "q_random_projection": q_random_projection,
         "q_embedding_ivf_topk": q_embedding_ivf_topk,
-        "q_kmeans": q_kmeans,
-        "q_semantic_dedup": q_semantic_dedup,
         "q_phash_neardup": q_phash_neardup,
         "q_quality_classifier": q_quality_classifier,
-        "q_embedding_ivf_trained": q_embedding_ivf_trained,
-        "q_embedding_ivfpq": q_embedding_ivfpq,
         "q_hll_users_by_type": q_hll_users_by_type,
         "q_kmv_users_by_type": q_kmv_users_by_type,
         "q_cms_heavy_hitters": q_cms_heavy_hitters,
@@ -1962,8 +1713,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_value_quantiles": q_value_quantiles,
         "q_kmv_overlap": q_kmv_overlap,
         "q_pack_sequences": q_pack_sequences,
-        "q_bpe_merges": q_bpe_merges,
-        "q_bpe_token_counts": q_bpe_token_counts,
         "q_vectorize_water": q_vectorize_water,
         "q_compact_cells": q_compact_cells,
         "q_sessionize": q_sessionize,
@@ -1974,9 +1723,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_tile_pyramid": q_tile_pyramid,
         "q_range_join": q_range_join,
         "q_interval_join": q_interval_join,
-        "q_json_extract": q_json_extract,
         "q_spatial_knn": q_spatial_knn,
-        "q_bm25_topk": q_bm25_topk,
     }
 
 
@@ -2247,30 +1994,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes sb ON sb.doc_id = b
             WHERE CAST(i AS DOUBLE) / (sa.nsh + sb.nsh - i) >= 0.2
         """,
-        # brute-force definitional twin: every pair, native levenshtein —
-        # cross-checks the prefix-filter algorithm against the definition
-        "q_fuzzy_dedup": """
-            WITH base AS (
-              SELECT doc_id, substring(text, 1, 24) AS s,
-                     CAST(doc_id % 20 AS INT) AS p
-              FROM documents
-            ),
-            mut AS (
-              SELECT doc_id + 1000000 AS doc_id,
-                     left(s, p) || 'Z' || substring(s, p + 2) AS s
-              FROM base WHERE doc_id % 5 = 0
-            ),
-            corpus AS (
-              SELECT doc_id, s FROM base
-              UNION ALL SELECT doc_id, s FROM mut
-            )
-            SELECT CAST(a.doc_id AS BIGINT) AS id_a,
-                   CAST(b.doc_id AS BIGINT) AS id_b,
-                   CAST(levenshtein(a.s, b.s) AS INT) AS dist
-            FROM corpus a JOIN corpus b ON a.doc_id < b.doc_id
-            WHERE abs(length(a.s) - length(b.s)) <= 2
-              AND levenshtein(a.s, b.s) <= 2
-        """,
         # full canonicalization chain re-implemented in DuckDB string
         # builtins; naive-window domain ranks cross-check the salted
         # two-phase top-N
@@ -2371,56 +2094,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT doc_id, canonical_url, domain, dup_count, domain_rank
             FROM ranked WHERE domain_rank <= 10
-        """,
-        "q_dedup_clusters": """
-            WITH RECURSIVE
-            base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-            alldocs AS (
-              SELECT doc_id, text FROM base
-              UNION ALL
-              SELECT doc_id + 1000000,
-                     substring(text, 1, greatest(length(text) - 40, 16))
-              FROM base
-              UNION ALL
-              SELECT doc_id + 2000000,
-                     substring(text, 1, greatest(length(text) - 80, 16))
-              FROM base
-            ),
-            sh AS (
-              SELECT doc_id, text,
-                     unnest(generate_series(1, greatest(length(text) - 4, 1))) AS i
-              FROM alldocs
-            ),
-            shingle AS (SELECT doc_id, substring(text, CAST(i AS INT), 5) AS s FROM sh),
-            bands AS (SELECT doc_id, s, unnest(generate_series(0, 3)) AS band FROM shingle),
-            sigs AS (
-              SELECT doc_id, band, min(md5(s || '#' || band)) AS sig
-              FROM bands GROUP BY doc_id, band
-            ),
-            keys AS (
-              SELECT doc_id, band // 2 AS lsh_band,
-                     string_agg(band || ':' || sig, '|' ORDER BY band || ':' || sig) AS key
-              FROM sigs GROUP BY doc_id, band // 2
-            ),
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-              FROM keys a JOIN keys b ON a.lsh_band = b.lsh_band AND a.key = b.key
-              WHERE a.doc_id < b.doc_id
-            ),
-            edges AS (
-              SELECT a AS u, b AS v FROM pairs
-              UNION ALL SELECT b AS u, a AS v FROM pairs
-            ),
-            -- min-label propagation: the component minimum m is smaller
-            -- than every node on any path, so (node, m) is always reached;
-            -- the w.lbl < e.u guard only prunes non-minimal labels.
-            walk(id, lbl) AS (
-              SELECT doc_id, doc_id FROM alldocs
-              UNION
-              SELECT e.u, w.lbl FROM walk w JOIN edges e ON e.v = w.id
-              WHERE w.lbl < e.u
-            )
-            SELECT id AS doc_id, min(lbl) AS cluster_id FROM walk GROUP BY id
         """,
         "q_simhash": """
             WITH toks AS (
@@ -2731,12 +2404,8 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT query_id, nbr_id, cos, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= 3
         """,
-        "q_kmeans": _KMEANS_SQL,
-        "q_semantic_dedup": _SEMANTIC_DEDUP_SQL,
         "q_phash_neardup": _PHASH_NEARDUP_SQL,
         "q_quality_classifier": _QUALITY_SQL,
-        "q_embedding_ivf_trained": _IVF_TRAINED_SQL,
-        "q_embedding_ivfpq": _IVFPQ_SQL,
         "q_hll_users_by_type": _HLL_SQL,
         "q_kmv_users_by_type": _KMV_SQL,
         "q_cms_heavy_hitters": _CMS_SQL,
@@ -2744,8 +2413,6 @@ def oracle_sql() -> dict[str, str]:
         "q_value_quantiles": _QUANTILES_SQL,
         "q_kmv_overlap": _KMV_OVERLAP_SQL,
         "q_pack_sequences": _PACK_SEQUENCES_SQL,
-        "q_bpe_merges": _BPE_MERGES_SQL,
-        "q_bpe_token_counts": _BPE_TOKEN_COUNTS_SQL,
         # raster→vector scanline run-merge over the J15 empty-tile water
         # set — the window twin of operators/vectorize.py:vectorize_cells
         "q_vectorize_water": f"""
@@ -2884,30 +2551,6 @@ base AS (
 FROM base GROUP BY 1, 2, 3"""
             for d in range(6)
         ),
-        # binned range join vs DuckDB's native inequality join: clicks in
-        # the half-open 6-hour window after a same-user error
-        "q_json_extract": """
-            WITH ev AS (
-              SELECT event_type,
-                     CASE WHEN event_id % 10 = 0 THEN 'broken' || props
-                          ELSE props END AS props
-              FROM events
-            ),
-            x AS (
-              SELECT event_type,
-                     TRY_CAST(CASE WHEN json_valid(props)
-                                   THEN json_extract_string(props, '$.k')
-                              END AS BIGINT) AS v
-              FROM ev
-            )
-            SELECT event_type,
-                   CAST(count(*) AS BIGINT) AS n_rows,
-                   CAST(count(v) AS BIGINT) AS n_vals,
-                   CAST(count(*) - count(v) AS BIGINT) AS n_bad,
-                   CAST(COALESCE(sum(v), 0) AS BIGINT) AS val_sum,
-                   min(v) AS val_min, max(v) AS val_max
-            FROM x GROUP BY event_type
-        """,
         # native inequality join twin (two-sided sibling of q_range_join)
         "q_interval_join": """
             WITH left_iv AS (
@@ -2948,102 +2591,7 @@ ranked AS (
          CAST(row_number() OVER (PARTITION BY point_id ORDER BY d2, site_id) AS BIGINT) AS rnk
   FROM cand WHERE d2 <= 25.0)
 SELECT point_id, site_id, d2, rnk FROM ranked WHERE rnk <= 3""",
-        # BM25 rational-idf top-k: pure +-*/ double arithmetic mirrored
-        # subexpression-for-subexpression (see _bm25_oracle_sql docstring)
-        "q_bm25_topk": _bm25_oracle_sql(BM25_TERMS, 25),
     }
-
-
-# k-means / SemDeDup SQL twins: the oracle UNROLLS the Lloyd iterations —
-# legal because every step is exact (int64 distances, double-floor
-# re-centering), so iteration t is a plain deterministic function of
-# iteration t-1. min(struct_pack(d, j)) reproduces numpy's first-min
-# tie-break; empty clusters COALESCE to the previous centroid exactly as
-# cluster.kmeans_quantized does.
-def _kmeans_ctes(pts_sql: str, k: int = 8, iters: int = 3) -> str:
-    # quantization scale lives in the caller's pts_sql (_QUANT) — no knob
-    # here that the CTE body wouldn't honor
-    parts = [
-        f"""pts AS ({pts_sql})""",
-        f"c0 AS (SELECT vec_id AS j, q AS m FROM pts WHERE vec_id < {k})",
-    ]
-    for t in range(iters):
-        parts.append(
-            f"""a{t} AS (
-              SELECT p.vec_id,
-                     min(struct_pack(
-                         d := CAST(list_sum(list_transform(p.q, (x,i) -> (x - c.m[i])*(x - c.m[i]))) AS BIGINT),
-                         j := c.j)) AS mj
-              FROM pts p CROSS JOIN c{t} c GROUP BY p.vec_id
-            )"""
-        )
-        parts.append(
-            f"""s{t} AS (
-              SELECT a.mj.j AS j, t.u.i AS i, CAST(sum(t.u.x) AS BIGINT) AS s, count(*) AS n
-              FROM a{t} a JOIN pts p USING (vec_id),
-                   unnest(list_transform(p.q, (x,i) -> struct_pack(x:=x, i:=i))) t(u)
-              GROUP BY 1, 2
-            )"""
-        )
-        parts.append(
-            f"""c{t + 1} AS (
-              SELECT c.j, COALESCE(s.m, c.m) AS m
-              FROM c{t} c LEFT JOIN (
-                SELECT j, list(CAST(floor(CAST(s AS DOUBLE)/n + 0.5) AS BIGINT) ORDER BY i) AS m
-                FROM s{t} GROUP BY j
-              ) s USING (j)
-            )"""
-        )
-    parts.append(
-        f"""afin AS (
-          SELECT p.vec_id, p.q,
-                 min(struct_pack(
-                     d := CAST(list_sum(list_transform(p.q, (x,i) -> (x - c.m[i])*(x - c.m[i]))) AS BIGINT),
-                     j := c.j)) AS mj
-          FROM pts p CROSS JOIN c{iters} c GROUP BY p.vec_id, p.q
-        )"""
-    )
-    return "WITH " + ",\n".join(parts)
-
-
-_QUANT = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))"
-
-_KMEANS_SQL = (
-    _kmeans_ctes(f"SELECT vec_id, {_QUANT} AS q FROM embeddings")
-    + "\nSELECT vec_id, CAST(mj.j AS INTEGER) AS cluster, mj.d AS d2 FROM afin"
-)
-
-# planted near-dups: 0.9×-scaled copies (CAST(... AS FLOAT) forces the same
-# single rounding Spark's float multiply performs — the double product of
-# two floats is exact, so both engines round the identical value)
-_SEMDEDUP_PTS = f"""
-    SELECT vec_id, {_QUANT} AS q FROM embeddings
-    UNION ALL
-    SELECT vec_id + 100000,
-           list_transform(embedding,
-               x -> CAST(floor(CAST(CAST(x * CAST(0.9 AS FLOAT) AS FLOAT) AS DOUBLE)*1000 + 0.5) AS BIGINT))
-    FROM embeddings WHERE vec_id % 5 = 0
-"""
-
-_SEMANTIC_DEDUP_SQL = (
-    _kmeans_ctes(_SEMDEDUP_PTS)
-    + """,
-    pj AS (
-      SELECT vec_id, q, mj.j AS cluster,
-             CAST(list_sum(list_transform(q, x -> x*x)) AS BIGINT) AS nq
-      FROM afin
-    ),
-    dropped AS (
-      SELECT DISTINCT b.vec_id AS vid
-      FROM pj a JOIN pj b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-      WHERE CAST(list_sum(list_transform(a.q, (x,i) -> x * b.q[i])) AS DOUBLE)
-            / (sqrt(CAST(a.nq AS DOUBLE)) * sqrt(CAST(b.nq AS DOUBLE))) >= 0.95
-    )
-    SELECT p.vec_id, CAST(p.cluster AS INTEGER) AS cluster,
-           (d.vid IS NULL) AS keep
-    FROM pj p LEFT JOIN dropped d ON p.vec_id = d.vid
-"""
-)
 
 
 # phash near-dup twin: the banded multi-index is LOSSLESS for d < n_bands,
@@ -3072,178 +2620,6 @@ _PHASH_NEARDUP_SQL = f"""
     FROM imgs a JOIN imgs b ON a.image_id < b.image_id
     WHERE bit_count(xor(a.phash, b.phash)) <= 3
 """
-
-
-# trained-IVF twin: reuses the unrolled k-means CTEs, ranks probe cells by
-# (exact int d2, cell id), re-ranks within the probed inverted lists with
-# the fixed double cosine. A (query, nbr) pair matches through at most one
-# cell (the nbr's single list cell), so the candidate join needs no dedup.
-_IVF_TRAINED_SQL = (
-    _kmeans_ctes(f"SELECT vec_id, {_QUANT} AS q FROM embeddings")
-    + """,
-    nqp AS (
-      SELECT vec_id, q,
-             CAST(list_sum(list_transform(q, x -> x*x)) AS BIGINT) AS nq
-      FROM pts
-    ),
-    dists AS (
-      SELECT p.vec_id, c.j,
-             CAST(list_sum(list_transform(p.q, (x,i) -> (x - c.m[i])*(x - c.m[i]))) AS BIGINT) AS d
-      FROM pts p CROSS JOIN c3 c
-    ),
-    rankedcells AS (
-      SELECT vec_id, j,
-             row_number() OVER (PARTITION BY vec_id ORDER BY d, j) AS pr
-      FROM dists
-    ),
-    lists AS (SELECT vec_id AS nbr_id, j AS cell FROM rankedcells WHERE pr = 1),
-    probes AS (SELECT vec_id AS query_id, j AS cell FROM rankedcells WHERE pr <= 2),
-    cands AS (
-      SELECT query_id, nbr_id FROM probes JOIN lists USING (cell)
-      WHERE query_id != nbr_id
-    ),
-    scored AS (
-      SELECT c.query_id, c.nbr_id,
-             CAST(list_sum(list_transform(a.q, (x,i) -> x * b.q[i])) AS DOUBLE)
-             / (sqrt(CAST(a.nq AS DOUBLE)) * sqrt(CAST(b.nq AS DOUBLE))) AS cos
-      FROM cands c
-      JOIN nqp a ON a.vec_id = c.query_id
-      JOIN nqp b ON b.vec_id = c.nbr_id
-    ),
-    rk AS (
-      SELECT query_id, nbr_id, cos,
-             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nbr_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, nbr_id, cos, CAST(rank AS INT) AS rank FROM rk WHERE rank <= 3
-"""
-)
-
-
-def _ivfpq_sql(
-    k: int = 3,
-    k_cells: int = 8,
-    iters: int = 2,
-    nprobe: int = 2,
-    m: int = 4,
-    k_sub: int = 16,
-    pq_iters: int = 2,
-    dim: int = 64,
-) -> str:
-    """IVF-PQ twin: reuses the unrolled coarse k-means CTEs, derives the
-    exact int64 residuals against the final coarse centroids, unrolls the
-    per-subspace PQ Lloyd training over residual slices, and scores probe
-    candidates with the same ADC lookup-table sums the Spark side
-    computes — every quantity is integer, so the hash compare is exact.
-    A (query, nbr) pair matches through exactly one cell (the nbr's
-    single list cell), so the adc GROUP BY sums exactly m LUT rows."""
-    sd = dim // m
-    parts = [
-        f"""rsd AS (
-          SELECT a.vec_id, a.mj.j AS cell,
-                 list_transform(a.q, (x,i) -> x - c.m[i]) AS r
-          FROM afin a JOIN c{iters} c ON c.j = a.mj.j
-        )""",
-        f"""psub AS (
-          SELECT vec_id, g.s, list_slice(r, g.s*{sd}+1, (g.s+1)*{sd}) AS sq
-          FROM rsd, range({m}) g(s)
-        )""",
-        f"p0 AS (SELECT s, vec_id AS j, sq AS m FROM psub WHERE vec_id < {k_sub})",
-    ]
-    for t in range(pq_iters):
-        parts.append(
-            f"""pa{t} AS (
-              SELECT p.vec_id, p.s,
-                     min(struct_pack(
-                         d := CAST(list_sum(list_transform(p.sq, (x,i) -> (x - c.m[i])*(x - c.m[i]))) AS BIGINT),
-                         j := c.j)) AS mj
-              FROM psub p JOIN p{t} c ON c.s = p.s GROUP BY p.vec_id, p.s
-            )"""
-        )
-        parts.append(
-            f"""ps{t} AS (
-              SELECT a.s, a.mj.j AS j, t.u.i AS i, CAST(sum(t.u.x) AS BIGINT) AS sm, count(*) AS n
-              FROM pa{t} a JOIN psub p ON p.vec_id = a.vec_id AND p.s = a.s,
-                   unnest(list_transform(p.sq, (x,i) -> struct_pack(x:=x, i:=i))) t(u)
-              GROUP BY 1, 2, 3
-            )"""
-        )
-        parts.append(
-            f"""p{t + 1} AS (
-              SELECT c.s, c.j, COALESCE(nm.m, c.m) AS m
-              FROM p{t} c LEFT JOIN (
-                SELECT s, j, list(CAST(floor(CAST(sm AS DOUBLE)/n + 0.5) AS BIGINT) ORDER BY i) AS m
-                FROM ps{t} GROUP BY s, j
-              ) nm ON nm.s = c.s AND nm.j = c.j
-            )"""
-        )
-    parts.append(
-        f"""pcodes AS (
-          SELECT p.vec_id, p.s,
-                 min(struct_pack(
-                     d := CAST(list_sum(list_transform(p.sq, (x,i) -> (x - c.m[i])*(x - c.m[i]))) AS BIGINT),
-                     j := c.j)).j AS code
-          FROM psub p JOIN p{pq_iters} c ON c.s = p.s GROUP BY p.vec_id, p.s
-        )"""
-    )
-    parts.append(
-        f"""cdist AS (
-          SELECT p.vec_id, c.j,
-                 CAST(list_sum(list_transform(p.q, (x,i) -> (x - c.m[i])*(x - c.m[i]))) AS BIGINT) AS d
-          FROM pts p CROSS JOIN c{iters} c
-        )"""
-    )
-    parts.append(
-        """pqrankedcells AS (
-          SELECT vec_id, j, row_number() OVER (PARTITION BY vec_id ORDER BY d, j) AS pr
-          FROM cdist
-        )"""
-    )
-    parts.append(
-        f"pqprobes AS (SELECT vec_id AS query_id, j AS cell FROM pqrankedcells WHERE pr <= {nprobe})"
-    )
-    parts.append(
-        f"""qres AS (
-          SELECT pr.query_id, pr.cell, list_transform(p.q, (x,i) -> x - c.m[i]) AS rq
-          FROM pqprobes pr
-          JOIN pts p ON p.vec_id = pr.query_id
-          JOIN c{iters} c ON c.j = pr.cell
-        )"""
-    )
-    parts.append(
-        f"""lut AS (
-          SELECT q.query_id, q.cell, pc.s, pc.j,
-                 CAST(list_sum(list_transform(list_slice(q.rq, pc.s*{sd}+1, (pc.s+1)*{sd}), (x,i) -> (x - pc.m[i])*(x - pc.m[i]))) AS BIGINT) AS d
-          FROM qres q CROSS JOIN p{pq_iters} pc
-        )"""
-    )
-    parts.append(
-        """adc AS (
-          SELECT pr.query_id, r.vec_id AS nbr_id, CAST(sum(l.d) AS BIGINT) AS adc_d2
-          FROM pqprobes pr
-          JOIN rsd r ON r.cell = pr.cell AND r.vec_id != pr.query_id
-          JOIN pcodes pc ON pc.vec_id = r.vec_id
-          JOIN lut l ON l.query_id = pr.query_id AND l.cell = pr.cell
-                    AND l.s = pc.s AND l.j = pc.code
-          GROUP BY 1, 2
-        )"""
-    )
-    parts.append(
-        """pqrk AS (
-          SELECT query_id, nbr_id, adc_d2,
-                 row_number() OVER (PARTITION BY query_id ORDER BY adc_d2, nbr_id) AS rank
-          FROM adc
-        )"""
-    )
-    return (
-        _kmeans_ctes(f"SELECT vec_id, {_QUANT} AS q FROM embeddings", k=k_cells, iters=iters)
-        + ",\n"
-        + ",\n".join(parts)
-        + f"\nSELECT query_id, nbr_id, adc_d2, CAST(rank AS INT) AS rank FROM pqrk WHERE rank <= {k}"
-    )
-
-
-_IVFPQ_SQL = _ivfpq_sql()
 
 
 def _hll_sql(p: int = 5) -> str:
@@ -4142,75 +3518,3 @@ FROM documents
 """
 
 
-# BPE twins: the oracle UNROLLS the 8 merge steps — legal for the same
-# reason as the k-means unroll (each step is a deterministic function of
-# the last), and the merge APPLY is exact because symbols are joined by a
-# TWO-space gap, which makes merge-pattern occurrences character-disjoint:
-# ONE non-overlapping left-to-right replace pass == the classic greedy
-# BPE merge set on both engines (functions/bpe.py module docstring).  The
-# empty-pair guard (LEFT JOIN a one-row relation, chr(1) sentinel
-# pattern) mirrors bpe._train's early break: a step with no pairs left
-# applies a no-op and emits no merge row on either engine.
-def _bpe_ctes(num_merges: int) -> str:
-    parts = [
-        """bw0 AS (
-          SELECT word, CAST(count(*) AS BIGINT) AS freq,
-                 ' ' || array_to_string(regexp_extract_all(word, '.'), '  ') || ' ' AS sym
-          FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-                FROM documents)
-          GROUP BY word)"""
-    ]
-    for t in range(1, num_merges + 1):
-        parts.append(
-            f"""bp{t} AS (
-          SELECT u[1] AS lhs, u[2] AS rhs, CAST(sum(freq) AS BIGINT) AS pair_count
-          FROM (SELECT freq, string_split(trim(sym), '  ') AS arr FROM bw{t - 1}),
-               unnest(list_zip(arr, arr[2:])) z(u)
-          WHERE u[2] IS NOT NULL
-          GROUP BY 1, 2)"""
-        )
-        parts.append(
-            f"bb{t} AS (SELECT lhs, rhs, pair_count FROM bp{t} "
-            f"ORDER BY pair_count DESC, lhs, rhs LIMIT 1)"
-        )
-        parts.append(
-            f"""bw{t} AS (
-          SELECT w.word, w.freq, replace(w.sym, m.pat, m.rep) AS sym
-          FROM bw{t - 1} w CROSS JOIN (
-            SELECT coalesce(' ' || lhs || '  ' || rhs || ' ', chr(1)) AS pat,
-                   coalesce(' ' || lhs || rhs || ' ', chr(1)) AS rep
-            FROM (SELECT 1 AS one) LEFT JOIN bb{t} ON true) m)"""
-        )
-    return "WITH " + ",\n".join(parts)
-
-
-def _bpe_merges_sql(num_merges: int = 8) -> str:
-    steps = "\nUNION ALL\n".join(
-        f"SELECT CAST({t} AS INTEGER) AS step, lhs, rhs, lhs || rhs AS merged, "
-        f"pair_count FROM bb{t}"
-        for t in range(1, num_merges + 1)
-    )
-    return _bpe_ctes(num_merges) + "\n" + steps
-
-
-def _bpe_token_counts_sql(num_merges: int = 8) -> str:
-    return (
-        _bpe_ctes(num_merges)
-        + f""",
-wt AS (SELECT word,
-              CAST(len(string_split(trim(sym), '  ')) AS BIGINT) AS word_tokens
-       FROM bw{num_merges}),
-di AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-       FROM documents),
-pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-              CAST(sum(word_tokens) AS BIGINT) AS n_tokens
-       FROM di JOIN wt USING (word) GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(coalesce(pd.n_words, 0) AS BIGINT) AS n_words,
-       CAST(coalesce(pd.n_tokens, 0) AS BIGINT) AS n_tokens
-FROM documents d LEFT JOIN pd USING (doc_id)"""
-    )
-
-
-_BPE_MERGES_SQL = _bpe_merges_sql()
-_BPE_TOKEN_COUNTS_SQL = _bpe_token_counts_sql()

@@ -271,110 +271,6 @@ def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return sums.selectExpr("doc_id", f"CAST(0 AS BIGINT) + {terms} AS simhash")
 
 
-# ------------------------------------------------- connected components
-
-
-def dedup_clusters(
-    edges: DataFrame, nodes: DataFrame, max_rounds: int = 32
-) -> DataFrame:
-    """Connected components over near-duplicate candidate edges via
-    alternating large-star / small-star (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14).
-
-    This is the canonical web-scale fuzzy-dedup step: LSH emits candidate
-    PAIRS, but keeping one representative per near-dup GROUP needs the
-    transitive closure (a~b, b~c => one cluster {a,b,c}).  Naive label
-    propagation needs O(diameter) joins; large-star/small-star converges
-    in O(log^2 n) rounds regardless of diameter, each round a groupBy +
-    a projection — no all-pairs step anywhere, so the shape survives
-    100 TB (per-round cost is O(|E|), and |E| only shrinks).
-
-    * large-star: every node u connects each STRICTLY LARGER neighbour to
-      m(u) = min(neighbours(u) + {u}).
-    * small-star: orient edges (hi, lo); every hi connects its smaller
-      neighbours and itself to the overall minimum.
-
-    Fixpoint = the edge set is a star forest (both steps are identity);
-    detected by an order-independent count+xxhash64 checksum aggregate —
-    one tiny job per round, no extra shuffle.  Every round
-    localCheckpoints to truncate lineage (same discipline as ring
-    assembly, rings.py:193).
-
-    `edges`: columns (a, b), undirected candidate pairs, any orientation.
-    `nodes`: one column `doc_id` — the full id universe, so isolated docs
-    come out as singleton clusters.
-    Returns (doc_id, cluster_id) with cluster_id = min doc_id of the
-    component — deterministic, engine-independent.
-    """
-    e = (
-        edges.select(F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _checksum(df: DataFrame) -> tuple[int, int]:
-        # bit_xor, not sum: summing 64-bit hashes overflows under ANSI mode
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).first()
-        return int(row["n"]), int(row["h"])
-
-    prev = _checksum(e)
-    for _ in range(max_rounds):
-        # Both stars are written as agg-then-self-join on the grouping key
-        # rather than collect_set: a hub node (one giant LSH bucket clique)
-        # would materialize its whole neighbourhood in one executor's
-        # memory under collect_set, while the join form streams it and AQE
-        # skew-split can break the hot key.  The join is co-partitioned
-        # with the groupBy that feeds it (same key), so it costs no extra
-        # exchange of the big side.
-        #
-        # large-star: each u connects every neighbour w > u to
-        # m(u) = min(neighbours + {u}).
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        ls = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star over edges oriented (lo=a, hi=b): hi links itself and
-        # every smaller neighbour to the overall minimum.
-        mins2 = ls.groupBy("b").agg(F.min("a").alias("m"))
-        ss = (
-            ls.join(mins2, "b")
-            .filter(F.col("a") != F.col("m"))
-            .select(F.col("m").alias("a"), F.col("a").alias("b"))
-            .unionByName(mins2.select(F.col("m").alias("a"), F.col("b").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _checksum(ss)
-        e = ss
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"dedup_clusters: no fixpoint after {max_rounds} large/small-star rounds"
-        )
-    # star forest: edge (root, w).  Singletons map to themselves.
-    roots = e.select(F.col("b").alias("doc_id"), F.col("a").alias("root"))
-    return nodes.select(F.col("doc_id").cast("long").alias("doc_id")).join(
-        roots, "doc_id", "left"
-    ).select(
-        "doc_id", F.coalesce("root", "doc_id").alias("cluster_id")
-    )
-
-
 def hash_band_structs(hash_col: str, band_bits: int):
     """The shared 64-bit-fingerprint band index: an array of (band, key)
     structs where key = band_bits-wide slice `band` of the hash, extracted
@@ -504,183 +400,4 @@ def duplicated_spans(
             ),
             "n_dup_windows",
         )
-    )
-
-
-# --------------------------------------------------- fuzzy (edit-distance)
-
-
-def fuzzy_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    d: int = 2,
-    q: int = 3,
-    max_band_rows: int = 20000,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """ALL unordered pairs within Levenshtein distance ``d`` — exactly,
-    never approximately — via q-gram set-prefix filtering (the Ed-Join
-    design, Xiao/Wang/Lin VLDB'08, adapted to distinct-gram SETS so the
-    prefix bound survives repetitive strings).
-
-    Output: one row per pair (id_a < id_b): id_a, id_b, dist (int,
-    the exact edit distance, <= d).
-
-    Losslessness argument (distinct-gram sets, not positional multisets):
-    one edit touches at most q positional q-grams, hence removes at most
-    q values from the distinct-gram set, so
-        |set(a) ∩ set(b)| >= max(|set(a)|, |set(b)|) - d*q   (*)
-    for any pair with ed <= d. With every string's distinct grams sorted
-    by ONE global order (ascending document frequency, gram value as the
-    tiebreak — rarest first, which simultaneously kills hot-gram join
-    skew), the classic prefix-filter pigeonhole says two sets with
-    overlap >= t intersect within their (|set| - t + 1)-prefixes; with
-    t = max(|set(a)|,|set(b)|) - d*q from (*), both prefixes are at most
-    d*q + 1 long. So indexing ONLY the d*q+1 rarest grams per string is
-    lossless whenever (*) gives t >= 1, i.e. whenever at least one side
-    has more than d*q distinct grams. Strings with |set| <= d*q (short
-    strings, len < q included, and degenerate repetitive ones like
-    'aaaa…') can only pair with strings whose set is within d*q of
-    theirs — handled exhaustively by a separate small tier.
-
-    Plan shape at 100 TB:
-      * gram df agg + df join + per-id prefix window: exchanges over the
-        (id, gram) frame — strings do NOT ride these shuffles (8-byte ids
-        + q-byte grams only).
-      * prefix self-join on gram: fan-in per gram is bounded by the
-        rarest-first prefix selection; candidates dedup to (id_a, id_b)
-        ints BEFORE the strings are fetched.
-      * two id-equi-joins fetch the strings for the final exact
-        levenshtein verify — the only step that moves text, and it moves
-        each candidate's text once.
-      * small tier: length-band equi-join (each pair produced exactly
-        once: the left side emits bands len±d, the right its own length)
-        with an in-plan per-band loud cap (`raise_error`, same idiom as
-        temporal.range_join) so a degenerate corpus fails loudly instead
-        of planning a quadratic band.
-      * the prefix frame is localCheckpointed before its self-join
-        (checkpoint=False to opt out): a self-join of a lazy frame plans
-        the gram-explode → df-join → rarest-window chain TWICE (two
-        subtree copies — verified via the plan audit: 24 exchanges
-        uncheckpointed); the checkpoint halves the dominant gram-side
-        work at the price of materializing (id, nset, gram) rows.
-
-    Reference analog: the reference dedups segments by exact equality
-    (src/coastline_polygons.cpp duplicate-segment detect); fuzzy text
-    identity is the training-data generalization.
-    """
-    if d < 1:
-        raise ValueError("fuzzy_pairs: d must be >= 1 (use dedup_exact for d=0)")
-    if q < 2:
-        raise ValueError("fuzzy_pairs: q must be >= 2")
-    from pyspark.sql.window import Window
-
-    prefix_len = d * q + 1
-    sid, s = F.col(id_col), F.col(text_col)
-    # sequence(1, len-q+1) would run DESCENDING for len < q — guard, like
-    # duplicated_spans; expr form because the lambda start index feeds
-    # substring's pos argument
-    gram_set = F.when(
-        F.length(s) >= q,
-        F.expr(
-            f"array_distinct(transform(sequence(1, length({text_col}) - {q - 1}), "
-            f"i -> substring({text_col}, i, {q})))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-    base = docs.select(
-        sid.alias("fid"),
-        s.alias("fs"),
-        F.length(s).alias("flen"),
-        gram_set.alias("fgrams"),
-    ).withColumn("nset", F.size("fgrams"))
-
-    # ---- small tier: |set| <= d*q — exhaustive within the tier --------
-    small = base.filter(F.col("nset") <= d * q).select("fid", "fs", "flen")
-    band_w = Window.partitionBy("flen")
-    small_cap = small.withColumn("band_n", F.count("*").over(band_w)).withColumn(
-        "fs",
-        F.when(
-            F.col("band_n") > max_band_rows,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "fuzzy_pairs: small-tier length band exceeds "
-                        f"{max_band_rows} rows (len="
-                    ),
-                    F.col("flen").cast("string"),
-                    F.lit("); corpus is degenerate for q-gram filtering"),
-                )
-            ),
-        ).otherwise(F.col("fs")),
-    )
-    left = small_cap.select(
-        "fid",
-        "fs",
-        F.explode(
-            F.sequence(F.col("flen") - d, F.col("flen") + d)
-        ).alias("band"),
-    )
-    small_pairs = (
-        left.alias("a")
-        .join(
-            small_cap.alias("b"),
-            (F.col("a.band") == F.col("b.flen")) & (F.col("a.fid") < F.col("b.fid")),
-        )
-        .select(
-            F.col("a.fid").alias("id_a"),
-            F.col("b.fid").alias("id_b"),
-            F.levenshtein(F.col("a.fs"), F.col("b.fs")).alias("dist"),
-        )
-        .filter(F.col("dist") <= d)
-    )
-
-    # ---- prefix tier ---------------------------------------------------
-    grams = base.select("fid", "nset", F.explode("fgrams").alias("gram"))
-    gram_df = grams.groupBy("gram").agg(F.count("*").alias("gdf"))
-    pw = Window.partitionBy("fid").orderBy("gdf", "gram")
-    prefix = (
-        grams.join(gram_df, "gram")
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= prefix_len)
-        .select("fid", "nset", "gram")
-    )
-    if checkpoint:
-        # EAGER by necessity: under AQE even localCheckpoint(eager=False)
-        # materializes the shuffle stages at call time (measured — 4 jobs
-        # either way), so there is no lazy variant to offer. The
-        # construction-time job is the documented price of computing the
-        # gram->df->window chain ONCE instead of once per self-join branch
-        # (the dedup_clusters / ivfpq checkpoint posture); callers
-        # composing plans lazily pass checkpoint=False and pay the double
-        # plan instead.
-        prefix = prefix.localCheckpoint()
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.gram") == F.col("b.gram")) & (F.col("a.fid") < F.col("b.fid")),
-        )
-        # pairs where BOTH sets are small belong to (and are complete in)
-        # the small tier; keeping them here would double-count
-        .filter(F.greatest(F.col("a.nset"), F.col("b.nset")) > d * q)
-        .select(F.col("a.fid").alias("id_a"), F.col("b.fid").alias("id_b"))
-        .distinct()
-    )
-    strings = base.select("fid", "fs")
-    big_pairs = (
-        cand.join(strings.withColumnRenamed("fid", "id_a").withColumnRenamed("fs", "s_a"), "id_a")
-        .join(strings.withColumnRenamed("fid", "id_b").withColumnRenamed("fs", "s_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.levenshtein(F.col("s_a"), F.col("s_b")).alias("dist"),
-        )
-        .filter(F.col("dist") <= d)
-    )
-    return small_pairs.unionByName(big_pairs).select(
-        F.col("id_a").cast("long"),
-        F.col("id_b").cast("long"),
-        F.col("dist").cast("int"),
     )

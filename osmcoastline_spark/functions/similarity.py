@@ -34,9 +34,8 @@ def _norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine with a zero-norm guard: 0/0 on an all-zero embedding would
     crash the job under ANSI (the session default) or produce a NaN that
-    sorts FIRST under F.desc and displaces every real top-k neighbor
-    (same guard as cluster.py's quantized cosines). Cosine to a zero
-    vector is defined as 0."""
+    sorts FIRST under F.desc and displaces every real top-k neighbor.
+    Cosine to a zero vector is defined as 0."""
     norm_prod = _norm(a) * _norm(b)
     return F.when(norm_prod > 0, _dot(a, b) / norm_prod).otherwise(F.lit(0.0))
 
@@ -473,7 +472,7 @@ def lsh_topk_exact(
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    # zero-norm guard, same as cosine()/cluster.py: a zero-quantized
+    # zero-norm guard, same as cosine(): a zero-quantized
     # vector (every |x| < 0.5/scale) would 0/0 under ANSI
     _norm_prod = F.sqrt(F.col("na").cast("double")) * F.sqrt(
         F.col("nb").cast("double")

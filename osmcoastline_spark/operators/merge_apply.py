@@ -3,8 +3,9 @@
 Ring assembly's mating rounds, its driver-finish phase, and gap closing (R2)
 all reduce to the same shape: a merge plan — (ring_id → group, seq, seq2,
 skip_first) plus per-group finalize actions — computed from ENDPOINTS only,
-applied to the coordinate arrays in ONE groupBy(group).applyInPandas pass.
-The plan is O(open chains); the arrays never ride an iterative shuffle.
+applied to the coordinate arrays in ONE groupBy(group_id) pass of JVM array
+expressions. The plan is O(open chains); the arrays never ride an iterative
+shuffle.
 
 `seq`/`seq2` order parts within a group lexicographically: `seq` is the
 outer position assigned by the planner (driver chain order), `seq2` the
@@ -14,7 +15,6 @@ mating rounds (member order within the pre-merged chain).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 RING_SCHEMA = (
@@ -46,24 +46,22 @@ def apply_merge_plan_df(
     plan_df: DataFrame,  # PLAN_SCHEMA columns
     fin_df: DataFrame,  # FIN_SCHEMA columns
     broadcast_plan: bool = False,
-    engine: str = "catalyst",
 ) -> DataFrame:
     """Concatenate ring parts per group, ordered by (seq, seq2); rotate rings
     that closed so they start at the min-way chain's lead node.
 
-    engine="catalyst" (default) runs the concatenation/rotation as pure
-    JVM array expressions — flatten/slice/concat move longs and doubles
-    without any arithmetic, so the output is bit-identical to the
-    engine="arrow" twin (the original mapInPandas kernel, kept for the
-    equivalence test) while skipping the Arrow round-trip and the
-    per-part Python loop (measured round 6: 2.0 s → ~0.7 s for the 38.5k
-    part / 8.6k group merge at bench sf0.1).
+    The concatenation/rotation runs as pure JVM array expressions —
+    flatten/slice/concat move longs and doubles without any arithmetic, so
+    the output is bit-identical to the original per-part Python merge
+    (kept in tests/test_merge_apply.py as the reference) while skipping
+    the Arrow round-trip and the per-part Python loop (measured round 6:
+    2.0 s → ~0.7 s for the 38.5k part / 8.6k group merge at bench sf0.1).
 
     Precondition shared by every planner (rings.groups_to_plan, the
     driver-finish expansion, close.plan_close_rings): the FIRST part of a
-    group in (seq, seq2) order always has skip_first=false — the Catalyst
-    form drops the first element of every skip_first part
-    position-independently, which the pandas twin only does once the
+    group in (seq, seq2) order always has skip_first=false — this form
+    drops the first element of every skip_first part
+    position-independently, which the Python reference only does once the
     accumulated array is non-empty (equivalent under the precondition;
     pinned by test_merge_apply_engines_agree).
     """
@@ -80,30 +78,17 @@ def apply_merge_plan_df(
         plan_df = plan_df.hint("shuffle_hash")
         fin_df = fin_df.hint("shuffle_hash")
     # One shuffle: the groupBy(group_id). Aggregate parts per group JVM-side,
-    # then merge the aggregated rows (Catalyst array expressions by default;
-    # per-group applyInPandas pays a pandas-DataFrame construction per group,
-    # which dominates when groups are small and AQE has coalesced the
-    # shuffle, so even the arrow twin runs over mapInPandas).
+    # then merge the aggregated rows with Catalyst array expressions.
     tagged = open_rings.join(plan_df, "ring_id").join(fin_df, "group_id")
-    if engine == "catalyst":
-        return _merge_catalyst(tagged)
-    agg = tagged.groupBy("group_id", "append_first", "fake_close", "grp_fixed").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("seq", "seq2", "skip_first", "node_ids", "xs", "ys",
-                         "nways", "fixed", "ring_id", "lead")
-            )
-        ).alias("parts")
-    )
-    return _merge_arrow(agg)
+    return _merge_catalyst(tagged)
 
 
 def _merge_catalyst(tagged: DataFrame) -> DataFrame:
     """JVM-side merge: flatten + slice/concat + conditional rotation.
 
-    Exactly mirrors _merge_arrow's per-group logic; every step is pure
-    array restructuring over longs/doubles (zero float arithmetic), so
-    bit-equality with the pandas kernel holds by construction.
+    Exactly mirrors the Python reference merge's per-group logic; every
+    step is pure array restructuring over longs/doubles (zero float
+    arithmetic), so bit-equality with it holds by construction.
 
     Zero interpreted higher-order functions (round-6 follow-up: the first
     cut spent ~1 s of the bench merge in interpreted per-part lambdas):
@@ -133,7 +118,7 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
         "IF(skip_first, slice(ys, 2, greatest(size(ys) - 1, 0)), ys) AS t_ys",
     )
     # (seq, seq2) is unique per group (planner invariant), so sorting the
-    # narrower struct orders parts exactly like the arrow twin's wider one
+    # narrower struct orders parts exactly like the reference's wider one
     agg = trimmed.groupBy("group_id", "append_first", "fake_close", "grp_fixed").agg(
         F.expr("sort_array(collect_list(struct(seq, seq2, t_ids, t_xs, t_ys))) AS parts"),
         F.expr("sum(nways) AS nways_sum"),
@@ -179,8 +164,7 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
     )
     # Rotation is only safe when the ring is closed in COORDINATES too:
     # fake_close aliases the last node id while its location stays distinct
-    # — rotating such a ring would drop the real last vertex (same rule as
-    # the pandas twin).
+    # — rotating such a ring would drop the real last vertex.
     rot = closed.selectExpr(
         "*",
         "IF(size(ids2) < 1, false, "
@@ -208,72 +192,3 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
         "fixed",
         "lead",
     )
-
-
-def _merge_arrow(agg: DataFrame) -> DataFrame:
-    """Original mapInPandas merge kernel — kept as the bit-equality twin
-    of _merge_catalyst (exercised by test_merge_apply_engines_agree)."""
-
-    def merge_batch(it):
-        for pdf in it:
-            out = {k: [] for k in ("ring_id", "node_ids", "xs", "ys", "nways", "fixed", "lead")}
-            for row in pdf.itertuples(index=False):
-                node_ids: list[int] = []
-                xs: list[float] = []
-                ys: list[float] = []
-                nways = 0
-                fixed = bool(row.grp_fixed)
-                min_rid = None
-                lead = None
-                for part in row.parts:
-                    ids = list(part["node_ids"])
-                    rxs = list(part["xs"])
-                    rys = list(part["ys"])
-                    if part["skip_first"] and node_ids:
-                        ids, rxs, rys = ids[1:], rxs[1:], rys[1:]
-                    node_ids.extend(ids)
-                    xs.extend(rxs)
-                    ys.extend(rys)
-                    nways += part["nways"]
-                    fixed = fixed or bool(part["fixed"])
-                    if min_rid is None or part["ring_id"] < min_rid:
-                        min_rid = part["ring_id"]
-                        lead = part["lead"]
-                if row.append_first:
-                    node_ids.append(node_ids[0])
-                    xs.append(xs[0])
-                    ys.append(ys[0])
-                if row.fake_close:
-                    node_ids[-1] = node_ids[0]
-                # Rotation is only safe when the ring is closed in
-                # COORDINATES too: fake_close aliases the last node id while
-                # its location stays distinct (reference fake_close,
-                # src/coastline_ring.cpp) — rotating such a ring would drop
-                # the real last vertex. Skip it; the gap geometry survives.
-                coord_closed = (
-                    node_ids
-                    and node_ids[0] == node_ids[-1]
-                    and not row.fake_close
-                    and xs[0] == xs[-1]
-                    and ys[0] == ys[-1]
-                )
-                if coord_closed and lead in node_ids:
-                    p = node_ids.index(lead)
-                    if p > 0:
-                        core_i, core_x, core_y = node_ids[:-1], xs[:-1], ys[:-1]
-                        node_ids = core_i[p:] + core_i[:p]
-                        xs = core_x[p:] + core_x[:p]
-                        ys = core_y[p:] + core_y[:p]
-                        node_ids.append(node_ids[0])
-                        xs.append(xs[0])
-                        ys.append(ys[0])
-                out["ring_id"].append(int(min_rid))
-                out["node_ids"].append(node_ids)
-                out["xs"].append(xs)
-                out["ys"].append(ys)
-                out["nways"].append(int(nways))
-                out["fixed"].append(fixed)
-                out["lead"].append(int(lead))
-            yield pd.DataFrame(out)
-
-    return agg.mapInPandas(merge_batch, RING_SCHEMA)

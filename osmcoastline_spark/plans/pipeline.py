@@ -82,7 +82,6 @@ class Options:
     output_polygons: str = "land"  # land | water | both | none
     water_cell_deg: float = 1.0
     cell_deg: float = 0.5  # intersection-join binning
-    collect_stats: bool = True  # False skips non-essential count actions
 
     def effective_overlap(self) -> float:
         if self.bbox_overlap is not None:
@@ -321,22 +320,20 @@ def _run_pipeline(
         res.stats.update(pre_stats)
         n_closed_pre = n_open_pre = None
         antarctica_kw = {}
-        if opt.collect_stats:
-            # a snapshot written with collect_stats=False has no stats_pre
-            # (round-3 ADVICE): recompute the missing counts from the
-            # loaded rings instead of silently reporting 0 in `meta`.
-            # `ways` = distinct ways across both ring sets (cheap explode
-            # over the snapshot, no node join).
-            if "rings_from_single_way" not in res.stats:
-                res.stats["rings_from_single_way"] = closed.filter(
-                    F.col("nways") == 1
-                ).count()
-            if "unconnected_nodes_before_close" not in res.stats:
-                res.stats["unconnected_nodes_before_close"] = open_.count() * 2
-            if "ways" not in res.stats:
-                res.stats["ways"] = int(
-                    closed.select(F.sum("nways")).first()[0] or 0
-                ) + int(open_.select(F.sum("nways")).first()[0] or 0)
+        # an older snapshot may lack some stats_pre keys (round-3 ADVICE):
+        # recompute the missing counts from the loaded rings instead of
+        # silently reporting 0 in `meta`. `ways` = distinct ways across
+        # both ring sets (cheap explode over the snapshot, no node join).
+        if "rings_from_single_way" not in res.stats:
+            res.stats["rings_from_single_way"] = closed.filter(
+                F.col("nways") == 1
+            ).count()
+        if "unconnected_nodes_before_close" not in res.stats:
+            res.stats["unconnected_nodes_before_close"] = open_.count() * 2
+        if "ways" not in res.stats:
+            res.stats["ways"] = int(
+                closed.select(F.sum("nways")).first()[0] or 0
+            ) + int(open_.select(F.sum("nways")).first()[0] or 0)
     else:
         # pass 1+2: filter, locations — the location join materializes ONCE
         # here, and the J3 missing-location count is observed in the same
@@ -357,13 +354,12 @@ def _run_pipeline(
                 raise ValueError(
                     f"prebucketed nodes must carry (node_id, lon, lat); got columns {sorted(nodes_b.columns)}"
                 )
-            if opt.collect_stats:
-                # counted from the exploded refs: a way with ZERO node refs
-                # has no exploded rows, so this can undercount vs the
-                # standard path's cways.count() for degenerate ways (which
-                # the reference never produces — coastline ways always
-                # reference >=2 nodes). Documented divergence, not a bug.
-                res.stats["ways"] = refs_b.select("way_id").distinct().count()
+            # counted from the exploded refs: a way with ZERO node refs
+            # has no exploded rows, so this can undercount vs the
+            # standard path's cways.count() for degenerate ways (which
+            # the reference never produces — coastline ways always
+            # reference >=2 nodes). Documented divergence, not a bug.
+            res.stats["ways"] = refs_b.select("way_id").distinct().count()
             located = ways_with_locations_from_refs(refs_b, nodes_b, count_missing=True)
         else:
             cways = coastline_ways(ways)
@@ -375,7 +371,7 @@ def _run_pipeline(
                 located, nmiss=F.sum("nmiss"), closed_ways=F.count_if(_closed())
             )
 
-        if opt.collect_stats and prebucketed is None:
+        if prebucketed is None:
             # the ways count and the location-join materialization are
             # independent DAGs over the same checkpointed inputs — run
             # them concurrently so the count hides inside the join's
@@ -394,9 +390,9 @@ def _run_pipeline(
         _trace("locations")
 
         # R1 assembly (input already materialized — no second checkpoint).
-        # The ways count — when collected — is an exact upper bound on the
-        # chain count (one chain per way), letting assembly skip its
-        # round-0 count job whenever the driver finish provably applies.
+        # The ways count is an exact upper bound on the chain count (one
+        # chain per way), letting assembly skip its round-0 count job
+        # whenever the driver finish provably applies.
         # closed = the closed single ways of ways_loc + the closed merged
         # chains, open = the open merged chains: the assembly stats, the
         # open-ring bound for gap closing and the Antarctica ring id are
@@ -404,7 +400,7 @@ def _run_pipeline(
         closed, open_, asm_seen = assemble_rings(
             ways_loc,
             assume_materialized=True,
-            max_chains_hint=res.stats.get("ways") if opt.collect_stats else None,
+            max_chains_hint=res.stats["ways"],
             observe={
                 "closed": F.count_if(_closed()),
                 "closed_single": F.count_if(_closed() & (F.col("nways") == 1)),
@@ -420,11 +416,10 @@ def _run_pipeline(
         # ARITHMETICALLY (closed-after-close = closed-now + antarctica +
         # gap-close merges, all driver-known)
         n_closed_pre = loc_seen["closed_ways"] + asm_seen["closed"]
-        if opt.collect_stats:
-            res.stats["rings_from_single_way"] = (
-                loc_seen["closed_ways"] + asm_seen["closed_single"]
-            )
-            res.stats["unconnected_nodes_before_close"] = n_open_pre * 2
+        res.stats["rings_from_single_way"] = (
+            loc_seen["closed_ways"] + asm_seen["closed_single"]
+        )
+        res.stats["unconnected_nodes_before_close"] = n_open_pre * 2
         if mid_sink is not None:
             pre = {
                 k: res.stats[k]
@@ -560,15 +555,14 @@ def _run_pipeline(
                     [(int(i),) for i in cres.closed_group_ids], "ring_id long"
                 )
             )
-    if opt.collect_stats:
-        if n_closed_pre is not None:
-            # exact arithmetic: post-close closed set = post-assembly closed
-            # set (observed on the assembly checkpoints) plus the
-            # driver-known closures (Antarctica + gap-close groups) — no
-            # dedicated count job
-            res.stats["rings"] = n_closed_pre + n_closed_delta
-        else:
-            res.stats["rings"] = closed.count()
+    if n_closed_pre is not None:
+        # exact arithmetic: post-close closed set = post-assembly closed
+        # set (observed on the assembly checkpoints) plus the
+        # driver-known closures (Antarctica + gap-close groups) — no
+        # dedicated count job
+        res.stats["rings"] = n_closed_pre + n_closed_delta
+    else:
+        res.stats["rings"] = closed.count()
     _trace("close+rings_count")
 
     # join the background intersection checkpoint (launched above) and
@@ -781,8 +775,7 @@ def _run_pipeline(
         else:
             polys = pres.polygons  # already a filter over polygonize's
             # internal checkpoint — re-checkpointing doubles the write
-            if opt.collect_stats:
-                res.stats["land_polygons_before_split"] = pres.good_count
+            res.stats["land_polygons_before_split"] = pres.good_count
             polys, direrr = fix_direction(polys)
             # fix_direction is a pure-Catalyst projection (conditional
             # reverse) over polygonize's fresh checkpoint — re-evaluating
@@ -825,10 +818,9 @@ def _run_pipeline(
                         opt.epsg,
                         observe=check_counts("cut_suspect"),
                     )
-                    if opt.collect_stats:
-                        res.stats["land_polygons_after_split"] = (
-                            pres.good_count + split_seen["rows_added"]
-                        )
+                    res.stats["land_polygons_after_split"] = (
+                        pres.good_count + split_seen["rows_added"]
+                    )
                     _trace("split")
 
                     # reference check_polygons (src/osmcoastline.cpp:398-399

@@ -34,6 +34,27 @@ def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+def zorder_sorted(
+    df: DataFrame, extent: tuple[float, float, float, float] | None = None
+) -> DataFrame:
+    """`df` sorted within each partition by the Morton code of its
+    envelope center, or `df` unchanged when it carries no env_* columns.
+    `extent` is the coordinate extent of the code (degrees by default).
+    The helper column is dropped AFTER the sort: it is layout-only, and
+    persisting it would give resumed tables (and shipped output dirs) a
+    different schema than fresh-run tables and than manifest['schema']."""
+    if not {"env_minx", "env_maxx", "env_miny", "env_maxy"} <= set(df.columns):
+        return df
+    cx = (F.col("env_minx") + F.col("env_maxx")) / 2
+    cy = (F.col("env_miny") + F.col("env_maxy")) / 2
+    code = (
+        morton_interleave_expr(cx, cy, extent=extent)
+        if extent is not None
+        else morton_interleave_expr(cx, cy)
+    )
+    return df.withColumn("zorder", code).sortWithinPartitions("zorder").drop("zorder")
+
+
 class CheckpointSink:
     def __init__(self, root: str):
         self.root = root
@@ -54,22 +75,7 @@ class CheckpointSink:
         square or the metre-valued envelopes degenerate the Morton
         code and the spatial file layout is silently lost)."""
         path = self._dir(stage)
-        out = df
-        if spatial and {"env_minx", "env_maxx", "env_miny", "env_maxy"} <= set(df.columns):
-            cx = (F.col("env_minx") + F.col("env_maxx")) / 2
-            cy = (F.col("env_miny") + F.col("env_maxy")) / 2
-            code = (
-                morton_interleave_expr(cx, cy, extent=extent)
-                if extent is not None
-                else morton_interleave_expr(cx, cy)
-            )
-            # drop the helper column AFTER the sort: it is layout-only,
-            # and persisting it would give resumed tables (and shipped
-            # output dirs) a different schema than fresh-run tables and
-            # than manifest['schema']
-            out = df.withColumn("zorder", code).sortWithinPartitions(
-                "zorder"
-            ).drop("zorder")
+        out = zorder_sorted(df, extent) if spatial else df
         out, obs = _counted(out)
         out.write.mode("overwrite").parquet(path)
         n = obs.get["rows"]
@@ -132,18 +138,7 @@ class IcebergSink:
     def write(self, stage: str, df: DataFrame, *, spatial: bool = False,
               lineage: dict | None = None,
               extent: tuple[float, float, float, float] | None = None) -> int:
-        out = df
-        if spatial and {"env_minx", "env_maxx", "env_miny", "env_maxy"} <= set(df.columns):
-            cx = (F.col("env_minx") + F.col("env_maxx")) / 2
-            cy = (F.col("env_miny") + F.col("env_maxy")) / 2
-            code = (
-                morton_interleave_expr(cx, cy, extent=extent)
-                if extent is not None
-                else morton_interleave_expr(cx, cy)
-            )
-            out = df.withColumn("zorder", code).sortWithinPartitions(
-                "zorder"
-            ).drop("zorder")
+        out = zorder_sorted(df, extent) if spatial else df
         name = self._table(stage)
         # graft.lineage (which carries the resume fingerprint) rides the
         # SAME atomic snapshot commit via tableProperty — a crash between

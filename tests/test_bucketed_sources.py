@@ -103,7 +103,7 @@ def test_pipeline_runs_from_bucketed_sources(spark, bucketed):
     from osmcoastline_spark.plans.pipeline import Options, run_pipeline
 
     _tmp, nodes, ways = bucketed
-    opt = Options(output_polygons="land", collect_stats=True)
+    opt = Options(output_polygons="land")
     base = run_pipeline(spark, nodes, ways, opt)
     bkt = run_pipeline(
         spark,
@@ -132,7 +132,6 @@ def test_pipeline_bucketed_outputs_bit_identical(spark, bucketed):
         output_rings=True,
         water_cell_deg=30.0,
         max_points_in_polygon=500,
-        collect_stats=True,
     )
     base = run_pipeline(spark, nodes, ways, opt)
     bkt = run_pipeline(

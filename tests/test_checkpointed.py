@@ -235,3 +235,47 @@ def test_zorder_extent_3857(spark):
         ).collect()
     ]
     assert len(set(bad)) == 1, "the degenerate layout this guards against"
+
+
+def test_zorder_sorted_layout(spark, tmp_path):
+    """The sinks' shared z-order layout: with the default (degree) extent
+    and with an explicit WebMercator extent, every partition comes out
+    sorted by the Morton code of the envelope center, the helper column
+    is gone, and the schema is the one the manifest records."""
+    from osmcoastline_spark.cells import morton_interleave_expr
+    from osmcoastline_spark.geom import MERC
+    from osmcoastline_spark.sinks import zorder_sorted
+
+    cx = (F.col("env_minx") + F.col("env_maxx")) / 2
+    cy = (F.col("env_miny") + F.col("env_maxy")) / 2
+    for scale, extent in ((1.0, None), (1e5, (-MERC, MERC, -MERC, MERC))):
+        # a descending diagonal spread over 3 partitions: unsorted within
+        # each partition unless the layout sorts it
+        rows = [
+            (i, (80.0 - i) * scale, (81.0 - i) * scale,
+             (40.0 - i / 2) * scale, (41.0 - i / 2) * scale)
+            for i in range(60)
+        ]
+        df = spark.createDataFrame(
+            rows,
+            "id long, env_minx double, env_maxx double, "
+            "env_miny double, env_maxy double",
+        ).repartition(3)
+        out = zorder_sorted(df, extent)
+        assert "zorder" not in out.columns
+        code = (
+            morton_interleave_expr(cx, cy, extent=extent)
+            if extent is not None
+            else morton_interleave_expr(cx, cy)
+        )
+        parts = out.withColumn("z", code).select("id", "z").rdd.glom().collect()
+        assert sorted(r.id for p in parts for r in p) == list(range(60))
+        assert sum(len(p) > 1 for p in parts) >= 2
+        for p in parts:
+            zs = [r.z for r in p]
+            assert zs == sorted(zs)
+
+        sink = CheckpointSink(str(tmp_path / f"z{scale:g}"))
+        sink.write("t", df, spatial=True, extent=extent)
+        assert out.schema.simpleString() == sink.manifest("t")["schema"]
+        assert sink.read(spark, "t").schema.simpleString() == sink.manifest("t")["schema"]

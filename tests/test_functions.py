@@ -58,29 +58,6 @@ def test_ngram_jaccard(spark, docs):
     assert (0, 2) in d and 0.5 <= d[(0, 2)] < 1.0
 
 
-def test_dedup_clusters_transitive(spark):
-    """Connected components over candidate edges: a 3-chain (1-2, 2-3)
-    must land in ONE cluster even though (1,3) is not an edge — the whole
-    point of the closure step.  A 32-node path exercises the
-    O(log^2 n) large/small-star convergence far past naive one-hop
-    propagation; isolated node 7 stays a singleton."""
-    edges = [(2, 1), (2, 3), (5, 6)] + [(i, i + 1) for i in range(100, 131)]
-    e = spark.createDataFrame(edges, "a long, b long")
-    node_ids = [1, 2, 3, 5, 6, 7] + list(range(100, 132))
-    nodes = spark.createDataFrame([(x,) for x in node_ids], "doc_id long")
-    got = {r.doc_id: r.cluster_id for r in D.dedup_clusters(e, nodes).collect()}
-    exp = {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 7}
-    exp.update({i: 100 for i in range(100, 132)})
-    assert got == exp
-
-
-def test_dedup_clusters_no_edges(spark):
-    nodes = spark.createDataFrame([(1,), (9,)], "doc_id long")
-    e = spark.createDataFrame([], "a long, b long")
-    got = {r.doc_id: r.cluster_id for r in D.dedup_clusters(e, nodes).collect()}
-    assert got == {1: 1, 9: 9}
-
-
 def test_simhash_near_dup_closer_than_random(spark, docs):
     sims = {r.doc_id: r.simhash for r in D.simhash64(docs).collect()}
     assert sims[0] == sims[1]
@@ -1347,30 +1324,6 @@ def test_random_project_plan_and_guard(spark):
         S.random_project(df, 65)
 
 
-# ------------------------------------------------------- json_field_stats
-
-
-def test_json_field_stats(spark):
-    from osmcoastline_spark.functions.semistruct import json_field_stats
-
-    rows = [
-        ("a", '{"k": 5}'),
-        ("a", '{"k": 7, "x": 1}'),
-        ("a", '{"j": 9}'),        # field missing -> bad
-        ("a", '{"k": "oops"}'),   # non-numeric -> bad
-        ("a", "not json {"),      # malformed -> bad
-        ("b", '{"k": -3}'),
-        ("b", None),              # NULL blob -> bad
-    ]
-    df = spark.createDataFrame(rows, ["event_type", "props"])
-    got = {r.event_type: r for r in json_field_stats(df).collect()}
-    a, b = got["a"], got["b"]
-    assert (a.n_rows, a.n_vals, a.n_bad, a.val_sum, a.val_min, a.val_max) == (5, 2, 3, 12, 5, 7)
-    assert (b.n_rows, b.n_vals, b.n_bad, b.val_sum, b.val_min, b.val_max) == (2, 1, 1, -3, -3, -3)
-    plan = json_field_stats(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan  # get_json_object is JVM-side
-
-
 def test_random_project_rejects_wrong_dim(spark):
     df = spark.createDataFrame(
         [(0, [0.0] * 63)], "vec_id long, embedding array<float>"
@@ -1387,9 +1340,3 @@ def test_random_project_rejects_null_embedding(spark):
         S.random_project(df, 8, dim=64).collect()
 
 
-def test_json_field_stats_rejects_empty_groups(spark):
-    from osmcoastline_spark.functions.semistruct import json_field_stats
-
-    df = spark.createDataFrame([("a", "{}")], ["event_type", "props"])
-    with pytest.raises(ValueError, match="non-empty"):
-        json_field_stats(df, group_cols=[])

@@ -1,5 +1,5 @@
-"""Bit-equality of the Catalyst merge kernel vs the original pandas twin
-(round-6 optimization: merge_apply engine="catalyst")."""
+"""Bit-equality of the Catalyst merge kernel (apply_merge_plan_df) vs the
+original per-part Python merge, kept here as the reference."""
 
 from __future__ import annotations
 
@@ -29,6 +29,90 @@ def _rows(df):
             )
         )
     return sorted(out)
+
+
+def _reference_merge(open_rings, plan_df, fin_df):
+    """The original mapInPandas merge kernel: collect each group's parts in
+    (seq, seq2) order and concatenate/close/rotate them in Python."""
+    agg = (
+        open_rings.join(plan_df, "ring_id")
+        .join(fin_df, "group_id")
+        .groupBy("group_id", "append_first", "fake_close", "grp_fixed")
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct("seq", "seq2", "skip_first", "node_ids", "xs", "ys",
+                             "nways", "fixed", "ring_id", "lead")
+                )
+            ).alias("parts")
+        )
+    )
+
+    def merge_batch(it):
+        import pandas as pd
+
+        for pdf in it:
+            out = {k: [] for k in ("ring_id", "node_ids", "xs", "ys", "nways", "fixed", "lead")}
+            for row in pdf.itertuples(index=False):
+                node_ids: list[int] = []
+                xs: list[float] = []
+                ys: list[float] = []
+                nways = 0
+                fixed = bool(row.grp_fixed)
+                min_rid = None
+                lead = None
+                for part in row.parts:
+                    ids = list(part["node_ids"])
+                    rxs = list(part["xs"])
+                    rys = list(part["ys"])
+                    if part["skip_first"] and node_ids:
+                        ids, rxs, rys = ids[1:], rxs[1:], rys[1:]
+                    node_ids.extend(ids)
+                    xs.extend(rxs)
+                    ys.extend(rys)
+                    nways += part["nways"]
+                    fixed = fixed or bool(part["fixed"])
+                    if min_rid is None or part["ring_id"] < min_rid:
+                        min_rid = part["ring_id"]
+                        lead = part["lead"]
+                if row.append_first:
+                    node_ids.append(node_ids[0])
+                    xs.append(xs[0])
+                    ys.append(ys[0])
+                if row.fake_close:
+                    node_ids[-1] = node_ids[0]
+                # Rotation is only safe when the ring is closed in
+                # COORDINATES too: fake_close aliases the last node id while
+                # its location stays distinct (reference fake_close,
+                # src/coastline_ring.cpp) — rotating such a ring would drop
+                # the real last vertex. Skip it; the gap geometry survives.
+                coord_closed = (
+                    node_ids
+                    and node_ids[0] == node_ids[-1]
+                    and not row.fake_close
+                    and xs[0] == xs[-1]
+                    and ys[0] == ys[-1]
+                )
+                if coord_closed and lead in node_ids:
+                    p = node_ids.index(lead)
+                    if p > 0:
+                        core_i, core_x, core_y = node_ids[:-1], xs[:-1], ys[:-1]
+                        node_ids = core_i[p:] + core_i[:p]
+                        xs = core_x[p:] + core_x[:p]
+                        ys = core_y[p:] + core_y[:p]
+                        node_ids.append(node_ids[0])
+                        xs.append(xs[0])
+                        ys.append(ys[0])
+                out["ring_id"].append(int(min_rid))
+                out["node_ids"].append(node_ids)
+                out["xs"].append(xs)
+                out["ys"].append(ys)
+                out["nways"].append(int(nways))
+                out["fixed"].append(fixed)
+                out["lead"].append(int(lead))
+            yield pd.DataFrame(out)
+
+    return agg.mapInPandas(merge_batch, RING_SCHEMA)
 
 
 @pytest.fixture()
@@ -80,16 +164,16 @@ def scenario(spark):
 
 def test_merge_apply_engines_agree(spark, scenario):
     rings, plan, fin = scenario
-    cat = _rows(apply_merge_plan_df(rings, plan, fin, engine="catalyst"))
-    arr = _rows(apply_merge_plan_df(rings, plan, fin, engine="arrow"))
-    assert cat == arr
+    cat = _rows(apply_merge_plan_df(rings, plan, fin))
+    ref = _rows(_reference_merge(rings, plan, fin))
+    assert cat == ref
     # and the rotation really happened: g1 closes and starts at lead 100
     g1 = [r for r in cat if r[0] == 10][0]
     assert g1[1][0] == 100 and g1[1][-1] == 100
 
 
 def test_merge_apply_engines_agree_randomized(spark):
-    """Random chain populations through BOTH engines (seeded)."""
+    """Random chain populations through the kernel and the reference (seeded)."""
     import random
 
     rng = random.Random(7)
@@ -124,7 +208,7 @@ def test_merge_apply_engines_agree_randomized(spark):
     rings = spark.createDataFrame(rows, RING_SCHEMA)
     plan_df = spark.createDataFrame(plan, PLAN_SCHEMA)
     fin_df = spark.createDataFrame(fin, FIN_SCHEMA)
-    cat = _rows(apply_merge_plan_df(rings, plan_df, fin_df, engine="catalyst"))
-    arr = _rows(apply_merge_plan_df(rings, plan_df, fin_df, engine="arrow"))
-    assert cat == arr
+    cat = _rows(apply_merge_plan_df(rings, plan_df, fin_df))
+    ref = _rows(_reference_merge(rings, plan_df, fin_df))
+    assert cat == ref
     assert len(cat) == 25
