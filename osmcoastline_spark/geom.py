@@ -25,10 +25,15 @@ MERC_MAX_LAT = 85.0511288
 
 
 def signed_area2(xs: np.ndarray, ys: np.ndarray) -> float:
-    """Twice the signed shoelace area; > 0 for counter-clockwise rings."""
+    """Twice the signed shoelace area; > 0 for counter-clockwise rings.
+
+    The products sum with `math.fsum` (correctly rounded), not BLAS
+    `np.dot`: the dot kernel OpenBLAS picks per CPU rounds differently,
+    and Buffer(0)'s sign and zero-area decisions must not depend on the
+    host."""
     x = np.asarray(xs, dtype=np.float64)
     y = np.asarray(ys, dtype=np.float64)
-    return float(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
+    return math.fsum(np.concatenate([x * np.roll(y, -1), -(np.roll(x, -1) * y)]))
 
 
 def is_clockwise(xs, ys) -> bool:

@@ -12,6 +12,11 @@ the sweep's window bounds them, and cells process in parallel.
 
 Duplicate segments (J6) are a plain groupBy on the normalized coordinates —
 map-side partial aggregation, no UDF.
+
+Ring validity (G5/G13) needs only a ring's crossings with itself, so it
+does not go through the join: `ring_self_intersections` runs the sweep
+per ring, inside one narrow mapInArrow stage, with the join's exact
+arithmetic and reporting rule.
 """
 
 from __future__ import annotations
@@ -108,9 +113,10 @@ def intersection_errors(segments: DataFrame, cell_deg: float = DEFAULT_CELL_DEG)
 
 
 def intersection_pairs(segments: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> DataFrame:
-    """All crossing segment pairs as (a_ring, b_ring, x, y) — ONE cell-binned
-    join serving both the 'intersection' error points and the ring-validity
-    triage (same-ring rows = self-intersections, G5/G13)."""
+    """All crossing segment pairs as (a_ring, b_ring, x, y) — the
+    cell-binned join behind the 'intersection' error points. Its
+    same-ring rows are the self-intersections `ring_self_intersections`
+    finds per ring."""
     # segment identity is the COMPOSITE (ring_id, idx) struct, compared
     # lexicographically — a hashed 64-bit id would make the a_id < b_id
     # pair dedup collision-prone: two distinct crossing segments whose
@@ -205,14 +211,181 @@ def intersection_pairs(segments: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) 
     return pairs.mapInPandas(exact, "a_ring long, b_ring long, x double, y double")
 
 
-def ring_self_intersections(segments: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> DataFrame:
-    """G13 backbone: (ring_id, x, y) for every SAME-RING crossing pair —
-    the numpy stand-in for GEOS IsValid + GEOSisValidReason's
-    'Self-intersection[x y]' parse (reference src/output_database.cpp:170-211).
-    A projection of intersection_pairs (a ring polygon's validity only
-    cares about itself)."""
-    return (
-        intersection_pairs(segments, cell_deg)
-        .filter(F.col("a_ring") == F.col("b_ring"))
-        .select(F.col("a_ring").alias("ring_id"), "x", "y")
+# candidate segment pairs one step of the per-ring sweep holds at once:
+# bounds the kernel's memory however large a ring is
+PAIR_CHUNK = 1 << 16
+
+
+def _sweep(ring: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Interval-overlap sweep along one axis, for every ring of a batch at
+    once. Segments sort by (ring, lo); the candidates of sorted position p
+    are positions p+1 .. end[p]-1, the later segments of the same ring
+    whose `lo` is at most hi[p]. Every pair of same-ring segments whose
+    intervals overlap appears exactly once, equal-`lo` ties included.
+    Returns (order, end); `end` comes from a lock-step binary search over
+    all positions, so no Python runs per ring."""
+    order = np.lexsort((lo, ring))
+    slo, shi, sring = lo[order], hi[order], ring[order]
+    n = len(order)
+    left = np.arange(1, n + 1)
+    right = np.searchsorted(sring, sring, side="right")
+    while True:
+        active = left < right
+        if not active.any():
+            return order, left
+        mid = (left + right) >> 1
+        go = active & (slo[np.minimum(mid, n - 1)] <= shi)
+        left = np.where(go, mid + 1, left)
+        right = np.where(active & ~go, mid, right)
+
+
+def _candidate_pairs(ring, x1, y1, x2, y2, chunk: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Same-ring segment index pairs (i, j) whose extents overlap along
+    the sweep axis, at most `chunk` pairs at a time. Each ring sweeps
+    along the axis that gives it fewer candidates (a ring running
+    north-south would pair most of its segments on an x-sweep)."""
+    sweeps = [_sweep(ring, x1, x2), _sweep(ring, np.minimum(y1, y2), np.maximum(y1, y2))]
+    n_rings = int(ring.max()) + 1
+    per_ring = [
+        np.bincount(ring[order], weights=end - np.arange(1, len(order) + 1), minlength=n_rings)
+        for order, end in sweeps
+    ]
+    use_y = per_ring[1] < per_ring[0]
+    for axis, (order, end) in enumerate(sweeps):
+        cnt = end - np.arange(1, len(order) + 1)
+        cnt[use_y[ring[order]] != bool(axis)] = 0
+        cum = np.cumsum(cnt)
+        for s in range(0, int(cum[-1]), chunk):
+            k = np.arange(s, min(s + chunk, int(cum[-1])))
+            p = np.searchsorted(cum, k, side="right")
+            q = p + 1 + k - (cum[p] - cnt[p])
+            yield order[p], order[q]
+
+
+def _heads(offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Index of every point but the last of its ring (where a segment
+    starts), and the ring each belongs to."""
+    lens = np.diff(offsets)
+    keep = np.ones(int(offsets[-1]), dtype=bool)
+    keep[offsets[1:][lens > 0] - 1] = False
+    return np.nonzero(keep)[0], np.repeat(np.arange(len(lens)), np.maximum(lens - 1, 0))
+
+
+def ring_crossing_points(
+    offsets: np.ndarray,
+    xs: np.ndarray,
+    ys: np.ndarray,
+    cell_deg: float = DEFAULT_CELL_DEG,
+    chunk: int = PAIR_CHUNK,
+) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Every same-ring crossing of a batch of rings, as (ring, x, y) arrays
+    yielded per chunk of candidate pairs; `ring` indexes the rings, whose
+    points are xs/ys[offsets[r]:offsets[r+1]] (ListArray layout).
+
+    Same rows as the same-ring rows of `intersection_pairs` over
+    `ring_segments` of the rings, bit for bit: segments are normalized
+    the same way, `a` is the lower-index segment of a pair, the bbox
+    test and `geom.segment_intersections` decide a crossing, and a
+    crossing counts only when its point falls in a cell both segments'
+    bbox covers share (the join's owner-cell rule; rounding can put a
+    point just outside a segment's cells)."""
+    seg, ring = _heads(np.asarray(offsets, dtype=np.int64))
+    if len(seg) == 0:
+        return
+    ax, ay, bx, by = xs[seg], ys[seg], xs[seg + 1], ys[seg + 1]
+    fwd = (ax < bx) | ((ax == bx) & (ay <= by))
+    x1, y1 = np.where(fwd, ax, bx), np.where(fwd, ay, by)
+    x2, y2 = np.where(fwd, bx, ax), np.where(fwd, by, ay)
+    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
+    # bbox cover of every segment, in the cells of `intersection_pairs`
+    cx_lo = np.floor((x1 + 180.0) / cell_deg)
+    cx_hi = np.floor((x2 + 180.0) / cell_deg)
+    cy_lo = np.floor((ylo + 90.0) / cell_deg)
+    cy_hi = np.floor((yhi + 90.0) / cell_deg)
+    for i, j in _candidate_pairs(ring, x1, y1, x2, y2, chunk):
+        a, b = np.minimum(i, j), np.maximum(i, j)
+        near = (ylo[a] <= yhi[b]) & (ylo[b] <= yhi[a]) & (x1[a] <= x2[b]) & (x1[b] <= x2[a])
+        a, b = a[near], b[near]
+        mask, px, py = geom.segment_intersections(
+            x1[a], y1[a], x2[a], y2[a], x1[b], y1[b], x2[b], y2[b]
+        )
+        cx = np.floor((px + 180.0) / cell_deg)
+        cy = np.floor((py + 90.0) / cell_deg)
+        mask &= (
+            (cx >= np.maximum(cx_lo[a], cx_lo[b])) & (cx <= np.minimum(cx_hi[a], cx_hi[b]))
+            & (cy >= np.maximum(cy_lo[a], cy_lo[b])) & (cy <= np.minimum(cy_hi[a], cy_hi[b]))
+        )
+        if mask.any():
+            yield ring[a[mask]], px[mask], py[mask]
+
+
+def _repeated_points(offsets: np.ndarray, xs: np.ndarray, ys: np.ndarray):
+    """(ring, x, y) of every coordinate a ring repeats among its points
+    but the last (a point touch GEOS IsValid rejects)."""
+    keep, ring = _heads(offsets)
+    # + 0.0 folds -0.0 into 0.0, as Spark's grouping keys do
+    x, y = xs[keep] + 0.0, ys[keep] + 0.0
+    o = np.lexsort((y, x, ring))
+    r, x, y = ring[o], x[o], y[o]
+    dup = (r[1:] == r[:-1]) & (x[1:] == x[:-1]) & (y[1:] == y[:-1])
+    return r[1:][dup], x[1:][dup], y[1:][dup]
+
+
+def _first_points(parts: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per ring, the lexicographic min (x, y) over (ring, x, y) parts."""
+    if not parts:
+        empty = np.empty(0)
+        return empty.astype(np.int64), empty, empty
+    r, x, y = (np.concatenate(c) for c in zip(*parts))
+    o = np.lexsort((y, x, r))
+    r, x, y = r[o], x[o], y[o]
+    first = np.ones(len(r), dtype=bool)
+    first[1:] = r[1:] != r[:-1]
+    return r[first], x[first], y[first]
+
+
+def ring_self_intersections(
+    rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG, repeated: bool = False
+) -> DataFrame:
+    """G13 backbone: one (ring_id, x, y) row per ring of `rings` (ring_id,
+    xs, ys) that crosses itself — or, with `repeated`, repeats an interior
+    coordinate — at its lexicographic min (x, y) such point, the same
+    point `F.min(F.struct("x", "y"))` picks. The numpy stand-in for GEOS
+    IsValid + GEOSisValidReason's 'Self-intersection[x y]' parse
+    (reference src/output_database.cpp:170-211), run per ring as the
+    reference runs IsValid (src/coastline_ring_collection.cpp:148-168).
+
+    Validity is a per-ring property, so this is one narrow mapInArrow
+    stage: no exchange between a ring and its verdict. The kernel reads
+    the xs/ys ListArray offsets and values directly; the crossings are
+    `ring_crossing_points`' (bit-identical to intersection_pairs'
+    same-ring rows)."""
+    import pyarrow as pa
+
+    def kernel(batches):
+        for batch in batches:
+            xcol, ycol = batch.column("xs"), batch.column("ys")
+            # offsets index the child array, which a sliced batch shares
+            # with its neighbours: rebase onto this batch's own values
+            offsets = np.asarray(xcol.offsets, dtype=np.int64)
+            if not np.array_equal(np.diff(offsets), np.diff(np.asarray(ycol.offsets))):
+                raise ValueError("ring_self_intersections: xs and ys lengths differ")
+            lo, hi = int(offsets[0]), int(offsets[-1])
+            y0 = int(ycol.offsets[0].as_py())
+            xs = xcol.values.slice(lo, hi - lo).to_numpy(zero_copy_only=False)
+            ys = ycol.values.slice(y0, hi - lo).to_numpy(zero_copy_only=False)
+            offsets = offsets - lo
+            # reduce each chunk's crossings to per-ring minima as they come
+            parts = [_first_points([p]) for p in ring_crossing_points(offsets, xs, ys, cell_deg)]
+            if repeated:
+                parts.append(_repeated_points(offsets, xs, ys))
+            r, x, y = _first_points(parts)
+            if len(r):
+                ids = batch.column("ring_id").to_numpy()
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(ids[r]), pa.array(x), pa.array(y)], ["ring_id", "x", "y"]
+                )
+
+    return rings.select(F.col("ring_id").cast("long"), "xs", "ys").mapInArrow(
+        kernel, "ring_id long, x double, y double"
     )

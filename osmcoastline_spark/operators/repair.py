@@ -23,10 +23,12 @@ four self-intersection scenarios + the degenerate complex-overlap case):
   5. exactly one candidate left ⇒ repaired ring; anything else ⇒ the
      GEOS result would be empty/MultiPolygon ⇒ drop.
 
-Scale shape: only FLAGGED rings (self-crossing via the distributed
-cell-binned kernel, repeated vertex, or zero area — pure Catalyst
-predicates) enter the Arrow repair batch; clean rings pass through
-untouched with no Python in their path.
+Scale shape: validity is a per-ring property, decided in one narrow
+stage: the repeated-vertex and zero-area Catalyst predicates, and the
+per-ring crossing kernel (intersections.ring_self_intersections) on the
+rings they pass. Only FLAGGED rings enter the Arrow repair batch; clean
+rings pass through untouched, and when nothing is flagged the whole
+triage is the one job that counts the flagged set.
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
-from osmcoastline_spark.operators.intersections import ring_segments, ring_self_intersections
+from osmcoastline_spark.operators.intersections import ring_self_intersections
 from osmcoastline_spark.util import materialize
 
 # rings larger than this are dropped un-repaired (the in-batch crossing
@@ -184,17 +186,14 @@ def buffer0_repair(xs: list, ys: list) -> tuple[list, list] | None:
     return rx, ry
 
 
-def buffer0_triage(
-    rings: DataFrame, cell_deg: float = 0.5, crossing_ids: DataFrame | None = None
-) -> DataFrame:
+def buffer0_triage(rings: DataFrame, cell_deg: float = 0.5) -> DataFrame:
     """Filter/repair polygonizable rings before polygonization.
 
     Input/output columns: ring_id, node_ids, xs, ys, nways, fixed, lead,
-    npoints. Clean rings stream through a pure-Catalyst anti-join; only
-    flagged rings pay the Arrow repair batch. Pass `crossing_ids`
-    (ring_id rows) to reuse an already-computed intersection join — the
-    pipeline derives it from the same pass that feeds the 'intersection'
-    error points, so the triage adds NO extra shuffle there.
+    npoints. A ring is flagged when a Catalyst predicate finds a repeated
+    coordinate or zero area, or else when the per-ring crossing kernel
+    finds a self-crossing. Clean rings stream through a pure-Catalyst
+    anti-join; only flagged rings pay the Arrow repair batch.
     """
     # repeated-COORDINATE detection (not node ids): GEOS IsValid flags a
     # ring that touches itself at a point regardless of node identity —
@@ -206,19 +205,13 @@ def buffer0_triage(
     from osmcoastline_spark.operators.polygonize import _area2_expr
 
     zero_area = _area2_expr("xs", "ys") == 0.0
-    if crossing_ids is None:
-        crossing_ids = (
-            ring_self_intersections(ring_segments(rings), cell_deg)
-            .select("ring_id")
-            .distinct()
-        )
-    else:
-        crossing_ids = crossing_ids.select("ring_id").distinct()
+    bad = degenerate_or_dup | zero_area
+    # the kernel scans only the rings the predicates pass, so the two
+    # branches are disjoint: no distinct, and the set is one narrow stage
     flagged_ids = (
-        rings.filter(degenerate_or_dup | zero_area)
+        rings.filter(bad)
         .select("ring_id")
-        .unionByName(crossing_ids)
-        .distinct()
+        .unionByName(ring_self_intersections(rings.filter(~bad), cell_deg).select("ring_id"))
     )
     # the id set is tiny (usually empty) while `rings` carries full
     # coordinate arrays: counting it while it is checkpointed decides
@@ -315,8 +308,8 @@ def check_polygons(
     Buffer(0) repair attempt; if the repair does not yield a single
     polygon it is dropped silently (stderr-only in the reference).
 
-    Validity here is shell-level (self-crossing via the distributed
-    cell-binned kernel, repeated vertex, zero area) — the axis-parallel
+    Validity here is shell-level (self-crossing via the per-ring crossing
+    kernel, repeated vertex, zero area) — the axis-parallel
     split cuts can only introduce invalidity on the cut shell, never new
     hole-vs-shell conflicts, and hole validity was already established
     before polygonization (buffer0_triage). Clean polygons stream through
@@ -328,8 +321,8 @@ def check_polygons(
 
     `suspect_col` (a boolean column, e.g. split's `cut_suspect`) is the
     scale lever: a transversal cut of a simple ring produces simple pieces
-    by construction (see geom.cut_ring_checked), so the distributed
-    crossing kernel only needs to run over rows where the column is true —
+    by construction (see geom.cut_ring_checked), so the crossing kernel
+    only needs to run over rows where the column is true —
     in the common all-clean case this whole pass is ONE small aggregate
     job, or none when the caller passes `counts` = (nb, ns), the sums of
     `check_counts(suspect_col)` over `polys` (the pipeline observes them
@@ -357,14 +350,14 @@ def check_polygons(
         if n_susp:
             cross_src = polys.filter(needs_kernel)
     elif crossing_scan:
-        cross_src = polys
+        cross_src = polys.filter(~base_flag)
 
     base_ids = polys.filter(base_flag).select("poly_id")
     if cross_src is not None:
-        # close OPEN shells before segment extraction: ring_segments emits
-        # consecutive edges only, so without the appended closing vertex a
-        # crossing involving the implicit last→first bridge edge (which
-        # for split pieces runs along the cut line) would never be scanned
+        # close OPEN shells before the scan: the kernel walks consecutive
+        # edges only, so without the appended closing vertex a crossing
+        # involving the implicit last→first bridge edge (which for split
+        # pieces runs along the cut line) would never be scanned
         shells = cross_src.select(
             F.col("poly_id").alias("ring_id"),
             F.when(closed, F.col("shell_x"))
@@ -374,13 +367,12 @@ def check_polygons(
             .otherwise(F.concat("shell_y", F.slice("shell_y", 1, 1)))
             .alias("ys"),
         )
-        crossing_ids = (
-            ring_self_intersections(ring_segments(shells), cell_deg)
-            .select(F.col("ring_id").alias("poly_id"))
-            .distinct()
+        # the scanned rows exclude base_flag's, so the union needs no distinct
+        crossing_ids = ring_self_intersections(shells, cell_deg).select(
+            F.col("ring_id").alias("poly_id")
         )
         flagged_ids, seen = materialize(
-            base_ids.unionByName(crossing_ids).distinct(), n=F.count(F.lit(1))
+            base_ids.unionByName(crossing_ids), n=F.count(F.lit(1))
         )
     else:
         flagged_ids, seen = materialize(base_ids, n=F.count(F.lit(1)))

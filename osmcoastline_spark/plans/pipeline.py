@@ -15,10 +15,13 @@ Warning/error accounting matches the reference:
             (src/osmcoastline.cpp:70,428-439)
 
 GEOS-free geometry (all pure numpy): IsValid/Buffer(0) are implemented as
-the cell-binned self-intersection kernel + the numpy Buffer(0) equivalent
-in operators/repair.py, applied BOTH pre-polygonize (buffer0_triage,
+the per-ring crossing kernel (intersections.ring_self_intersections, one
+narrow mapInArrow stage) + the numpy Buffer(0) equivalent in
+operators/repair.py, applied BOTH pre-polygonize (buffer0_triage,
 reference add_polygons_to_vector) and post-split (check_polygons,
-reference coastline_polygons.cpp:444-467). Known deviations:
+reference coastline_polygons.cpp:444-467). The distributed cell-binned
+join runs once, on the pre-close segments, for the 'intersection' error
+points only. Known deviations:
   * check_polygons validity is shell-level (the axis-parallel split cuts
     cannot introduce new hole-vs-shell conflicts); GEOS IsValid also
     re-checks hole nesting.
@@ -56,7 +59,7 @@ from osmcoastline_spark.operators.questionable import questionable_rings
 from osmcoastline_spark.operators.rings import _closed, assemble_rings, route_rings
 from osmcoastline_spark.operators.split import split_polygons
 from osmcoastline_spark.operators.water import drop_antimeridian_slivers, water_polygons
-from osmcoastline_spark.util import materialize, run_concurrently
+from osmcoastline_spark.util import inherit_local_properties, materialize, run_concurrently
 from osmcoastline_spark.schemas import (
     DEFAULT_BBOX_OVERLAP_3857,
     DEFAULT_BBOX_OVERLAP_4326,
@@ -261,7 +264,9 @@ def run_pipeline(
     # driver threads for the work that overlaps later stages (the
     # intersection checkpoint, the error-category count), scoped to this
     # run: when the run fails, queued work is cancelled and running work
-    # awaited before the error propagates, so no job outlives the call
+    # awaited before the error propagates, so no job outlives the call.
+    # Submissions wrap their thunk in util.inherit_local_properties, so
+    # their jobs carry the submitting thread's job group.
     pool = ThreadPoolExecutor(max_workers=2)
     try:
         return _run_pipeline(
@@ -444,23 +449,42 @@ def _run_pipeline(
     overlaps = duplicate_segments(segs, dup=dup_counts)
     # This pre-close intersection join feeds ONLY the 'intersection' error
     # points (reference parity: those are reported on the raw segment set,
-    # src/osmcoastline.cpp:340-352). The G5 validity triage ids are
-    # computed POST-close below — gap closing merges rings (new ring_id =
-    # min member) and adds closure segments, so pre-close ids would both
+    # src/osmcoastline.cpp:340-352). Ring validity is decided POST-close
+    # below, per ring — gap closing merges rings (new ring_id = min
+    # member) and adds closure segments, so pre-close results would both
     # miss new self-crossings and name rings that no longer exist
     # (round-3 ADVICE fix).
     # the checkpoint (cell-binned self-join + exact Arrow kernel — the
     # longest independent computation in this phase) runs on a driver
-    # thread UNDER the Antarctica/gap-close block below, which only needs
-    # segs/dup_counts; the result is joined right before its first
-    # consumer. The 'intersection' error points slot into the error list
-    # at this position (recorded index) so union order is unchanged.
+    # thread under everything up to the error accounting, which is its
+    # only consumer. The 'intersection' error points slot into the error
+    # list at this position (recorded index) so union order is unchanged.
     ipairs_future = pool.submit(
-        lambda: intersection_pairs(segs, opt.cell_deg).localCheckpoint(eager=True)
+        inherit_local_properties(
+            lambda: intersection_pairs(segs, opt.cell_deg).localCheckpoint(eager=True)
+        )
     )
     error_lines.append(overlaps)
     isects_pos = len(error_points)
     res.tables["segments"] = segs
+
+    def await_isects() -> None:
+        """Join the background intersection checkpoint and slot its error
+        points into their union position (once)."""
+        nonlocal ipairs_future
+        if ipairs_future is None:
+            return
+        ipairs = ipairs_future.result()
+        ipairs_future = None
+        error_points.insert(
+            isects_pos,
+            ipairs.select(
+                F.lit(0).cast("long").alias("osm_id"),
+                F.lit("intersection").alias("error"),
+                "x",
+                "y",
+            ),
+        )
 
     # G12 Antarctica — the ring id was observed at assembly; a resumed
     # run's detection aggregate overlaps the duplicate-segment count the
@@ -474,10 +498,6 @@ def _run_pipeline(
         open_, found = close_antarctica_ring(open_, opt.epsg, **antarctica_kw)
         n_dup_keys = None
     res.stats["antarctica_closed"] = found
-    # rings whose GEOMETRY is new or changed after this point (Antarctica
-    # closure, gap-close merges) — the incremental post-close validity
-    # pass below re-runs the self-intersection kernel only on these
-    changed_ring_ids: list = []
     n_closed_delta = 0  # rings closed after assembly (driver-known)
     if found:
         n_closed_delta += 1
@@ -490,7 +510,6 @@ def _run_pipeline(
         open_ = open_.filter(
             F.element_at("node_ids", 1) != F.element_at("node_ids", -1)
         )
-        changed_ring_ids.append(newly.select("ring_id"))
 
     # R2 gap closing. Open rings ENTIRELY made of duplicated segments are
     # leftover duplicate-way artifacts — the reference orphans them via its
@@ -545,16 +564,6 @@ def _run_pipeline(
         closed = closed.unionByName(now_closed.select(*closed.columns))
         open_ = merged.filter(F.element_at("node_ids", 1) != F.element_at("node_ids", -1))
         n_closed_delta += len(cres.closed_group_ids)
-        if cres.closed_group_ids:
-            # the planner already knows exactly which output ring_ids
-            # closed — a tiny driver-built frame replaces re-deriving the
-            # set from the merged checkpoint (same ids, one less filter +
-            # distinct lineage in the validity joins below)
-            changed_ring_ids.append(
-                spark.createDataFrame(
-                    [(int(i),) for i in cres.closed_group_ids], "ring_id long"
-                )
-            )
     if n_closed_pre is not None:
         # exact arithmetic: post-close closed set = post-assembly closed
         # set (observed on the assembly checkpoints) plus the
@@ -565,96 +574,7 @@ def _run_pipeline(
         res.stats["rings"] = closed.count()
     _trace("close+rings_count")
 
-    # join the background intersection checkpoint (launched above) and
-    # slot its error points into their original union position
-    ipairs = ipairs_future.result()
-    error_points.insert(
-        isects_pos,
-        ipairs.select(
-            F.lit(0).cast("long").alias("osm_id"),
-            F.lit("intersection").alias("error"),
-            "x",
-            "y",
-        ),
-    )
-    _trace("ipairs_join")
-
     routed = route_rings(closed)
-
-    # G5 self-intersection detection on the FINAL (post-close) rings: one
-    # result shared by the rings-output error points, the rings.valid
-    # column and the Buffer(0) triage — matching the reference, which runs
-    # IsValid on the rings as they are polygonized
-    # (src/coastline_ring_collection.cpp:148-168), i.e. after closing.
-    # Computed INCREMENTALLY: self-intersection is a per-ring property, so
-    # rings untouched by closing keep their pre-close result (the same-ring
-    # pairs already materialized in `ipairs` for the error points — zero
-    # extra kernel work), and the cell-binned kernel re-runs only on the
-    # small set of closure-created/merged rings. Bit-equal to a full
-    # post-close pass at a fraction of the cost.
-    si_first = None
-    if opt.output_rings or opt.output_polygons != "none" or opt.output_lines:
-        pring = routed["polygonizable"]
-        si_base = ipairs.filter(F.col("a_ring") == F.col("b_ring")).select(
-            F.col("a_ring").alias("ring_id"), "x", "y"
-        ).join(pring.select("ring_id"), "ring_id", "left_semi")
-        if changed_ring_ids:
-            # no checkpoint: the id set is either driver-built (gap-close
-            # groups) or a filter over a checkpointed frame (Antarctica) —
-            # re-evaluating it for the semi+anti join pair is cheaper than
-            # one more eager-checkpoint job on the driver's ~0.2 s/job floor
-            changed_ids = changed_ring_ids[0]
-            for df in changed_ring_ids[1:]:
-                changed_ids = changed_ids.unionByName(df)
-            changed_ids = changed_ids.distinct()
-            si_pre = si_base.join(changed_ids, "ring_id", "left_anti")
-            si_new = ring_self_intersections(
-                ring_segments(pring.join(changed_ids, "ring_id", "left_semi")),
-                opt.cell_deg,
-            )
-            si_points = si_pre.unionByName(si_new)
-        else:
-            # nothing closed after assembly: every polygonizable ring kept
-            # its pre-close geometry, so the pre-computed ipairs rows ARE
-            # the complete self-intersection set (same output, minus the
-            # empty incremental-kernel branch and its join/Arrow stages)
-            si_points = si_base
-        if opt.output_rings:
-            # GEOS IsValid is also false for a ring touching itself at a
-            # POINT (repeated coordinate, e.g. two nodes at one location)
-            # and GEOSisValidReason reports "Ring Self-intersection[x y]"
-            # there (reference output_database.cpp:169-211) — include
-            # those in the rings-mode invalid set + error points. The
-            # polygons path doesn't need this scan: buffer0_triage
-            # detects repeated coordinates with a shuffle-free Catalyst
-            # predicate.
-            interior = F.slice(F.arrays_zip("xs", "ys"), 1, F.size("xs") - 1)
-            dup_pts = (
-                pring.select("ring_id", F.explode(interior).alias("pt"))
-                .groupBy(
-                    "ring_id",
-                    F.col("pt.xs").alias("x"),
-                    F.col("pt.ys").alias("y"),
-                )
-                .agg(F.count("*").alias("k"))
-                .filter(F.col("k") > 1)
-                .select("ring_id", "x", "y")
-            )
-            si_points = si_points.unionByName(dup_pts)
-        if opt.output_rings:
-            # rings mode needs one (min x, y) crossing POINT per invalid
-            # ring for the error table — build the per-ring min aggregate
-            # and pin it (3 consumers: error points, rings.valid, triage)
-            si_first = si_points.groupBy("ring_id").agg(
-                F.min(F.struct("x", "y")).alias("p")
-            ).localCheckpoint(eager=True)
-            crossing_ids = si_first.select("ring_id")
-        else:
-            # polygons-only: the triage consumes only the ID SET of
-            # crossing rings (it dedups internally) — skip the min-point
-            # groupBy exchange entirely (round 6)
-            crossing_ids = si_points.select("ring_id")
-        _trace("validity")
 
     if opt.output_rings:
         # routing: single_point / not_a_ring / not_closed (+end_point);
@@ -710,19 +630,30 @@ def _run_pipeline(
         # G13 + rings land/valid (reference src/output_database.cpp:59-64,
         # 165-221): `land` = exterior CW after the OSM→GIS reversal (i.e.
         # OSM orientation CCW ⇒ shoelace > 0); `valid` = the single-ring
-        # polygon has no self-intersection — detected with the same exact
-        # kernel as J5, restricted to same-ring pairs, standing in for
-        # GEOS IsValid; one 'self_intersection' error point per invalid
-        # ring at its first (min x,y) crossing, rings-output mode only.
+        # polygon has no self-intersection — detected on the FINAL
+        # (post-close) rings by the per-ring crossing kernel, standing in
+        # for GEOS IsValid as the reference runs it, ring by ring
+        # (src/coastline_ring_collection.cpp:148-168); one
+        # 'self_intersection' error point per invalid ring at its first
+        # (min x,y) crossing, rings-output mode only. GEOS IsValid is also
+        # false for a ring touching itself at a POINT (repeated
+        # coordinate, e.g. two nodes at one location) and
+        # GEOSisValidReason reports "Ring Self-intersection[x y]" there
+        # (reference output_database.cpp:169-211), so the kernel reports
+        # repeated interior coordinates too. Pinned: error points,
+        # rings.valid and their accounting all read it.
         from osmcoastline_spark.operators.polygonize import _area2_expr
 
         pring = routed["polygonizable"]
+        si_first = ring_self_intersections(
+            pring, opt.cell_deg, repeated=True
+        ).localCheckpoint(eager=True)
         error_points.append(
             si_first.select(
                 F.col("ring_id").alias("osm_id"),
                 F.lit("self_intersection").alias("error"),
-                F.col("p.x").alias("x"),
-                F.col("p.y").alias("y"),
+                "x",
+                "y",
             )
         )
         res.tables["rings"] = (
@@ -749,9 +680,7 @@ def _run_pipeline(
         # branch (lines/questionable/split/water) is skipped, matching the
         # reference's thrown runtime_error (osmcoastline.cpp:355-417).
         pg_in = routed["polygonizable"]
-        polygonizable = buffer0_triage(
-            pg_in, opt.cell_deg, crossing_ids=crossing_ids
-        )
+        polygonizable = buffer0_triage(pg_in, opt.cell_deg)
         if polygonizable is not pg_in:
             # repairs rewrote arrays — pin them; the clean identity return
             # rides the existing ring checkpoints (no third array write)
@@ -803,9 +732,12 @@ def _run_pipeline(
                 # hides under the split + check_polygons actions below
                 # (round 6; the guard at the accounting site falls back to
                 # a synchronous count if a future edit appends later)
+                await_isects()
                 acct_sig = (len(error_points), len(error_lines))
                 acct_future = pool.submit(
-                    _count_error_categories, list(error_points), list(error_lines)
+                    inherit_local_properties(_count_error_categories),
+                    list(error_points),
+                    list(error_lines),
                 )
 
                 if opt.split_large_polygons and opt.max_points_in_polygon > 0:
@@ -904,6 +836,7 @@ def _run_pipeline(
                     )
                     _trace("water_plan")
 
+    await_isects()
     ep = error_points[0]
     for df in error_points[1:]:
         ep = ep.unionByName(df)

@@ -5,7 +5,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def materialize(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
@@ -26,6 +27,14 @@ def materialize(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     return observed.localCheckpoint(eager=True), obs.get
 
 
+def inherit_local_properties(fn: Callable) -> Callable:
+    """`fn`, wrapped to run with the calling thread's Spark local
+    properties and job tags as they are now — the job group among them —
+    on whichever driver thread calls it. Without this, a job started on a
+    pool thread belongs to no group."""
+    return inheritable_thread_target(SparkSession.active())(fn)
+
+
 def run_concurrently(*thunks: Callable):
     """Run independent Spark actions in parallel driver threads and return
     their results in argument order.
@@ -33,10 +42,12 @@ def run_concurrently(*thunks: Callable):
     Local-mode job submission costs ~0.2 s of driver scheduling per job
     regardless of data size (BENCH/BASELINE.md §1); overlapping
     independent count/collect DAGs hides that floor. Spark's scheduler is
-    thread-safe for concurrent actions on one session.
+    thread-safe for concurrent actions on one session. Each thunk runs
+    with the caller's local properties (job group, description), so its
+    jobs are listed under the caller's job group.
     """
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit_local_properties(t)) for t in thunks]
         return [f.result() for f in futures]
 
 
