@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Scaling evidence for the image-decode kernels (N vs 4N cores, same
 protocol as the other kernel harnesses: identical input, fresh JVM per
-level, interleaved best-of-N, per-kernel MIN per level; probe-gated like
-the knn harness so a degraded host window can never record a number).
+level, interleaved best-of-N, per-kernel MIN per level; probe-gated by
+BENCH/host_probe.py so a degraded host window can never record a number).
 
 The north rule's per-row invariant (decoded-pixel PSNR + caption
 equality) rides entirely on with_image_features / verify_payloads —

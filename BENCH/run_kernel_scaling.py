@@ -52,13 +52,11 @@ ways.write.mode("overwrite").parquet(os.path.join(out, "ways"))
 # synth plan under-estimates and AQE would broadcast a 400+ MB join side)
 nodes = spark.read.parquet(os.path.join(out, "nodes"))
 ways = spark.read.parquet(os.path.join(out, "ways"))
-# bucketed J2 sources: nodes + exploded refs bucket-hashed and sorted on
-# node_id (the ingest-once layout; production = Iceberg bucket(N, node_id))
-from osmcoastline_spark.sources.tables import write_bucketed, ways_refs
-write_bucketed(nodes.select("node_id", "lon", "lat"), "nodes_b_setup",
-               os.path.join(out, "nodes_b"), buckets=64)
-write_bucketed(ways_refs(coastline_ways(ways)), "refs_b_setup",
-               os.path.join(out, "refs_b"), buckets=64)
+# exploded (way_id, pos, node_id) refs for the flat J2 variant
+from pyspark.sql import functions as F
+coastline_ways(ways).select(
+    "way_id", F.posexplode("node_ids").alias("pos", "node_id")
+).write.mode("overwrite").parquet(os.path.join(out, "refs"))
 wl = ways_with_locations(coastline_ways(ways), nodes)
 closed, open_ = assemble_rings(wl)
 rings = closed.unionByName(open_)
@@ -125,22 +123,11 @@ def act(df):
     df.write.format("noop").mode("overwrite").save()
     dt = round(time.time() - t0, 2)
     return dt, df.count()
-# Bucketed-vs-flat J2 A/B over IDENTICAL files (the bucketed dirs read as
-# plain parquet when scanned by path — only catalog metadata differs).
-# Bucketed first: any OS page-cache warming then favors the FLAT variant,
-# i.e. biases against the bucketing thesis.
-from osmcoastline_spark.sources.tables import register_bucketed
-from osmcoastline_spark.operators.locations import collect_locations, ways_with_locations_from_refs
-spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-nb = register_bucketed(spark, "nodes_b", os.path.join(src, "nodes_b"),
-                       "node_id long, lon double, lat double", buckets=64)
-rb = register_bucketed(spark, "refs_b", os.path.join(src, "refs_b"),
-                       "way_id long, pos int, node_id long", buckets=64)
-w0 = shuffle_write_bytes()
-dt, n = act(ways_with_locations_from_refs(rb, nb)); res["locjoin_bucketed"] = [dt, n]
-w1 = shuffle_write_bytes(); sw["locjoin_bucketed"] = w1 - w0
-refs_p = spark.read.parquet(os.path.join(src, "refs_b"))
-nodes_p = spark.read.parquet(os.path.join(src, "nodes_b"))
+# flat J2 over the pre-exploded refs parquet
+from osmcoastline_spark.operators.locations import collect_locations
+refs_p = spark.read.parquet(os.path.join(src, "refs"))
+nodes_p = spark.read.parquet(os.path.join(src, "nodes")).select("node_id", "lon", "lat")
+w1 = shuffle_write_bytes()
 dt, n = act(collect_locations(refs_p.join(nodes_p.hint("SHUFFLE_HASH"), "node_id"))); res["locjoin_flat"] = [dt, n]
 w2 = shuffle_write_bytes(); sw["locjoin_flat"] = w2 - w1
 # historical variant (explode + checkpointed inputs), before the 1.2 GB
@@ -173,34 +160,9 @@ def main() -> None:
     src = os.environ.get("SPARK_GRAFT_KERNEL_DIR", "/tmp/spark_graft_kernel_inputs")
     env = dict(os.environ, REPO=REPO)
 
-    if not os.path.exists(os.path.join(src, "polys")):
+    if not os.path.exists(os.path.join(src, "refs")):
         out = subprocess.run(
             [sys.executable, "-c", SETUP, src, str(islands)],
-            capture_output=True, text=True, env=env, timeout=3600,
-        )
-        assert "SETUP-OK" in out.stdout, out.stderr[-2000:]
-    elif not os.path.exists(os.path.join(src, "nodes_b")):
-        # inputs from an older harness run: backfill only the bucketed tables
-        backfill = r"""
-import os, sys
-sys.path.insert(0, os.environ["REPO"])
-from osmcoastline_spark.session import get_spark
-from osmcoastline_spark.operators.filter import coastline_ways
-from osmcoastline_spark.sources.tables import write_bucketed, ways_refs
-src = sys.argv[1]
-spark = get_spark("kern-backfill", master="local[32]", shuffle_partitions=64)
-spark.sparkContext.setLogLevel("ERROR")
-nodes = spark.read.parquet(os.path.join(src, "nodes"))
-ways = spark.read.parquet(os.path.join(src, "ways"))
-write_bucketed(nodes.select("node_id", "lon", "lat"), "nodes_b_setup",
-               os.path.join(src, "nodes_b"), buckets=64)
-write_bucketed(ways_refs(coastline_ways(ways)), "refs_b_setup",
-               os.path.join(src, "refs_b"), buckets=64)
-print("SETUP-OK")
-spark.stop()
-"""
-        out = subprocess.run(
-            [sys.executable, "-c", backfill, src],
             capture_output=True, text=True, env=env, timeout=3600,
         )
         assert "SETUP-OK" in out.stdout, out.stderr[-2000:]
@@ -214,7 +176,7 @@ spark.stop()
         lenv = dict(
             env,
             SPARK_GRAFT_DRIVER_MEM=f"{max(int(cpus * per_core), 4)}g",
-            SPARK_GRAFT_UI="1",  # REST shuffle metrics for the A/B bytes
+            SPARK_GRAFT_UI="1",  # REST shuffle metrics for the locjoin bytes
         )
         out = subprocess.run(
             [sys.executable, "-c", CHILD, str(cpus), src],

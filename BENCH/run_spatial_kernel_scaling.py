@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Scaling evidence for the round-5 spatial-index kernels (N vs 4N cores,
+"""Scaling evidence for the round-5 raster→vector kernel (N vs 4N cores,
 same protocol as the other kernel harnesses: identical input, fresh JVM per
 level, interleaved best-of-N, per-kernel MIN per level).
 
@@ -7,9 +7,6 @@ Kernels:
   vectorize — scanline run-merge of a ~2.5M-cell raster mask (4096×1024
               grid, deterministic arithmetic membership) into maximal
               rectangles: two window+agg passes, two exchanges.
-  compact   — quadtree compact() of the same mask, 4 levels: one
-              sibling-count window + regroup per level over a shrinking
-              frame.
 
 Appends a section to BENCH/KERNELS.md and prints one JSON line.
 """
@@ -28,7 +25,7 @@ import json, os, sys, time
 sys.path.insert(0, os.environ["REPO"])
 from pyspark.sql import functions as F
 from osmcoastline_spark.session import get_spark
-from osmcoastline_spark.operators.vectorize import compact_cells, vectorize_cells
+from osmcoastline_spark.operators.vectorize import vectorize_cells
 
 cpus = int(sys.argv[1])
 w, h = int(sys.argv[2]), int(sys.argv[3])
@@ -36,7 +33,7 @@ spark = get_spark("spatialkern", master=f"local[{cpus}]", shuffle_partitions=64)
 spark.sparkContext.setLogLevel("ERROR")
 
 # deterministic mask: ~60% of a w×h grid, mixed solid slabs + speckle so
-# both kernels do real merging/promotion work
+# the kernel does real merging work
 cells = (
     spark.range(w * h)
     .select((F.col("id") % w).alias("tx"), (F.col("id") / w).cast("long").alias("ty"))
@@ -55,7 +52,6 @@ def act(name, fn):
     res[name] = [round(time.time() - t0, 2), df.count()]
 
 act("vectorize", lambda: vectorize_cells(cells))
-act("compact", lambda: compact_cells(cells, levels=4))
 print(json.dumps({"cpus": cpus, "kernels": res}))
 spark.stop()
 """
@@ -106,7 +102,7 @@ def main() -> None:
 
 ## Spatial-index kernels ({lo} vs {hi} cores, {w}×{h} mask, best of {repeats} interleaved)
 
-Round-5 raster→vector + compaction kernels under the main-table protocol
+Round-5 raster→vector kernel under the main-table protocol
 (fresh JVM per level, noop-sink action, per-kernel min across interleaved
 repeats). Output rows are asserted identical across levels.
 

@@ -21,12 +21,7 @@ the DuckDB oracle can verify spatial operators without a spatial extension):
                 distinct-sample, count-min frequency, Bloom join
                 pruning, deterministic-sample quantiles),
                 curation chain, vocab counts, duplicated-substring spans
-  spatial-idx : raster→vector run-merge (empty-tile water slabs),
-                H3/S2-style quadtree compact()/uncompact() round trip,
-                gridDisk k-ring (coastal-halo candidate tiles),
-                radius-bounded spatial kNN join (oracle = brute force),
-                zoom-pyramid tile rollup (single-exchange ancestor
-                explode; oracle = per-level UNION ALL)
+  spatial-idx : raster→vector run-merge (empty-tile water slabs)
   temporal    : gap sessionization; as-of join (joinless union+window,
                 oracle = DuckDB's native ASOF JOIN); binned range join
                 (oracle = DuckDB's native inequality join)
@@ -149,9 +144,9 @@ def _rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 def _node_cells(nodes: DataFrame, n: int) -> DataFrame:
     """(tx, ty) n×n world-grid cell of every node, edge-clamped — the
-    shared projection for the cell-index queries (tile_grid, vectorize,
-    compact/uncompact, grid_disk, tile_pyramid). One definition: a grid
-    or clamp change must not be appliable to only one copy."""
+    shared projection for the cell-index queries (tile_grid, vectorize).
+    One definition: a grid or clamp change must not be appliable to only
+    one copy."""
     return nodes.select(
         F.least(F.lit(n - 1), F.floor((F.col("lon") + 180.0) / (360.0 / n))).alias("tx"),
         F.least(F.lit(n - 1), F.floor((F.col("lat") + 90.0) / (180.0 / n))).alias("ty"),
@@ -357,10 +352,9 @@ def q_ring_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # max_chains_hint: each ring contributes s = (r%7)+1 <= 7 ways and
     # chains are one-per-way, so 7*R provably bounds the chain count.
-    # materialize stays default-True: with the HOF-free Catalyst merge the
-    # checkpoint is cheap, while skipping it makes the final
-    # filter/projection re-evaluate the merge chain through predicate
-    # pushdown (measured A/B round 6: 1.19 s vs 2.0 s per run).
+    # assemble_rings always checkpoints the merged rings: skipping it made
+    # the final filter/projection re-evaluate the merge chain through
+    # predicate pushdown (measured A/B round 6: 1.19 s vs 2.0 s per run).
     closed, open_ = assemble_rings(ways_loc, max_chains_hint=7 * R)
     return closed.select(
         "ring_id", "nways", F.size("node_ids").cast("int").alias("npoints")
@@ -1430,19 +1424,6 @@ def q_vectorize_water(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vectorize_cells(empty)
 
 
-def q_compact_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H3/S2-style compact() over the occupied-tile cover: the zoom-5
-    (32×32) tiles containing ≥1 node, compacted 3 levels — dense coastal
-    regions promote to coarser cells, sparse ones stay fine
-    (operators/vectorize.py:compact_cells)."""
-    from osmcoastline_spark.operators.vectorize import compact_cells
-
-    nodes = _nodes(spark, sf_dir)
-    n = 32
-    occ = _node_cells(nodes, n).distinct()
-    return compact_cells(occ, levels=3)
-
-
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (functions/temporal.py): 1-day gap over
     the events table → per-session aggregates; 1214 sessions / 150 users
@@ -1512,57 +1493,6 @@ def q_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.rolling_stats(ev, window_seconds=86400)
 
 
-def q_uncompact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """compact() → uncompact() point-set identity on the zoom-5 occupied
-    cover: the Spark side runs the full 3-level round trip
-    (operators/vectorize.py); the oracle is simply the input cell set —
-    a trivially-correct oracle that any compaction bug (lost sibling,
-    wrong parent, bad expansion) would break."""
-    from osmcoastline_spark.operators.vectorize import compact_cells, uncompact_cells
-
-    nodes = _nodes(spark, sf_dir)
-    n = 32
-    occ = _node_cells(nodes, n).distinct()
-    return uncompact_cells(compact_cells(occ, levels=3))
-
-
-def q_grid_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coastal halo: the k=2 gridDisk (Chebyshev k-ring) of the occupied
-    zoom-5 cells, flagged core/halo — the candidate-tile set a kNN
-    endpoint match probes, computed as one set instead of 25 lookups per
-    row (operators/vectorize.py:grid_disk). `mark_center=True` derives
-    the core flag during the expansion (zero offset = center), so the
-    plan is ONE parquet scan and two bounded cell-set exchanges — no
-    join back against the input set (which Spark would not
-    exchange-reuse, re-running the occupied-set lineage)."""
-    from osmcoastline_spark.operators.vectorize import grid_disk
-
-    nodes = _nodes(spark, sf_dir)
-    n = 32
-    occ = _node_cells(nodes, n).distinct()
-    return grid_disk(occ, k=2, n=n, mark_center=True)
-
-
-def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zoom-pyramid rollup (operators/vectorize.py:tile_pyramid): per-cell
-    node counts at zoom-5 (32×32) aggregated up the quadtree to the root —
-    every non-empty ancestor cell with its base-tile count and value sum,
-    the batch build a tile server runs over the reference's single-zoom
-    output. ONE exchange for all six levels (ancestor explode + single
-    groupBy with map-side partials; the apex hot key collapses to one
-    partial per task)."""
-    from osmcoastline_spark.operators.vectorize import tile_pyramid
-
-    nodes = _nodes(spark, sf_dir)
-    n = 32
-    base = (
-        _node_cells(nodes, n)
-        .groupBy("tx", "ty")
-        .agg(F.count(F.lit(1)).alias("value"))
-    )
-    return tile_pyramid(base, levels=5)
-
-
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval×interval overlap join (temporal.interval_join): per-event
     activity intervals [ts, ts + 1..50 min) × a 120-window maintenance
@@ -1621,31 +1551,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.unix_micros(F.col("ivl_lo").cast("timestamp")).alias("err_ts_us"),
     )
-
-
-# query points for the spatial kNN join: a second deterministic lattice
-# derived from customer keys (sites = the node lattice from part keys).
-# Coprime strides keep point and site lattices misaligned so d2 ties are
-# rare but nonzero — the site_id tie-break is actually exercised.
-CUST_LON = "(CAST(c_custkey % 359 AS DOUBLE) * 1.0 - 179.5)"
-CUST_LAT = "(CAST((c_custkey * 13) % 167 AS DOUBLE) * 1.0 - 83.0)"
-
-
-def q_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Radius-bounded spatial kNN join (operators/knn.py:knn_join): for
-    every customer-derived query point, the 3 nearest node sites within
-    5 squared-root degrees, via site-side cell-disk replication + ONE
-    equi-join on the cell key + one per-point window — never the
-    BroadcastNestedLoop a raw theta-join plans as. The oracle is DuckDB's
-    brute-force cross join + rank, so the row cross-checks the binned
-    algorithm against the definitional one."""
-    from osmcoastline_spark.operators.knn import knn_join
-
-    points = _read(spark, sf_dir, "customer").selectExpr(
-        "c_custkey AS point_id", f"{CUST_LON} AS lon", f"{CUST_LAT} AS lat"
-    )
-    sites = _nodes(spark, sf_dir).withColumnRenamed("node_id", "site_id")
-    return knn_join(points, sites, k=3, radius=5.0, cell_deg=5.0)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1714,16 +1619,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_kmv_overlap": q_kmv_overlap,
         "q_pack_sequences": q_pack_sequences,
         "q_vectorize_water": q_vectorize_water,
-        "q_compact_cells": q_compact_cells,
         "q_sessionize": q_sessionize,
         "q_rolling_stats": q_rolling_stats,
         "q_asof_events": q_asof_events,
-        "q_uncompact_roundtrip": q_uncompact_roundtrip,
-        "q_grid_disk": q_grid_disk,
-        "q_tile_pyramid": q_tile_pyramid,
         "q_range_join": q_range_join,
         "q_interval_join": q_interval_join,
-        "q_spatial_knn": q_spatial_knn,
     }
 
 
@@ -2443,24 +2343,6 @@ v1 AS (SELECT x1, x2, y,
 SELECT x1, min(y) AS y1, x2, max(y) AS y2,
        CAST((x2 - x1 + 1) * (max(y) - min(y) + 1) AS BIGINT) AS ncells
 FROM v1 GROUP BY x1, x2, vrun""",
-        # quadtree compact() unrolled 3 levels — the sibling-count window
-        # twin of operators/vectorize.py:compact_cells
-        "q_compact_cells": f"""
-WITH nodes AS ({_nodes_sql()}),
-cur0 AS (SELECT DISTINCT
-           least(31, CAST(floor((lon + 180.0) / 11.25) AS BIGINT)) AS x,
-           least(31, CAST(floor((lat + 90.0) / 5.625) AS BIGINT)) AS y
-         FROM nodes),
-l0 AS (SELECT x, y, count(*) OVER (PARTITION BY x // 2, y // 2) AS nsib FROM cur0),
-cur1 AS (SELECT DISTINCT x // 2 AS x, y // 2 AS y FROM l0 WHERE nsib = 4),
-l1 AS (SELECT x, y, count(*) OVER (PARTITION BY x // 2, y // 2) AS nsib FROM cur1),
-cur2 AS (SELECT DISTINCT x // 2 AS x, y // 2 AS y FROM l1 WHERE nsib = 4),
-l2 AS (SELECT x, y, count(*) OVER (PARTITION BY x // 2, y // 2) AS nsib FROM cur2),
-cur3 AS (SELECT DISTINCT x // 2 AS x, y // 2 AS y FROM l2 WHERE nsib = 4)
-SELECT x, y, CAST(0 AS INT) AS res FROM l0 WHERE nsib < 4
-UNION ALL SELECT x, y, 1 FROM l1 WHERE nsib < 4
-UNION ALL SELECT x, y, 2 FROM l2 WHERE nsib < 4
-UNION ALL SELECT x, y, 3 FROM cur3""",
         # gap sessionization — window twin of functions/temporal.py
         "q_sessionize": """
 WITH s0 AS (
@@ -2507,50 +2389,6 @@ FROM e
 WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
              RANGE BETWEEN CAST(86400 AS BIGINT) * 1000000 PRECEDING
                    AND CURRENT ROW)""",
-        # compact→uncompact round trip: the oracle IS the input cell set
-        "q_uncompact_roundtrip": f"""
-WITH nodes AS ({_nodes_sql()})
-SELECT DISTINCT
-       least(31, CAST(floor((lon + 180.0) / 11.25) AS BIGINT)) AS tx,
-       least(31, CAST(floor((lat + 90.0) / 5.625) AS BIGINT)) AS ty
-FROM nodes""",
-        # k=2 Chebyshev disk of the occupied zoom-5 cells, clamped to the
-        # 32×32 grid, flagged core (occupied) vs halo
-        "q_grid_disk": f"""
-WITH nodes AS ({_nodes_sql()}),
-occ AS (
-  SELECT DISTINCT
-         least(31, CAST(floor((lon + 180.0) / 11.25) AS BIGINT)) AS tx,
-         least(31, CAST(floor((lat + 90.0) / 5.625) AS BIGINT)) AS ty
-  FROM nodes),
-offs AS (
-  SELECT dx.range AS dx, dy.range AS dy FROM range(-2, 3) dx, range(-2, 3) dy),
-disk AS (
-  SELECT DISTINCT occ.tx + dx AS tx, occ.ty + dy AS ty
-  FROM occ, offs
-  WHERE occ.tx + dx BETWEEN 0 AND 31 AND occ.ty + dy BETWEEN 0 AND 31)
-SELECT d.tx, d.ty, (o.tx IS NOT NULL) AS is_core
-FROM disk d LEFT JOIN occ o ON d.tx = o.tx AND d.ty = o.ty""",
-        # zoom-pyramid rollup: six explicit per-level aggregations (integer
-        # floor-division ancestors) vs Spark's single ancestor-explode
-        # groupBy — value-hash equality covers count AND sum at every level
-        "q_tile_pyramid": f"""
-WITH nodes AS ({_nodes_sql()}),
-base AS (
-  SELECT tx, ty, COUNT(*) AS value FROM (
-    SELECT least(31, CAST(floor((lon + 180.0) / 11.25) AS BIGINT)) AS tx,
-           least(31, CAST(floor((lat + 90.0) / 5.625) AS BIGINT)) AS ty
-    FROM nodes)
-  GROUP BY tx, ty)
-"""
-        + "\nUNION ALL\n".join(
-            f"""SELECT CAST(floor(tx / {1 << d}.0) AS BIGINT) AS x,
-       CAST(floor(ty / {1 << d}.0) AS BIGINT) AS y,
-       CAST({d} AS INT) AS res, COUNT(*) AS ntiles,
-       CAST(SUM(value) AS BIGINT) AS sum_value
-FROM base GROUP BY 1, 2, 3"""
-            for d in range(6)
-        ),
         # native inequality join twin (two-sided sibling of q_range_join)
         "q_interval_join": """
             WITH left_iv AS (
@@ -2576,21 +2414,6 @@ SELECT c.event_id AS click_id, e.err_id, c.user_id,
        epoch_us(c.ts) AS ts_us, epoch_us(e.lo) AS err_ts_us
 FROM clicks c JOIN errs e
   ON c.user_id = e.user_id AND c.ts >= e.lo AND c.ts < e.hi""",
-        # kNN-within-radius vs the definitional brute-force: cross join +
-        # rank() — two genuinely different algorithms (Spark side is the
-        # cell-binned equi-join of operators/knn.py)
-        "q_spatial_knn": f"""
-WITH pts AS (SELECT c_custkey AS point_id, {CUST_LON} AS plon, {CUST_LAT} AS plat FROM customer),
-sites AS (SELECT p_partkey AS site_id, {NODE_LON} AS slon, {NODE_LAT} AS slat FROM part),
-cand AS (
-  SELECT point_id, site_id,
-         (plon - slon) * (plon - slon) + (plat - slat) * (plat - slat) AS d2
-  FROM pts, sites),
-ranked AS (
-  SELECT point_id, site_id, d2,
-         CAST(row_number() OVER (PARTITION BY point_id ORDER BY d2, site_id) AS BIGINT) AS rnk
-  FROM cand WHERE d2 <= 25.0)
-SELECT point_id, site_id, d2, rnk FROM ranked WHERE rnk <= 3""",
     }
 
 

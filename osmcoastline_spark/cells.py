@@ -26,57 +26,16 @@ from pyspark.sql import functions as F
 CELL_STRIDE = 1_000_000
 
 
-def cell_ixy_exprs(lon: Column, lat: Column, cell_deg: float) -> tuple[Column, Column]:
-    """The (ix, iy) cell indices as separate Catalyst expressions — the
-    shared origin/step convention every cell consumer must agree on.
-    `cell_id_expr` packs them; knn_join offsets them before packing (the
-    site-side ±reach expansion needs the axes unpacked)."""
+def cell_id_expr(lon: Column, lat: Column, cell_deg: float) -> Column:
     ix = F.floor((lon + F.lit(180.0)) / F.lit(cell_deg)).cast("long")
     iy = F.floor((lat + F.lit(90.0)) / F.lit(cell_deg)).cast("long")
-    return ix, iy
-
-
-def cell_id_expr(lon: Column, lat: Column, cell_deg: float) -> Column:
-    ix, iy = cell_ixy_exprs(lon, lat, cell_deg)
     return (ix * F.lit(CELL_STRIDE) + iy).cast("long")
-
-
-def cell_id_sql(lon: str, lat: str, cell_deg: float) -> str:
-    """Identical arithmetic as ANSI SQL (DuckDB oracle parity)."""
-    return (
-        f"(CAST(floor(({lon} + 180.0) / {cell_deg!r}) AS BIGINT) * {CELL_STRIDE} "
-        f"+ CAST(floor(({lat} + 90.0) / {cell_deg!r}) AS BIGINT))"
-    )
 
 
 def cell_id_np(lon: np.ndarray, lat: np.ndarray, cell_deg: float) -> np.ndarray:
     ix = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / cell_deg).astype(np.int64)
     iy = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / cell_deg).astype(np.int64)
     return ix * CELL_STRIDE + iy
-
-
-def segment_cover_cells(x1, y1, x2, y2, cell_deg: float) -> list[np.ndarray]:
-    """Cells covered by each segment's bbox (boundary-cell duplication).
-
-    Returns a python list of int64 arrays (ragged). Coastline segments are
-    short relative to any sane cell size, so the cover is almost always 1-2
-    cells; the dedup after the binned self-join removes the duplicates this
-    creates (dropDuplicates on the pair key).
-    """
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    ix_lo = np.floor((np.minimum(x1, x2) + 180.0) / cell_deg).astype(np.int64)
-    ix_hi = np.floor((np.maximum(x1, x2) + 180.0) / cell_deg).astype(np.int64)
-    iy_lo = np.floor((np.minimum(y1, y2) + 90.0) / cell_deg).astype(np.int64)
-    iy_hi = np.floor((np.maximum(y1, y2) + 90.0) / cell_deg).astype(np.int64)
-    out = []
-    for a, b, c, d in zip(ix_lo, ix_hi, iy_lo, iy_hi):
-        gx = np.arange(a, b + 1, dtype=np.int64)
-        gy = np.arange(c, d + 1, dtype=np.int64)
-        out.append((gx[:, None] * CELL_STRIDE + gy[None, :]).ravel())
-    return out
 
 
 def bbox_cover_cells_expr(

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osmcoastline_spark.util import materialize
+
 from .text import lang_guess, punct_ratio, stopword_ratio, token_count, ws_tokens
 
 # default mixing rates per language stratum (exercised by q_stratified_sample;
@@ -525,7 +527,8 @@ def assign_shards(
         ).cast("long"),
     ).otherwise(F.col(token_col).cast("long"))
     loc_w = Window.partitionBy("__pid").orderBy(*oc)
-    loc = (
+    # pin the range sampling before branching
+    loc, _ = materialize(
         df.repartitionByRange(*oc)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn(
@@ -534,7 +537,6 @@ def assign_shards(
                 loc_w.rowsBetween(Window.unboundedPreceding, 0)
             ),
         )
-        .localCheckpoint()  # pin the range sampling before branching
     )
     totals = {
         r["__pid"]: r["t"]

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmcoastline_spark.util import materialize
+
 from .text import ws_tokens
 
 # ------------------------------------------------------------------ exact
@@ -151,7 +153,7 @@ def minhash_lsh_pairs(
     # (doc_id + one concat key), far smaller than the join shuffle itself,
     # and halves the dominant signature cost (round 6: 1.12 s -> 0.49 s
     # at sf0.1 together with the input repartition)
-    keys = keys.localCheckpoint(eager=True)
+    keys, _ = materialize(keys)
     a = keys.select(F.col("doc_id").alias("a"), "lsh_band", "key")
     b = keys.select(F.col("doc_id").alias("b"), "lsh_band", "key")
     return (

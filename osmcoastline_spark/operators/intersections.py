@@ -65,12 +65,6 @@ def ring_segments(rings: DataFrame) -> DataFrame:
     )
 
 
-def sorted_segments(segments: DataFrame) -> DataFrame:
-    """O1/S4: canonical total-order segment table (range-partitioned sort)
-    — the parquet equivalent of the reference's binary segment dump."""
-    return segments.select("x1", "y1", "x2", "y2").orderBy("x1", "y1", "x2", "y2")
-
-
 def duplicate_segment_counts(segments: DataFrame) -> DataFrame:
     """(x1, y1, x2, y2, k) for every segment appearing k>1 times — the
     shared input of the overlap error lines AND the gap-close orphan

@@ -111,39 +111,3 @@ def ways_with_locations(
         "left" if count_missing else "inner",
     )
     return collect_locations(joined, count_missing)
-
-
-def missing_location_count(ways: DataFrame, nodes: DataFrame) -> int:
-    """J3: way-node refs with no node row. Any ⇒ caller aborts
-    (reference return_code_error, src/osmcoastline.cpp:304-310)."""
-    refs = ways.select(F.explode("node_ids").alias("node_id"))
-    return refs.join(nodes.select("node_id"), "node_id", "left_anti").count()
-
-
-def ways_with_locations_from_refs(
-    refs: DataFrame, nodes: DataFrame, count_missing: bool = False
-) -> DataFrame:
-    """J2 over PRE-BUCKETED sources (sources.tables.write_bucketed): `refs`
-    is the already-exploded (way_id, pos, node_id) table and both it and
-    `nodes` are stored bucket-hashed + sorted on node_id.
-
-    The equi-join then plans with NO Exchange and NO Sort on either side
-    (bucketed SortMergeJoin over pre-sorted single-file buckets) — the only
-    shuffle left in the whole kernel is the way_id regroup that rebuilds
-    the ordered coordinate arrays. Output identical to
-    ways_with_locations(ways, nodes).
-
-    This is the shuffle-shrink lever for repeated planet runs: the node
-    table (the big side at 100 TB) is shuffled ONCE at ingest into the
-    bucket layout instead of on every job (production: Iceberg
-    bucket(N, node_id) partition transform + storage-partitioned joins).
-
-    `count_missing` mirrors ways_with_locations: LEFT join + per-way
-    missing-location count for the J3 abort check.
-    """
-    joined = refs.join(
-        nodes.select("node_id", "lon", "lat"),
-        "node_id",
-        "left" if count_missing else "inner",
-    )
-    return collect_locations(joined, count_missing)

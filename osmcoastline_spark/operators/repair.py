@@ -299,7 +299,6 @@ def check_polygons(
     polys: DataFrame,
     cell_deg: float = 0.5,
     suspect_col: str | None = None,
-    crossing_scan: bool = True,
     counts: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, int]:
     """Post-split validity pass (reference src/coastline_polygons.cpp:444-467
@@ -326,10 +325,11 @@ def check_polygons(
     in the common all-clean case this whole pass is ONE small aggregate
     job, or none when the caller passes `counts` = (nb, ns), the sums of
     `check_counts(suspect_col)` over `polys` (the pipeline observes them
-    on split's round checkpoints). Without `suspect_col`, `crossing_scan`
-    toggles the full kernel over every row (exhaustive mode, used by unit
-    tests and the no-split pipeline branch where inputs are already
-    triage-validated).
+    on split's round checkpoints). Without `suspect_col` the kernel scans
+    every row not already flagged (exhaustive mode, used by unit tests).
+    The no-split pipeline branch passes an all-false `suspect_col`: its
+    inputs are already triage-validated, so only the column-level
+    predicates run.
 
     Returns (checked_polys, warning_count); all input columns preserved.
     """
@@ -349,7 +349,7 @@ def check_polygons(
             return polys, 0
         if n_susp:
             cross_src = polys.filter(needs_kernel)
-    elif crossing_scan:
+    else:
         cross_src = polys.filter(~base_flag)
 
     base_ids = polys.filter(base_flag).select("poly_id")

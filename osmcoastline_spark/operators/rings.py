@@ -175,10 +175,8 @@ def _driver_finish_plan(endpoints: list[tuple[int, int, int]]) -> tuple[list, li
 def assemble_rings(
     ways_loc: DataFrame,
     max_rounds: int = 64,
-    checkpoint_every: int = 1,
     driver_threshold: int = 2_000_000,
     assume_materialized: bool = False,
-    materialize: bool = True,
     max_chains_hint: int | None = None,
     observe: dict[str, Column] | None = None,
 ) -> tuple:
@@ -188,7 +186,7 @@ def assemble_rings(
     `observe` ({name: aggregate Column}) is computed over the merged
     chains (every ring that was open in `ways_loc`, after assembly) in
     the same job as their checkpoint; the call then returns
-    (closed_rings, open_rings, {name: value}). Needs `materialize`.
+    (closed_rings, open_rings, {name: value}).
 
     driver_threshold default (2M, raised from 200k in round 5): the
     sequential finish moves only (ring_id, first, last) triples — ~24
@@ -213,13 +211,6 @@ def assemble_rings(
     whose way count itself is huge — and they now shuffle O(chains × 32B)
     per round instead of O(total coordinates).
 
-    `materialize=False` skips the final localCheckpoint of the merged
-    rings — only ever correct when the caller consumes a single output
-    once, and since the Catalyst merge landed it measures SLOWER even
-    then (the final filter/projection re-evaluates the merge chain via
-    predicate pushdown: 2.0 s vs 1.2 s with the checkpoint at bench
-    sf0.1). Kept for A/B purposes; every production caller materializes.
-
     `max_chains_hint` is an optional TRUE upper bound on the chain count
     (one chain per input way, so the input's way-row count qualifies);
     when it proves the driver finish applies, round 0 skips its count
@@ -233,7 +224,7 @@ def assemble_rings(
     # cheap projection and a second array write would buy nothing)
     chains = _init_chains(ways_loc)
     if not assume_materialized:
-        chains = chains.localCheckpoint(eager=True)
+        chains, _ = util.materialize(chains)
     closed = chains.filter(_closed())
     open_ = chains.filter(~_closed())
 
@@ -241,8 +232,8 @@ def assemble_rings(
     # NOT checkpointed up front: it is a cheap projection over the chains
     # checkpoint, and the common case (chain count under driver_threshold)
     # reads it exactly twice (count + collect) before the loop exits —
-    # cheaper than an eager checkpoint job + write. Distributed rounds
-    # re-pin it via checkpoint_every below.
+    # cheaper than an eager checkpoint job + write. Each distributed round
+    # re-pins it below.
     ep = _with_endpoints(open_).select(
         "ring_id",
         F.array("ring_id").alias("members"),
@@ -333,12 +324,10 @@ def assemble_rings(
             pairs.select(F.col("b_ring_id").alias("ring_id"))
         )
         ep = ep.join(consumed, "ring_id", "left_anti").select(*ep_cols).unionByName(merged)
-        n_known = None
-        if (rnd + 1) % checkpoint_every == 0:
-            ep, seen = util.materialize(
-                ep, n_open=F.count_if(F.col("first_node") != F.col("last_node"))
-            )
-            n_known = seen["n_open"]
+        ep, seen = util.materialize(
+            ep, n_open=F.count_if(F.col("first_node") != F.col("last_node"))
+        )
+        n_known = seen["n_open"]
         closed_groups.append(ep.filter(F.col("first_node") == F.col("last_node")))
         ep = ep.filter(F.col("first_node") != F.col("last_node"))
 
@@ -461,12 +450,7 @@ def assemble_rings(
     # (their size is unbounded).
     bcast = driver_plan is not None and not closed_groups
     merged = apply_merge_plan_df(open_, plan_df, fin_df, broadcast_plan=bcast)
-    if observe is not None:
-        if not materialize:
-            raise ValueError("observe needs the merged checkpoint (materialize=True)")
-        merged, seen = util.materialize(merged, **observe)
-    elif materialize:
-        merged = merged.localCheckpoint(eager=True)
+    merged, seen = util.materialize(merged, **(observe or {}))
     closed = closed.unionByName(merged.filter(_closed()))
     open_ = merged.filter(~_closed())
     if observe is not None:

@@ -1,40 +1,26 @@
-"""Raster→vector tiling + quadtree cell compaction.
+"""Raster→vector tiling.
 
-Two engine-level spatial-index operators the north rule names explicitly
-("raster↔vector tiling", "H3/S2 cell encoding") that generalize what the
-reference does tile-by-tile:
+`vectorize_cells` is the inverse of the tile cover, an engine-level
+spatial operator the north rule names ("raster↔vector tiling") that
+generalizes what the reference does tile-by-tile: it merges a set of unit
+grid cells (a raster mask — e.g. the "empty tiles become water" set of
+reference src/coastline_polygons.cpp:322-360, which emits one rectangle
+PER TILE) into maximal axis-aligned rectangles via the classic two-pass
+scanline run-merge. Writing one water polygon per merged slab instead of
+per tile cuts the output row count by the mean run length — at planet
+scale the open-ocean tile set is ~70% of all tiles and merges into
+O(rows) slabs.
 
-- `vectorize_cells` is the inverse of the tile cover: it merges a set of
-  unit grid cells (a raster mask — e.g. the "empty tiles become water"
-  set of reference src/coastline_polygons.cpp:322-360, which emits one
-  rectangle PER TILE) into maximal axis-aligned rectangles via the
-  classic two-pass scanline run-merge. Writing one water polygon per
-  merged slab instead of per tile cuts the output row count by the mean
-  run length — at planet scale the open-ocean tile set is ~70% of all
-  tiles and merges into O(rows) slabs.
+It is pure Catalyst (window functions + aggregates, zero Python) and
+fully SQL-expressible, so it carries a full value-hash oracle.
 
-- `compact_cells` is H3/S2-style `compact()`: replace every complete
-  group of 4 same-resolution sibling cells by their parent, recursively,
-  producing a mixed-resolution cover that is equal as a point set but
-  exponentially smaller over solid regions. This is the standard way to
-  keep a cell-cover join index small when coverage is dense (inland
-  "all land" regions at fine zoom).
-
-Both are pure Catalyst (window functions + aggregates, zero Python) and
-fully SQL-expressible, so both carry full value-hash oracles.
-
-Scale posture:
-- vectorize: O(log_chunk(width)) exchanges for the hierarchical
-  horizontal merge (each level keyed on (y, x1 div chunk^k); only
-  chunk-edge-touching runs ascend, so every window partition is bounded
-  by the chunk constant — round 6, closing the round-5 "window partitions
-  bounded by raster width" watch item) plus one on the run span
-  `(x1, x2)`. Duplicate input cells are tolerated in-operator (lag-based
-  run starts), so no defensive `distinct` shuffle.
-- compact: one exchange per level, on the PARENT cell key (the window
-  count and the sibling regroup share the partitioning). Levels is a
-  small constant (the resolution delta), so the chain is O(levels)
-  bounded shuffles of a monotonically shrinking frame.
+Scale posture: O(log_chunk(width)) exchanges for the hierarchical
+horizontal merge (each level keyed on (y, x1 div chunk^k); only
+chunk-edge-touching runs ascend, so every window partition is bounded by
+the chunk constant — round 6, closing the round-5 "window partitions
+bounded by raster width" watch item) plus one on the run span
+`(x1, x2)`. Duplicate input cells are tolerated in-operator (lag-based
+run starts), so no defensive `distinct` shuffle.
 """
 
 from __future__ import annotations
@@ -171,207 +157,3 @@ def vectorize_cells(
             ).alias("ncells"),
         )
     )
-
-
-def compact_cells(
-    cells: DataFrame, levels: int, x_col: str = "tx", y_col: str = "ty"
-) -> DataFrame:
-    """H3/S2-style compact(): promote complete 4-sibling groups, `levels`
-    times.
-
-    Input: distinct cells at a single (finest) resolution, non-negative
-    integer coords. Output: (x, y, res) mixed-resolution cover — a cell
-    at `res` r covers the 2^r × 2^r block at (x·2^r, y·2^r) of the input
-    resolution. Point-set equality with the input is guaranteed: a parent
-    is emitted iff all four children were present (and themselves fully
-    solid, by induction).
-
-    One exchange per level: the sibling count and the parent regroup both
-    key on (x>>1, y>>1). The frame shrinks by ≥4× per promoted region, so
-    the chain cost is dominated by level 0.
-    """
-    if levels < 1:
-        raise ValueError(f"levels must be >= 1, got {levels}")
-    out = None
-    cur = cells.select(
-        F.col(x_col).cast("long").alias("x"), F.col(y_col).cast("long").alias("y")
-    )
-    for res in range(levels):
-        # parent key as MATERIALIZED columns so the window's hash
-        # partitioning is on attributes the sibling regroup can reuse
-        # (keying the window on raw expressions costs a second exchange
-        # per level), and an eager localCheckpoint so the kept/promoted
-        # branches of the final union read this level's window ONCE
-        # instead of re-deriving the whole level chain per branch
-        # (measured: 19 exchanges → 5 for levels=3 on the sf0.01 query)
-        counted = (
-            cur.withColumn("px", F.shiftright("x", 1))
-            .withColumn("py", F.shiftright("y", 1))
-            .withColumn(
-                "nsib", F.count(F.lit(1)).over(Window.partitionBy("px", "py"))
-            )
-            .localCheckpoint(eager=True)
-        )
-        kept = (
-            counted.filter(F.col("nsib") < 4)
-            .select("x", "y", F.lit(res).alias("res"))
-        )
-        out = kept if out is None else out.unionByName(kept)
-        cur = (
-            counted.filter(F.col("nsib") == 4)
-            .groupBy("px", "py")
-            .agg(F.lit(1).alias("_one"))
-            .select(F.col("px").alias("x"), F.col("py").alias("y"))
-        )
-    return out.unionByName(cur.select("x", "y", F.lit(levels).alias("res")))
-
-
-def uncompact_cells(
-    cover: DataFrame,
-    x_col: str = "x",
-    y_col: str = "y",
-    res_col: str = "res",
-) -> DataFrame:
-    """H3/S2-style uncompact(): expand a mixed-resolution cover (the
-    output shape of `compact_cells`) back to unit cells at the finest
-    resolution — each cell at `res` r becomes its 2^r × 2^r block.
-
-    Zero exchanges: two generator expansions and pure column math, so it
-    pipelines into whatever consumes the unit cells. `uncompact(compact
-    (S)) == S` exactly for any distinct cell set S (point-set identity),
-    which `q_uncompact_roundtrip` exploits: the Spark side runs the full
-    round trip while the oracle is just the input set itself. Output
-    columns are always named (tx, ty), matching the unit-cell convention
-    of `vectorize_cells`/`grid_disk` inputs.
-    """
-    side = F.expr(f"shiftleft(CAST(1 AS BIGINT), `{res_col}`)")
-    return (
-        cover.withColumn("_dx", F.explode(F.sequence(F.lit(0), side - 1)))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(0), side - 1)))
-        .select(
-            (F.col(x_col) * side + F.col("_dx")).alias("tx"),
-            (F.col(y_col) * side + F.col("_dy")).alias("ty"),
-        )
-    )
-
-
-def tile_pyramid(
-    tiles: DataFrame,
-    levels: int,
-    x_col: str = "tx",
-    y_col: str = "ty",
-    value_col: str = "value",
-) -> DataFrame:
-    """Zoom-pyramid rollup: aggregate finest-zoom tile statistics up the
-    quadtree — the batch build every tile server runs after the per-tile
-    stage (the reference emits single-zoom tiles,
-    src/coastline_polygons.cpp:322-360; serving them needs the ancestor
-    sums: feature counts for style thresholds, density for LOD culling).
-
-    Input: tiles at the finest resolution with non-negative integer
-    coords and an additive `value_col`. Output, one row per non-empty
-    ancestor cell: (x, y, res, ntiles, sum_value) for every res in
-    [0, levels], where res 0 is the input zoom and the cell at res r is
-    the 2^r × 2^r block (x·2^r, y·2^r) — the same cover convention as
-    `compact_cells`.
-
-    Plan: ONE exchange. Each base tile explodes its own ancestor chain
-    (levels+1 rows of pure column math) and a single groupBy on
-    (x >> res, y >> res, res) aggregates every level at once — instead
-    of the per-level groupBy chain, whose levels-many barriers dominate
-    at pyramid depth (the frames shrink 4× per level, so its shuffle
-    bytes are geometric but its LATENCY is linear in levels). Map-side
-    partial aggregation bounds each task's shuffle output by the
-    ancestors it actually saw, which also absorbs the apex hot key: the
-    res=levels root row receives one partial per task, not one row per
-    base tile — the same reason a global count() scales.
-    """
-    if levels < 1:
-        raise ValueError(f"levels must be >= 1, got {levels}")
-    # the rollup sums exact int64s; a fractional value_col would be
-    # silently TRUNCATED by the long cast (0.6 → 0 at every level, no
-    # error) — refuse it and point the caller at the repo's micros
-    # quantization idiom instead
-    vt = tiles.schema[value_col].dataType.simpleString()
-    if vt not in ("tinyint", "smallint", "int", "bigint"):
-        raise ValueError(
-            f"tile_pyramid value_col {value_col!r} is {vt}; pass an integer "
-            "column (quantize fractional statistics to micro-units first, "
-            "e.g. floor(v * 1e6 + 0.5) cast to long)"
-        )
-    exp = tiles.select(
-        F.col(x_col).cast("long").alias("_x"),
-        F.col(y_col).cast("long").alias("_y"),
-        F.col(value_col).cast("long").alias("_v"),
-        F.explode(F.sequence(F.lit(0), F.lit(levels))).alias("res"),
-    )
-    return exp.groupBy(
-        F.expr("shiftright(_x, res)").alias("x"),
-        F.expr("shiftright(_y, res)").alias("y"),
-        F.col("res"),
-    ).agg(
-        F.count(F.lit(1)).alias("ntiles"),
-        F.sum("_v").alias("sum_value"),
-    )
-
-
-def grid_disk(
-    cells: DataFrame,
-    k: int,
-    n: int | None = None,
-    x_col: str = "tx",
-    y_col: str = "ty",
-    dedupe: bool = True,
-    mark_center: bool = False,
-) -> DataFrame:
-    """H3-style gridDisk (k-ring): every cell within Chebyshev distance
-    `k` of an input cell — the square-grid analog of `h3.grid_disk`,
-    completing the index trio (`compact_cells` / `uncompact_cells` /
-    `grid_disk`) the north rule's "H3/S2 cell encoding" names. The
-    canonical use is the coastal halo: the set of tiles a kNN endpoint
-    match or a point-in-polygon candidate probe may touch, computed once
-    and joined instead of probing the (2k+1)²−1 neighbors per lookup row.
-
-    One generator expansion of the (2k+1)² offset square per cell, then
-    (when `dedupe`) one `distinct` — the single unavoidable exchange,
-    since overlapping disks must collapse to set semantics. With
-    `dedupe=False` it is zero-exchange and the caller owns multiplicity —
-    the useful case is a consumer that groupBys on the cell key, whose
-    own shuffle then subsumes the dedup for free. `n` clamps to the n×n
-    grid; None leaves the disk unclamped (callers on an infinite
-    lattice). `k=0` is the H3-parity identity disk (the cells
-    themselves). Output columns are always named (x_col, y_col).
-
-    `mark_center=True` adds a boolean `is_core` column — True iff the
-    cell is an INPUT cell (the disk center), i.e. the core-vs-halo
-    classification — computed during the expansion itself (the zero
-    offset marks the center), so it costs nothing: the dedupe `distinct`
-    becomes a same-key groupBy/max and the plan keeps its single
-    exchange instead of paying a join back against the input set (which
-    would re-execute the input lineage — measured: Spark does not reuse
-    the exchange across the expansion and join branches).
-    """
-    if k < 0:
-        raise ValueError(f"k must be >= 0, got {k}")
-    off = F.sequence(F.lit(-k), F.lit(k))
-    disk = (
-        cells.select(F.col(x_col).alias("_cx"), F.col(y_col).alias("_cy"))
-        .withColumn("_dx", F.explode(off))
-        .withColumn("_dy", F.explode(off))
-        .select(
-            (F.col("_cx") + F.col("_dx")).alias(x_col),
-            (F.col("_cy") + F.col("_dy")).alias(y_col),
-            ((F.col("_dx") == 0) & (F.col("_dy") == 0)).alias("is_core"),
-        )
-    )
-    if n is not None:
-        disk = disk.filter(
-            (F.col(x_col) >= 0) & (F.col(x_col) < n)
-            & (F.col(y_col) >= 0) & (F.col(y_col) < n)
-        )
-    if not mark_center:
-        disk = disk.drop("is_core")
-        return disk.distinct() if dedupe else disk
-    if dedupe:
-        return disk.groupBy(x_col, y_col).agg(F.max("is_core").alias("is_core"))
-    return disk

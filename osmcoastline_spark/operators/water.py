@@ -201,7 +201,7 @@ def water_polygons(
     # sort_array orders parts by the struct's leading field — poly_id when
     # present (every pipeline/test caller), reproducing the old explicit
     # poly_id sort: hole order and the float area summation order stay
-    # bit-identical across runs and across the flat/bucketed source paths.
+    # bit-identical across runs, whatever order the parts arrive in.
     part_fields = [
         c
         for c in ("poly_id", "shell_x", "shell_y", "holes_x", "holes_y", *OWN_FIELDS)

@@ -50,10 +50,7 @@ from osmcoastline_spark.operators.intersections import (
 )
 from osmcoastline_spark.operators.repair import buffer0_triage, check_counts, check_polygons
 from osmcoastline_spark.operators.lines import rings_to_lines
-from osmcoastline_spark.operators.locations import (
-    ways_with_locations,
-    ways_with_locations_from_refs,
-)
+from osmcoastline_spark.operators.locations import ways_with_locations
 from osmcoastline_spark.operators.polygonize import fix_direction, polygonize
 from osmcoastline_spark.operators.questionable import questionable_rings
 from osmcoastline_spark.operators.rings import _closed, assemble_rings, route_rings
@@ -249,18 +246,11 @@ def run_pipeline(
     options: Options | None = None,
     mid_sink=None,
     preassembled: tuple | None = None,
-    prebucketed: tuple | None = None,
 ) -> PipelineResult:
     """`mid_sink` (a CheckpointSink) commits rings_closed/rings_open
     snapshots right after R1 assembly — the finer-grained resume point;
     `preassembled` = (closed_df, open_df, pre_stats) restarts the pipeline
-    FROM those snapshots, skipping filter/locations/assembly entirely.
-
-    `prebucketed` = (refs_df, nodes_df): run the J2 location join off
-    bucket-hashed source tables (sources.tables.write_bucketed — refs are
-    the already-coastline-filtered exploded (way_id, pos, node_id) rows)
-    so the planet-sized node side joins with ZERO shuffle; `ways`/`nodes`
-    args are then only used for the tagged-node error scan."""
+    FROM those snapshots, skipping filter/locations/assembly entirely."""
     # driver threads for the work that overlaps later stages (the
     # intersection checkpoint, the error-category count), scoped to this
     # run: when the run fails, queued work is cancelled and running work
@@ -269,9 +259,7 @@ def run_pipeline(
     # their jobs carry the submitting thread's job group.
     pool = ThreadPoolExecutor(max_workers=2)
     try:
-        return _run_pipeline(
-            spark, nodes, ways, options, mid_sink, preassembled, prebucketed, pool
-        )
+        return _run_pipeline(spark, nodes, ways, options, mid_sink, preassembled, pool)
     finally:
         pool.shutdown(wait=True, cancel_futures=True)
 
@@ -283,7 +271,6 @@ def _run_pipeline(
     options: Options | None,
     mid_sink,
     preassembled: tuple | None,
-    prebucketed: tuple | None,
     pool: ThreadPoolExecutor,
 ) -> PipelineResult:
     import time as _time
@@ -343,32 +330,8 @@ def _run_pipeline(
         # pass 1+2: filter, locations — the location join materializes ONCE
         # here, and the J3 missing-location count is observed in the same
         # job (round 1 paid a second full explode+join, round 6 a probe)
-        if prebucketed is not None:
-            refs_b, nodes_b = prebucketed
-            # loud-fail contract check: refs must be the EXPLODED
-            # (way_id, pos, node_id) layout from sources.tables.ways_refs —
-            # a caller handing us the raw ways table (node_ids array, tags)
-            # would otherwise silently process non-coastline ways
-            _refs_cols = set(refs_b.columns)
-            if not {"way_id", "node_id"}.issubset(_refs_cols) or "node_ids" in _refs_cols or "tags" in _refs_cols:
-                raise ValueError(
-                    "prebucketed refs must be the exploded (way_id, pos, node_id) "
-                    f"table (coastline-filtered, see sources.tables.ways_refs); got columns {sorted(_refs_cols)}"
-                )
-            if not {"node_id", "lon", "lat"}.issubset(set(nodes_b.columns)):
-                raise ValueError(
-                    f"prebucketed nodes must carry (node_id, lon, lat); got columns {sorted(nodes_b.columns)}"
-                )
-            # counted from the exploded refs: a way with ZERO node refs
-            # has no exploded rows, so this can undercount vs the
-            # standard path's cways.count() for degenerate ways (which
-            # the reference never produces — coastline ways always
-            # reference >=2 nodes). Documented divergence, not a bug.
-            res.stats["ways"] = refs_b.select("way_id").distinct().count()
-            located = ways_with_locations_from_refs(refs_b, nodes_b, count_missing=True)
-        else:
-            cways = coastline_ways(ways)
-            located = ways_with_locations(cways, nodes, count_missing=True)
+        cways = coastline_ways(ways)
+        located = ways_with_locations(cways, nodes, count_missing=True)
 
         def locate():
             # closed_ways: the ways that are closed rings on their own
@@ -376,15 +339,12 @@ def _run_pipeline(
                 located, nmiss=F.sum("nmiss"), closed_ways=F.count_if(_closed())
             )
 
-        if prebucketed is None:
-            # the ways count and the location-join materialization are
-            # independent DAGs over the same checkpointed inputs — run
-            # them concurrently so the count hides inside the join's
-            # wall time instead of paying its own job floor first
-            n_ways, (ways_loc, loc_seen) = run_concurrently(cways.count, locate)
-            res.stats["ways"] = n_ways
-        else:
-            ways_loc, loc_seen = locate()
+        # the ways count and the location-join materialization are
+        # independent DAGs over the same checkpointed inputs — run them
+        # concurrently so the count hides inside the join's wall time
+        # instead of paying its own job floor first
+        n_ways, (ways_loc, loc_seen) = run_concurrently(cways.count, locate)
+        res.stats["ways"] = n_ways
         missing = loc_seen["nmiss"] or 0
         if missing:
             res.stats["missing_locations"] = int(missing)
@@ -439,7 +399,7 @@ def _run_pipeline(
     # J5/J6 intersections & overlaps (before closing!)
     # checkpoint: segs feeds duplicates, intersections, the orphan filter
     # and the output table — without it the explode re-executes 4×
-    segs = ring_segments(closed.unionByName(open_)).localCheckpoint(eager=True)
+    segs, _ = materialize(ring_segments(closed.unionByName(open_)))
     _trace("segments")
     # ONE duplicate-segment aggregation shared by the overlap error lines
     # and the gap-close orphan filter (persist: the orphan checkpoint
@@ -461,7 +421,7 @@ def _run_pipeline(
     # list at this position (recorded index) so union order is unchanged.
     ipairs_future = pool.submit(
         inherit_local_properties(
-            lambda: intersection_pairs(segs, opt.cell_deg).localCheckpoint(eager=True)
+            lambda: materialize(intersection_pairs(segs, opt.cell_deg))[0]
         )
     )
     error_lines.append(overlaps)
@@ -536,11 +496,10 @@ def _run_pipeline(
             # + two joins) would otherwise re-execute for every consumer:
             # the close count, the endpoint collect, the orphan semi-join
             # and the merged checkpoint — four evaluations without this pin
-            orphan_ids = (
+            orphan_ids, _ = materialize(
                 per_ring.join(dup_per_ring, "ring_id")
                 .filter(F.col("ndup") == F.col("ntot"))
                 .select("ring_id")
-                .localCheckpoint(eager=True)
             )
             orphans = open_.join(orphan_ids, "ring_id", "left_semi")
             active = open_.join(orphan_ids, "ring_id", "left_anti")
@@ -552,7 +511,7 @@ def _run_pipeline(
         merged, cres = close_rings(active, opt.close_distance, max_rows=n_open_pre)
         if orphans is not None:
             merged = merged.unionByName(orphans)
-        merged = merged.localCheckpoint(eager=True)
+        merged, _ = materialize(merged)
         res.stats["rings_fixed"] = cres.fixed_rings
         res.stats["unconnected_nodes"] = cres.unconnected_nodes
         res.errors += cres.fixed_rings + cres.unconnected_nodes
@@ -645,9 +604,9 @@ def _run_pipeline(
         from osmcoastline_spark.operators.polygonize import _area2_expr
 
         pring = routed["polygonizable"]
-        si_first = ring_self_intersections(
-            pring, opt.cell_deg, repeated=True
-        ).localCheckpoint(eager=True)
+        si_first, _ = materialize(
+            ring_self_intersections(pring, opt.cell_deg, repeated=True)
+        )
         error_points.append(
             si_first.select(
                 F.col("ring_id").alias("osm_id"),
@@ -684,7 +643,7 @@ def _run_pipeline(
         if polygonizable is not pg_in:
             # repairs rewrote arrays — pin them; the clean identity return
             # rides the existing ring checkpoints (no third array write)
-            polygonizable = polygonizable.localCheckpoint(eager=True)
+            polygonizable, _ = materialize(polygonizable)
         _trace("triage")
         pres = polygonize(polygonizable)
         res.errors += pres.invalid_count
@@ -713,7 +672,7 @@ def _run_pipeline(
             _trace("polygonize+fixdir")
 
             if opt.epsg != 4326:
-                polys = _transform_polygons_3857(polys).localCheckpoint(eager=True)
+                polys, _ = materialize(_transform_polygons_3857(polys))
 
             if opt.output_lines:
                 res.tables["lines"] = rings_to_lines(
@@ -790,7 +749,7 @@ def _run_pipeline(
                     res.stats["invalid_polygons_after_split"] = cp_warnings
                     res.warnings += cp_warnings
                     if cp_warnings:
-                        polys = polys.localCheckpoint(eager=True)
+                        polys, _ = materialize(polys)
                     _trace("check_polygons")
                 else:
                     # reference calls check_polygons unconditionally after the
@@ -811,7 +770,7 @@ def _run_pipeline(
                     res.stats["invalid_polygons_after_split"] = cp_warnings
                     res.warnings += cp_warnings
                     if cp_warnings:
-                        polys = polys.localCheckpoint(eager=True)
+                        polys, _ = materialize(polys)
 
                 own_cols = [c for c in polys.columns if c.startswith("own_")]
                 if opt.output_polygons in ("land", "both"):

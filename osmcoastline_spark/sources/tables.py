@@ -47,64 +47,3 @@ def nodes_from_images(images: DataFrame) -> DataFrame:
             F.array(F.lit("source")), F.array(F.lit("image_table"))
         ).alias("tags"),
     )
-
-
-def ways_refs(ways: DataFrame) -> DataFrame:
-    """Exploded way→node references (way_id, pos, node_id) — the left side
-    of the J2 location join in storable form."""
-    from pyspark.sql import functions as F
-
-    return ways.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
-
-
-def write_bucketed(
-    df: DataFrame, table: str, path: str, buckets: int = 64, key: str = "node_id"
-) -> None:
-    """Persist `df` bucketed+sorted by `key` as an external table at `path`.
-
-    This is the 100 TB lever for the J2 location join (reference
-    src/osmcoastline.cpp:276-297 joins every way-node ref against the node
-    store on every run): with BOTH the node table and the exploded ref
-    table stored bucket-hashed on node_id, the equi-join plans with ZERO
-    Exchange — the planet-sized node side never moves again, run after
-    run. Local stand-in is DataFrameWriter.bucketBy (Hive-style bucketed
-    parquet); the documented production path is the Iceberg partition
-    transform `bucket(N, node_id)` with storage-partitioned joins.
-
-    The pre-write repartition puts each bucket's rows in exactly one task
-    (repartition hash == bucket hash), yielding ONE file per bucket — the
-    layout Spark requires to also use the sortBy order and skip the
-    join-side Sort.
-    """
-    from pyspark.sql import functions as F
-
-    (
-        df.repartition(buckets, F.col(key))
-        .write.format("parquet")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
-
-
-def register_bucketed(
-    spark: SparkSession,
-    table: str,
-    path: str,
-    schema: str,
-    buckets: int = 64,
-    key: str = "node_id",
-) -> DataFrame:
-    """Re-attach a `write_bucketed` table in a fresh session (the in-memory
-    catalog does not persist across JVMs; Iceberg's catalog would).
-    `schema` is the DDL column list, e.g. 'node_id long, lon double, ...'."""
-    esc_path = path.replace("\\", "\\\\").replace("'", "''")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(
-        f"CREATE TABLE {table} ({schema}) USING parquet "
-        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
-        f"LOCATION '{esc_path}'"
-    )
-    return spark.table(table)

@@ -21,6 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from osmcoastline_spark.util import materialize
+
 NODE_STRIDE = 1 << 20  # node ids: island_id * NODE_STRIDE + k
 IMG_W, IMG_H = 8, 8  # tiny raw images; big enough for PSNR/phash
 
@@ -105,11 +107,13 @@ def synth_nodes_ways(spark: SparkSession, n_islands: int, seed: int = 42) -> tup
                 ["node_id", "lon", "lat", "tags", "kind", "node_ids"]
             ]
 
-    combined = base.mapInPandas(
-        gen_combined,
-        "node_id long, lon double, lat double, tags map<string,string>, "
-        "kind string, node_ids array<long>",
-    ).localCheckpoint(eager=True)
+    combined, _ = materialize(
+        base.mapInPandas(
+            gen_combined,
+            "node_id long, lon double, lat double, tags map<string,string>, "
+            "kind string, node_ids array<long>",
+        )
+    )
     nodes = combined.filter("kind = 'n'").select("node_id", "lon", "lat", "tags")
     ways = combined.filter("kind = 'w'").select(
         combined["node_id"].alias("way_id"), "node_ids", "tags"

@@ -2,9 +2,11 @@
 (port of /root/reference/test/t/valid-island-from-two-ways.sh, golden from
 FIXTURES.md F1)."""
 
+from pyspark.sql import functions as F
+
 from osmcoastline_spark import geom
 from osmcoastline_spark.operators.filter import coastline_ways, tagged_node_errors
-from osmcoastline_spark.operators.locations import missing_location_count, ways_with_locations
+from osmcoastline_spark.operators.locations import ways_with_locations
 from osmcoastline_spark.operators.polygonize import fix_direction, polygonize
 from osmcoastline_spark.operators.rings import assemble_rings, route_rings
 from osmcoastline_spark.synth import fixture_df
@@ -29,7 +31,8 @@ def test_island_from_two_ways(spark):
     nodes, ways = fixture_df(spark, F1_NODES, F1_WAYS)
     ways = coastline_ways(ways)
     assert tagged_node_errors(nodes).count() == 0
-    assert missing_location_count(ways, nodes) == 0
+    located = ways_with_locations(ways, nodes, count_missing=True)
+    assert located.select(F.sum("nmiss")).first()[0] == 0
 
     ways_loc = ways_with_locations(ways, nodes)
     closed, open_ = assemble_rings(ways_loc)

@@ -31,22 +31,55 @@ def test_oracles_match_queries():
     assert set(entry.oracle_sql()) == set(entry.queries())
 
 
-def _bench_queries() -> list[str]:
-    """The `bench_queries` list literal of bench.py's main()."""
-    with open(os.path.join(ROOT, "bench.py")) as f:
+def _literal(path: str, name: str):
+    """The literal value assigned to `name` anywhere in the file at `path`."""
+    with open(path) as f:
         tree = ast.parse(f.read())
     for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.Assign)
-            and [getattr(t, "id", None) for t in node.targets] == ["bench_queries"]
-        ):
+        if isinstance(node, ast.Assign) and [
+            getattr(t, "id", None) for t in node.targets
+        ] == [name]:
             return ast.literal_eval(node.value)
-    raise AssertionError("bench.py has no bench_queries list")
+    raise AssertionError(f"{path} assigns no {name}")
 
 
 def test_bench_queries_are_entry_queries():
     import __spark_entry__ as entry
 
-    bench = _bench_queries()
+    bench = _literal(os.path.join(ROOT, "bench.py"), "bench_queries")
     assert len(bench) == 10
     assert set(bench) <= set(entry.queries())
+
+
+def test_traced_layer_functions_are_pipeline_names():
+    """`perfbench/spans.py` patches each LAYER_FUNCTIONS name in the
+    module dict of plans.pipeline; a dropped import would break tracing."""
+    from osmcoastline_spark.plans import pipeline
+
+    layers = _literal(os.path.join(ROOT, "perfbench", "spans.py"), "LAYER_FUNCTIONS")
+    names = [n for fns in layers.values() for n in fns]
+    assert names
+    missing = [n for n in names if not callable(vars(pipeline).get(n))]
+    assert not missing, missing
+
+
+def test_only_util_calls_local_checkpoint():
+    """Every checkpoint goes through util.materialize, the one place a
+    checkpoint policy can change."""
+    pkg = os.path.dirname(osmcoastline_spark.__file__)
+    callers = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            if any(
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+                for node in ast.walk(tree)
+            ):
+                callers.append(os.path.relpath(path, pkg))
+    assert sorted(callers) == ["util.py"], callers

@@ -1,11 +1,8 @@
-"""Raster→vector run-merge + quadtree compaction (operators/vectorize.py)."""
+"""Raster→vector run-merge (operators/vectorize.py)."""
 
 import itertools
 
-import pytest
-from pyspark.sql import functions as F
-
-from osmcoastline_spark.operators.vectorize import compact_cells, vectorize_cells
+from osmcoastline_spark.operators.vectorize import vectorize_cells
 
 
 def _cells_df(spark, pts, dup=False):
@@ -103,205 +100,6 @@ def test_vectorize_chunked_matches_flat(spark):
         got = _rects(vectorize_cells(df, chunk=chunk, width=width))
         assert got == flat, (chunk, width)
     assert _covered(flat) == pts
-
-
-def _compact_ref(pts, levels):
-    """Sequential reference: promote complete quads, `levels` times."""
-    cur, out = set(pts), []
-    for res in range(levels):
-        parents = {
-            (x // 2, y // 2)
-            for x, y in cur
-            if all(
-                (2 * (x // 2) + dx, 2 * (y // 2) + dy) in cur
-                for dx in (0, 1)
-                for dy in (0, 1)
-            )
-        }
-        out += [
-            (x, y, res)
-            for x, y in cur
-            if (x // 2, y // 2) not in parents
-        ]
-        cur = parents
-    return sorted(out + [(x, y, levels) for x, y in cur])
-
-
-def test_compact_cells_matches_reference(spark):
-    # solid 4x4 block + a lone cell: block promotes twice, loner stays
-    solid = list(itertools.product(range(4), range(4))) + [(9, 9)]
-    got = sorted(
-        (r.x, r.y, r.res)
-        for r in compact_cells(_cells_df(spark, solid), levels=2).collect()
-    )
-    assert got == [(0, 0, 2), (9, 9, 0)] == _compact_ref(solid, 2)
-    # pseudo-random mask vs the sequential reference
-    pts = [
-        (x, y)
-        for x in range(8)
-        for y in range(8)
-        if (x * 7 + y * 13) % 11 < 8
-    ]
-    got = sorted(
-        (r.x, r.y, r.res)
-        for r in compact_cells(_cells_df(spark, pts), levels=3).collect()
-    )
-    assert got == _compact_ref(pts, 3)
-    # point-set equality: expanding the cover reproduces the input
-    expanded = {
-        (x * 2**res + dx, y * 2**res + dy)
-        for x, y, res in got
-        for dx in range(2**res)
-        for dy in range(2**res)
-    }
-    assert expanded == set(pts)
-
-
-def test_uncompact_roundtrip_and_plan(spark):
-    from osmcoastline_spark.operators.vectorize import uncompact_cells
-
-    pts = [
-        (x, y)
-        for x in range(8)
-        for y in range(8)
-        if (x * 7 + y * 13) % 11 < 8
-    ]
-    cover = compact_cells(_cells_df(spark, pts), levels=3)
-    back = sorted((r.tx, r.ty) for r in uncompact_cells(cover).collect())
-    assert back == sorted(pts)
-    # narrow: the expansion itself adds no exchange (measured on a plain
-    # cover frame — `cover` above carries compact's own lineage)
-    plain = spark.createDataFrame([(1, 2, 2), (9, 9, 0)], "x: long, y: long, res: int")
-    expanded = sorted((r.tx, r.ty) for r in uncompact_cells(plain).collect())
-    assert expanded == sorted(
-        [(4 + dx, 8 + dy) for dx in range(4) for dy in range(4)] + [(9, 9)]
-    )
-    plan = uncompact_cells(plain)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 0, plan
-
-
-def test_compact_cells_guards(spark):
-    with pytest.raises(ValueError, match="levels"):
-        compact_cells(_cells_df(spark, [(0, 0)]), levels=0)
-
-
-def test_grid_disk_hand_and_plan(spark):
-    from osmcoastline_spark.operators.vectorize import grid_disk
-
-    cells = spark.createDataFrame([(0, 0), (5, 5), (0, 1)], "tx: long, ty: long")
-    got = sorted((r.tx, r.ty) for r in grid_disk(cells, k=1, n=4).collect())
-    # (0,0)∪(0,1) k=1 disks clamped to the 4×4 grid; (5,5)'s disk is
-    # entirely out of grid and contributes nothing
-    want = sorted({(x, y) for cy in (0, 1) for x in (0, 1) for y in (cy - 1, cy, cy + 1) if 0 <= y < 4})
-    assert got == want
-    # overlap multiplicity is preserved when the caller opts out of dedupe
-    raw = grid_disk(cells, k=1, n=4, dedupe=False).collect()
-    assert len(raw) == len(want) + 4  # (0,*) disks overlap on the 4 cells y∈{0,1}
-
-    plan = grid_disk(cells, k=1)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 2  # the distinct (AQE may add a read)
-    plan0 = grid_disk(cells, k=1, dedupe=False)._jdf.queryExecution().executedPlan().toString()
-    assert plan0.count("Exchange") == 0, plan0
-
-    # k=0 is the H3-parity identity disk
-    ident = sorted((r.tx, r.ty) for r in grid_disk(cells, k=0).collect())
-    assert ident == sorted({(0, 0), (5, 5), (0, 1)})
-
-    # mark_center: core = input cells, halo = everything else; the flag
-    # rides the expansion, so the plan stays join-free (no join node)
-    marked = grid_disk(cells, k=1, n=4, mark_center=True)
-    flags = {(r.tx, r.ty): r.is_core for r in marked.collect()}
-    assert sorted(flags) == want
-    assert {c for c, f in flags.items() if f} == {(0, 0), (0, 1)}
-    mplan = marked._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in mplan, mplan
-
-    with pytest.raises(ValueError, match="k must be"):
-        grid_disk(cells, k=-1)
-
-
-def _pyramid_ref(vals, levels):
-    # vals: {(x, y): v} at res 0
-    ref = {}
-    for (x, y), v in vals.items():
-        for d in range(levels + 1):
-            key = (x >> d, y >> d, d)
-            n, s = ref.get(key, (0, 0))
-            ref[key] = (n + 1, s + v)
-    return sorted((x, y, d, n, s) for (x, y, d), (n, s) in ref.items())
-
-
-def test_tile_pyramid_hand_computed(spark):
-    from osmcoastline_spark.operators.vectorize import tile_pyramid
-
-    # 2x2 sibling block at (0,0)..(1,1) + a loner at (3,0):
-    # res1: (0,0) sums the block, (1,0) holds the loner; res2 root sums all
-    tiles = spark.createDataFrame(
-        [(0, 0, 1), (1, 0, 2), (0, 1, 4), (1, 1, 8), (3, 0, 16)],
-        "tx: long, ty: long, value: long",
-    )
-    got = sorted(
-        (r.x, r.y, r.res, r.ntiles, r.sum_value)
-        for r in tile_pyramid(tiles, levels=2).collect()
-    )
-    assert got == [
-        (0, 0, 0, 1, 1), (0, 0, 1, 4, 15), (0, 0, 2, 5, 31),
-        (0, 1, 0, 1, 4), (1, 0, 0, 1, 2), (1, 0, 1, 1, 16),
-        (1, 1, 0, 1, 8), (3, 0, 0, 1, 16),
-    ]
-
-
-def test_tile_pyramid_random_matches_pure_python(spark):
-    from osmcoastline_spark.operators.vectorize import tile_pyramid
-
-    import random as _random
-
-    rng = _random.Random(5)
-    vals = {}
-    for _ in range(200):
-        vals[(rng.randrange(64), rng.randrange(64))] = rng.randrange(1, 100)
-    tiles = spark.createDataFrame(
-        [(x, y, v) for (x, y), v in vals.items()], "tx: long, ty: long, value: long"
-    )
-    got = sorted(
-        (r.x, r.y, r.res, r.ntiles, r.sum_value)
-        for r in tile_pyramid(tiles, levels=6).collect()
-    )
-    ref = _pyramid_ref(vals, 6)
-    assert got == ref
-    # the res=6 apex row is the global rollup
-    apex = [r for r in got if r[2] == 6]
-    assert apex == [(0, 0, 6, len(vals), sum(vals.values()))]
-
-
-def test_tile_pyramid_single_exchange_and_guard(spark):
-    from osmcoastline_spark.operators.vectorize import tile_pyramid
-
-    tiles = spark.createDataFrame([(0, 0, 1), (5, 3, 2)], "tx: long, ty: long, value: long")
-    plan = (
-        tile_pyramid(tiles, levels=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # every level aggregates through ONE shuffle (partial agg map-side)
-    assert plan.count("Exchange") == 1, plan
-    with pytest.raises(ValueError, match="levels"):
-        tile_pyramid(tiles, levels=0)
-
-
-def test_tile_pyramid_rejects_fractional_value_col(spark):
-    """A double value_col would be silently truncated by the long cast
-    (0.6 -> 0 at every level) — the operator must refuse it loudly."""
-    import pytest as _pytest
-
-    from osmcoastline_spark.operators.vectorize import tile_pyramid
-
-    tiles = spark.createDataFrame(
-        [(0, 0, 0.6)], "tx long, ty long, value double"
-    )
-    with _pytest.raises(ValueError, match="quantize"):
-        tile_pyramid(tiles, levels=1)
 
 
 def test_with_salt_skips_map_columns(spark):
