@@ -14,7 +14,7 @@ latency).
 
 Kernels:
   locjoin    — the J2 location scatter-join (explode ⋈ nodes ⋈ collect)
-  intersect  — cell-binned self-join + exact crossing kernel (J5)
+  intersect  — x-slab sweep: segment crossings + duplicate segments (J5/J6)
   polygonize — batched point-in-polygon cell classification (G6 backbone)
   water      — per-tile even-odd difference (R5)
   minhash    — per-row narrow band-min signatures (zero-shuffle, 16x docs)
@@ -73,7 +73,7 @@ import json, os, sys, time
 sys.path.insert(0, os.environ["REPO"])
 from pyspark.sql import functions as F
 from osmcoastline_spark.session import get_spark
-from osmcoastline_spark.operators.intersections import intersection_pairs, ring_segments
+from osmcoastline_spark.operators.intersections import ring_segments, segment_sweep, slab_checkpoint
 from osmcoastline_spark.operators.polygonize import classify_container_cells
 from osmcoastline_spark.operators.water import water_polygons
 from osmcoastline_spark.functions.dedup import minhash_signatures
@@ -135,8 +135,8 @@ w2 = shuffle_write_bytes(); sw["locjoin_flat"] = w2 - w1
 # storage resident showed 3× worse times purely from heap pressure (GC)
 dt, n = act(ways_with_locations(coastline_ways(ways), nodes)); res["locjoin"] = [dt, n]
 w3 = shuffle_write_bytes(); sw["locjoin"] = w3 - w2
-segs = ring_segments(rings).localCheckpoint(eager=True)  # input for intersect
-dt, n = act(intersection_pairs(segs, 0.5)); res["intersect"] = [dt, n]
+segs, edges = slab_checkpoint(ring_segments(rings), cpus)  # input for intersect
+dt, n = act(segment_sweep(segs, edges, 0.5)); res["intersect"] = [dt, n]
 dt, n = act(classify_container_cells(polys.selectExpr("poly_id as ring_id", "shell_x as xs", "shell_y as ys"), 1.0)); res["polygonize"] = [dt, n]
 dt, n = act(water_polygons(polys, 4.0)); res["water"] = [dt, n]
 # 16x-amplified documents (id-offset copies) so the minhash kernel outruns

@@ -377,7 +377,7 @@ def q_duplicate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_segment_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5/G1: cell-binned segment self-join + the reference's exact
+    """J5/G1: the pipeline's x-slab segment sweep + the reference's exact
     intersection arithmetic, vs the same formula in SQL over an H×V
     crossing grid."""
     part = _read(spark, sf_dir, "part")
@@ -407,9 +407,14 @@ def q_segment_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = hseg.unionByName(vseg).withColumn("ring_id", F.col("sid")).withColumn(
         "idx", F.lit(0)
     )
-    from osmcoastline_spark.operators.intersections import intersection_errors
+    from osmcoastline_spark.operators.intersections import (
+        intersection_pairs,
+        segment_sweep,
+        slab_checkpoint,
+    )
 
-    pts = intersection_errors(segs, cell_deg=0.2)
+    segs, edges = slab_checkpoint(segs, spark.sparkContext.defaultParallelism)
+    pts = intersection_pairs(segment_sweep(segs, edges, cell_deg=0.2))
     return pts.select(F.round("x", 9).alias("ix"), F.round("y", 9).alias("iy"))
 
 

@@ -1,11 +1,12 @@
-"""Grid / Z-order cell encoding — the spatial index for every self-join.
+"""Grid / Z-order cell encoding — the shuffle key of polygonize's
+containment join and of the water tiles.
 
-The reference replaces O(n²) spatial joins with a sorted sweep
-(src/coastline_ring_collection.cpp:277,313-316). On Spark the equivalent is
-cell binning: assign geometries to fixed grid cells (with boundary-cell
-duplication for objects spanning cells), shuffle on the cell id, and do exact
-geometry only within a cell. This bounds candidates per cell the same way the
-sweep's x-window bounds them — and unlike the sweep, it parallelizes.
+Cell binning assigns geometries to fixed grid cells (with boundary-cell
+duplication for objects spanning cells), shuffles on the cell id, and does
+exact geometry only within a cell. Segment crossings do not bin: they run
+the reference's sorted sweep (src/coastline_ring_collection.cpp:277,313-316)
+per x-slab (operators/intersections.py), and keep the grid only for their
+owner-cell rule.
 
 Cells are pure arithmetic (portable to DuckDB SQL for the oracle checks):
 
@@ -19,7 +20,6 @@ range partitioning of sinks (Iceberg sort order at scale).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -30,12 +30,6 @@ def cell_id_expr(lon: Column, lat: Column, cell_deg: float) -> Column:
     ix = F.floor((lon + F.lit(180.0)) / F.lit(cell_deg)).cast("long")
     iy = F.floor((lat + F.lit(90.0)) / F.lit(cell_deg)).cast("long")
     return (ix * F.lit(CELL_STRIDE) + iy).cast("long")
-
-
-def cell_id_np(lon: np.ndarray, lat: np.ndarray, cell_deg: float) -> np.ndarray:
-    ix = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / cell_deg).astype(np.int64)
-    iy = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / cell_deg).astype(np.int64)
-    return ix * CELL_STRIDE + iy
 
 
 def bbox_cover_cells_expr(

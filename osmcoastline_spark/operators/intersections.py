@@ -1,22 +1,30 @@
-"""J5/J6/O1/S4 — segment extraction, duplicate detection, cell-binned
-self-intersection join.
+"""J5/J6/O1/S4 — segment extraction, and segment crossings and duplicate
+segments in one x-slab sweep.
 
 The reference sorts every segment globally and sweeps with an x-window
-(src/coastline_ring_collection.cpp:277,313-316) — inherently sequential.
-Spark-first replacement: bin segments to grid cells (bbox cover, boundary
-duplication), self-join on the cell id with `a.seg_id < b.seg_id`, dedupe
-cross-cell pairs, then run the exact intersection arithmetic (bit-identical
-to the reference, src/coastline_ring_collection.cpp:202-230) as a vectorized
-numpy kernel over Arrow batches. Candidates per cell are bounded the same way
-the sweep's window bounds them, and cells process in parallel.
+(src/coastline_ring_collection.cpp:277,313-316); crossings and duplicate
+segments come out of that one pass. Here the same sweep runs per x-slab,
+all slabs in parallel, in one mapInArrow stage (`segment_sweep`):
 
-Duplicate segments (J6) are a plain groupBy on the normalized coordinates —
-map-side partial aggregation, no UDF.
+  * the slab edges are x-quantiles the segments checkpoint observes in
+    its own job (`slab_checkpoint`), so the slabs hold about equal shares
+    of the segments however skewed the coastline is;
+  * a segment is copied to every slab its x-extent overlaps — at most one
+    copy per slab, and at most SLAB_QUANTILES slabs;
+  * a pair of segments is found in every slab both overlap, but its
+    crossing is emitted by exactly one of them, and a duplicate segment
+    only by the slab of its x1, so no dedup shuffle follows.
 
-Ring validity (G5/G13) needs only a ring's crossings with itself, so it
-does not go through the join: `ring_self_intersections` runs the sweep
-per ring, inside one narrow mapInArrow stage, with the join's exact
-arithmetic and reporting rule.
+The exact intersection arithmetic is the reference's
+(geom.segment_intersections, src/coastline_ring_collection.cpp:202-230).
+A crossing counts only when its point falls in a grid cell (`cell_deg`)
+that both segments' bbox covers share: the owner-cell rule of the
+cell-binned join this sweep replaced, kept so the points stay bit for bit
+the same (rounding can put a point just outside a segment's cells).
+
+Ring validity (G5/G13) needs only a ring's crossings with itself, so
+`ring_self_intersections` runs the same sweep with the ring as the group,
+inside one narrow mapInArrow stage.
 """
 
 from __future__ import annotations
@@ -24,14 +32,37 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
-from osmcoastline_spark.cells import bbox_cover_cells_expr
+from osmcoastline_spark.util import materialize
 
 DEFAULT_CELL_DEG = 0.5
+
+# candidate segment pairs one step of a sweep holds at once: bounds the
+# kernel's memory however large a ring or a slab is
+PAIR_CHUNK = 1 << 16
+# segments per slab above which the sweep uses more slabs than cores
+SLAB_SEGMENTS = 1 << 16
+# x-quantiles the segments checkpoint observes: the finest slab grid, so
+# a segment spanning the map has at most this many copies
+SLAB_QUANTILES = 256
+
+# columns of `segment_sweep`: crossing rows fill a_ring..y, duplicate
+# segment rows fill x1..k
+_SWEEP_COLUMNS = {
+    "a_ring": "long",
+    "b_ring": "long",
+    "x": "double",
+    "y": "double",
+    "x1": "double",
+    "y1": "double",
+    "x2": "double",
+    "y2": "double",
+    "k": "long",
+}
 
 
 def ring_segments(rings: DataFrame) -> DataFrame:
@@ -65,23 +96,136 @@ def ring_segments(rings: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_segment_counts(segments: DataFrame) -> DataFrame:
-    """(x1, y1, x2, y2, k) for every segment appearing k>1 times — the
-    shared input of the overlap error lines AND the gap-close orphan
-    filter (one groupBy shuffle instead of two identical ones)."""
-    return (
-        segments.groupBy("x1", "y1", "x2", "y2")
-        .agg(F.count("*").alias("k"))
-        .filter(F.col("k") > 1)
+def slab_checkpoint(segments: DataFrame, parallelism: int) -> tuple[DataFrame, list[float]]:
+    """`segments` (a `ring_segments` frame) checkpointed, and the sorted
+    distinct edges of its x-slabs for `segment_sweep`: x1 quantiles the
+    checkpoint observes in its own job, so the slabs cost no sampling job.
+    One slab per core (`parallelism`), more once the segments outgrow
+    SLAB_SEGMENTS per core, at most SLAB_QUANTILES. Slab s holds x in
+    [edges[s-1], edges[s])."""
+    segs, seen = materialize(
+        segments,
+        n=F.count(F.lit(1)),
+        q=F.percentile_approx("x1", [i / SLAB_QUANTILES for i in range(1, SLAB_QUANTILES)]),
     )
+    if not seen["q"]:  # no segments
+        return segs, []
+    n = min(SLAB_QUANTILES, max(parallelism, -(-seen["n"] // SLAB_SEGMENTS)))
+    return segs, sorted({seen["q"][k * SLAB_QUANTILES // n - 1] for k in range(1, n)})
 
 
-def duplicate_segments(segments: DataFrame, dup: DataFrame | None = None) -> DataFrame:
-    """J6 → error_lines('overlap'); k copies of a segment yield C(k,2)
-    overlap rows, matching the reference's pairwise loop. Pass `dup`
-    (duplicate_segment_counts output) to reuse an existing aggregation."""
-    if dup is None:
-        dup = duplicate_segment_counts(segments)
+def _slab_of(x: Column, edges: list[float]) -> Column:
+    """The slab of x, the number of edges <= x, as a balanced tree of
+    comparisons: numpy.searchsorted(edges, x, "right") in Catalyst, equal
+    for every double (NaN sorts above every edge in both)."""
+
+    def node(lo: int, hi: int) -> Column:
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(x >= F.lit(edges[mid]), node(mid + 1, hi)).otherwise(node(lo, mid))
+
+    return node(0, len(edges))
+
+
+def _spark_hash_int(v: int) -> int:
+    """Spark's hash of an int column value (Murmur3_x86_32.hashInt with
+    seed 42), which hash partitioning takes modulo the partition count."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & m
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _partition_keys(n: int) -> list[int]:
+    """For each of n slabs, the least int key that hash partitioning into
+    n partitions sends to the partition of the same number: shuffled on
+    these keys, every slab has a task of its own. Shuffled on the slab
+    numbers themselves, slabs collide (4 slabs fill 2 of 4 partitions)."""
+    keys: dict[int, int] = {}
+    v = 0
+    while len(keys) < n:
+        keys.setdefault(_spark_hash_int(v) % n, v)
+        v += 1
+    return [keys[s] for s in range(n)]
+
+
+def segment_sweep(
+    segments: DataFrame, edges: list[float], cell_deg: float = DEFAULT_CELL_DEG
+) -> DataFrame:
+    """J5 and J6 in one pass: every crossing of two segments and every
+    duplicate segment of `segments` (ring_id, idx, x1, y1, x2, y2 as
+    `ring_segments` gives them), swept per x-slab of `edges`.
+
+    One exchange (each segment to every slab its x-extent overlaps)
+    and one mapInArrow stage of one task per slab, len(edges) + 1. Two
+    kinds of rows, read with `intersection_pairs` and
+    `duplicate_segment_counts`."""
+    edges_np = np.asarray(edges, dtype=np.float64)
+    keys = F.array(*map(F.lit, _partition_keys(len(edges) + 1)))
+
+    def kernel(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        c = {name: t.column(name).to_numpy() for name in t.column_names}
+        slab, xy = c["slab"], (c["x1"], c["y1"], c["x2"], c["y2"])
+        for a_ring, b_ring, x, y in slab_crossings(
+            edges_np, slab, c["ring_id"], c["idx"], *xy, cell_deg=cell_deg
+        ):
+            yield _sweep_batch(a_ring=a_ring, b_ring=b_ring, x=x, y=y)
+        x1, y1, x2, y2, k = slab_duplicates(edges_np, slab, *xy)
+        if len(k):
+            yield _sweep_batch(x1=x1, y1=y1, x2=x2, y2=y2, k=k)
+
+    copies = segments.select(
+        F.col("ring_id").cast("long"),
+        "idx", "x1", "y1", "x2", "y2",
+        F.explode(
+            F.sequence(_slab_of(F.col("x1"), edges), _slab_of(F.col("x2"), edges))
+        ).alias("slab"),
+    ).repartition(len(edges) + 1, F.element_at(keys, F.col("slab") + 1))
+    return copies.mapInArrow(kernel, ", ".join(f"{c} {t}" for c, t in _SWEEP_COLUMNS.items()))
+
+
+def _sweep_batch(**cols: np.ndarray) -> pa.RecordBatch:
+    """A `segment_sweep` batch from the columns of one row kind; the
+    columns of the other kind are null."""
+    n = len(next(iter(cols.values())))
+    arrays = [
+        pa.array(cols[c]) if c in cols else pa.nulls(n, pa.int64() if t == "long" else pa.float64())
+        for c, t in _SWEEP_COLUMNS.items()
+    ]
+    return pa.RecordBatch.from_arrays(arrays, list(_SWEEP_COLUMNS))
+
+
+def intersection_pairs(sweep: DataFrame) -> DataFrame:
+    """All crossing segment pairs of a `segment_sweep` as (a_ring, b_ring,
+    x, y) — the 'intersection' error points. Its same-ring rows are the
+    self-intersections `ring_self_intersections` finds per ring."""
+    return sweep.filter(F.col("k").isNull()).select("a_ring", "b_ring", "x", "y")
+
+
+def duplicate_segment_counts(sweep: DataFrame) -> DataFrame:
+    """(x1, y1, x2, y2, k) for every segment appearing k > 1 times, from
+    a `segment_sweep` — the shared input of the overlap error lines AND
+    the gap-close orphan filter."""
+    return sweep.filter(F.col("k").isNotNull()).select("x1", "y1", "x2", "y2", "k")
+
+
+def duplicate_segments(dup: DataFrame) -> DataFrame:
+    """J6 → error_lines('overlap') from `duplicate_segment_counts`; k
+    copies of a segment yield C(k,2) overlap rows, matching the
+    reference's pairwise loop."""
     return dup.select(
         F.explode(F.sequence(F.lit(1), (F.col("k") * (F.col("k") - 1) / 2).cast("int"))).alias(
             "_n"
@@ -93,136 +237,69 @@ def duplicate_segments(segments: DataFrame, dup: DataFrame | None = None) -> Dat
     ).drop("_n")
 
 
-def intersection_errors(segments: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> DataFrame:
-    """J5 → error_points('intersection').
+def slab_crossings(
+    edges: np.ndarray,
+    slab: np.ndarray,
+    ring: np.ndarray,
+    idx: np.ndarray,
+    x1: np.ndarray,
+    y1: np.ndarray,
+    x2: np.ndarray,
+    y2: np.ndarray,
+    cell_deg: float = DEFAULT_CELL_DEG,
+    chunk: int = PAIR_CHUNK,
+) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]]:
+    """The crossings of `segment_sweep`'s kernel as (a_ring, b_ring, x, y)
+    arrays per chunk of candidate pairs. Each row is the copy in slab
+    `slab` of segment (ring, idx); a segment has a copy in every slab from
+    the slab of its x1 to that of its x2. The rows may hold any set of
+    slabs, each with all its copies.
 
-    segments must carry (ring_id, idx) for a stable per-instance id.
-    """
-    return intersection_pairs(segments, cell_deg).select(
-        F.lit(0).cast("long").alias("osm_id"),
-        F.lit("intersection").alias("error"),
-        "x",
-        "y",
-    )
-
-
-def intersection_pairs(segments: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> DataFrame:
-    """All crossing segment pairs as (a_ring, b_ring, x, y) — the
-    cell-binned join behind the 'intersection' error points. Its
-    same-ring rows are the self-intersections `ring_self_intersections`
-    finds per ring."""
-    # segment identity is the COMPOSITE (ring_id, idx) struct, compared
-    # lexicographically — a hashed 64-bit id would make the a_id < b_id
-    # pair dedup collision-prone: two distinct crossing segments whose
-    # hashes collide would compare equal and their intersection would be
-    # silently dropped (at ~1e9 segments a collision existing is a
-    # percent-level birthday event)
-    with_id = segments.withColumn("seg_id", F.struct("ring_id", "idx"))
-    covered = with_id.withColumn(
-        "cell",
-        F.explode(
-            bbox_cover_cells_expr(
-                F.least("x1", "x2"), F.least("y1", "y2"),
-                F.greatest("x1", "x2"), F.greatest("y1", "y2"),
-                cell_deg,
-            )
-        ),
-    )
-    a = covered.select(
-        "cell",
-        F.col("ring_id").alias("a_ring"),
-        F.col("seg_id").alias("a_id"),
-        F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
-        F.col("x2").alias("ax2"), F.col("y2").alias("ay2"),
-    )
-    b = covered.select(
-        "cell",
-        F.col("ring_id").alias("b_ring"),
-        F.col("seg_id").alias("b_id"),
-        F.col("x1").alias("bx1"), F.col("y1").alias("by1"),
-        F.col("x2").alias("bx2"), F.col("y2").alias("by2"),
-    )
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("a_id") < F.col("b_id"))
-        # identical segments are 'overlap', not 'intersection'
-        .filter(
-            (F.col("ax1") != F.col("bx1"))
-            | (F.col("ay1") != F.col("by1"))
-            | (F.col("ax2") != F.col("bx2"))
-            | (F.col("ay2") != F.col("by2"))
-        )
-        # cheap bbox reject BEFORE any further work (reference y-range test)
-        .filter(
-            (F.least("ax1", "ax2") <= F.greatest("bx1", "bx2"))
-            & (F.least("bx1", "bx2") <= F.greatest("ax1", "ax2"))
-            & (F.least("ay1", "ay2") <= F.greatest("by1", "by2"))
-            & (F.least("by1", "by2") <= F.greatest("ay1", "ay2"))
-        )
-        # shared-endpoint reject in codegen (round-3 Arrow diet): the exact
-        # kernel defines endpoint-sharing pairs as non-intersecting
-        # (geom.segment_intersections, reference crc:202-230), and chain
-        # neighbors — which always share an endpoint and always pass the
-        # bbox test — are the BULK of in-cell candidates. Dropping them
-        # here keeps them out of the Arrow batch transfer entirely.
-        .filter(
-            ~(
-                ((F.col("ax1") == F.col("bx1")) & (F.col("ay1") == F.col("by1")))
-                | ((F.col("ax1") == F.col("bx2")) & (F.col("ay1") == F.col("by2")))
-                | ((F.col("ax2") == F.col("bx1")) & (F.col("ay2") == F.col("by1")))
-                | ((F.col("ax2") == F.col("bx2")) & (F.col("ay2") == F.col("by2")))
-            )
-        )
-    )
-
-    # Owner-cell dedup: a pair sharing several cover cells is *evaluated*
-    # in each, but the intersection point is *emitted* only by the cell that
-    # contains it — no dropDuplicates shuffle (the classic spatial-join
-    # reporting trick; replaces the sweep's single-threaded total order).
-    def exact(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from osmcoastline_spark.cells import cell_id_np
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mask, ix, iy = geom.segment_intersections(
-                pdf["ax1"].to_numpy(), pdf["ay1"].to_numpy(),
-                pdf["ax2"].to_numpy(), pdf["ay2"].to_numpy(),
-                pdf["bx1"].to_numpy(), pdf["by1"].to_numpy(),
-                pdf["bx2"].to_numpy(), pdf["by2"].to_numpy(),
-            )
-            own = cell_id_np(ix, iy, cell_deg) == pdf["cell"].to_numpy()
-            keep = mask & own
-            yield pd.DataFrame(
-                {
-                    "a_ring": pdf["a_ring"].to_numpy()[keep],
-                    "b_ring": pdf["b_ring"].to_numpy()[keep],
-                    "x": ix[keep],
-                    "y": iy[keep],
-                }
-            )
-
-    return pairs.mapInPandas(exact, "a_ring long, b_ring long, x double, y double")
+    `a` is the lower (ring, idx) of a pair. A pair is found in every slab
+    both segments reach and emitted in one: the slab of its point's x,
+    clamped to the slabs they share, so a point that rounding puts just
+    outside them is neither lost nor emitted twice."""
+    o = np.lexsort((idx, ring, slab))
+    slab, ring, x1, y1, x2, y2 = slab[o], ring[o], x1[o], y1[o], x2[o], y2[o]
+    lo = np.searchsorted(edges, x1, side="right")
+    hi = np.searchsorted(edges, x2, side="right")
+    for a, b, px, py in _crossings(slab, x1, y1, x2, y2, cell_deg, chunk):
+        home = np.searchsorted(edges, px, side="right")
+        own = np.clip(home, np.maximum(lo[a], lo[b]), np.minimum(hi[a], hi[b])) == slab[a]
+        if own.any():
+            yield ring[a[own]], ring[b[own]], px[own], py[own]
 
 
-# candidate segment pairs one step of the per-ring sweep holds at once:
-# bounds the kernel's memory however large a ring is
-PAIR_CHUNK = 1 << 16
+def slab_duplicates(edges, slab, x1, y1, x2, y2) -> tuple[np.ndarray, ...]:
+    """(x1, y1, x2, y2, k) of every segment appearing k > 1 times, counted
+    over the copies in the slab of their x1, which holds all copies of
+    one segment. + 0.0 folds -0.0 into 0.0, as Spark's grouping keys do."""
+    first = np.searchsorted(edges, x1, side="right") == slab
+    keys = [c[first] + 0.0 for c in (x1, y1, x2, y2)]
+    o = np.lexsort(keys[::-1])
+    keys = [c[o] for c in keys]
+    n = len(o)
+    start = np.ones(n, dtype=bool)
+    start[1:] = np.any([c[1:] != c[:-1] for c in keys], axis=0)
+    heads = np.flatnonzero(start)
+    k = np.diff(np.append(heads, n))
+    dup = k > 1
+    return (*(c[heads[dup]] for c in keys), k[dup])
 
 
-def _sweep(ring: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Interval-overlap sweep along one axis, for every ring of a batch at
-    once. Segments sort by (ring, lo); the candidates of sorted position p
-    are positions p+1 .. end[p]-1, the later segments of the same ring
-    whose `lo` is at most hi[p]. Every pair of same-ring segments whose
-    intervals overlap appears exactly once, equal-`lo` ties included.
-    Returns (order, end); `end` comes from a lock-step binary search over
-    all positions, so no Python runs per ring."""
-    order = np.lexsort((lo, ring))
-    slo, shi, sring = lo[order], hi[order], ring[order]
+def _sweep(group: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Interval-overlap sweep along one axis, for every group of a batch
+    at once. Segments sort by (group, lo); the candidates of sorted
+    position p are positions p+1 .. end[p]-1, the later segments of the
+    same group whose `lo` is at most hi[p]. Every pair of same-group
+    segments whose intervals overlap appears exactly once, equal-`lo`
+    ties included. Returns (order, end); `end` comes from a lock-step
+    binary search over all positions, so no Python runs per group."""
+    order = np.lexsort((lo, group))
+    slo, shi, sgroup = lo[order], hi[order], group[order]
     n = len(order)
     left = np.arange(1, n + 1)
-    right = np.searchsorted(sring, sring, side="right")
+    right = np.searchsorted(sgroup, sgroup, side="right")
     while True:
         active = left < right
         if not active.any():
@@ -233,27 +310,62 @@ def _sweep(ring: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray
         right = np.where(active & ~go, mid, right)
 
 
-def _candidate_pairs(ring, x1, y1, x2, y2, chunk: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
-    """Same-ring segment index pairs (i, j) whose extents overlap along
-    the sweep axis, at most `chunk` pairs at a time. Each ring sweeps
+def _candidate_pairs(group, x1, y1, x2, y2, chunk: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Same-group segment index pairs (i, j) whose extents overlap along
+    the sweep axis, at most `chunk` pairs at a time. Each group sweeps
     along the axis that gives it fewer candidates (a ring running
     north-south would pair most of its segments on an x-sweep)."""
-    sweeps = [_sweep(ring, x1, x2), _sweep(ring, np.minimum(y1, y2), np.maximum(y1, y2))]
-    n_rings = int(ring.max()) + 1
-    per_ring = [
-        np.bincount(ring[order], weights=end - np.arange(1, len(order) + 1), minlength=n_rings)
+    sweeps = [_sweep(group, x1, x2), _sweep(group, np.minimum(y1, y2), np.maximum(y1, y2))]
+    n_groups = int(group.max()) + 1
+    per_group = [
+        np.bincount(group[order], weights=end - np.arange(1, len(order) + 1), minlength=n_groups)
         for order, end in sweeps
     ]
-    use_y = per_ring[1] < per_ring[0]
+    use_y = per_group[1] < per_group[0]
     for axis, (order, end) in enumerate(sweeps):
         cnt = end - np.arange(1, len(order) + 1)
-        cnt[use_y[ring[order]] != bool(axis)] = 0
+        cnt[use_y[group[order]] != bool(axis)] = 0
         cum = np.cumsum(cnt)
         for s in range(0, int(cum[-1]), chunk):
             k = np.arange(s, min(s + chunk, int(cum[-1])))
             p = np.searchsorted(cum, k, side="right")
             q = p + 1 + k - (cum[p] - cnt[p])
             yield order[p], order[q]
+
+
+def _crossings(group, x1, y1, x2, y2, cell_deg: float, chunk: int):
+    """Every crossing of two segments of one group, as (a, b, x, y) arrays
+    per chunk of candidate pairs; a < b index the segments, normalized as
+    `ring_segments` normalizes them.
+
+    `a` is the segment that comes first in the arrays, the bbox test and
+    `geom.segment_intersections` decide a crossing (which rejects
+    identical and endpoint-sharing pairs), and a crossing counts only when
+    its point falls in a cell both segments' bbox covers share (the
+    owner-cell rule)."""
+    if len(group) == 0:
+        return
+    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
+    # bbox cover of every segment, in cells of cell_deg
+    cx_lo = np.floor((x1 + 180.0) / cell_deg)
+    cx_hi = np.floor((x2 + 180.0) / cell_deg)
+    cy_lo = np.floor((ylo + 90.0) / cell_deg)
+    cy_hi = np.floor((yhi + 90.0) / cell_deg)
+    for i, j in _candidate_pairs(group, x1, y1, x2, y2, chunk):
+        a, b = np.minimum(i, j), np.maximum(i, j)
+        near = (ylo[a] <= yhi[b]) & (ylo[b] <= yhi[a]) & (x1[a] <= x2[b]) & (x1[b] <= x2[a])
+        a, b = a[near], b[near]
+        mask, px, py = geom.segment_intersections(
+            x1[a], y1[a], x2[a], y2[a], x1[b], y1[b], x2[b], y2[b]
+        )
+        cx = np.floor((px + 180.0) / cell_deg)
+        cy = np.floor((py + 90.0) / cell_deg)
+        mask &= (
+            (cx >= np.maximum(cx_lo[a], cx_lo[b])) & (cx <= np.minimum(cx_hi[a], cx_hi[b]))
+            & (cy >= np.maximum(cy_lo[a], cy_lo[b])) & (cy <= np.minimum(cy_hi[a], cy_hi[b]))
+        )
+        if mask.any():
+            yield a[mask], b[mask], px[mask], py[mask]
 
 
 def _heads(offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -276,41 +388,17 @@ def ring_crossing_points(
     yielded per chunk of candidate pairs; `ring` indexes the rings, whose
     points are xs/ys[offsets[r]:offsets[r+1]] (ListArray layout).
 
-    Same rows as the same-ring rows of `intersection_pairs` over
-    `ring_segments` of the rings, bit for bit: segments are normalized
-    the same way, `a` is the lower-index segment of a pair, the bbox
-    test and `geom.segment_intersections` decide a crossing, and a
-    crossing counts only when its point falls in a cell both segments'
-    bbox covers share (the join's owner-cell rule; rounding can put a
-    point just outside a segment's cells)."""
+    Same rows as the same-ring rows `segment_sweep` finds over
+    `ring_segments` of the rings, bit for bit: the ring is the sweep's
+    group, and segments are in (ring, idx) order, so `a` is the
+    lower-index segment of a pair."""
     seg, ring = _heads(np.asarray(offsets, dtype=np.int64))
-    if len(seg) == 0:
-        return
     ax, ay, bx, by = xs[seg], ys[seg], xs[seg + 1], ys[seg + 1]
     fwd = (ax < bx) | ((ax == bx) & (ay <= by))
     x1, y1 = np.where(fwd, ax, bx), np.where(fwd, ay, by)
     x2, y2 = np.where(fwd, bx, ax), np.where(fwd, by, ay)
-    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
-    # bbox cover of every segment, in the cells of `intersection_pairs`
-    cx_lo = np.floor((x1 + 180.0) / cell_deg)
-    cx_hi = np.floor((x2 + 180.0) / cell_deg)
-    cy_lo = np.floor((ylo + 90.0) / cell_deg)
-    cy_hi = np.floor((yhi + 90.0) / cell_deg)
-    for i, j in _candidate_pairs(ring, x1, y1, x2, y2, chunk):
-        a, b = np.minimum(i, j), np.maximum(i, j)
-        near = (ylo[a] <= yhi[b]) & (ylo[b] <= yhi[a]) & (x1[a] <= x2[b]) & (x1[b] <= x2[a])
-        a, b = a[near], b[near]
-        mask, px, py = geom.segment_intersections(
-            x1[a], y1[a], x2[a], y2[a], x1[b], y1[b], x2[b], y2[b]
-        )
-        cx = np.floor((px + 180.0) / cell_deg)
-        cy = np.floor((py + 90.0) / cell_deg)
-        mask &= (
-            (cx >= np.maximum(cx_lo[a], cx_lo[b])) & (cx <= np.minimum(cx_hi[a], cx_hi[b]))
-            & (cy >= np.maximum(cy_lo[a], cy_lo[b])) & (cy <= np.minimum(cy_hi[a], cy_hi[b]))
-        )
-        if mask.any():
-            yield ring[a[mask]], px[mask], py[mask]
+    for a, _b, px, py in _crossings(ring, x1, y1, x2, y2, cell_deg, chunk):
+        yield ring[a], px, py
 
 
 def _repeated_points(offsets: np.ndarray, xs: np.ndarray, ys: np.ndarray):
@@ -352,9 +440,8 @@ def ring_self_intersections(
     Validity is a per-ring property, so this is one narrow mapInArrow
     stage: no exchange between a ring and its verdict. The kernel reads
     the xs/ys ListArray offsets and values directly; the crossings are
-    `ring_crossing_points`' (bit-identical to intersection_pairs'
-    same-ring rows)."""
-    import pyarrow as pa
+    `ring_crossing_points`' (bit-identical to the same-ring rows of
+    `intersection_pairs`)."""
 
     def kernel(batches):
         for batch in batches:

@@ -19,9 +19,10 @@ the per-ring crossing kernel (intersections.ring_self_intersections, one
 narrow mapInArrow stage) + the numpy Buffer(0) equivalent in
 operators/repair.py, applied BOTH pre-polygonize (buffer0_triage,
 reference add_polygons_to_vector) and post-split (check_polygons,
-reference coastline_polygons.cpp:444-467). The distributed cell-binned
-join runs once, on the pre-close segments, for the 'intersection' error
-points only. Known deviations:
+reference coastline_polygons.cpp:444-467). The distributed x-slab sweep
+(intersections.segment_sweep) runs once, on the pre-close segments, for
+the 'intersection' error points and the duplicate segments. Known
+deviations:
   * check_polygons validity is shell-level (the axis-parallel split cuts
     cannot introduce new hole-vs-shell conflicts); GEOS IsValid also
     re-checks hole nesting.
@@ -47,6 +48,8 @@ from osmcoastline_spark.operators.intersections import (
     intersection_pairs,
     ring_segments,
     ring_self_intersections,
+    segment_sweep,
+    slab_checkpoint,
 )
 from osmcoastline_spark.operators.repair import buffer0_triage, check_counts, check_polygons
 from osmcoastline_spark.operators.lines import rings_to_lines
@@ -81,7 +84,7 @@ class Options:
     output_lines: bool = False
     output_polygons: str = "land"  # land | water | both | none
     water_cell_deg: float = 1.0
-    cell_deg: float = 0.5  # intersection-join binning
+    cell_deg: float = 0.5  # owner-cell rule of the crossing kernels
 
     def effective_overlap(self) -> float:
         if self.bbox_overlap is not None:
@@ -251,13 +254,13 @@ def run_pipeline(
     snapshots right after R1 assembly — the finer-grained resume point;
     `preassembled` = (closed_df, open_df, pre_stats) restarts the pipeline
     FROM those snapshots, skipping filter/locations/assembly entirely."""
-    # driver threads for the work that overlaps later stages (the
-    # intersection checkpoint, the error-category count), scoped to this
-    # run: when the run fails, queued work is cancelled and running work
-    # awaited before the error propagates, so no job outlives the call.
-    # Submissions wrap their thunk in util.inherit_local_properties, so
-    # their jobs carry the submitting thread's job group.
-    pool = ThreadPoolExecutor(max_workers=2)
+    # one thread for the error-category count, which overlaps split
+    # and check_polygons, scoped to this run: when the run fails, queued
+    # work is cancelled and running work awaited before the error
+    # propagates, so no job outlives the call. Submissions wrap their
+    # thunk in util.inherit_local_properties, so their jobs carry the
+    # submitting thread's job group.
+    pool = ThreadPoolExecutor(max_workers=1)
     try:
         return _run_pipeline(spark, nodes, ways, options, mid_sink, preassembled, pool)
     finally:
@@ -396,67 +399,43 @@ def _run_pipeline(
             mid_sink.write("rings_open", open_, lineage={"stats_pre": pre, **extra})
         _trace("assemble")
 
-    # J5/J6 intersections & overlaps (before closing!)
-    # checkpoint: segs feeds duplicates, intersections, the orphan filter
-    # and the output table — without it the explode re-executes 4×
-    segs, _ = materialize(ring_segments(closed.unionByName(open_)))
-    _trace("segments")
-    # ONE duplicate-segment aggregation shared by the overlap error lines
-    # and the gap-close orphan filter (persist: the orphan checkpoint
-    # materializes it first, the error accounting reads the cache)
-    dup_counts = duplicate_segment_counts(segs).persist()
-    res.persisted.append(dup_counts)
-    overlaps = duplicate_segments(segs, dup=dup_counts)
-    # This pre-close intersection join feeds ONLY the 'intersection' error
-    # points (reference parity: those are reported on the raw segment set,
-    # src/osmcoastline.cpp:340-352). Ring validity is decided POST-close
-    # below, per ring — gap closing merges rings (new ring_id = min
-    # member) and adds closure segments, so pre-close results would both
-    # miss new self-crossings and name rings that no longer exist
-    # (round-3 ADVICE fix).
-    # the checkpoint (cell-binned self-join + exact Arrow kernel — the
-    # longest independent computation in this phase) runs on a driver
-    # thread under everything up to the error accounting, which is its
-    # only consumer. The 'intersection' error points slot into the error
-    # list at this position (recorded index) so union order is unchanged.
-    ipairs_future = pool.submit(
-        inherit_local_properties(
-            lambda: materialize(intersection_pairs(segs, opt.cell_deg))[0]
-        )
+    # J5/J6 intersections & overlaps (before closing!), reported on the
+    # raw segment set (reference parity, src/osmcoastline.cpp:340-352).
+    # Ring validity is decided POST-close below, per ring — gap closing
+    # merges rings (new ring_id = min member) and adds closure segments,
+    # so pre-close results would both miss new self-crossings and name
+    # rings that no longer exist (round-3 ADVICE fix).
+    # checkpoint: segs feeds the sweep and the output table. Its own job
+    # observes the segment count and x-quantiles that fix the sweep's
+    # slabs, so the slabs cost no sampling job.
+    segs, edges = slab_checkpoint(
+        ring_segments(closed.unionByName(open_)), spark.sparkContext.defaultParallelism
     )
-    error_lines.append(overlaps)
-    isects_pos = len(error_points)
     res.tables["segments"] = segs
+    _trace("segments")
 
-    def await_isects() -> None:
-        """Join the background intersection checkpoint and slot its error
-        points into their union position (once)."""
-        nonlocal ipairs_future
-        if ipairs_future is None:
-            return
-        ipairs = ipairs_future.result()
-        ipairs_future = None
-        error_points.insert(
-            isects_pos,
-            ipairs.select(
-                F.lit(0).cast("long").alias("osm_id"),
-                F.lit("intersection").alias("error"),
-                "x",
-                "y",
-            ),
-        )
+    def sweep():
+        # crossings and duplicate segments in one checkpoint; the
+        # duplicate-key count decides the orphan filter below
+        return materialize(segment_sweep(segs, edges, opt.cell_deg), n_dup_keys=F.count("k"))
 
     # G12 Antarctica — the ring id was observed at assembly; a resumed
-    # run's detection aggregate overlaps the duplicate-segment count the
-    # gap-close block needs (independent jobs over checkpointed frames)
-    if opt.close_distance > 0:
-        (open_, found), n_dup_keys = run_concurrently(
-            lambda: close_antarctica_ring(open_, opt.epsg, **antarctica_kw),
-            dup_counts.count,
+    # run's detection aggregate overlaps the sweep (independent jobs over
+    # checkpointed frames)
+    (open_, found), (swept, sweep_seen) = run_concurrently(
+        lambda: close_antarctica_ring(open_, opt.epsg, **antarctica_kw), sweep
+    )
+    n_dup_keys = sweep_seen["n_dup_keys"]
+    dup_counts = duplicate_segment_counts(swept)
+    error_points.append(
+        intersection_pairs(swept).select(
+            F.lit(0).cast("long").alias("osm_id"),
+            F.lit("intersection").alias("error"),
+            "x",
+            "y",
         )
-    else:
-        open_, found = close_antarctica_ring(open_, opt.epsg, **antarctica_kw)
-        n_dup_keys = None
+    )
+    error_lines.append(duplicate_segments(dup_counts))
     res.stats["antarctica_closed"] = found
     n_closed_delta = 0  # rings closed after assembly (driver-known)
     if found:
@@ -476,13 +455,11 @@ def _run_pipeline(
     # endpoint-map overwrite semantics (see invalid-duplicate-segments-1);
     # we detect them explicitly and exclude them from closing.
     if opt.close_distance > 0:
-        # n_dup_keys was counted above — if the input has no duplicate
-        # segments at all
-        # (the common healthy-data case) the whole orphan-detection branch
-        # (explode + semi-join + two groupBys + an eager checkpoint, ~5
-        # driver-floor jobs) is provably a no-op and is skipped; the count
-        # also pre-fills the dup_counts cache that the overlap error lines
-        # read later either way
+        # n_dup_keys was observed on the sweep — if the input has no
+        # duplicate segments at all (the common healthy-data case) the
+        # whole orphan-detection branch (explode + semi-join + two
+        # groupBys + an eager checkpoint, ~5 jobs) is
+        # provably a no-op and is skipped
         if n_dup_keys:
             open_segs = ring_segments(open_)
             dup_keys = dup_counts.drop("k")
@@ -492,8 +469,8 @@ def _run_pipeline(
                 .groupBy("ring_id")
                 .agg(F.count("*").alias("ndup"))
             )
-            # tiny id set, but its lineage (global duplicate-segment groupBy
-            # + two joins) would otherwise re-execute for every consumer:
+            # tiny id set, but its lineage (two groupBys + two joins)
+            # would otherwise re-execute for every consumer:
             # the close count, the endpoint collect, the orphan semi-join
             # and the merged checkpoint — four evaluations without this pin
             orphan_ids, _ = materialize(
@@ -691,7 +668,6 @@ def _run_pipeline(
                 # hides under the split + check_polygons actions below
                 # (round 6; the guard at the accounting site falls back to
                 # a synchronous count if a future edit appends later)
-                await_isects()
                 acct_sig = (len(error_points), len(error_lines))
                 acct_future = pool.submit(
                     inherit_local_properties(_count_error_categories),
@@ -795,7 +771,6 @@ def _run_pipeline(
                     )
                     _trace("water_plan")
 
-    await_isects()
     ep = error_points[0]
     for df in error_points[1:]:
         ep = ep.unionByName(df)

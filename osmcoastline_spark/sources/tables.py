@@ -21,11 +21,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TPCH_TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def nodes_from_images(images: DataFrame) -> DataFrame:
     """BASELINE.json input_hint entry point: the engine's native input is
     an Iceberg table of image+caption rows (image_id, bytes, w, h, fmt,

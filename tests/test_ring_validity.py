@@ -1,24 +1,37 @@
-"""Ring validity as a per-ring kernel (intersections.ring_self_intersections):
-the same crossing points as the distributed cell-binned join, the job cost
-of the triage, host-independent ring areas, and job groups on driver
-threads."""
+"""Segment crossings: the x-slab sweep (intersections.segment_sweep) and
+ring validity as a per-ring kernel (intersections.ring_self_intersections)
+give the same crossing points and duplicate segments as the cell-binned
+join and the groupBy they replaced, kept here as the reference. Also the
+job cost of the sweep and of the triage, host-independent ring areas, and
+job groups on pool threads."""
 
 import json
 import os
 import subprocess
 import sys
 import textwrap
+from collections import Counter
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from osmcoastline_spark.cells import bbox_cover_cells_expr
 from osmcoastline_spark.operators.intersections import (
+    _partition_keys,
+    _spark_hash_int,
+    duplicate_segment_counts,
     intersection_pairs,
     ring_crossing_points,
     ring_segments,
     ring_self_intersections,
+    segment_sweep,
+    slab_checkpoint,
+    slab_crossings,
+    slab_duplicates,
 )
+from osmcoastline_spark.util import materialize
 from osmcoastline_spark.operators.repair import buffer0_triage
 from osmcoastline_spark.util import run_concurrently
 
@@ -116,10 +129,79 @@ def _numpy_points(rings, chunk):
     return _bits(rows)
 
 
+def _cell_join(segments, cell_deg):
+    """All crossing segment pairs as (a_ring, b_ring, x, y): the
+    cell-binned self-join the x-slab sweep replaced. Segments are binned to
+    the grid cells their bbox covers, self-joined on the cell with
+    a_id < b_id over the composite (ring_id, idx) id, and the exact
+    arithmetic runs per candidate; a point is emitted only by the cell
+    that contains it (owner-cell rule)."""
+    covered = segments.withColumn("seg_id", F.struct("ring_id", "idx")).withColumn(
+        "cell",
+        F.explode(
+            bbox_cover_cells_expr(
+                F.least("x1", "x2"), F.least("y1", "y2"),
+                F.greatest("x1", "x2"), F.greatest("y1", "y2"),
+                cell_deg,
+            )
+        ),
+    )
+
+    def side(p):
+        return covered.select(
+            "cell",
+            F.col("ring_id").alias(f"{p}_ring"),
+            F.col("seg_id").alias(f"{p}_id"),
+            *(F.col(c).alias(f"{p}{c}") for c in ("x1", "y1", "x2", "y2")),
+        )
+
+    a, b = side("a"), side("b")
+    pairs = (
+        a.join(b, "cell")
+        .filter(F.col("a_id") < F.col("b_id"))
+        # identical segments are 'overlap', not 'intersection'
+        .filter(
+            (F.col("ax1") != F.col("bx1"))
+            | (F.col("ay1") != F.col("by1"))
+            | (F.col("ax2") != F.col("bx2"))
+            | (F.col("ay2") != F.col("by2"))
+        )
+        .filter(
+            (F.least("ax1", "ax2") <= F.greatest("bx1", "bx2"))
+            & (F.least("bx1", "bx2") <= F.greatest("ax1", "ax2"))
+            & (F.least("ay1", "ay2") <= F.greatest("by1", "by2"))
+            & (F.least("by1", "by2") <= F.greatest("ay1", "ay2"))
+        )
+    )
+
+    def exact(it):
+        from osmcoastline_spark import geom
+
+        for pdf in it:
+            mask, ix, iy = geom.segment_intersections(
+                *(pdf[p + c].to_numpy() for p in "ab" for c in ("x1", "y1", "x2", "y2"))
+            )
+            cx = np.floor((ix + 180.0) / cell_deg).astype(np.int64)
+            cy = np.floor((iy + 90.0) / cell_deg).astype(np.int64)
+            keep = mask & (cx * 1_000_000 + cy == pdf["cell"].to_numpy())
+            yield pd.DataFrame(
+                {
+                    "a_ring": pdf["a_ring"].to_numpy()[keep],
+                    "b_ring": pdf["b_ring"].to_numpy()[keep],
+                    "x": ix[keep],
+                    "y": iy[keep],
+                }
+            )
+
+    return pairs.drop("a_id", "b_id").mapInPandas(
+        exact, "a_ring long, b_ring long, x double, y double"
+    )
+
+
 def _join_rows(df):
-    """Same-ring rows of the distributed cell-binned join."""
+    """Same-ring rows of the cell-binned join."""
     return (
-        intersection_pairs(ring_segments(df), CELL)
+        _cell_join(ring_segments(df), CELL)
         .filter(F.col("a_ring") == F.col("b_ring"))
         .select(F.col("a_ring").alias("ring_id"), "x", "y")
     )
@@ -173,6 +255,98 @@ def test_kernel_sliced_batches(spark):
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
 
+def _sweep_case(case) -> list[tuple[list, list]]:
+    """Rings for the sweep tests: `_rings(seed)`, or the `dirty` benchmark
+    workload's hand-placed rings (crossing ring pairs, figure eights,
+    gaps, Antarctica) with a few islands, every ring closed. Every case
+    adds a copy of every seventh ring (duplicate segments across rings), a
+    horizontal segment longer than the whole case, which spans every
+    slab, and a vertical segment at a vertex x, where `_edge_sets` puts
+    an edge."""
+    if case == "dirty":
+        from perfbench.inputs import dirty
+
+        rings = [(list(xs) + [xs[0]], list(ys) + [ys[0]]) for xs, ys in dirty(42, 10).rings]
+    else:
+        rings = _rings(case)
+    xs = sorted(x for r in rings for x in r[0])
+    ys = sorted(y for r in rings for y in r[1])
+    vx = xs[len(xs) // 3]
+    rings = rings + rings[::7] + [
+        ([xs[0] - 1.0, xs[-1] + 1.0], [ys[len(ys) // 2]] * 2),
+        ([vx, vx], [ys[0], ys[-1]]),
+    ]
+    return [([float(v) for v in xs], [float(v) for v in ys]) for xs, ys in rings]
+
+
+def _edge_sets(seg: pd.DataFrame) -> dict[str, list[float]]:
+    x1 = seg["x1"].to_numpy()
+    ends = np.unique(np.concatenate([x1, seg["x2"].to_numpy()]))
+    vertical = seg.loc[seg["x1"] == seg["x2"], "x1"].iloc[-1]
+    quantiles = np.quantile(x1, np.linspace(0, 1, 41)[1:-1], method="lower")
+    return {
+        "one_slab": [],
+        # 0.0 is where the nearly parallel edges of `_rings` cross
+        "endpoints": sorted({0.0, *ends[:: max(1, len(ends) // 8)]}),
+        "vertical": sorted({float(vertical), float(np.median(x1))}),
+        "quantiles": sorted(set(quantiles.tolist())),
+    }
+
+
+def _slab_rows(seg: pd.DataFrame, edges: list[float]):
+    """The copies `segment_sweep` sends to the slabs, built with numpy:
+    (slab, ring, idx, x1, y1, x2, y2) arrays."""
+    lo = np.searchsorted(edges, seg["x1"].to_numpy(), side="right")
+    hi = np.searchsorted(edges, seg["x2"].to_numpy(), side="right")
+    n = hi - lo + 1
+    rep = np.repeat(np.arange(len(seg)), n)
+    slab = lo[rep] + np.arange(len(rep)) - np.repeat(np.cumsum(n) - n, n)
+    cols = ("ring_id", "idx", "x1", "y1", "x2", "y2")
+    return (slab, *(seg[c].to_numpy()[rep] for c in cols))
+
+
+def _pair_bits(rows) -> Counter:
+    return Counter((int(a), int(b), float(x).hex(), float(y).hex()) for a, b, x, y in rows)
+
+
+def _dup_bits(rows) -> set:
+    return {(*(float(v).hex() for v in r[:4]), int(r[4])) for r in rows}
+
+
+@pytest.mark.parametrize("case", [1, 7, 42, "dirty"])
+def test_sweep_equals_cell_join_and_group_by(spark, case):
+    """The slab kernel, on numpy and in Spark, finds exactly the cell
+    join's crossings (as a multiset, bit for bit) and the groupBy's
+    duplicate segments, for any slab edges: one slab, edges on segment
+    endpoints, an edge under a vertical segment, and many slabs that one
+    segment spans. Slabs share a kernel call as hash partitions share a
+    task."""
+    segs = ring_segments(_frame(spark, _sweep_case(case))).localCheckpoint()
+    seg = segs.toPandas()
+    want = _pair_bits(_cell_join(segs, CELL).collect())
+    want_dup = _dup_bits(
+        segs.groupBy("x1", "y1", "x2", "y2").agg(F.count("*").alias("k")).filter("k > 1").collect()
+    )
+    assert sum(n for (a, b, _x, _y), n in want.items() if a != b) > 10
+    assert len(want_dup) > 10
+    for name, edges in _edge_sets(seg).items():
+        e = np.asarray(edges, dtype=np.float64)
+        rows = _slab_rows(seg, edges)
+        got, got_dup = [], []
+        for part in range(3):
+            slab, ring, idx, *xy = (a[rows[0] % 3 == part] for a in rows)
+            chunk = 7 if name == "quantiles" else 1 << 16
+            for r in slab_crossings(e, slab, ring, idx, *xy, cell_deg=CELL, chunk=chunk):
+                got += zip(*r)
+            got_dup += zip(*slab_duplicates(e, slab, *xy))
+        assert _pair_bits(got) == want, name
+        assert _dup_bits(got_dup) == want_dup, name
+
+        sweep = segment_sweep(segs, edges, CELL).localCheckpoint()
+        assert _pair_bits(intersection_pairs(sweep).collect()) == want, name
+        assert _dup_bits(duplicate_segment_counts(sweep).collect()) == want_dup, name
+
+
 def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
@@ -186,6 +360,42 @@ def _polygonizable(spark, rings):
         "ring_id long, node_ids array<long>, xs array<double>, ys array<double>, "
         "nways int, fixed boolean, lead long, npoints int",
     ).localCheckpoint(eager=True)
+
+
+@pytest.mark.parametrize("dups", [False, True])
+def test_sweep_job_count(spark, dups):
+    """The segments checkpoint, which observes the slab edges, and the
+    sweep checkpoint, which observes the duplicate keys: three jobs in
+    all, with and without duplicate segments."""
+    eights = [_figure_eight(3.0 * k, 0.0, 1.0, 0.8, 40) for k in range(60)]
+    rings = [([float(v) for v in xs] + [float(xs[0])], [float(v) for v in ys] + [float(ys[0])])
+             for xs, ys in eights]
+    if dups:
+        rings += rings[:5]
+    df = _frame(spark, rings).localCheckpoint(eager=True)
+    j0 = _next_job_id(spark)
+    segs, edges = slab_checkpoint(ring_segments(df), 4)
+    sweep, swept = materialize(segment_sweep(segs, edges, CELL), n_dup_keys=F.count("k"))
+    assert _next_job_id(spark) - j0 <= 3
+    assert len(edges) == 3
+    assert swept["n_dup_keys"] == (5 * 40 if dups else 0)
+    # a figure eight crosses itself once; a copy crosses itself once and
+    # its original twice (each of the two crossing segments the other's)
+    assert intersection_pairs(sweep).count() == 60 + (3 * 5 if dups else 0)
+
+
+@pytest.mark.parametrize("n", [1, 2, 4, 7, 256])
+def test_sweep_gives_every_slab_its_own_task(spark, n):
+    """The sweep's shuffle keys put slab s in partition s: no two slabs
+    share a task. Guards the Python copy of Spark's int hash."""
+    keys = F.array(*map(F.lit, _partition_keys(n)))
+    slabs = spark.range(n).select(F.col("id").cast("int").alias("slab"))
+    placed = slabs.repartition(n, F.element_at(keys, F.col("slab") + 1)).select(
+        "slab", F.spark_partition_id().alias("part")
+    )
+    assert all(r.slab == r.part for r in placed.collect())
+    ints = spark.range(-300, 300).select(F.col("id").cast("int").alias("v"))
+    assert all(_spark_hash_int(r.v) == r.h for r in ints.select("v", F.hash("v").alias("h")).collect())
 
 
 def test_triage_clean_rings_cost_one_job(spark):
