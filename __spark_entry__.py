@@ -280,7 +280,7 @@ def q_location_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order-independent, so the checksum is bit-identical between Spark
     # and DuckDB by construction (no sin/cos/asin ULP drift, which round-1
     # and round-2 showed cannot be fully quantized away). The real
-    # haversine (A4) stays under pytest: test_ways_debug_and_length.
+    # haversine (`geom.haversine_m`) stays under pytest: test_geom.py::test_haversine.
     def leg(i):
         dx = F.element_at(F.col("xs"), i.cast("int")) - F.element_at(
             F.col("xs"), (i - 1).cast("int")

@@ -7,7 +7,7 @@ Spark DataFrame pipeline:
 * grid/Z-order cell encoding for all spatial self-joins (no native geo deps),
 * ring assembly as an iterative endpoint equi-join fixpoint,
 * batched point-in-polygon / segment-intersection as vectorized numpy kernels
-  inside Arrow-batched pandas UDFs,
+  inside mapInArrow stages (one Arrow codec in util.py),
 * quadtree-style polygon split + land/water tiling,
 * plus the large-scale training-data operators (dedup, similarity search,
   text analysis, multimodal columns) a 100 TB pipeline needs.

@@ -183,11 +183,11 @@ def main(argv: list[str] | None = None) -> int:
             code = 0
     finally:
         if res is not None:
-            # release the pipeline's pinned caches (error points/lines,
-            # dup counts) — an in-process caller with a pre-existing
-            # session would otherwise accumulate them per run, since
-            # spark.stop() below is skipped for pre-existing sessions
-            # (same idiom as _segments_main)
+            # release the pipeline's pinned caches (error points/lines) —
+            # an in-process caller with a pre-existing session would
+            # otherwise accumulate them per run, since spark.stop() below
+            # is skipped for pre-existing sessions (same idiom as
+            # _segments_main)
             res.unpersist()
         # restore even when run_pipeline raises, so an in-process caller's
         # later runs are not silently verbose

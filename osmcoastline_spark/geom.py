@@ -1,8 +1,8 @@
 """Pure-numpy 2D geometry kernels.
 
 Everything here is a deterministic, vectorized function designed to run inside
-Arrow-batched pandas UDFs (no per-row Python in the Spark hot path, no native
-geometry dependency). Formulas that affect output parity are kept identical to
+the pipeline's mapInArrow stages, on numpy views of the Arrow batches (no
+per-row Python in the Spark hot path, no native geometry dependency). Formulas that affect output parity are kept identical to
 the reference:
 
 * segment-segment intersection — /root/reference/src/coastline_ring_collection.cpp:202-230

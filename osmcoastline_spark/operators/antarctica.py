@@ -3,12 +3,12 @@
 Reference: src/coastline_ring_collection.cpp:334-349 (detection window) +
 src/coastline_ring.cpp:100-121 (synthesized walk down the antimeridian,
 along the map's southern edge, and back up). At most one ring matches; the
-closure points are appended via a tiny targeted transform.
+closure points are appended to it by a Catalyst projection over the open
+rings (array concatenation with literal closure points, no exchange).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,29 +57,17 @@ def close_antarctica_ring(
         return open_rings, False
 
     lons, lats = geom.antarctica_closure_points(epsg)
-
-    def close(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        # itertuples over the single Antarctica ring (round-3 sweep idiom)
-        for row in pdf.itertuples(index=False):
-            ids_ = list(row.node_ids) + [0] * len(lons)
-            xs = list(row.xs) + list(lons)
-            ys = list(row.ys) + list(lats)
-            # close back to the first node (reference push_back(front))
-            ids_.append(ids_[0])
-            xs.append(xs[0])
-            ys.append(ys[0])
-            out.append((row.ring_id, ids_, xs, ys, row.nways, True, row.lead))
-        return pd.DataFrame(
-            out, columns=["ring_id", "node_ids", "xs", "ys", "nways", "fixed", "lead"]
-        )
-
-    schema = (
-        "ring_id long, node_ids array<long>, xs array<double>, ys array<double>, "
-        "nways int, fixed boolean, lead long"
-    )
-    closed_ring = (
-        open_rings.filter(F.col("ring_id") == target).groupBy("ring_id").applyInPandas(close, schema)
-    )
-    rest = open_rings.filter(F.col("ring_id") != target)
-    return rest.unionByName(closed_ring), True
+    walks = {
+        "node_ids": F.array_repeat(F.lit(0).cast("long"), len(lons)),
+        "xs": F.array(*map(F.lit, lons.tolist())),
+        "ys": F.array(*map(F.lit, lats.tolist())),
+    }
+    is_target = F.col("ring_id") == target
+    # the ring, the closure walk, then its first point again (the
+    # reference's push_back(front))
+    closed = {
+        c: F.when(is_target, F.concat(c, walk, F.slice(c, 1, 1))).otherwise(F.col(c))
+        for c, walk in walks.items()
+    }
+    closed["fixed"] = F.when(is_target, F.lit(True)).otherwise(F.col("fixed"))
+    return open_rings.withColumns(closed), True

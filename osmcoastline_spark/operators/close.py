@@ -16,7 +16,8 @@ dozens, not millions). So:
      (greedy matching is inherently order-sensitive; distributing it would
      change results);
   3. the resulting merge *plan* is joined back and the actual coordinate
-     array concatenation runs distributed via groupBy(group).applyInPandas.
+     array concatenation runs distributed as one groupBy(group) pass of
+     JVM array expressions (merge_apply).
 
 If open rings ever exceed `max_driver_endpoints`, we fail loudly rather than
 silently OOM the driver.

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
-from osmcoastline_spark.util import materialize
+from osmcoastline_spark.util import arrow_stage, list_views, materialize
 
 DEFAULT_CELL_DEG = 0.5
 
@@ -182,10 +182,9 @@ def segment_sweep(
         for a_ring, b_ring, x, y in slab_crossings(
             edges_np, slab, c["ring_id"], c["idx"], *xy, cell_deg=cell_deg
         ):
-            yield _sweep_batch(a_ring=a_ring, b_ring=b_ring, x=x, y=y)
+            yield _sweep_columns(a_ring=a_ring, b_ring=b_ring, x=x, y=y)
         x1, y1, x2, y2, k = slab_duplicates(edges_np, slab, *xy)
-        if len(k):
-            yield _sweep_batch(x1=x1, y1=y1, x2=x2, y2=y2, k=k)
+        yield _sweep_columns(x1=x1, y1=y1, x2=x2, y2=y2, k=k)
 
     copies = segments.select(
         F.col("ring_id").cast("long"),
@@ -194,18 +193,17 @@ def segment_sweep(
             F.sequence(_slab_of(F.col("x1"), edges), _slab_of(F.col("x2"), edges))
         ).alias("slab"),
     ).repartition(len(edges) + 1, F.element_at(keys, F.col("slab") + 1))
-    return copies.mapInArrow(kernel, ", ".join(f"{c} {t}" for c, t in _SWEEP_COLUMNS.items()))
+    return arrow_stage(copies, kernel, ", ".join(f"{c} {t}" for c, t in _SWEEP_COLUMNS.items()))
 
 
-def _sweep_batch(**cols: np.ndarray) -> pa.RecordBatch:
-    """A `segment_sweep` batch from the columns of one row kind; the
-    columns of the other kind are null."""
+def _sweep_columns(**cols: np.ndarray) -> dict:
+    """`segment_sweep` output columns from the columns of one row kind;
+    the columns of the other kind are null."""
     n = len(next(iter(cols.values())))
-    arrays = [
-        pa.array(cols[c]) if c in cols else pa.nulls(n, pa.int64() if t == "long" else pa.float64())
+    return {
+        c: cols[c] if c in cols else pa.nulls(n, pa.int64() if t == "long" else pa.float64())
         for c, t in _SWEEP_COLUMNS.items()
-    ]
-    return pa.RecordBatch.from_arrays(arrays, list(_SWEEP_COLUMNS))
+    }
 
 
 def intersection_pairs(sweep: DataFrame) -> DataFrame:
@@ -439,34 +437,26 @@ def ring_self_intersections(
 
     Validity is a per-ring property, so this is one narrow mapInArrow
     stage: no exchange between a ring and its verdict. The kernel reads
-    the xs/ys ListArray offsets and values directly; the crossings are
-    `ring_crossing_points`' (bit-identical to the same-ring rows of
-    `intersection_pairs`)."""
+    xs/ys as numpy views of the Arrow batch (`util.list_views`); the
+    crossings are `ring_crossing_points`' (bit-identical to the same-ring
+    rows of `intersection_pairs`)."""
 
     def kernel(batches):
         for batch in batches:
-            xcol, ycol = batch.column("xs"), batch.column("ys")
-            # offsets index the child array, which a sliced batch shares
-            # with its neighbours: rebase onto this batch's own values
-            offsets = np.asarray(xcol.offsets, dtype=np.int64)
-            if not np.array_equal(np.diff(offsets), np.diff(np.asarray(ycol.offsets))):
+            offsets, xs = list_views(batch.column("xs"))
+            y_offsets, ys = list_views(batch.column("ys"))
+            if not np.array_equal(offsets, y_offsets):
                 raise ValueError("ring_self_intersections: xs and ys lengths differ")
-            lo, hi = int(offsets[0]), int(offsets[-1])
-            y0 = int(ycol.offsets[0].as_py())
-            xs = xcol.values.slice(lo, hi - lo).to_numpy(zero_copy_only=False)
-            ys = ycol.values.slice(y0, hi - lo).to_numpy(zero_copy_only=False)
-            offsets = offsets - lo
             # reduce each chunk's crossings to per-ring minima as they come
             parts = [_first_points([p]) for p in ring_crossing_points(offsets, xs, ys, cell_deg)]
             if repeated:
                 parts.append(_repeated_points(offsets, xs, ys))
             r, x, y = _first_points(parts)
-            if len(r):
-                ids = batch.column("ring_id").to_numpy()
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids[r]), pa.array(x), pa.array(y)], ["ring_id", "x", "y"]
-                )
+            ids = batch.column("ring_id").to_numpy()
+            yield {"ring_id": ids[r], "x": x, "y": y}
 
-    return rings.select(F.col("ring_id").cast("long"), "xs", "ys").mapInArrow(
-        kernel, "ring_id long, x double, y double"
+    return arrow_stage(
+        rings.select(F.col("ring_id").cast("long"), "xs", "ys"),
+        kernel,
+        "ring_id long, x double, y double",
     )

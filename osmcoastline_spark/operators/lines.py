@@ -5,10 +5,10 @@ Reference: src/coastline_polygons.cpp:66-89 (suppress segments along the
 map's southern edge / antimeridian — they exist only to close polygons) and
 :271-302 (chunk lines at max_points). Constants from src/srs.hpp:107-117.
 
-Implemented as pure Catalyst array ops: per ring, mark suppressed segments,
-then split the point sequence at suppression gaps and chunk to max_points.
-The per-ring chunking runs inside one vectorized UDF batch (rings are
-independent rows — embarrassingly parallel).
+Per ring, a numpy mask marks the suppressed segments; the point sequence
+splits at the suppression gaps and chunks to max_points. Rings are
+independent rows, so this is one narrow mapInArrow stage
+(`util.arrow_stage`).
 """
 
 from __future__ import annotations
@@ -16,13 +16,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-
-
-from osmcoastline_spark.util import aslist as _aslist
-
+from osmcoastline_spark.util import arrow_stage, column_rows
 
 WGS84_EDGES = {"max_x": 179.9999, "min_x": -179.9999, "min_y": -85.049}
 MERC_EDGES = {"max_x": 20037500.0, "min_x": -20037500.0, "min_y": -20037400.0}
@@ -36,7 +33,7 @@ def rings_to_lines(
     edges = WGS84_EDGES if epsg == 4326 else MERC_EDGES
     min_y, max_x, min_x = edges["min_y"], edges["max_x"], edges["min_x"]
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
         # a flushed reference chunk has max(max_points, 2) points =
         # max(max_points - 1, 1) segments — INCLUDING max_points == 0:
         # options.cpp:156-158 only sets split_large_polygons = false for
@@ -46,15 +43,11 @@ def rings_to_lines(
         # (A round-5 edit misread that as "0 disables line chunking too"
         # and emitted unchunked rings — parity break, reverted.)
         step = max(max_points - 1, 1)
-        for pdf in it:
+        for batch in batches:
             out_x, out_y = [], []
-            for row in pdf.itertuples(index=False):
-                rings = [(row.shell_x, row.shell_y)]
-                for hx, hy in zip(_aslist(row.holes_x), _aslist(row.holes_y)):
-                    rings.append((hx, hy))
-                for rx, ry in rings:
-                    xs = np.asarray(rx, dtype=np.float64)
-                    ys = np.asarray(ry, dtype=np.float64)
+            cols = ("shell_x", "shell_y", "holes_x", "holes_y")
+            for sx, sy, hxs, hys in zip(*(column_rows(batch.column(c)) for c in cols)):
+                for xs, ys in [(sx, sy), *zip(hxs or (), hys or ())]:
                     if xs[0] != xs[-1] or ys[0] != ys[-1]:
                         xs = np.append(xs, xs[0])
                         ys = np.append(ys, ys[0])
@@ -74,10 +67,12 @@ def rings_to_lines(
                     for run_segs in np.split(kept, np.nonzero(np.diff(kept) != 1)[0] + 1):
                         for k in range(0, len(run_segs), step):
                             chunk = run_segs[k : k + step]
-                            out_x.append(xs[chunk[0] : chunk[-1] + 2].tolist())
-                            out_y.append(ys[chunk[0] : chunk[-1] + 2].tolist())
-            yield pd.DataFrame({"xs": out_x, "ys": out_y})
+                            out_x.append(xs[chunk[0] : chunk[-1] + 2])
+                            out_y.append(ys[chunk[0] : chunk[-1] + 2])
+            yield {"xs": out_x, "ys": out_y}
 
-    return polygons.select("shell_x", "shell_y", "holes_x", "holes_y").mapInPandas(
-        run, "xs array<double>, ys array<double>"
+    return arrow_stage(
+        polygons.select("shell_x", "shell_y", "holes_x", "holes_y"),
+        run,
+        "xs array<double>, ys array<double>",
     )

@@ -14,7 +14,7 @@ fresh-JVM single-action, best-of-3 interleaved; see BENCH/BASELINE.md):
   shape                                    local[2]  local[8]  eff 2→8
   ------------------------------------------------------------------
   r2: SMJ join + collect_list(struct)        37.5      23.7     0.40
-  mapInPandas regroup (per-group objects)    70.3      57.0     0.31
+  pandas-UDF regroup (per-group objects)     70.3      57.0     0.31
   mapInArrow regroup (ListArray offsets)     46.6      19.9     0.59
   SHUFFLE_HASH join + collect_list(struct)   28.2       9.2     0.76  ← this
 

@@ -21,6 +21,11 @@ cells once:
 Hole vertices landing in inside-cells are contained with no geometry join;
 only vertices in boundary cells join the shell's coordinate arrays. Exact
 ray-cast work is ∝ coastline-adjacent candidates, not ∝ candidates.
+
+The cell classification, the exact ray-casts and the hole-in-hole check
+are mapInArrow stages (util.arrow_stage) over numpy views of the rings;
+the check reads the per-shell hole aggregate (groupBy + collect_list) that
+the polygons join, so the two share its exchange.
 """
 
 from __future__ import annotations
@@ -29,14 +34,14 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.cells import CELL_STRIDE, cell_id_expr
-from osmcoastline_spark.util import materialize
+from osmcoastline_spark.util import arrow_stage, column_rows, list_views, materialize
 
 DEFAULT_CELL_DEG = 1.0
 
@@ -66,12 +71,14 @@ def classify_container_cells(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DE
     """Per ring: (ring_id, cell, kind) — 'bnd' (ring passes through) or
     'in' (cell center strictly inside). Batched point-in-polygon backbone."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+        for batch in batches:
             rids, cells, kinds = [], [], []
-            for rid, xs, ys in zip(pdf["ring_id"], pdf["xs"], pdf["ys"]):
-                xs = np.asarray(xs, dtype=np.float64)
-                ys = np.asarray(ys, dtype=np.float64)
+            offsets, all_xs = list_views(batch.column("xs"))
+            _, all_ys = list_views(batch.column("ys"))
+            for i, rid in enumerate(batch.column("ring_id").to_numpy()):
+                xs = all_xs[offsets[i] : offsets[i + 1]]
+                ys = all_ys[offsets[i] : offsets[i + 1]]
                 ix = np.floor((xs + 180.0) / cell_deg).astype(np.int64)
                 iy = np.floor((ys + 90.0) / cell_deg).astype(np.int64)
                 # boundary cells: vectorized edge-bbox rasterization — for
@@ -111,17 +118,15 @@ def classify_container_cells(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DE
                 n_in, n_bnd = len(in_cells), len(bnd)
                 rids.append(np.full(n_in + n_bnd, rid, dtype=np.int64))
                 cells.append(np.concatenate([in_cells, bnd]))
-                kinds.append(np.array(["in"] * n_in + ["bnd"] * n_bnd, dtype=object))
-            yield pd.DataFrame(
-                {
-                    "ring_id": np.concatenate(rids) if rids else np.empty(0, np.int64),
-                    "cell": np.concatenate(cells) if cells else np.empty(0, np.int64),
-                    "kind": np.concatenate(kinds) if kinds else np.empty(0, object),
-                }
-            )
+                kinds += ["in"] * n_in + ["bnd"] * n_bnd
+            yield {
+                "ring_id": np.concatenate(rids) if rids else np.empty(0, np.int64),
+                "cell": np.concatenate(cells) if cells else np.empty(0, np.int64),
+                "kind": kinds,
+            }
 
-    return rings.select("ring_id", "xs", "ys").mapInPandas(
-        run, "ring_id long, cell long, kind string"
+    return arrow_stage(
+        rings.select("ring_id", "xs", "ys"), run, "ring_id long, cell long, kind string"
     )
 
 
@@ -149,21 +154,46 @@ def containment_pairs(
         )
     )
 
-    def exact(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keep = []
-            for px, py, cxs, cys in zip(pdf["px"], pdf["py"], pdf["cxs"], pdf["cys"]):
-                keep.append(
-                    bool(
-                        geom.points_in_ring(
-                            np.array([px]), np.array([py]), np.asarray(cxs), np.asarray(cys)
-                        )[0]
-                    )
-                )
-            yield pdf.loc[keep, ["point_id", "container_id"]]
+    def exact(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+        for batch in batches:
+            px, py = batch.column("px").to_numpy(), batch.column("py").to_numpy()
+            offsets, cxs = list_views(batch.column("cxs"))
+            _, cys = list_views(batch.column("cys"))
+            keep = [
+                i
+                for i in range(batch.num_rows)
+                if geom.points_in_ring(
+                    px[i : i + 1],
+                    py[i : i + 1],
+                    cxs[offsets[i] : offsets[i + 1]],
+                    cys[offsets[i] : offsets[i + 1]],
+                )[0]
+            ]
+            kept = batch.take(pa.array(keep, pa.int64()))
+            yield {c: kept.column(c) for c in ("point_id", "container_id")}
 
-    exact_pairs = bnd.mapInPandas(exact, "point_id long, container_id long")
+    exact_pairs = arrow_stage(bnd, exact, "point_id long, container_id long")
     return free.unionByName(exact_pairs).distinct()
+
+
+# O(holes²) point-in-ring per shell — bounded like MAX_REPAIR_POINTS:
+# real shells carry at most dozens of holes; a pathological shell with
+# more holes than the cap is declared invalid outright (cheaper and
+# safer than an unbounded quadratic task on one executor)
+MAX_HOLES_PAIRWISE = 10_000
+
+
+def _holes_nest(hxs: list, hys: list) -> bool:
+    """Whether any hole of a shell holds another hole's first vertex
+    (hole-in-hole makes the shell invalid)."""
+    n = len(hxs)
+    if n > MAX_HOLES_PAIRWISE:
+        return True
+    return any(
+        i != j and geom.points_in_ring(hxs[i][:1], hys[i][:1], hxs[j], hys[j])[0]
+        for i in range(n)
+        for j in range(n)
+    )
 
 
 @dataclass
@@ -249,45 +279,24 @@ def polygonize(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> Polygoni
         F.col("ys").alias("hys"),
     )
 
-    # O(holes²) point-in-ring per shell — bounded like MAX_REPAIR_POINTS:
-    # real shells carry at most dozens of holes; a pathological shell with
-    # more holes than the cap is declared invalid outright (cheaper and
-    # safer than an unbounded quadratic task on one executor)
-    MAX_HOLES_PAIRWISE = 10_000
-
-    def check_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n > MAX_HOLES_PAIRWISE:
-            return pd.DataFrame({"shell_id": [key[0]], "bad": [True]})
-        invalid = False
-        arrs = [
-            (np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64))
-            for x, y in zip(pdf["hxs"], pdf["hys"])
-        ]
-        for i in range(n):
-            for j in range(n):
-                if i != j and geom.points_in_ring(
-                    arrs[i][0][:1], arrs[i][1][:1], arrs[j][0], arrs[j][1]
-                )[0]:
-                    invalid = True
-                    break  # one containment already decides the shell
-            if invalid:
-                break
-        return pd.DataFrame({"shell_id": [key[0]], "bad": [invalid]})
-
-    # applyInPandas never invokes the UDF for zero groups — no isEmpty
-    # guard needed (that guard was one extra evaluation of the containment
-    # join per pipeline run)
-    shell_valid = hole_geo.groupBy("shell_id").applyInPandas(
-        check_group, "shell_id long, bad boolean"
-    )
-    bad_shells = shell_valid.filter("bad").select("shell_id")
-
     hole_agg = hole_geo.groupBy("shell_id").agg(
         F.collect_list("hxs").alias("holes_x"),
         F.collect_list("hys").alias("holes_y"),
         F.collect_list("hole_ring_id").alias("hole_ring_ids"),
     )
+
+    def check(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+        for batch in batches:
+            holes = zip(column_rows(batch.column("holes_x")), column_rows(batch.column("holes_y")))
+            yield {"shell_id": batch.column("shell_id"), "bad": [_holes_nest(*h) for h in holes]}
+
+    # the check reads the hole aggregate the polygons join, so both share
+    # its exchange; a shell with no holes has no row, so zero groups never
+    # reach the kernel
+    shell_valid = arrow_stage(
+        hole_agg.select("shell_id", "holes_x", "holes_y"), check, "shell_id long, bad boolean"
+    )
+    bad_shells = shell_valid.filter("bad").select("shell_id")
 
     shell_polys = shells.join(hole_agg, shells.ring_id == hole_agg.shell_id, "left").drop(
         "shell_id"

@@ -36,13 +36,13 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.operators.intersections import ring_self_intersections
-from osmcoastline_spark.util import materialize
+from osmcoastline_spark.util import arrow_stage, column_rows, materialize
 
 # rings larger than this are dropped un-repaired (the in-batch crossing
 # search is O(n²) bbox-filtered; genuinely invalid rings are data-error
@@ -231,30 +231,28 @@ def buffer0_triage(rings: DataFrame, cell_deg: float = 0.5) -> DataFrame:
         "nways int, fixed boolean, lead long, npoints int"
     )
 
-    def repair_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.to_dict("records"):
-                fixed_ring = buffer0_repair(list(r["xs"]), list(r["ys"]))
+    def repair_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+        for batch in batches:
+            keep, xs, ys = [], [], []
+            for i, (rx, ry) in enumerate(
+                zip(column_rows(batch.column("xs")), column_rows(batch.column("ys")))
+            ):
+                fixed_ring = buffer0_repair(list(rx), list(ry))
                 if fixed_ring is None:
                     continue  # silent drop, reference parity
-                rx, ry = fixed_ring
-                rows.append(
-                    {
-                        "ring_id": r["ring_id"],
-                        "node_ids": [0] * len(rx),
-                        "xs": rx,
-                        "ys": ry,
-                        "nways": r["nways"],
-                        "fixed": r["fixed"],
-                        "lead": r["lead"],
-                        "npoints": len(rx),
-                    }
-                )
-            if rows:  # yielding nothing is fine; an empty untyped frame
-                yield pd.DataFrame(rows, columns=cols)  # breaks Arrow casts
+                keep.append(i)
+                xs.append(fixed_ring[0])
+                ys.append(fixed_ring[1])
+            kept = batch.take(pa.array(keep, pa.int64()))
+            yield {
+                **{c: kept.column(c) for c in ("ring_id", "nways", "fixed", "lead")},
+                "node_ids": [[0] * len(rx) for rx in xs],
+                "xs": xs,
+                "ys": ys,
+                "npoints": [len(rx) for rx in xs],
+            }
 
-    repaired = flagged.select(*cols).mapInPandas(repair_batch, out_schema)
+    repaired = arrow_stage(flagged.select(*cols), repair_batch, out_schema)
     return clean.select(*cols).unionByName(repaired)
 
 
@@ -383,26 +381,32 @@ def check_polygons(
     clean = polys.join(flagged_ids, "poly_id", "left_anti")
     flagged = polys.join(flagged_ids, "poly_id", "left_semi")
     schema = flagged.schema
-    colnames = [f.name for f in schema.fields]
 
-    def repair_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.to_dict("records"):
-                rep = buffer0_repair(list(r["shell_x"]), list(r["shell_y"]))
+    def repair_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+        for batch in batches:
+            keep, xs, ys = [], [], []
+            for i, (sx, sy) in enumerate(
+                zip(column_rows(batch.column("shell_x")), column_rows(batch.column("shell_y")))
+            ):
+                rep = buffer0_repair(list(sx), list(sy))
                 if rep is None:
                     continue  # silent drop, reference parity
-                rx, ry = rep
                 # post-fix_direction shells are CW (GIS frame);
                 # buffer0_repair normalizes to CCW — flip back
-                rx, ry = rx[::-1], ry[::-1]
-                r["shell_x"], r["shell_y"] = list(rx), list(ry)
-                r["npoints"] = len(rx)
-                r["env_minx"], r["env_maxx"] = min(rx), max(rx)
-                r["env_miny"], r["env_maxy"] = min(ry), max(ry)
-                rows.append(r)
-            if rows:
-                yield pd.DataFrame(rows, columns=colnames)
+                keep.append(i)
+                xs.append(list(rep[0][::-1]))
+                ys.append(list(rep[1][::-1]))
+            kept = batch.take(pa.array(keep, pa.int64()))
+            yield {
+                **{c: kept.column(c) for c in schema.names},
+                "shell_x": xs,
+                "shell_y": ys,
+                "npoints": [len(rx) for rx in xs],
+                "env_minx": [min(rx) for rx in xs],
+                "env_maxx": [max(rx) for rx in xs],
+                "env_miny": [min(ry) for ry in ys],
+                "env_maxy": [max(ry) for ry in ys],
+            }
 
-    repaired = flagged.mapInPandas(repair_batch, schema)
+    repaired = arrow_stage(flagged, repair_batch, schema)
     return clean.unionByName(repaired), warnings

@@ -204,7 +204,7 @@ def assemble_rings(
     `driver_threshold` and the remaining graph is solved sequentially on
     the driver, exactly like the reference's endpoint-map chaining), the
     plan is applied to the stationary arrays in ONE
-    groupBy(group).applyInPandas concatenation (merge_apply).
+    groupBy(group) pass of JVM array concatenation (merge_apply).
 
     Chain count ∝ coastline ways, never ∝ rows, so the driver step is
     bounded at any data scale; the distributed rounds exist for inputs

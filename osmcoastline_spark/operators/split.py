@@ -25,17 +25,13 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.schemas import EXTENT_3857, EXTENT_4326
-from osmcoastline_spark.util import materialize
-
-
-from osmcoastline_spark.util import aslist as _aslist
-
+from osmcoastline_spark.util import arrow_stage, column_rows, materialize
 
 _SPLIT_SCHEMA = (
     "poly_id long, shell_x array<double>, shell_y array<double>, "
@@ -82,8 +78,8 @@ def _split_one(
         return [_emit(row, final=True)]
 
     # distribute holes
-    holes_x = _aslist(row["holes_x"])
-    holes_y = _aslist(row["holes_y"])
+    holes_x = row["holes_x"] or ()
+    holes_y = row["holes_y"] or ()
     lo_holes: list[tuple[np.ndarray, np.ndarray]] = []
     hi_holes: list[tuple[np.ndarray, np.ndarray]] = []
     for hx, hy in zip(holes_x, holes_y):
@@ -178,8 +174,6 @@ def _emit(row, final: bool) -> dict:
         "poly_id", "shell_x", "shell_y", "holes_x", "holes_y",
         "npoints", "env_minx", "env_miny", "env_maxx", "env_maxy",
     )}
-    d["shell_x"] = list(d["shell_x"])
-    d["shell_y"] = list(d["shell_y"])
     d["final"] = final
     d["depth"] = row["depth"]
     d["cut_suspect"] = bool(row.get("cut_suspect", False))
@@ -240,7 +234,7 @@ def split_polygons(
     n_todo = seen["n"]
 
     # levels handled INSIDE one Arrow batch per round: each distributed
-    # round pays a mapInPandas stage + a checkpoint (~1 s of driver floor
+    # round pays a Python stage + a checkpoint (~1 s of driver floor
     # at bench scale), so recursing a few levels in-UDF divides the round
     # count by LEVELS_PER_ROUND. Outputs are identical to one-level rounds
     # (each level applies the same _split_one), and skew stays bounded: one
@@ -268,10 +262,10 @@ def split_polygons(
         if n_todo == 0:
             break
 
-        def split_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
+        def split_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+            for batch in batches:
                 rows = []
-                for row in pdf.to_dict("records"):
+                for row in column_rows(batch.to_struct_array()):
                     stack = [(row, 1)]
                     while stack:
                         r, lvl = stack.pop()
@@ -285,12 +279,10 @@ def split_polygons(
                             else:
                                 rows.append(p)
                 if rows:
-                    yield pd.DataFrame(rows)
+                    yield {k: [r[k] for r in rows] for k in rows[0]}
 
         children, seen = materialize(
-            todo.withColumn("final", F.lit(False)).mapInPandas(
-                split_batch, _SPLIT_SCHEMA
-            ),
+            arrow_stage(todo.withColumn("final", F.lit(False)), split_batch, _SPLIT_SCHEMA),
             **metrics,
         )
         done_parts.append(children.filter(is_done))

@@ -9,8 +9,10 @@ the shape that parallelizes:
 
     tile-cover join (J12: a polygon overlapping k tiles clones into k rows —
     exactly the reference's clone-into-both-children at :430-432)
-    → groupBy(tile).applyInPandas(tile − land)
-    → anti-join for land-free tiles.
+    → groupBy(tile) collects the tile's land parts in the JVM
+    → one mapInArrow stage computes tile − land per tile (`tile_water`)
+    → anti-join for land-free tiles, whose whole-tile rectangles are
+      column math.
 
 Water region representation: even-odd polygon — shell = tile rectangle,
 interior rings = land shells AND land holes clipped to the tile (a land hole
@@ -22,18 +24,16 @@ multi-shell decomposition is deferred to the sink.
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.cells import CELL_STRIDE, bbox_cover_cells_expr
-
-
-from osmcoastline_spark.util import aslist as _aslist
-
+from osmcoastline_spark.util import arrow_stage, column_rows
 
 
 def tile_grid(spark, zoom: int, extent=(-180.0, -90.0, 180.0, 90.0)) -> DataFrame:
@@ -102,8 +102,9 @@ def tile_water(cell: int, tile: tuple, parts, clip_owned: bool) -> dict | None:
     tile is fully covered by land. `tile` = (minx, miny, maxx, maxy);
     `parts` are the land polygons touching it, in a fixed order (hole
     order and the float area summation follow it), each indexable by
-    field name (dict or Row) with shell_x, shell_y, holes_x, holes_y and,
-    when `clip_owned`, the owned-region box fields (OWN_FIELDS)."""
+    field name (dict or Row) with shell_x, shell_y, holes_x, holes_y (a
+    list, or None for no holes) and, when `clip_owned`, the owned-region
+    box fields (OWN_FIELDS)."""
     tminx, tminy, tmaxx, tmaxy = tile
     tile_area2 = 2.0 * (tmaxx - tminx) * (tmaxy - tminy)
     holes_x, holes_y = [], []
@@ -125,7 +126,7 @@ def tile_water(cell: int, tile: tuple, parts, clip_owned: bool) -> dict | None:
             if cminx >= cmaxx or cminy >= cmaxy:
                 continue
         rings = [(np.asarray(row["shell_x"]), np.asarray(row["shell_y"]))]
-        for hx, hy in zip(_aslist(row["holes_x"]), _aslist(row["holes_y"])):
+        for hx, hy in zip(row["holes_x"] or (), row["holes_y"] or ()):
             rings.append((np.asarray(hx), np.asarray(hy)))
         for i, (rx, ry) in enumerate(rings):
             for px, py in geom.clip_ring_rect(rx, ry, cminx, cminy, cmaxx, cmaxy):
@@ -192,10 +193,8 @@ def water_polygons(
         "holes_x array<array<double>>, holes_y array<array<double>>, "
         "env_minx double, env_miny double, env_maxx double, env_maxy double"
     )
-    out_cols = ["cell", "shell_x", "shell_y", "holes_x", "holes_y",
-                "env_minx", "env_miny", "env_maxx", "env_maxy"]
-    # JVM pre-aggregation + ONE pandas frame per Arrow batch instead of
-    # groupBy().applyInPandas — the per-GROUP pandas-DataFrame construction
+    # JVM pre-aggregation + one kernel call per Arrow batch instead of a
+    # grouped-map pandas UDF — the per-GROUP pandas-DataFrame construction
     # dominates when groups are tile-sized (measured round 6: 1.9 s → 0.9 s
     # for 3286 tiles at bench sf0.1; same finding as merge_apply).
     # sort_array orders parts by the struct's leading field — poly_id when
@@ -215,17 +214,19 @@ def water_polygons(
         F.sort_array(F.collect_list(F.struct(*part_fields))).alias("parts")
     )
 
-    def diff_batch(it):
-        for pdf in it:
+    def diff_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+        for batch in batches:
             rows = []
-            for cell, parts in zip(pdf["cell"], pdf["parts"]):
-                r = tile_water(int(cell), tile_bounds(cell), parts, clip_owned)
+            for cell, parts in zip(
+                batch.column("cell").to_pylist(), column_rows(batch.column("parts"))
+            ):
+                r = tile_water(cell, tile_bounds(cell), parts, clip_owned)
                 if r is not None:
                     rows.append(r)
             if rows:
-                yield pd.DataFrame(rows, columns=out_cols)
+                yield {k: [r[k] for r in rows] for k in rows[0]}
 
-    water = grouped.mapInPandas(diff_batch, schema)
+    water = arrow_stage(grouped, diff_batch, schema)
 
     if include_empty_tiles:
         nx = int(round((extent[2] - extent[0]) / cell))
@@ -236,28 +237,10 @@ def water_polygons(
         # J15: tiles with no land at all ⇒ whole-tile water
         empty = all_tiles.join(covered.select("cell").distinct(), "cell", "left_anti")
 
-        def full_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            for cell in pdf["cell"]:
-                tminx, tminy, tmaxx, tmaxy = tile_bounds(int(cell))
-                rows.append(
-                    {
-                        "cell": int(cell),
-                        "shell_x": [tminx, tminx, tmaxx, tmaxx],
-                        "shell_y": [tminy, tmaxy, tmaxy, tminy],
-                        "holes_x": [],
-                        "holes_y": [],
-                        "env_minx": tminx,
-                        "env_miny": tminy,
-                        "env_maxx": tmaxx,
-                        "env_maxy": tmaxy,
-                    }
-                )
-            return pd.DataFrame(
-                rows, columns=["cell", "shell_x", "shell_y", "holes_x", "holes_y",
-                               "env_minx", "env_miny", "env_maxx", "env_maxy"]
-            )
-
+        cells = empty.select(
+            (F.col("cell") / CELL_STRIDE).cast("long").alias("tx"),
+            (F.col("cell") % CELL_STRIDE).alias("ty"),
+        )
         if merge_empty_tiles:
             # raster→vector: merge the open-ocean tile set into maximal
             # slabs (operators/vectorize.py) — ONE water polygon per
@@ -266,20 +249,24 @@ def water_polygons(
             # (src/coastline_polygons.cpp:322-360), so default output
             # parity keeps the per-tile shape. At planet scale the empty
             # set is ~70% of all tiles; the slab output is O(coastline
-            # rows), not O(world tiles). Pure column math — the polygon
-            # corners come straight from the merged cell bounds.
+            # rows), not O(world tiles).
             from osmcoastline_spark.operators.vectorize import vectorize_cells
 
-            cells = empty.select(
-                (F.col("cell") / CELL_STRIDE).cast("long").alias("tx"),
-                (F.col("cell") % CELL_STRIDE).alias("ty"),
-            )
             rects = vectorize_cells(cells, width=nx)
-            minx = F.col("x1") * cell + F.lit(x0)
-            miny = F.col("y1") * cell + F.lit(y0)
-            maxx = (F.col("x2") + 1) * cell + F.lit(x0)
-            maxy = (F.col("y2") + 1) * cell + F.lit(y0)
-            merged = rects.select(
+        else:
+            # one whole-tile rectangle per land-free tile
+            rects = cells.select(
+                F.col("tx").alias("x1"), F.col("ty").alias("y1"),
+                F.col("tx").alias("x2"), F.col("ty").alias("y2"),
+            )
+        # pure column math: the polygon corners come straight from the
+        # cell bounds, with tile_bounds' float operations in its order
+        minx = F.col("x1") * cell + F.lit(x0)
+        miny = F.col("y1") * cell + F.lit(y0)
+        maxx = (F.col("x2") + 1) * cell + F.lit(x0)
+        maxy = (F.col("y2") + 1) * cell + F.lit(y0)
+        water = water.unionByName(
+            rects.select(
                 (F.col("x1") * CELL_STRIDE + F.col("y1")).alias("cell"),
                 F.array(minx, minx, maxx, maxx).alias("shell_x"),
                 F.array(miny, maxy, maxy, miny).alias("shell_y"),
@@ -290,11 +277,7 @@ def water_polygons(
                 maxx.alias("env_maxx"),
                 maxy.alias("env_maxy"),
             )
-            water = water.unionByName(merged)
-        else:
-            water = water.unionByName(
-                empty.mapInPandas(lambda it: map(full_tile, it), schema)
-            )
+        )
 
     return water
 

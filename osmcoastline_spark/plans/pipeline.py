@@ -21,8 +21,14 @@ operators/repair.py, applied BOTH pre-polygonize (buffer0_triage,
 reference add_polygons_to_vector) and post-split (check_polygons,
 reference coastline_polygons.cpp:444-467). The distributed x-slab sweep
 (intersections.segment_sweep) runs once, on the pre-close segments, for
-the 'intersection' error points and the duplicate segments. Known
-deviations:
+the 'intersection' error points and the duplicate segments.
+
+Every Python stage — the sweep, ring validity, repair, containment,
+split, water, lines and the 3857 transform — is a mapInArrow stage
+through util.arrow_stage, whose codec hands the kernels numpy views of the
+Arrow list columns and writes their outputs back as Arrow lists. The
+Antarctica closure and the land-free water tiles are Catalyst
+projections. Known deviations:
   * check_polygons validity is shell-level (the axis-parallel split cuts
     cannot introduce new hole-vs-shell conflicts); GEOS IsValid also
     re-checks hole nesting.
@@ -34,7 +40,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,7 +65,14 @@ from osmcoastline_spark.operators.questionable import questionable_rings
 from osmcoastline_spark.operators.rings import _closed, assemble_rings, route_rings
 from osmcoastline_spark.operators.split import split_polygons
 from osmcoastline_spark.operators.water import drop_antimeridian_slivers, water_polygons
-from osmcoastline_spark.util import inherit_local_properties, materialize, run_concurrently
+from osmcoastline_spark.util import (
+    arrow_stage,
+    from_views,
+    inherit_local_properties,
+    list_views,
+    materialize,
+    run_concurrently,
+)
 from osmcoastline_spark.schemas import (
     DEFAULT_BBOX_OVERLAP_3857,
     DEFAULT_BBOX_OVERLAP_4326,
@@ -119,11 +132,6 @@ class PipelineResult:
         return 0
 
 
-
-
-from osmcoastline_spark.util import aslist as _aslist
-
-
 def _empty(spark: SparkSession, schema):
     return spark.createDataFrame([], schema)
 
@@ -148,59 +156,30 @@ def _count_error_categories(error_points: list, error_lines: list) -> list:
 
 
 def _transform_polygons_3857(polys: DataFrame) -> DataFrame:
-    """G11: closed-form WebMercator. The whole Arrow batch transforms in
-    ONE numpy call per coordinate axis: ragged shell/hole arrays are
-    flattened with np.concatenate, transformed, and split back by the
-    recorded lengths — no per-row Python in the kernel."""
-    import numpy as np
+    """G11: closed-form WebMercator. Each Arrow batch transforms in ONE
+    numpy call per coordinate axis and column: the flat values of the
+    shell and hole lists transform and keep their offsets, so there is no
+    per-row Python in the kernel. A null hole list comes out empty."""
 
-    def tx(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                yield pdf
-                continue
-            shell_lens = pdf["shell_x"].map(len).to_numpy()
-            flat_sx = np.concatenate([np.asarray(v, dtype=np.float64) for v in pdf["shell_x"]])
-            flat_sy = np.concatenate([np.asarray(v, dtype=np.float64) for v in pdf["shell_y"]])
-            hole_rows = [list(map(list, _aslist(v))) for v in pdf["holes_x"]]
-            hole_rows_y = [list(map(list, _aslist(v))) for v in pdf["holes_y"]]
-            hole_lens = [[len(h) for h in hr] for hr in hole_rows]
-            flat_hx = np.concatenate(
-                [np.asarray(h, dtype=np.float64) for hr in hole_rows for h in hr]
-                or [np.empty(0)]
+    def transform(batches):
+        for batch in batches:
+            out = {c: batch.column(c) for c in batch.schema.names}
+            for cx, cy in (("shell_x", "shell_y"), ("holes_x", "holes_y")):
+                *xoff, xs = list_views(batch.column(cx))
+                *yoff, ys = list_views(batch.column(cy))
+                tx, ty = geom.merc_forward(xs, ys)
+                out[cx], out[cy] = from_views(*xoff, tx), from_views(*yoff, ty)
+            n = batch.num_rows
+            ex, ey = (
+                np.concatenate([batch.column(lo).to_numpy(), batch.column(hi).to_numpy()])
+                for lo, hi in (("env_minx", "env_maxx"), ("env_miny", "env_maxy"))
             )
-            flat_hy = np.concatenate(
-                [np.asarray(h, dtype=np.float64) for hr in hole_rows_y for h in hr]
-                or [np.empty(0)]
-            )
-            env_x = np.concatenate([pdf["env_minx"].to_numpy(), pdf["env_maxx"].to_numpy()])
-            env_y = np.concatenate([pdf["env_miny"].to_numpy(), pdf["env_maxy"].to_numpy()])
-
-            tsx, tsy = geom.merc_forward(flat_sx, flat_sy)
-            thx, thy = geom.merc_forward(flat_hx, flat_hy)
-            tex, tey = geom.merc_forward(env_x, env_y)
-
-            out = pdf.copy()
-            cuts = np.cumsum(shell_lens)[:-1]
-            out["shell_x"] = [a.tolist() for a in np.split(tsx, cuts)]
-            out["shell_y"] = [a.tolist() for a in np.split(tsy, cuts)]
-            hx_out, hy_out, pos = [], [], 0
-            for lens in hole_lens:
-                row_hx, row_hy = [], []
-                for ln in lens:
-                    row_hx.append(thx[pos : pos + ln].tolist())
-                    row_hy.append(thy[pos : pos + ln].tolist())
-                    pos += ln
-                hx_out.append(row_hx)
-                hy_out.append(row_hy)
-            out["holes_x"] = hx_out
-            out["holes_y"] = hy_out
+            tex, tey = geom.merc_forward(ex, ey)
             out["env_minx"], out["env_maxx"] = tex[:n], tex[n:]
             out["env_miny"], out["env_maxy"] = tey[:n], tey[n:]
             yield out
 
-    return polys.mapInPandas(tx, polys.schema)
+    return arrow_stage(polys, transform, polys.schema)
 
 
 def _meta_tables(spark: SparkSession, opt: Options, res: PipelineResult, t0: float) -> None:

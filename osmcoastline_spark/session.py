@@ -1,8 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 Defaults are tuned for correctness tests on local[*]; on a real cluster the
-same knobs hold: AQE on (runtime skew-join + partition coalescing), Arrow on
-(all hot-path UDFs are pandas/Arrow batched), explicit shuffle partition count.
+same knobs hold: AQE on (runtime skew-join + partition coalescing), Arrow
+batches sized for the Python stages (every one is a mapInArrow stage),
+explicit shuffle partition count.
 """
 
 from __future__ import annotations
@@ -39,12 +40,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalescing floors partitions at minPartitionSize (1 MB
-        # default) — a few-MB shuffle feeding an applyInPandas stage then
+        # default) — a few-MB shuffle feeding a Python stage then
         # collapses to ONE task and serializes the Python work, even with
         # parallelismFirst. Geometry kernels cost per ROW, not per byte:
         # keep tiny shuffles spread across the cores.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-        # All custom kernels are Arrow-batched pandas UDFs.
+        # Arrow for toPandas / createDataFrame(pandas) on the driver; the
+        # pipeline's own Python stages are mapInArrow (util.arrow_stage)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 64k-row Arrow batches: framing/flush overhead amortizes ~6×
         # better than the 10k default for the columnar kernels (a batch of

@@ -2,7 +2,9 @@
 the work: on a small `dirty`-shaped input (crossing rings, figure eights,
 duplicate ways, gaps, Antarctica), the crossing and overlap counts, the
 error tables and the exit code are the same under several shuffle
-partition counts and with adaptive execution off."""
+partition counts and with adaptive execution off; so are the land, water
+and line tables and the stats of a small `islands`-shaped run that splits
+its polygons."""
 
 import pytest
 
@@ -10,6 +12,10 @@ from osmcoastline_spark.plans.pipeline import Options, run_pipeline
 
 # the benchmark's `dirty` options
 DIRTY_OPTIONS = Options(output_rings=True, output_lines=True, output_polygons="none")
+# `islands` with lines, and polygons small enough that split runs several
+# rounds; water then clips split pieces to their owned boxes
+ISLANDS_OPTIONS = Options(output_polygons="both", output_lines=True, max_points_in_polygon=16)
+ISLANDS_TABLES = ("land_polygons", "water_polygons", "lines")
 
 CONFIGS = [
     {"spark.sql.shuffle.partitions": "1"},
@@ -56,6 +62,46 @@ def test_error_outputs_independent_of_partitioning(spark, dirty_inputs, conf):
         for k, v in conf.items():
             spark.conf.set(k, v)
         assert _outcome(spark, nodes, ways) == base
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def _islands_outcome(spark, nodes, ways) -> dict:
+    from perfbench.check import digest
+
+    res = run_pipeline(spark, nodes, ways, ISLANDS_OPTIONS)
+    try:
+        return {
+            **{t: digest(res.tables[t])[1] for t in ISLANDS_TABLES},
+            "stats": res.stats,
+            "exit_code": res.exit_code,
+        }
+    finally:
+        res.unpersist()
+
+
+@pytest.fixture(scope="module")
+def islands_inputs(spark, tmp_path_factory):
+    from perfbench.inputs import islands, write_parquet
+
+    # island 0 is a giant ring of hundreds of points, the rest have 4-23
+    nodes_dir, ways_dir = write_parquet(islands(7, n_islands=60), str(tmp_path_factory.mktemp("islands")))
+    nodes, ways = spark.read.parquet(nodes_dir), spark.read.parquet(ways_dir)
+    base = _islands_outcome(spark, nodes, ways)
+    s = base["stats"]
+    assert s["rings"] == 60 and s["land_polygons_after_split"] > s["land_polygons_before_split"]
+    return nodes, ways, base
+
+
+@pytest.mark.parametrize("conf", CONFIGS, ids=lambda c: "-".join(f"{k[10:]}={v}" for k, v in c.items()))
+def test_split_water_lines_independent_of_partitioning(spark, islands_inputs, conf):
+    nodes, ways, base = islands_inputs
+    before = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        assert _islands_outcome(spark, nodes, ways) == base
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)

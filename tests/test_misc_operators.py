@@ -1,5 +1,4 @@
-"""filter_planet (S3/J1), ways_debug (S7/A4), simplify (G14/F9),
-segment diff (J13), CLI (option parity)."""
+"""filter_planet (S3/J1), segment diff (J13), CLI (option parity)."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -12,8 +11,6 @@ from osmcoastline_spark.operators.segments_diff import (
     segments_equal,
     write_segments,
 )
-from osmcoastline_spark.operators.simplify import filter_min_area, simplify_polygons
-from osmcoastline_spark.operators.ways_debug import total_length_m, ways_lines
 from osmcoastline_spark.synth import fixture_df
 
 
@@ -32,40 +29,6 @@ def test_filter_planet(spark):
     ids = {r.node_id for r in kept_nodes.collect()}
     # way nodes 100,101 + tagged node 200; NOT 102 (only on the road), NOT 201
     assert ids == {100, 101, 200}
-
-
-def test_ways_debug_and_length(spark):
-    nodes, ways = fixture_df(
-        spark,
-        [(100, 0.0, 0.0), (101, 0.0, 1.0), (102, 0.0, 2.0)],
-        [(200, [100, 101, 102], {"natural": "coastline", "name": "testline"})],
-    )
-    out = ways_lines(ways, nodes).collect()
-    assert len(out) == 1 and out[0].name == "testline" and not out[0].bogus
-    from osmcoastline_spark.operators.locations import ways_with_locations
-
-    total = total_length_m(ways_with_locations(ways, nodes))
-    # 2 degrees of meridian ≈ 222,390 m (r=6371000)
-    expected = float(geom.haversine_m(0, 0, 0, 2))
-    assert abs(total - expected) < 1.0
-
-
-def test_simplify_and_area_filter(spark):
-    # noisy square: extra collinear-ish points that DP should remove
-    xs = [0.0, 0.5, 1.0, 1.0, 1.0, 0.5, 0.0, 0.0]
-    ys = [0.0, 0.001, 0.0, 0.5, 1.0, 1.0, 1.0, 0.5]
-    e = geom.envelope(xs, ys)
-    df = spark.createDataFrame(
-        [(1, xs, ys, None, None, len(xs), *e)],
-        "poly_id long, shell_x array<double>, shell_y array<double>, "
-        "holes_x array<array<double>>, holes_y array<array<double>>, "
-        "npoints int, env_minx double, env_miny double, env_maxx double, env_maxy double",
-    )
-    simp = simplify_polygons(df, 0.01).collect()
-    assert len(simp) == 1
-    assert simp[0].npoints < len(xs)
-    assert filter_min_area(df, 0.5).count() == 1
-    assert filter_min_area(df, 2.0).count() == 0
 
 
 def test_segment_diff_roundtrip(spark, tmp_path):
@@ -150,6 +113,29 @@ def test_check_polygons_post_split(spark):
     assert rows[2].npoints == len(rx)
     assert geom.signed_area2(rx, ry) < 0
     assert rows[2].env_maxx == rx.max() and rows[2].env_miny == ry.min()
+
+
+def test_repairs_drop_every_row_of_a_batch(spark):
+    """A batch whose every flagged row is unrepairable yields no rows from
+    either repair pass (the kernel's empty selection stays typed)."""
+    from osmcoastline_spark.operators.repair import buffer0_triage, check_polygons
+
+    flat_x, flat_y = [0.0, 1.0, 2.0, 0.0], [0.0, 0.0, 0.0, 0.0]  # zero area
+    polys = spark.createDataFrame(
+        [(3, flat_x, flat_y, None, None, 4, 0.0, 0.0, 2.0, 0.0)],
+        "poly_id long, shell_x array<double>, shell_y array<double>, "
+        "holes_x array<array<double>>, holes_y array<array<double>>, "
+        "npoints int, env_minx double, env_miny double, "
+        "env_maxx double, env_maxy double",
+    )
+    out, warnings = check_polygons(polys)
+    assert warnings == 1 and out.count() == 0
+    rings = spark.createDataFrame(
+        [(3, [1, 2, 3, 1], flat_x, flat_y, 1, False, 1, 4)],
+        "ring_id long, node_ids array<long>, xs array<double>, ys array<double>, "
+        "nways int, fixed boolean, lead long, npoints int",
+    )
+    assert buffer0_triage(rings).count() == 0
 
 
 def test_check_polygons_clean_passthrough_no_python(spark):
@@ -353,37 +339,6 @@ def test_rings_to_lines_max_points_zero_reference_parity(spark):
     # large max_points: the whole ring as one line
     out_big = rings_to_lines(df, max_points=1000).collect()
     assert len(out_big) == 1 and len(out_big[0].xs) == 5
-
-
-def test_filter_min_area_subtracts_holes(spark):
-    """ST_Area semantics: a polygon whose holes eat most of the shell
-    must be filtered by its NET area (simplify_land_polygons.sql:19-21),
-    not its shell area."""
-    from osmcoastline_spark.operators.simplify import filter_min_area
-
-    donut = {
-        # shell 10x10 = 100; hole 9x9 = 81 -> net 19
-        "shell_x": [0.0, 10.0, 10.0, 0.0, 0.0],
-        "shell_y": [0.0, 0.0, 10.0, 10.0, 0.0],
-        "holes_x": [[0.5, 9.5, 9.5, 0.5, 0.5]],
-        "holes_y": [[0.5, 0.5, 9.5, 9.5, 0.5]],
-    }
-    solid = {
-        # 5x5 = 25, no holes
-        "shell_x": [0.0, 5.0, 5.0, 0.0, 0.0],
-        "shell_y": [0.0, 0.0, 5.0, 5.0, 0.0],
-        "holes_x": [],
-        "holes_y": [],
-    }
-    df = spark.createDataFrame(
-        [donut, solid],
-        "shell_x array<double>, shell_y array<double>, "
-        "holes_x array<array<double>>, holes_y array<array<double>>",
-    )
-    kept = filter_min_area(df, 20.0).collect()
-    # shell-only area would keep BOTH (100 > 20 and 25 > 20); net area
-    # keeps only the solid square (19 < 20 < 25)
-    assert len(kept) == 1 and kept[0].shell_x[1] == 5.0
 
 
 def test_filter_planet_keeps_bogus_ways(spark):

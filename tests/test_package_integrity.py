@@ -83,3 +83,27 @@ def test_only_util_calls_local_checkpoint():
             ):
                 callers.append(os.path.relpath(path, pkg))
     assert sorted(callers) == ["util.py"], callers
+
+
+def test_pipeline_python_stages_cross_one_arrow_boundary():
+    """No operator or plan runs a pandas UDF stage: every Python stage of
+    the pipeline is a mapInArrow stage through util.arrow_stage, which
+    reads and writes list columns with one codec."""
+    pkg = os.path.dirname(osmcoastline_spark.__file__)
+    callers = []
+    for sub in ("operators", "plans"):
+        for dirpath, _dirs, files in os.walk(os.path.join(pkg, sub)):
+            for fn in files:
+                if not fn.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    tree = ast.parse(f.read())
+                callers += [
+                    f"{os.path.relpath(path, pkg)}:{node.lineno}"
+                    for node in ast.walk(tree)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("mapInPandas", "applyInPandas")
+                ]
+    assert callers == [], callers

@@ -93,6 +93,23 @@ def test_water_empty_tiles(spark):
     assert len(rows) == 3
     full = [r for r in rows if not r.holes_x]
     assert len(full) == 2
+    # a full tile's corners are the bits the tile math gives: ix * cell + x0
+    # and (ix + 1) * cell + x0 in double arithmetic, on a grid whose cell
+    # and origin are not exact binary fractions
+    cell, x0, y0 = 0.3, -180.0, -90.0
+    land = _poly_df(spark, [-179.9, -179.9, -179.8, -179.8], [-89.9, -89.8, -89.8, -89.9])
+    water = water_polygons(
+        land, cell_deg=cell, extent=(x0, y0, x0 + 4 * cell, y0 + 3 * cell), include_empty_tiles=True
+    )
+    full = [r for r in water.collect() if not r.holes_x]
+    assert len(full) == 11
+    for r in full:
+        ix, iy = divmod(r.cell, 1_000_000)
+        lo_x, hi_x = ix * cell + x0, (ix + 1) * cell + x0
+        lo_y, hi_y = iy * cell + y0, (iy + 1) * cell + y0
+        assert [v.hex() for v in r.shell_x] == [v.hex() for v in (lo_x, lo_x, hi_x, hi_x)]
+        assert [v.hex() for v in r.shell_y] == [v.hex() for v in (lo_y, hi_y, hi_y, lo_y)]
+        assert (r.env_minx, r.env_miny, r.env_maxx, r.env_maxy) == (lo_x, lo_y, hi_x, hi_y)
 
 
 def test_water_merge_empty_tiles(spark):
