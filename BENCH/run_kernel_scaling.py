@@ -57,8 +57,8 @@ from pyspark.sql import functions as F
 coastline_ways(ways).select(
     "way_id", F.posexplode("node_ids").alias("pos", "node_id")
 ).write.mode("overwrite").parquet(os.path.join(out, "refs"))
-wl = ways_with_locations(coastline_ways(ways), nodes)
-closed, open_ = assemble_rings(wl)
+cw = coastline_ways(ways)
+closed, open_, _ = assemble_rings(cw, ways_with_locations(cw, nodes))
 rings = closed.unionByName(open_)
 rings.write.mode("overwrite").parquet(os.path.join(out, "rings"))
 pres = polygonize(route_rings(closed)["polygonizable"])
@@ -133,7 +133,7 @@ w2 = shuffle_write_bytes(); sw["locjoin_flat"] = w2 - w1
 # historical variant (explode + checkpointed inputs), before the 1.2 GB
 # segs checkpoint enters the block manager: measuring it with that
 # storage resident showed 3× worse times purely from heap pressure (GC)
-dt, n = act(ways_with_locations(coastline_ways(ways), nodes)); res["locjoin"] = [dt, n]
+dt, n = act(collect_locations(ways_with_locations(coastline_ways(ways), nodes))); res["locjoin"] = [dt, n]
 w3 = shuffle_write_bytes(); sw["locjoin"] = w3 - w2
 segs, edges = slab_checkpoint(ring_segments(rings), cpus)  # input for intersect
 dt, n = act(segment_sweep(segs, edges, 0.5)); res["intersect"] = [dt, n]

@@ -350,12 +350,18 @@ def q_ring_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("ys"),
     )
-    # max_chains_hint: each ring contributes s = (r%7)+1 <= 7 ways and
-    # chains are one-per-way, so 7*R provably bounds the chain count.
-    # assemble_rings always checkpoints the merged rings: skipping it made
-    # the final filter/projection re-evaluate the merge chain through
-    # predicate pushdown (measured A/B round 6: 1.19 s vs 2.0 s per run).
-    closed, open_ = assemble_rings(ways_loc, max_chains_hint=7 * R)
+    # assemble_rings takes the ways (node ids) and their located points,
+    # here exploded from the synthetic arrays
+    points = ways_loc.select(
+        "way_id", F.posexplode(F.arrays_zip("node_ids", "xs", "ys")).alias("pos", "p")
+    ).select(
+        "way_id",
+        "pos",
+        F.col("p.node_ids").alias("node_id"),
+        F.col("p.xs").alias("lon"),
+        F.col("p.ys").alias("lat"),
+    )
+    closed, _open, _seen = assemble_rings(ways_loc.select("way_id", "node_ids"), points)
     return closed.select(
         "ring_id", "nways", F.size("node_ids").cast("int").alias("npoints")
     )

@@ -77,7 +77,8 @@ def main() -> None:
     from osmcoastline_spark.synth import synth_nodes_ways as _synw
 
     _n, _w = _synw(spark, 10, seed=7)
-    _c, _o = _ar(_wwl(_cw(_w), _n))
+    _cws = _cw(_w)
+    _c, _o, _ = _ar(_cws, _wwl(_cws, _n))
     _c.count(); _o.count()
 
     bench_queries = [

@@ -18,11 +18,11 @@ from osmcoastline_spark import geom
 def antarctica_window():
     """Detection window of the Antarctica ring: an open ring that starts
     just east of the antimeridian and ends just west of it, both ends
-    between 77°S and 78°S."""
-    first_lon = F.element_at("xs", 1)
-    last_lon = F.element_at("xs", -1)
-    first_lat = F.element_at("ys", 1)
-    last_lat = F.element_at("ys", -1)
+    between 77°S and 78°S. A ring with no located point is not in it."""
+    first_lon = F.try_element_at("xs", F.lit(1))
+    last_lon = F.try_element_at("xs", F.lit(-1))
+    first_lat = F.try_element_at("ys", F.lit(1))
+    last_lat = F.try_element_at("ys", F.lit(-1))
     return (
         (first_lon > 179.99)
         & (last_lon < -179.99)

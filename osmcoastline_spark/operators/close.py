@@ -225,7 +225,6 @@ def close_rings(
     safe at no cost; otherwise (or with no bound) one bounded probe,
     limit(cap + 1).count(), decides and an input over the cap raises.
     """
-    spark = open_rings.sparkSession
     if max_rows is None or max_rows > max_driver_endpoints:
         n = open_rings.limit(max_driver_endpoints + 1).count()
         if n > max_driver_endpoints:
@@ -264,5 +263,5 @@ def close_rings(
 
     from osmcoastline_spark.operators.merge_apply import apply_merge_plan
 
-    merged = apply_merge_plan(spark, open_rings, res.plan, res.finalize)
+    merged = apply_merge_plan(open_rings, res.plan, res.finalize)
     return merged, res

@@ -1,8 +1,12 @@
 """Location scatter-join (reference J2) + missing-location check (J3).
 
 The reference fills node locations through a pointer multimap
-(src/osmcoastline.cpp:276-297, src/coastline_ring.cpp:36-40). The Spark
-equivalent is explode → equi-join → re-collect. Per the north rule the
+(src/osmcoastline.cpp:276-297, src/coastline_ring.cpp:36-40) in pass 2,
+after pass 1 has assembled the rings from node ids. The Spark equivalent
+is explode → equi-join → re-collect, and here too the re-collect comes
+after the ring plan: `ways_with_locations` gives the lazily located refs
+and ring assembly (rings.assemble_rings) regroups them by ring, not by
+way, so the coordinate arrays are built once. Per the north rule the
 join is an explicit hash shuffle on node_id; hot node ids (shared ring
 endpoints) are bounded (≤2 ways share a node in valid coastline data) so
 no salting is needed here — skew lives in *cells*, not node ids, and is
@@ -35,39 +39,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def collect_locations(joined: DataFrame, count_missing: bool = False) -> DataFrame:
+def collect_locations(joined: DataFrame) -> DataFrame:
     """(way_id, pos, node_id, lon, lat) rows → one array row per way.
 
     Pure-JVM re-collect: groupBy(way_id) + sort_array(collect_list(
     struct(pos, ...))) — map-side partial aggregation, one shuffle, no
     Python. pos is unique per way (posexplode output); the extra struct
     fields give a deterministic total order even for malformed inputs
-    with duplicate node rows. With count_missing the input may be a LEFT
-    join: NULL-lon refs are excluded from the arrays (collect_list skips
-    the null-ed struct) and counted in `nmiss`.
+    with duplicate node rows.
     """
-    if count_missing:
-        return (
-            joined.groupBy("way_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            F.col("lon").isNotNull(),
-                            F.struct("pos", "node_id", "lon", "lat"),
-                        )
-                    )
-                ).alias("pts"),
-                F.sum(F.col("lon").isNull().cast("int")).alias("nmiss"),
-            )
-            .select(
-                "way_id",
-                F.col("pts.node_id").alias("node_ids"),
-                F.col("pts.lon").alias("xs"),
-                F.col("pts.lat").alias("ys"),
-                "nmiss",
-            )
-        )
     return (
         joined.groupBy("way_id")
         .agg(
@@ -84,18 +64,13 @@ def collect_locations(joined: DataFrame, count_missing: bool = False) -> DataFra
     )
 
 
-def ways_with_locations(
-    ways: DataFrame, nodes: DataFrame, count_missing: bool = False
-) -> DataFrame:
-    """Attach ordered coordinate arrays to each way.
+def ways_with_locations(ways: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The located refs of `ways`: (way_id, pos, node_id, lon, lat), one
+    row per node ref, lazily (no job of its own).
 
-    Output: way_id, node_ids, xs, ys (+ `nmiss` when `count_missing`).
-
-    With `count_missing` the node join runs LEFT and each way carries its
-    missing-location count — the J3 check then reads a tiny aggregate off
-    the materialized result instead of paying a second explode+join pass
-    (refs with missing locations are excluded from the arrays, matching
-    the inner-join behavior).
+    The node join runs LEFT: a ref whose node has no location keeps its
+    row with null lon/lat, so the J3 missing-location count is a sum the
+    assembly checkpoint observes, with no second explode+join pass.
     """
     refs = ways.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
     # SHUFFLE_HASH: both sides are planet-sized (node table >> broadcast
@@ -103,11 +78,8 @@ def ways_with_locations(
     # SortMergeJoin additionally SORTS both shuffled sides — two
     # UnsafeExternalSorter passes over ~10 rows per way that the hash join
     # skips, and the downstream re-collect does not need sorted input
-    # (sort_array orders within each way). Measured 2→8 core efficiency
+    # (sort_array orders within each ring). Measured 2→8 core efficiency
     # 0.40 → 0.76 from this hint + the 16 MB AQE advisory (session.py).
-    joined = refs.join(
-        nodes.select("node_id", "lon", "lat").hint("SHUFFLE_HASH"),
-        "node_id",
-        "left" if count_missing else "inner",
+    return refs.join(
+        nodes.select("node_id", "lon", "lat").hint("SHUFFLE_HASH"), "node_id", "left"
     )
-    return collect_locations(joined, count_missing)

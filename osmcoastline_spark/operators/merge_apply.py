@@ -1,86 +1,69 @@
-"""Distributed application of a chain-merge plan.
+"""Distributed application of a chain-merge plan (gap closing, R2).
 
-Ring assembly's mating rounds, its driver-finish phase, and gap closing (R2)
-all reduce to the same shape: a merge plan — (ring_id → group, seq, seq2,
-skip_first) plus per-group finalize actions — computed from ENDPOINTS only,
-applied to the coordinate arrays in ONE groupBy(group_id) pass of JVM array
-expressions. The plan is O(open chains); the arrays never ride an iterative
-shuffle.
+The gap-close planner (close.plan_close_rings) works on ring ENDPOINTS
+only and hands over a merge plan — (ring_id → group, seq, skip_first)
+plus per-group finalize actions. The plan is applied to the coordinate
+arrays in ONE groupBy(group_id) pass of JVM array expressions; the plan
+is O(open rings) and reaches the JVM as one Arrow-built LocalRelation
+that the array side joins by broadcast.
+
+Ring assembly (rings.assemble_rings) needs no separate application: its
+plan is applied while the location join regroups the points, and it
+shares this module's lead rotation (`rotate_closed_to_lead`).
 
 `seq`/`seq2` order parts within a group lexicographically: `seq` is the
-outer position assigned by the planner (driver chain order), `seq2` the
-inner position for chains that were pre-merged during the distributed
-mating rounds (member order within the pre-merged chain).
+outer position assigned by the planner, `seq2` an inner position (0 for
+every gap-close part).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from osmcoastline_spark import util
 
 RING_SCHEMA = (
     "ring_id long, node_ids array<long>, xs array<double>, ys array<double>, "
     "nways int, fixed boolean, lead long"
 )
 
-PLAN_SCHEMA = "ring_id long, group_id long, seq int, seq2 int, skip_first boolean"
-FIN_SCHEMA = "group_id long, append_first boolean, fake_close boolean, grp_fixed boolean"
+# one row per part: the group's finalize flags ride on each of its parts
+PLAN_SCHEMA = (
+    "ring_id long, group_id long, seq int, seq2 int, skip_first boolean, "
+    "append_first boolean, fake_close boolean, grp_fixed boolean"
+)
 
 
 def apply_merge_plan(
-    spark: SparkSession,
     open_rings: DataFrame,
     plan: list[tuple],  # (ring_id, group_id, seq, skip_first)
     finalize: list[tuple],  # (group_id, append_first, fake_close, grp_fixed)
 ) -> DataFrame:
-    """List-based wrapper (driver-computed plans: gap closing, small-input
-    assembly finish). The plan is tiny — both joins broadcast."""
-    plan_df = spark.createDataFrame(
-        [(r, g, s, 0, sk) for r, g, s, sk in plan], PLAN_SCHEMA
-    )
-    fin_df = spark.createDataFrame(finalize, FIN_SCHEMA)
-    return apply_merge_plan_df(open_rings, plan_df, fin_df, broadcast_plan=True)
-
-
-def apply_merge_plan_df(
-    open_rings: DataFrame,
-    plan_df: DataFrame,  # PLAN_SCHEMA columns
-    fin_df: DataFrame,  # FIN_SCHEMA columns
-    broadcast_plan: bool = False,
-) -> DataFrame:
-    """Concatenate ring parts per group, ordered by (seq, seq2); rotate rings
+    """Concatenate ring parts per group, ordered by seq; rotate rings
     that closed so they start at the min-way chain's lead node.
+
+    The plan is a driver-computed list, so it is small: each group's
+    finalize flags fold into its part rows, the rows become one
+    LocalRelation (util.local_frame) and the array side joins it once, by
+    broadcast — the groupBy(group_id) is the only shuffle.
 
     The concatenation/rotation runs as pure JVM array expressions —
     flatten/slice/concat move longs and doubles without any arithmetic, so
     the output is bit-identical to the original per-part Python merge
-    (kept in tests/test_merge_apply.py as the reference) while skipping
-    the Arrow round-trip and the per-part Python loop (measured round 6:
-    2.0 s → ~0.7 s for the 38.5k part / 8.6k group merge at bench sf0.1).
+    (kept in tests/test_merge_apply.py as the reference).
 
-    Precondition shared by every planner (rings.groups_to_plan, the
-    driver-finish expansion, close.plan_close_rings): the FIRST part of a
-    group in (seq, seq2) order always has skip_first=false — this form
-    drops the first element of every skip_first part
-    position-independently, which the Python reference only does once the
-    accumulated array is non-empty (equivalent under the precondition;
-    pinned by test_merge_apply_engines_agree).
+    Precondition of the planner (close.plan_close_rings): the FIRST part
+    of a group in seq order always has skip_first=false — this form drops
+    the first element of every skip_first part position-independently,
+    which the Python reference only does once the accumulated array is
+    non-empty (equivalent under the precondition; pinned by
+    test_merge_apply_engines_agree).
     """
-    from pyspark.sql import functions as F
-
-    if broadcast_plan:
-        plan_df = F.broadcast(plan_df)
-        fin_df = F.broadcast(fin_df)
-    else:
-        # plan rows ∝ open chains — usually broadcastable, but NEVER risk
-        # the planner flipping the join and broadcasting the coordinate-
-        # array side (its post-checkpoint size statistics are unreliable;
-        # observed driver OOM at 1.6M islands). Force a shuffle hash join.
-        plan_df = plan_df.hint("shuffle_hash")
-        fin_df = fin_df.hint("shuffle_hash")
-    # One shuffle: the groupBy(group_id). Aggregate parts per group JVM-side,
-    # then merge the aggregated rows with Catalyst array expressions.
-    tagged = open_rings.join(plan_df, "ring_id").join(fin_df, "group_id")
-    return _merge_catalyst(tagged)
+    flags = {g: rest for g, *rest in finalize}
+    rows = [(r, g, s, 0, sk, *flags[g]) for r, g, s, sk in plan]
+    plan_df = util.local_frame(open_rings.sparkSession, rows, PLAN_SCHEMA)
+    return _merge_catalyst(open_rings.join(F.broadcast(plan_df), "ring_id"))
 
 
 def _merge_catalyst(tagged: DataFrame) -> DataFrame:
@@ -99,8 +82,6 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
     Fields) and flattens the resulting array-of-arrays — every remaining
     expression is a per-GROUP built-in over the assembled arrays.
     """
-    from pyspark.sql import functions as F
-
     trimmed = tagged.selectExpr(
         "group_id",
         "append_first",
@@ -162,17 +143,37 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
         "ring_id",
         "lead",
     )
-    # Rotation is only safe when the ring is closed in COORDINATES too:
-    # fake_close aliases the last node id while its location stays distinct
-    # — rotating such a ring would drop the real last vertex.
-    rot = closed.selectExpr(
+    return rotate_closed_to_lead(closed, "ids2", "xs1", "ys1", fake_close="fake_close")
+
+
+def rotate_closed_to_lead(
+    df: DataFrame,
+    ids: str = "node_ids",
+    xs: str = "xs",
+    ys: str = "ys",
+    fake_close: str = "false",
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """RING_SCHEMA rows (plus the `keep` columns) from `df`, whose ring
+    arrays are the columns `ids`/`xs`/`ys`: each ring that is closed
+    rotates so it starts at its `lead` node.
+
+    For ring [A,B,C,D,A] with lead C: the core [A,B,C,D] (the closing
+    vertex dropped) splits at C into [C,D] + [A,B], and the lead closes
+    it again → [C,D,A,B,C]. Rotation is only safe when the ring is closed
+    in COORDINATES too: fake_close (the SQL boolean `fake_close`) aliases
+    the last node id while its location stays distinct — rotating such a
+    ring would drop the real last vertex. A ring whose lead is its first
+    node, or is not in it, stays as it is.
+    """
+    rot = df.selectExpr(
         "*",
-        "IF(size(ids2) < 1, false, "
-        "ids2[0] = element_at(ids2, -1) AND NOT fake_close "
-        "AND xs1[0] = element_at(xs1, -1) AND ys1[0] = element_at(ys1, -1)) "
+        f"IF(size({ids}) < 1, false, "
+        f"{ids}[0] = element_at({ids}, -1) AND NOT {fake_close} "
+        f"AND {xs}[0] = element_at({xs}, -1) AND {ys}[0] = element_at({ys}, -1)) "
         "AS coord_closed",
-        "CAST(array_position(ids2, lead) AS INT) AS fp",
-        "size(ids2) - 1 AS m",
+        f"CAST(array_position({ids}, lead) AS INT) AS fp",
+        f"size({ids}) - 1 AS m",
     )
 
     def rotate(col: str) -> str:
@@ -185,10 +186,11 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
 
     return rot.selectExpr(
         "ring_id",
-        f"{rotate('ids2')} AS node_ids",
-        f"{rotate('xs1')} AS xs",
-        f"{rotate('ys1')} AS ys",
+        f"{rotate(ids)} AS node_ids",
+        f"{rotate(xs)} AS xs",
+        f"{rotate(ys)} AS ys",
         "CAST(nways AS INT) AS nways",
         "fixed",
         "lead",
+        *keep,
     )

@@ -208,7 +208,6 @@ class PolygonizeResult:
 
 def polygonize(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> PolygonizeResult:
     """Closed rings (npoints>3, OSM orientation) → polygons with holes."""
-    spark = rings.sparkSession
     # the shell and hole-candidate counts, observed while the checkpoint
     # is written, decide the shape of the rest of the plan: with ZERO hole
     # candidates (the common coastline case — islands are simple CCW
@@ -244,7 +243,7 @@ def polygonize(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> Polygoni
             .withColumn("hole_ring_ids", F.lit(None).cast("array<long>"))
             .withColumn("bad", F.lit(False))
         )
-        return _polygonize_result(spark, all_polys, n_bad=0, n_good=n_shells)
+        return _polygonize_result(all_polys, n_bad=0, n_good=n_shells)
 
     hole_pts = hole_cands.select(
         F.col("ring_id").alias("point_id"),
@@ -326,29 +325,24 @@ def polygonize(rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG) -> Polygoni
         n_good=F.count_if(~F.col("bad")),
     )
     n_bad, n_good = seen["n_bad"], seen["n_good"]
-    return _polygonize_result(spark, all_polys, n_bad=n_bad, n_good=n_good)
+    return _polygonize_result(all_polys, n_bad=n_bad, n_good=n_good)
 
 
-def _polygonize_result(
-    spark, all_polys: DataFrame, n_bad: int, n_good: int
-) -> PolygonizeResult:
+def _polygonize_result(all_polys: DataFrame, n_bad: int, n_good: int) -> PolygonizeResult:
     good = all_polys.filter(~F.col("bad"))
     bad = all_polys.filter(F.col("bad"))
 
     # reference quirk: the 'invalid' error line is only written on the
     # multipolygon path (add_polygons_in_multi_to); a lone invalid polygon
     # is dropped silently (errors++ only)
-    if n_bad and (n_good + n_bad) > 1:
-        invalid_lines = bad.select(
-            F.lit(0).cast("long").alias("osm_id"),
-            F.lit("invalid").alias("error"),
-            "xs",
-            "ys",
-        )
-    else:
-        invalid_lines = spark.createDataFrame(
-            [], "osm_id long, error string, xs array<double>, ys array<double>"
-        )
+    invalid_lines = bad.select(
+        F.lit(0).cast("long").alias("osm_id"),
+        F.lit("invalid").alias("error"),
+        "xs",
+        "ys",
+    )
+    if not (n_bad and (n_good + n_bad) > 1):
+        invalid_lines = invalid_lines.limit(0)
 
     polys = good.select(
         F.col("ring_id").alias("poly_id"),

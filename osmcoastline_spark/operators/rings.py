@@ -1,11 +1,16 @@
-"""R1 — ring assembly as a distributed fixpoint (reference:
-src/coastline_ring_collection.cpp:51-118).
+"""R1 — ring assembly in the reference's pass order: the merge plan from
+node ids first, the locations second (reference src/osmcoastline.cpp:
+246-259 assembles rings from way node ids in pass 1,
+src/coastline_ring_collection.cpp:51-118; pass 2 scatters node
+locations into the ring slots, src/osmcoastline.cpp:276-297).
 
-The reference chains ways sequentially through two endpoint hash maps. The
-equivalent parallel formulation: ways are nodes of a functional graph with an
-edge a→b when a.last_node_id == b.first_node_id; rings are the cycles /
-chains of that graph. We contract the graph with randomized-mating list
-contraction:
+Pass 1 needs only each way's (way_id, first node, last node). One
+checkpoint of those endpoints observes the way count and the open-way
+count; closed single ways (F4 fast path,
+coastline_ring_collection.hpp:82-87) need no plan at all. The open ways
+are chained either sequentially on the driver (`_driver_finish_plan`, a
+port of the reference's endpoint-map chaining, when the open count is at
+most `driver_threshold`) or by randomized-mating list contraction:
 
   round k: self-join open chains on (last_node == first_node);
            a pair (a,b) merges iff coin_k(a)=0 and coin_k(b)=1, where coin_k
@@ -13,14 +18,14 @@ contraction:
            merge per round and no chain participates in two merges at once;
            expected O(log n) rounds, each one equi-join shuffle on endpoint.
 
-Ring id propagation = min(way_id) (reference coastline_ring.hpp:140-144).
-Closed ways skip the loop entirely (F4 fast path,
-coastline_ring_collection.hpp:82-87). Arrays ride through the shuffles; only
-open chains (a tiny, shrinking set at real data quality) re-shuffle.
+Pass 2 applies the plan where the location join regroups its points:
+each located point takes its way's (group, seq, seq2, skip_first) from
+the plan and one groupBy(group) collects the ring in order. Coordinate
+arrays are built once and never ride a second shuffle.
 
-At 100 TB scale: the loop state is proportional to the number of *open*
-chains, not rows; every round localCheckpoints to truncate lineage (the
-Iceberg-snapshot-per-round checkpoint in production — see sinks).
+Ring id = min(way_id) of the group (reference coastline_ring.hpp:140-144).
+At 100 TB scale the mating-round state is proportional to the number of
+*open* chains, not rows; every round checkpoints to truncate lineage.
 """
 
 from __future__ import annotations
@@ -30,64 +35,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from osmcoastline_spark import util
+from osmcoastline_spark.operators.merge_apply import rotate_closed_to_lead
+
+# (way → group) rows of an assembly merge plan; `ring_id` is the way id
+PLAN_SCHEMA = "ring_id long, group_id long, seq int, seq2 int, skip_first boolean"
 
 
-def _closed():
-    return F.element_at("node_ids", 1) == F.element_at("node_ids", -1)
-
-
-def _with_endpoints(df: DataFrame) -> DataFrame:
-    return df.withColumn("first_node", F.element_at("node_ids", 1)).withColumn(
-        "last_node", F.element_at("node_ids", -1)
-    )
-
-
-def _init_chains(ways_loc: DataFrame) -> DataFrame:
-    return ways_loc.select(
-        F.col("way_id").alias("ring_id"),
-        "node_ids",
-        "xs",
-        "ys",
-        F.lit(1).alias("nways"),
-        F.lit(False).alias("fixed"),
-        # 'lead' = first node of the min-way-id chain: closed rings are
-        # rotated to start here, mirroring the reference's
-        # insertion-order ring start (needed for questionable-marking and
-        # WKT golden parity).
-        F.element_at("node_ids", 1).alias("lead"),
-    )
-
-
-def rotate_closed_to_lead(df: DataFrame) -> DataFrame:
-    """Rotate each CLOSED ring (first==last) so node_ids[0] == lead.
-
-    For ring [A,B,C,D,A] with lead C: slice(pos, n-pos) = [C,D] (drops the
-    duplicated last vertex), slice(1, pos-1) = [A,B] (the prefix, INCLUDING
-    the original first vertex), then re-append the lead → [C,D,A,B,C].
-    """
-    pos = F.array_position("node_ids", F.col("lead"))
-    n = F.size("node_ids")
-
-    def rot(c):
-        col = F.col(c)
-        return F.when((pos <= 1) | (pos == 0), col).otherwise(
-            F.concat(
-                F.slice(col, pos.cast("int"), (n - pos).cast("int")),
-                F.slice(col, 1, (pos - 1).cast("int")),
-                F.array(F.element_at(col, pos.cast("int"))),
-            )
-        )
-
-    return (
-        df.withColumn("_nids", rot("node_ids"))
-        .withColumn("_xs", rot("xs"))
-        .withColumn("_ys", rot("ys"))
-        .drop("node_ids", "xs", "ys")
-        .withColumnRenamed("_nids", "node_ids")
-        .withColumnRenamed("_xs", "xs")
-        .withColumnRenamed("_ys", "ys")
-        .select(*df.columns)
-    )
+def _closed() -> Column:
+    """first node == last node; null (neither closed nor open) for an
+    empty node list."""
+    return F.try_element_at("node_ids", F.lit(1)) == F.try_element_at("node_ids", F.lit(-1))
 
 
 def _driver_finish_plan(endpoints: list[tuple[int, int, int]]) -> tuple[list, list]:
@@ -95,7 +52,8 @@ def _driver_finish_plan(endpoints: list[tuple[int, int, int]]) -> tuple[list, li
     a port of the reference's add_partial_ring map juggling
     (src/coastline_ring_collection.cpp:51-118) applied to partially
     assembled chains in ascending ring_id order. Returns (plan, finalize)
-    rows for apply_merge_plan. State is O(open chains)."""
+    rows: (chain id, group id, seq, skip_first) per chain and one
+    (group id, False, False, False) per group. State is O(open chains)."""
 
     class Obj:
         __slots__ = ("parts", "first", "last", "dead")
@@ -173,109 +131,83 @@ def _driver_finish_plan(endpoints: list[tuple[int, int, int]]) -> tuple[list, li
 
 
 def assemble_rings(
-    ways_loc: DataFrame,
+    ways: DataFrame,
+    points: DataFrame,
     max_rounds: int = 64,
     driver_threshold: int = 2_000_000,
-    assume_materialized: bool = False,
-    max_chains_hint: int | None = None,
     observe: dict[str, Column] | None = None,
-) -> tuple:
-    """Returns (closed_rings, open_rings) with schema
-    ring_id, node_ids, xs, ys, nways, fixed, lead.
+) -> tuple[DataFrame, DataFrame, dict]:
+    """Returns (closed_rings, open_rings, seen): rings with schema
+    ring_id, node_ids, xs, ys, nways, fixed, lead, and the values observed
+    on the way: `ways` (coastline way rows, empty node lists included) and
+    `nmiss` (refs with no node location, J3) plus `observe` ({name:
+    aggregate Column}, computed over every assembled ring in the job that
+    checkpoints them).
 
-    `observe` ({name: aggregate Column}) is computed over the merged
-    chains (every ring that was open in `ways_loc`, after assembly) in
-    the same job as their checkpoint; the call then returns
-    (closed_rings, open_rings, {name: value}).
+    `ways` are the coastline ways (way_id, node_ids); `points` are their
+    located refs (way_id, pos, node_id, lon, lat) as
+    locations.ways_with_locations gives them, lon/lat null for a node with
+    no location. A ref with no location is left out of its ring.
 
-    driver_threshold default (2M, raised from 200k in round 5): the
-    sequential finish moves only (ring_id, first, last) triples — ~24
-    bytes/chain, so 2M chains is ~58 MB of Arrow transfer plus an
-    O(n log n) chain walk. Measured A/B at 2M islands / 2.4M open chains
-    (BENCH/run_assembly_knob.py): immediate driver finish 29.8 s / 13
-    jobs vs distributed-rounds-first 36.7 s / 77 jobs, outputs
-    bit-identical — the distributed mating rounds remain the fallback
-    for inputs whose open-chain count exceeds what the driver holds.
+    Pass 1 (ids only). The plan is built from one endpoint checkpoint. When
+    the open-way count observed there is at most `driver_threshold`, the
+    driver chains the (way_id, first, last) triples — ~24 bytes per way,
+    ~58 MB of Arrow transfer at 2.4M open ways, plus an O(n log n) walk.
+    At 2.4M open chains the immediate driver finish ran 29.8 s / 13 jobs
+    against 36.7 s / 77 jobs for distributed rounds first, outputs
+    bit-identical (BENCH/BASELINE.md §2c). Otherwise the mating rounds
+    contract the endpoint graph, shuffling O(chains × 32 B) per round,
+    until the open count drops under the threshold (then the driver
+    finishes) or no adjacency is left.
 
-    Endpoint-only fixpoint: the coordinate arrays NEVER ride an iterative
-    shuffle. The mating rounds operate on (ring_id, members, first_node,
-    last_node) rows — a few dozen bytes per open chain — and only the merge
-    PLAN accumulates. At fixpoint (or when the open-chain count drops below
-    `driver_threshold` and the remaining graph is solved sequentially on
-    the driver, exactly like the reference's endpoint-map chaining), the
-    plan is applied to the stationary arrays in ONE
-    groupBy(group) pass of JVM array concatenation (merge_apply).
-
-    Chain count ∝ coastline ways, never ∝ rows, so the driver step is
-    bounded at any data scale; the distributed rounds exist for inputs
-    whose way count itself is huge — and they now shuffle O(chains × 32B)
-    per round instead of O(total coordinates).
-
-    `max_chains_hint` is an optional TRUE upper bound on the chain count
-    (one chain per input way, so the input's way-row count qualifies);
-    when it proves the driver finish applies, round 0 skips its count
-    job. A hint that is not actually an upper bound risks an oversized
-    driver transfer — callers must only pass provable bounds.
+    Pass 2 (locations). Each point takes its way's plan row — (group_id,
+    seq, seq2, skip_first); a way with no plan row is its own group — and
+    one groupBy(group_id) collects sort_array(collect_list(struct(seq,
+    seq2, pos, node_id, lon, lat))), leaving out the pos = 0 point of every
+    skip_first part (the node it shares with the part before). That is the
+    shuffle the location join pays anyway. The plan joins by broadcast
+    when the driver planned every chain (bounded by driver_threshold; a
+    LocalRelation when no round ran) and by shuffle hash otherwise; ring
+    rows then rotate to their lead like gap-close merges do
+    (merge_apply).
     """
-    spark = ways_loc.sparkSession
-    # one materialization of the location join; everything derives from
-    # this checkpoint instead of recomputing the explode+join (skipped when
-    # the caller already checkpointed ways_loc — _init_chains is then a
-    # cheap projection and a second array write would buy nothing)
-    chains = _init_chains(ways_loc)
-    if not assume_materialized:
-        chains, _ = util.materialize(chains)
-    closed = chains.filter(_closed())
-    open_ = chains.filter(~_closed())
-
-    # endpoint state: members = original chain ids in concatenation order.
-    # NOT checkpointed up front: it is a cheap projection over the chains
-    # checkpoint, and the common case (chain count under driver_threshold)
-    # reads it exactly twice (count + collect) before the loop exits —
-    # cheaper than an eager checkpoint job + write. Each distributed round
-    # re-pins it below.
-    ep = _with_endpoints(open_).select(
-        "ring_id",
-        F.array("ring_id").alias("members"),
-        "first_node",
-        "last_node",
+    spark = ways.sparkSession
+    # every coastline way row counts in `ways`; an empty node list has null
+    # endpoints and is neither closed nor open (it has no points either)
+    ends, ends_seen = util.materialize(
+        ways.select(
+            F.col("way_id").alias("ring_id"),
+            F.try_element_at("node_ids", F.lit(1)).alias("first_node"),
+            F.try_element_at("node_ids", F.lit(-1)).alias("last_node"),
+        ),
+        ways=F.count(F.lit(1)),
+        open=F.count_if(F.col("first_node") != F.col("last_node")),
     )
+    # endpoint state: members = way ids in concatenation order
     ep_cols = ["ring_id", "members", "first_node", "last_node"]
+    ep = ends.filter(F.col("first_node") != F.col("last_node")).select(
+        "ring_id", F.array("ring_id").alias("members"), "first_node", "last_node"
+    )
+    n_open = ends_seen["open"]
     closed_groups: list[DataFrame] = []  # (ring_id, members) closed mid-rounds
     driver_plan = None
-
-    # a caller-supplied TRUE upper bound on the chain count (chains ≤ input
-    # way rows, one chain per way) below driver_threshold proves round 0
-    # goes straight to the driver finish — skip its count job and decide
-    # emptiness from the fetched frame itself (round 6: one less full pass
-    # over the chain projection per assembly)
-    hint_ok = (
-        max_chains_hint is not None and max_chains_hint <= driver_threshold
-    )
-    n_known = None  # open-chain count of `ep`, when a checkpoint observed it
+    rnd = 0
     for rnd in range(max_rounds):
-        if hint_ok and rnd == 0:
-            n_open = None
-        else:
-            n_open = n_known if n_known is not None else ep.count()
-            if n_open == 0:
-                break
-        if n_open is None or n_open <= driver_threshold:
+        if n_open <= driver_threshold:
             # Arrow toPandas, not collect(): py4j row materialization is
-            # ~10× slower at the default threshold and dominates at a
-            # raised one; the bound on this transfer is driver_threshold
-            # (or the caller's hint, whichever applies)
-            pdf = ep.select("ring_id", "first_node", "last_node").toPandas()
-            if len(pdf) == 0:
-                break
-            eps = list(
-                zip(
-                    pdf["ring_id"].tolist(),
-                    pdf["first_node"].tolist(),
-                    pdf["last_node"].tolist(),
+            # ~10× slower at the default threshold; the observed count
+            # bounds this transfer
+            eps = []
+            if n_open:
+                pdf = ep.select("ring_id", "first_node", "last_node").toPandas()
+                eps = list(
+                    zip(
+                        pdf["ring_id"].tolist(),
+                        pdf["first_node"].tolist(),
+                        pdf["last_node"].tolist(),
+                    )
                 )
-            )
-            driver_plan = _driver_finish_plan(eps)
+            driver_plan, _ = _driver_finish_plan(eps)
             break
         # Endpoint OWNERSHIP: the reference's endpoint maps are assignments
         # (m_start_nodes[id] = ring, coastline_ring_collection.cpp:59-62),
@@ -300,20 +232,18 @@ def assemble_rings(
             (coin == 1).alias("b_coin"),
         )
         mate = F.col("a_coin") & F.col("b_coin")
-        pairs_all, seen = util.materialize(
+        pairs_all, pair_seen = util.materialize(
             heads_all.join(
                 tails_all, heads_all.a_last_node == tails_all.b_first_node
             ).filter(F.col("a_ring_id") != F.col("b_ring_id")),
             n_pairs=F.count(F.lit(1)),
             n_mates=F.count_if(mate),
         )
-        if seen["n_pairs"] == 0:
+        if pair_seen["n_pairs"] == 0:
             break
+        if pair_seen["n_mates"] == 0:
+            continue  # ep is unchanged; the next round flips other coins
         pairs = pairs_all.filter(mate)
-        if seen["n_mates"] == 0:
-            n_known = n_open  # ep is unchanged
-            continue
-
         merged = pairs.select(
             F.least("a_ring_id", "b_ring_id").alias("ring_id"),
             F.concat("a_members", "b_members").alias("members"),
@@ -324,22 +254,17 @@ def assemble_rings(
             pairs.select(F.col("b_ring_id").alias("ring_id"))
         )
         ep = ep.join(consumed, "ring_id", "left_anti").select(*ep_cols).unionByName(merged)
-        ep, seen = util.materialize(
+        ep, round_seen = util.materialize(
             ep, n_open=F.count_if(F.col("first_node") != F.col("last_node"))
         )
-        n_known = seen["n_open"]
+        n_open = round_seen["n_open"]
         closed_groups.append(ep.filter(F.col("first_node") == F.col("last_node")))
         ep = ep.filter(F.col("first_node") != F.col("last_node"))
 
-    from osmcoastline_spark.operators.merge_apply import (
-        FIN_SCHEMA,
-        apply_merge_plan_df,
-    )
-
-    def groups_to_plan(groups: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def groups_to_plan(groups: DataFrame) -> DataFrame:
         """Pre-merged chain → plan rows: one group per chain, members in
         order, every part after the first drops its shared first node."""
-        plan = groups.select(
+        return groups.select(
             F.col("ring_id").alias("group_id"),
             F.posexplode("members").alias("seq2", "member"),
         ).select(
@@ -349,48 +274,29 @@ def assemble_rings(
             "seq2",
             (F.col("seq2") > 0).alias("skip_first"),
         )
-        fin = groups.select(
-            F.col("ring_id").alias("group_id"),
-            F.lit(False).alias("append_first"),
-            F.lit(False).alias("fake_close"),
-            F.lit(False).alias("grp_fixed"),
+
+    plan_parts = [groups_to_plan(g) for g in closed_groups]
+    if driver_plan is None:
+        # rounds exhausted or no adjacency left: remaining chains
+        # materialize as their own groups (possibly still open)
+        plan_parts.append(groups_to_plan(ep))
+    elif rnd == 0:
+        # no round ran: every chain is one way, the driver plan is the plan
+        plan_parts.append(
+            util.local_frame(
+                spark, [(r, g, s, 0, sk) for r, g, s, sk in driver_plan], PLAN_SCHEMA
+            )
         )
-        return plan, fin
-
-    plan_parts: list[DataFrame] = []
-    fin_parts: list[DataFrame] = []
-    for g in closed_groups:
-        p, f = groups_to_plan(g)
-        plan_parts.append(p)
-        fin_parts.append(f)
-
-    if driver_plan is not None:
+    else:
         # expand the driver plan (over chain representatives) through each
         # chain's member list: outer seq = driver position, inner seq2 =
-        # member position; only the very first part keeps its first node.
-        # createDataFrame from a pandas frame rides the Arrow serializer
-        # (a list of tuples goes through per-row pickle — measured ~0.14 s
-        # for 38k plan rows vs ~0.03 s via Arrow at bench sf0.1).
-        plan_rows, fin_rows = driver_plan
-        import pandas as _pd
-
-        repr_pdf = _pd.DataFrame(plan_rows, columns=["repr", "group_id", "seq", "skip"])
-        repr_plan = F.broadcast(
-            spark.createDataFrame(
-                _pd.DataFrame(
-                    {
-                        "repr": repr_pdf["repr"].astype("int64"),
-                        "group_id": repr_pdf["group_id"].astype("int64"),
-                        "seq": repr_pdf["seq"].astype("int32"),
-                        "rskip": repr_pdf["skip"].astype("bool"),
-                    }
-                ),
-                "repr long, group_id long, seq int, rskip boolean",
-            )
+        # member position; only the very first part keeps its first node
+        repr_plan = util.local_frame(
+            spark, driver_plan, "repr long, group_id long, seq int, rskip boolean"
         )
         plan_parts.append(
             ep.select(F.col("ring_id").alias("repr"), "members")
-            .join(repr_plan, "repr")
+            .join(F.broadcast(repr_plan), "repr")
             .select(
                 "group_id",
                 "seq",
@@ -407,55 +313,66 @@ def assemble_rings(
                 ),
             )
         )
-        fin_pdf = _pd.DataFrame(
-            fin_rows, columns=["group_id", "append_first", "fake_close", "grp_fixed"]
-        )
-        fin_parts.append(
-            spark.createDataFrame(
-                _pd.DataFrame(
-                    {
-                        "group_id": fin_pdf["group_id"].astype("int64"),
-                        "append_first": fin_pdf["append_first"].astype("bool"),
-                        "fake_close": fin_pdf["fake_close"].astype("bool"),
-                        "grp_fixed": fin_pdf["grp_fixed"].astype("bool"),
-                    }
-                ),
-                FIN_SCHEMA,
-            )
-        )
-    else:
-        # rounds exhausted or no adjacency left: remaining chains
-        # materialize as their own groups (possibly still open)
-        p, f = groups_to_plan(ep)
-        plan_parts.append(p)
-        fin_parts.append(f)
-
-    # plan_parts is never empty: the driver-finish or fallback branch above
-    # always contributes one part (possibly zero-row)
-    plan_df = plan_parts[0]
+    plan = plan_parts[0]
     for p in plan_parts[1:]:
-        plan_df = plan_df.unionByName(p)
-    fin_df = fin_parts[0]
-    for f in fin_parts[1:]:
-        fin_df = fin_df.unionByName(f)
+        plan = plan.unionByName(p)
+    # a plan that came whole from the driver is bounded by driver_threshold
+    # and broadcasts; one that includes distributed-round groups is
+    # unbounded (∝ open ways) and joins by shuffle hash, skipping the
+    # sort-merge join's sorts of both sides
+    plan = plan.withColumnRenamed("ring_id", "way_id")
+    if driver_plan is not None and not closed_groups:
+        plan = F.broadcast(plan)
+    else:
+        plan = plan.hint("shuffle_hash")
 
-    # ONE distributed concatenation: arrays move through exactly one shuffle.
-    # closed/open are returned as cheap FILTERS over the two checkpoints
-    # (chains, merged) — re-checkpointing the union would rewrite every
-    # array a second time for no lineage benefit. The plan sides broadcast
-    # when the whole plan came from the driver finish (row count bounded by
-    # driver_threshold by construction) — that removes both plan-join
-    # exchanges, leaving the groupBy regroup as the only shuffle; plans
-    # that include distributed-round groups keep the shuffle-hash hint
-    # (their size is unbounded).
-    bcast = driver_plan is not None and not closed_groups
-    merged = apply_merge_plan_df(open_, plan_df, fin_df, broadcast_plan=bcast)
-    merged, seen = util.materialize(merged, **(observe or {}))
-    closed = closed.unionByName(merged.filter(_closed()))
-    open_ = merged.filter(~_closed())
-    if observe is not None:
-        return closed, open_, seen
-    return closed, open_
+    rings = _regroup(points.join(plan, "way_id", "left"))
+    rings, seen = util.materialize(rings, nmiss=F.sum("nmiss"), **(observe or {}))
+    rings = rings.drop("nmiss")
+    seen.update(ways=ends_seen["ways"], nmiss=seen["nmiss"] or 0)
+    return rings.filter(_closed()), rings.filter(~_closed()), seen
+
+
+def _regroup(tagged: DataFrame) -> DataFrame:
+    """Located points tagged with their plan row (null for a way that is
+    its own group) → one ring row per group, rotated to its lead.
+
+    `nmiss` counts every ref with no location, the skipped shared nodes
+    among them, so the J3 count stays exact. nways = distinct way ids;
+    lead = the first node of the group's minimum way id (the ring start
+    of the reference's insertion order, needed for questionable-marking
+    and WKT golden parity)."""
+    skip = F.coalesce(F.col("skip_first"), F.lit(False)) & (F.col("pos") == 0)
+    kept = F.col("lon").isNotNull() & ~skip
+    part = F.struct(
+        F.coalesce(F.col("seq"), F.lit(0)).alias("seq"),
+        F.coalesce(F.col("seq2"), F.lit(0)).alias("seq2"),
+        "pos",
+        "node_id",
+        "lon",
+        "lat",
+    )
+    grouped = tagged.groupBy(
+        F.coalesce(F.col("group_id"), F.col("way_id")).alias("ring_id")
+    ).agg(
+        F.sort_array(F.collect_list(F.when(kept, part))).alias("pts"),
+        F.size(F.collect_set("way_id")).alias("nways"),
+        F.min(F.struct("way_id", "pos", "node_id")).alias("ml"),
+        F.sum(F.col("lon").isNull().cast("int")).alias("nmiss"),
+    )
+    return rotate_closed_to_lead(
+        grouped.select(
+            "ring_id",
+            F.col("pts.node_id").alias("node_ids"),
+            F.col("pts.lon").alias("xs"),
+            F.col("pts.lat").alias("ys"),
+            "nways",
+            F.lit(False).alias("fixed"),
+            F.col("ml.node_id").alias("lead"),
+            "nmiss",
+        ),
+        keep=("nmiss",),
+    )
 
 
 def route_rings(closed: DataFrame) -> dict[str, DataFrame]:

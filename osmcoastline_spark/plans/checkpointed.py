@@ -23,6 +23,7 @@ from pyspark.sql import SparkSession
 
 from osmcoastline_spark.plans.pipeline import Options, PipelineResult, run_pipeline
 from osmcoastline_spark.sinks import CheckpointSink
+from osmcoastline_spark.util import local_frame
 
 FINAL_TABLES = [
     "land_polygons",
@@ -173,7 +174,7 @@ def run_checkpointed(
     if all(t in res2.tables for t in wanted):
         sink.write(
             "_meta_done",
-            spark.createDataFrame([(1,)], "ok int"),
+            local_frame(spark, [(1,)], "ok int"),
             lineage={"stats": run.result.stats, "warnings": run.result.warnings,
                      "errors": run.result.errors, "fingerprint": fp},
         )

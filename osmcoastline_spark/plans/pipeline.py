@@ -1,10 +1,18 @@
 """The full osmcoastline DAG (reference src/osmcoastline.cpp:177-440, §3.1 of
 SURVEY.md) as one orchestrated Spark job.
 
-Ordering constraints preserved: intersections before gap closing (closing
-segments never appear in the segment dump); fix_direction before transform
-(winding checked in 4326); questionable before split, 4326 only; water
-derivation consumes the *split* land polygons.
+Ordering constraints preserved: the ring merge plan from way node ids
+before the node locations (the reference's pass 1 before pass 2:
+assemble_rings plans on way endpoints, then regroups the lazily located
+points of ways_with_locations straight into rings, in one shuffle);
+intersections before gap closing (closing segments never appear in the
+segment dump); fix_direction before transform (winding checked in 4326);
+questionable before split, 4326 only; water derivation consumes the
+*split* land polygons.
+
+Every frame the driver builds — gap-close plans and error rows, empty
+error tables, the options/meta rows — is a LocalRelation made by
+util.local_frame.
 
 Warning/error accounting matches the reference:
   warnings: intersections+overlaps, output_rings routing, turned-around
@@ -70,6 +78,7 @@ from osmcoastline_spark.util import (
     from_views,
     inherit_local_properties,
     list_views,
+    local_frame,
     materialize,
     run_concurrently,
 )
@@ -133,7 +142,7 @@ class PipelineResult:
 
 
 def _empty(spark: SparkSession, schema):
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def _count_error_categories(error_points: list, error_lines: list) -> list:
@@ -189,7 +198,8 @@ def _meta_tables(spark: SparkSession, opt: Options, res: PipelineResult, t0: flo
     import resource
     import time
 
-    res.tables["options"] = spark.createDataFrame(
+    res.tables["options"] = local_frame(
+        spark,
         [(
             float(opt.effective_overlap()),
             float(opt.close_distance),
@@ -200,7 +210,8 @@ def _meta_tables(spark: SparkSession, opt: Options, res: PipelineResult, t0: flo
         "split_large_polygons int",
     )
     s = res.stats
-    res.tables["meta"] = spark.createDataFrame(
+    res.tables["meta"] = local_frame(
+        spark,
         [(
             datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%d %H:%M:%S"),
             int(time.time() - t0),
@@ -309,45 +320,16 @@ def _run_pipeline(
                 closed.select(F.sum("nways")).first()[0] or 0
             ) + int(open_.select(F.sum("nways")).first()[0] or 0)
     else:
-        # pass 1+2: filter, locations — the location join materializes ONCE
-        # here, and the J3 missing-location count is observed in the same
-        # job (round 1 paid a second full explode+join, round 6 a probe)
+        # pass 1+2 in the reference's order: the ring plan from way node
+        # ids, then the location join regrouped straight into rings
+        # (rings.assemble_rings). One endpoint checkpoint observes the
+        # ways count; the ring checkpoint observes the J3 missing-location
+        # count, the assembly stats, the open-ring bound for gap closing
+        # and the Antarctica ring id — no count job of their own.
         cways = coastline_ways(ways)
-        located = ways_with_locations(cways, nodes, count_missing=True)
-
-        def locate():
-            # closed_ways: the ways that are closed rings on their own
-            return materialize(
-                located, nmiss=F.sum("nmiss"), closed_ways=F.count_if(_closed())
-            )
-
-        # the ways count and the location-join materialization are
-        # independent DAGs over the same checkpointed inputs — run them
-        # concurrently so the count hides inside the join's wall time
-        # instead of paying its own job floor first
-        n_ways, (ways_loc, loc_seen) = run_concurrently(cways.count, locate)
-        res.stats["ways"] = n_ways
-        missing = loc_seen["nmiss"] or 0
-        if missing:
-            res.stats["missing_locations"] = int(missing)
-            res.errors += 1
-            _meta_tables(spark, opt, res, t0)
-            return res
-        ways_loc = ways_loc.drop("nmiss")
-        _trace("locations")
-
-        # R1 assembly (input already materialized — no second checkpoint).
-        # The ways count is an exact upper bound on the chain count (one
-        # chain per way), letting assembly skip its round-0 count job
-        # whenever the driver finish provably applies.
-        # closed = the closed single ways of ways_loc + the closed merged
-        # chains, open = the open merged chains: the assembly stats, the
-        # open-ring bound for gap closing and the Antarctica ring id are
-        # all observed on the two checkpoints, no count job of their own
         closed, open_, asm_seen = assemble_rings(
-            ways_loc,
-            assume_materialized=True,
-            max_chains_hint=res.stats["ways"],
+            cways,
+            ways_with_locations(cways, nodes),
             observe={
                 "closed": F.count_if(_closed()),
                 "closed_single": F.count_if(_closed() & (F.col("nways") == 1)),
@@ -357,15 +339,19 @@ def _run_pipeline(
                 ),
             },
         )
+        res.stats["ways"] = asm_seen["ways"]
+        if asm_seen["nmiss"]:
+            res.stats["missing_locations"] = int(asm_seen["nmiss"])
+            res.errors += 1
+            _meta_tables(spark, opt, res, t0)
+            return res
         antarctica_kw = {"target": asm_seen["antarctica"]}
         n_open_pre = asm_seen["open"]
         # the post-assembly closed count feeds stats["rings"]
         # ARITHMETICALLY (closed-after-close = closed-now + antarctica +
         # gap-close merges, all driver-known)
-        n_closed_pre = loc_seen["closed_ways"] + asm_seen["closed"]
-        res.stats["rings_from_single_way"] = (
-            loc_seen["closed_ways"] + asm_seen["closed_single"]
-        )
+        n_closed_pre = asm_seen["closed"]
+        res.stats["rings_from_single_way"] = asm_seen["closed_single"]
         res.stats["unconnected_nodes_before_close"] = n_open_pre * 2
         if mid_sink is not None:
             pre = {
@@ -472,9 +458,9 @@ def _run_pipeline(
         res.stats["unconnected_nodes"] = cres.unconnected_nodes
         res.errors += cres.fixed_rings + cres.unconnected_nodes
         if cres.error_points:
-            error_points.append(spark.createDataFrame(cres.error_points, ERROR_POINTS_SCHEMA))
+            error_points.append(local_frame(spark, cres.error_points, ERROR_POINTS_SCHEMA))
         if cres.error_lines:
-            error_lines.append(spark.createDataFrame(cres.error_lines, ERROR_LINES_SCHEMA))
+            error_lines.append(local_frame(spark, cres.error_lines, ERROR_LINES_SCHEMA))
         now_closed = merged.filter(F.element_at("node_ids", 1) == F.element_at("node_ids", -1))
         closed = closed.unionByName(now_closed.select(*closed.columns))
         open_ = merged.filter(F.element_at("node_ids", 1) != F.element_at("node_ids", -1))

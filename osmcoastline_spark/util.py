@@ -86,7 +86,9 @@ def ensure_min_parallelism(df, factor: int = 2):
 # Every Python stage of the pipeline crosses the JVM boundary here: it is a
 # mapInArrow stage (`arrow_stage`) whose kernel reads its list columns as
 # numpy views (`list_views`, `column_rows`) and writes them back as Arrow
-# list arrays (`pack`, `from_views`, `list_array`).
+# list arrays (`pack`, `from_views`, `list_array`). Every frame the driver
+# builds (merge plans, error rows, the meta tables) enters through
+# `local_frame`.
 
 
 def _level(arr: pa.Array) -> tuple[np.ndarray, pa.Array]:
@@ -184,6 +186,24 @@ def pack(rows, type: pa.DataType) -> pa.Array:
         parts = [np.asarray(r, dtype=dtype) for r in kept]
         values = pa.array(np.concatenate(parts) if parts else np.empty(0, dtype), type=inner)
     return list_array(offsets, values, null if null.any() else None, type)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Rows built on the driver — tuples in the column order of `schema`
+    (a DDL string or StructType), list columns as sequences — as a frame
+    over a LocalRelation: the rows cross to the JVM as one Arrow table
+    and live in the plan itself. A join broadcasts them and an aggregate
+    reads them without a job or an RDD scan of their own; a plain list
+    handed to `createDataFrame` becomes a parallelized RDD, which pays
+    per-row pickling and a scan stage per consumer. Zero rows give an
+    empty LocalRelation of the same schema."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pack(c, f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def arrow_stage(

@@ -1,4 +1,4 @@
-"""Bit-equality of the Catalyst merge kernel (apply_merge_plan_df) vs the
+"""Bit-equality of the Catalyst merge kernel (apply_merge_plan) vs the
 original per-part Python merge, kept here as the reference."""
 
 from __future__ import annotations
@@ -6,12 +6,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from osmcoastline_spark.operators.merge_apply import (
-    FIN_SCHEMA,
-    PLAN_SCHEMA,
-    RING_SCHEMA,
-    apply_merge_plan_df,
-)
+from osmcoastline_spark.operators.merge_apply import RING_SCHEMA, apply_merge_plan
+
+# the reference merge's plan and finalize frames
+PLAN_SCHEMA = "ring_id long, group_id long, seq int, seq2 int, skip_first boolean"
+FIN_SCHEMA = "group_id long, append_first boolean, fake_close boolean, grp_fixed boolean"
 
 
 def _rows(df):
@@ -115,6 +114,13 @@ def _reference_merge(open_rings, plan_df, fin_df):
     return agg.mapInPandas(merge_batch, RING_SCHEMA)
 
 
+def _reference_frames(spark, plan, finalize):
+    """apply_merge_plan's (ring_id, group_id, seq, skip_first) plan and
+    finalize lists as the reference merge's two frames."""
+    plan_df = spark.createDataFrame([(r, g, s, 0, sk) for r, g, s, sk in plan], PLAN_SCHEMA)
+    return plan_df, spark.createDataFrame(finalize, FIN_SCHEMA)
+
+
 @pytest.fixture()
 def scenario(spark):
     # chains: groups exercising every feature —
@@ -138,34 +144,28 @@ def scenario(spark):
         ],
         RING_SCHEMA,
     )
-    plan = spark.createDataFrame(
-        [
-            (10, 10, 0, 0, False),
-            (11, 10, 1, 0, True),
-            (12, 10, 2, 0, True),
-            (20, 20, 0, 0, False),
-            (30, 30, 0, 0, False),
-            (31, 30, 1, 0, False),
-            (40, 40, 0, 0, False),
-        ],
-        PLAN_SCHEMA,
-    )
-    fin = spark.createDataFrame(
-        [
-            (10, False, False, False),
-            (20, True, False, True),
-            (30, False, True, True),
-            (40, False, False, False),
-        ],
-        FIN_SCHEMA,
-    )
+    plan = [
+        (10, 10, 0, False),
+        (11, 10, 1, True),
+        (12, 10, 2, True),
+        (20, 20, 0, False),
+        (30, 30, 0, False),
+        (31, 30, 1, False),
+        (40, 40, 0, False),
+    ]
+    fin = [
+        (10, False, False, False),
+        (20, True, False, True),
+        (30, False, True, True),
+        (40, False, False, False),
+    ]
     return rings, plan, fin
 
 
 def test_merge_apply_engines_agree(spark, scenario):
     rings, plan, fin = scenario
-    cat = _rows(apply_merge_plan_df(rings, plan, fin))
-    ref = _rows(_reference_merge(rings, plan, fin))
+    cat = _rows(apply_merge_plan(rings, plan, fin))
+    ref = _rows(_reference_merge(rings, *_reference_frames(spark, plan, fin)))
     assert cat == ref
     # and the rotation really happened: g1 closes and starts at lead 100
     g1 = [r for r in cat if r[0] == 10][0]
@@ -192,7 +192,7 @@ def test_merge_apply_engines_agree_randomized(spark):
             ys = [rng.uniform(-10, 10) for _ in range(npts)]
             rows.append((rid, ids, xs, ys, rng.randint(1, 3), rng.random() < 0.2, ids[0]))
             member_ids.append(rid)
-            plan.append((rid, member_ids[0], p, 0, p > 0))
+            plan.append((rid, member_ids[0], p, p > 0))
             rid += 1
         if closes:
             # close the cycle: last part's last node = first part's first
@@ -206,9 +206,7 @@ def test_merge_apply_engines_agree_randomized(spark):
             rows[-1] = (last[0], ids, xs, ys, last[4], last[5], last[6])
         fin.append((member_ids[0], False, False, rng.random() < 0.3))
     rings = spark.createDataFrame(rows, RING_SCHEMA)
-    plan_df = spark.createDataFrame(plan, PLAN_SCHEMA)
-    fin_df = spark.createDataFrame(fin, FIN_SCHEMA)
-    cat = _rows(apply_merge_plan_df(rings, plan_df, fin_df))
-    ref = _rows(_reference_merge(rings, plan_df, fin_df))
+    cat = _rows(apply_merge_plan(rings, plan, fin))
+    ref = _rows(_reference_merge(rings, *_reference_frames(spark, plan, fin)))
     assert cat == ref
     assert len(cat) == 25

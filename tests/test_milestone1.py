@@ -2,8 +2,6 @@
 (port of /root/reference/test/t/valid-island-from-two-ways.sh, golden from
 FIXTURES.md F1)."""
 
-from pyspark.sql import functions as F
-
 from osmcoastline_spark import geom
 from osmcoastline_spark.operators.filter import coastline_ways, tagged_node_errors
 from osmcoastline_spark.operators.locations import ways_with_locations
@@ -31,11 +29,8 @@ def test_island_from_two_ways(spark):
     nodes, ways = fixture_df(spark, F1_NODES, F1_WAYS)
     ways = coastline_ways(ways)
     assert tagged_node_errors(nodes).count() == 0
-    located = ways_with_locations(ways, nodes, count_missing=True)
-    assert located.select(F.sum("nmiss")).first()[0] == 0
-
-    ways_loc = ways_with_locations(ways, nodes)
-    closed, open_ = assemble_rings(ways_loc)
+    closed, open_, seen = assemble_rings(ways, ways_with_locations(ways, nodes))
+    assert seen["nmiss"] == 0 and seen["ways"] == 2
     assert open_.count() == 0
     rows = closed.collect()
     assert len(rows) == 1
@@ -69,9 +64,10 @@ def test_distributed_mating_path_matches_driver_path(spark):
     """driver_threshold=0 forces the distributed mating rounds; results must
     equal the driver-finish path (same rings, same rotation)."""
     nodes, ways = fixture_df(spark, F1_NODES, F1_WAYS)
-    ways_loc = ways_with_locations(coastline_ways(ways), nodes)
-    c_driver, o_driver = assemble_rings(ways_loc)
-    c_dist, o_dist = assemble_rings(ways_loc, driver_threshold=0)
+    ways = coastline_ways(ways)
+    points = ways_with_locations(ways, nodes)
+    c_driver, o_driver, _ = assemble_rings(ways, points)
+    c_dist, o_dist, _ = assemble_rings(ways, points, driver_threshold=0)
     a = {(r.ring_id, tuple(r.node_ids), r.nways) for r in c_driver.collect()}
     b = {(r.ring_id, tuple(r.node_ids), r.nways) for r in c_dist.collect()}
     assert a == b
@@ -84,8 +80,8 @@ def test_closed_single_way_fast_path(spark):
         [(100, 1.0, 1.0), (101, 1.1, 1.0), (102, 1.1, 1.1), (103, 1.0, 1.1)],
         [(200, [100, 101, 102, 103, 100])],
     )
-    ways_loc = ways_with_locations(coastline_ways(ways), nodes)
-    closed, open_ = assemble_rings(ways_loc)
+    ways = coastline_ways(ways)
+    closed, open_, _ = assemble_rings(ways, ways_with_locations(ways, nodes))
     assert closed.count() == 1 and open_.count() == 0
 
 
@@ -131,7 +127,6 @@ def test_fake_close_preserves_gap_vertex(spark):
         "ys array<double>, nways int, fixed boolean, lead long",
     )
     merged = apply_merge_plan(
-        spark.sparkSession if hasattr(spark, "sparkSession") else spark,
         open_rings,
         [(5, 5, 0, False)],
         [(5, False, True, True)],  # fake_close

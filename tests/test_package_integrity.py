@@ -85,6 +85,27 @@ def test_only_util_calls_local_checkpoint():
     assert sorted(callers) == ["util.py"], callers
 
 
+def test_operators_and_plans_build_frames_through_local_frame():
+    """A driver-built frame in the engine is a LocalRelation made by
+    util.local_frame; no operator or plan calls createDataFrame itself."""
+    pkg = os.path.dirname(osmcoastline_spark.__file__)
+    callers = []
+    for sub in ("operators", "plans"):
+        for fn in sorted(os.listdir(os.path.join(pkg, sub))):
+            if not fn.endswith(".py"):
+                continue
+            with open(os.path.join(pkg, sub, fn)) as f:
+                tree = ast.parse(f.read())
+            callers += [
+                f"{sub}/{fn}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ]
+    assert callers == [], callers
+
+
 def test_pipeline_python_stages_cross_one_arrow_boundary():
     """No operator or plan runs a pandas UDF stage: every Python stage of
     the pipeline is a mapInArrow stage through util.arrow_stage, which
