@@ -19,12 +19,19 @@ dozens, not millions). So:
      array concatenation runs distributed as one groupBy(group) pass of
      JVM array expressions (merge_apply).
 
+Open rings made only of duplicated segments are leftover duplicate-way
+artifacts. The reference drops them from closing through its endpoint-map
+overwrite (the invalid-duplicate-segments-1 case); here the driver finds
+them from the segment sweep's per-ring duplicate counts, collected for
+the open rings only, and they pass through the merge unchanged.
+
 If open rings ever exceed `max_driver_endpoints`, we fail loudly rather than
 silently OOM the driver.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -212,6 +219,7 @@ def close_rings(
     max_distance: float,
     max_driver_endpoints: int = 1_000_000,
     max_rows: int | None = None,
+    ring_duplicates: DataFrame | None = None,
 ) -> tuple[DataFrame, CloseResult]:
     """Apply R2 to the open rings; returns (rings after closing, CloseResult).
 
@@ -224,6 +232,18 @@ def close_rings(
     row moves to the driver: a bound within the cap proves the collect
     safe at no cost; otherwise (or with no bound) one bounded probe,
     limit(cap + 1).count(), decides and an input over the cap raises.
+
+    `ring_duplicates` holds (ring_id, ndup) rows as
+    `intersections.ring_duplicate_counts` reads them off the segment
+    sweep, a ring's count being the sum of its rows; None when the sweep
+    found no duplicate segment. Its rows for the collected open rings come
+    to the driver in one narrow job, at most one row per open ring and
+    slab: the ring ids ride in the filter, as a broadcast frame of them
+    would cost a job of its own. An open ring of at least 2 points whose
+    every segment is duplicated is an orphan: it stays out of the greedy
+    matching, so it adds no error rows and no unconnected nodes, and it
+    rides the merge as a one-part group of its own, which leaves it as
+    it is.
     """
     if max_rows is None or max_rows > max_driver_endpoints:
         n = open_rings.limit(max_driver_endpoints + 1).count()
@@ -242,24 +262,26 @@ def close_rings(
         F.element_at("xs", -1).alias("lx"),
         F.element_at("ys", -1).alias("ly"),
         "nways",
+        F.size("xs").alias("npoints"),
     ).collect()
     if not rows:
         return open_rings, CloseResult([], [], [], [], 0, 0)
 
-    eps = [
-        {
-            "ring_id": r["ring_id"],
-            "first_id": r["first_id"],
-            "last_id": r["last_id"],
-            "fx": r["fx"],
-            "fy": r["fy"],
-            "lx": r["lx"],
-            "ly": r["ly"],
-            "nways": r["nways"],
+    orphans: set[int] = set()
+    if ring_duplicates is not None:
+        ndup: Counter = Counter()
+        ids = [r["ring_id"] for r in rows]
+        for d in ring_duplicates.filter(F.col("ring_id").isin(ids)).collect():
+            ndup[d["ring_id"]] += d["ndup"]
+        orphans = {
+            r["ring_id"]
+            for r in rows
+            if r["npoints"] >= 2 and ndup[r["ring_id"]] == r["npoints"] - 1
         }
-        for r in rows
-    ]
-    res = plan_close_rings(eps, max_distance)
+    res = plan_close_rings([r.asDict() for r in rows if r["ring_id"] not in orphans], max_distance)
+    for r in sorted(orphans):
+        res.plan.append((r, r, 0, False))
+        res.finalize.append((r, False, False, False))
 
     from osmcoastline_spark.operators.merge_apply import apply_merge_plan
 

@@ -13,7 +13,10 @@ all slabs in parallel, in one mapInArrow stage (`segment_sweep`):
     copy per slab, and at most SLAB_QUANTILES slabs;
   * a pair of segments is found in every slab both overlap, but its
     crossing is emitted by exactly one of them, and a duplicate segment
-    only by the slab of its x1, so no dedup shuffle follows.
+    only by the slab of its x1, so no dedup shuffle follows;
+  * the same slab also counts, per ring, the copies of duplicate
+    segments it emits: gap closing reads them to leave out the open
+    rings made only of duplicated segments.
 
 The exact intersection arithmetic is the reference's
 (geom.segment_intersections, src/coastline_ring_collection.cpp:202-230).
@@ -51,7 +54,7 @@ SLAB_SEGMENTS = 1 << 16
 SLAB_QUANTILES = 256
 
 # columns of `segment_sweep`: crossing rows fill a_ring..y, duplicate
-# segment rows fill x1..k
+# segment rows fill x1..k, per-ring duplicate counts fill ring_id, ndup
 _SWEEP_COLUMNS = {
     "a_ring": "long",
     "b_ring": "long",
@@ -62,6 +65,8 @@ _SWEEP_COLUMNS = {
     "x2": "double",
     "y2": "double",
     "k": "long",
+    "ring_id": "long",
+    "ndup": "long",
 }
 
 
@@ -166,9 +171,11 @@ def segment_sweep(
     `ring_segments` gives them), swept per x-slab of `edges`.
 
     One exchange (each segment to every slab its x-extent overlaps)
-    and one mapInArrow stage of one task per slab, len(edges) + 1. Two
-    kinds of rows, read with `intersection_pairs` and
-    `duplicate_segment_counts`."""
+    and one mapInArrow stage of one task per slab, len(edges) + 1. Three
+    kinds of rows, read with `intersection_pairs`,
+    `duplicate_segment_counts` and `ring_duplicate_counts`. Only the
+    duplicate segment rows fill `k`, so `F.count("k")` over the sweep
+    counts the duplicate keys."""
     edges_np = np.asarray(edges, dtype=np.float64)
     keys = F.array(*map(F.lit, _partition_keys(len(edges) + 1)))
 
@@ -183,8 +190,9 @@ def segment_sweep(
             edges_np, slab, c["ring_id"], c["idx"], *xy, cell_deg=cell_deg
         ):
             yield _sweep_columns(a_ring=a_ring, b_ring=b_ring, x=x, y=y)
-        x1, y1, x2, y2, k = slab_duplicates(edges_np, slab, *xy)
+        (x1, y1, x2, y2, k), (ring, ndup) = slab_duplicates(edges_np, slab, c["ring_id"], *xy)
         yield _sweep_columns(x1=x1, y1=y1, x2=x2, y2=y2, k=k)
+        yield _sweep_columns(ring_id=ring, ndup=ndup)
 
     copies = segments.select(
         F.col("ring_id").cast("long"),
@@ -198,7 +206,7 @@ def segment_sweep(
 
 def _sweep_columns(**cols: np.ndarray) -> dict:
     """`segment_sweep` output columns from the columns of one row kind;
-    the columns of the other kind are null."""
+    the columns of the other kinds are null."""
     n = len(next(iter(cols.values())))
     return {
         c: cols[c] if c in cols else pa.nulls(n, pa.int64() if t == "long" else pa.float64())
@@ -210,14 +218,22 @@ def intersection_pairs(sweep: DataFrame) -> DataFrame:
     """All crossing segment pairs of a `segment_sweep` as (a_ring, b_ring,
     x, y) — the 'intersection' error points. Its same-ring rows are the
     self-intersections `ring_self_intersections` finds per ring."""
-    return sweep.filter(F.col("k").isNull()).select("a_ring", "b_ring", "x", "y")
+    return sweep.filter(F.col("a_ring").isNotNull()).select("a_ring", "b_ring", "x", "y")
 
 
 def duplicate_segment_counts(sweep: DataFrame) -> DataFrame:
     """(x1, y1, x2, y2, k) for every segment appearing k > 1 times, from
-    a `segment_sweep` — the shared input of the overlap error lines AND
-    the gap-close orphan filter."""
+    a `segment_sweep` — the input of the overlap error lines."""
     return sweep.filter(F.col("k").isNotNull()).select("x1", "y1", "x2", "y2", "k")
+
+
+def ring_duplicate_counts(sweep: DataFrame) -> DataFrame:
+    """(ring_id, ndup) from a `segment_sweep`: ndup of the ring's segments
+    whose key `duplicate_segment_counts` lists, counted in the slab of
+    their x1 — one row per slab that has any, so a ring's count is the
+    sum of its rows. Gap closing reads it for the open rings made only
+    of duplicated segments (close.close_rings)."""
+    return sweep.filter(F.col("ndup").isNotNull()).select("ring_id", "ndup")
 
 
 def duplicate_segments(dup: DataFrame) -> DataFrame:
@@ -268,10 +284,14 @@ def slab_crossings(
             yield ring[a[own]], ring[b[own]], px[own], py[own]
 
 
-def slab_duplicates(edges, slab, x1, y1, x2, y2) -> tuple[np.ndarray, ...]:
-    """(x1, y1, x2, y2, k) of every segment appearing k > 1 times, counted
-    over the copies in the slab of their x1, which holds all copies of
-    one segment. + 0.0 folds -0.0 into 0.0, as Spark's grouping keys do."""
+def slab_duplicates(
+    edges, slab, ring, x1, y1, x2, y2
+) -> tuple[tuple[np.ndarray, ...], tuple[np.ndarray, np.ndarray]]:
+    """((x1, y1, x2, y2, k) of every segment appearing k > 1 times,
+    (ring, n) of every ring with n > 0 segments among those copies),
+    counted over the copies in the slab of their x1, which holds all
+    copies of one segment. + 0.0 folds -0.0 into 0.0, as Spark's grouping
+    keys do."""
     first = np.searchsorted(edges, x1, side="right") == slab
     keys = [c[first] + 0.0 for c in (x1, y1, x2, y2)]
     o = np.lexsort(keys[::-1])
@@ -282,7 +302,8 @@ def slab_duplicates(edges, slab, x1, y1, x2, y2) -> tuple[np.ndarray, ...]:
     heads = np.flatnonzero(start)
     k = np.diff(np.append(heads, n))
     dup = k > 1
-    return (*(c[heads[dup]] for c in keys), k[dup])
+    rings, ndup = np.unique(ring[first][o][np.repeat(dup, k)], return_counts=True)
+    return (*(c[heads[dup]] for c in keys), k[dup]), (rings, ndup)
 
 
 def _sweep(group: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -59,6 +59,10 @@ def apply_merge_plan(
     which the Python reference only does once the accumulated array is
     non-empty (equivalent under the precondition; pinned by
     test_merge_apply_engines_agree).
+
+    A group of one open ring with no finalize flag, (r, r, 0, False) and
+    (r, False, False, False), gives back that ring as it is: gap closing
+    passes the rings it leaves out of matching through this way.
     """
     flags = {g: rest for g, *rest in finalize}
     rows = [(r, g, s, 0, sk, *flags[g]) for r, g, s, sk in plan]

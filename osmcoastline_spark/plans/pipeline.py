@@ -29,7 +29,8 @@ operators/repair.py, applied BOTH pre-polygonize (buffer0_triage,
 reference add_polygons_to_vector) and post-split (check_polygons,
 reference coastline_polygons.cpp:444-467). The distributed x-slab sweep
 (intersections.segment_sweep) runs once, on the pre-close segments, for
-the 'intersection' error points and the duplicate segments.
+the 'intersection' error points, the duplicate segments and the per-ring
+duplicate counts from which gap closing finds the orphan rings.
 
 Every Python stage — the sweep, ring validity, repair, containment,
 split, water, lines and the 3857 transform — is a mapInArrow stage
@@ -60,6 +61,7 @@ from osmcoastline_spark.operators.intersections import (
     duplicate_segment_counts,
     duplicate_segments,
     intersection_pairs,
+    ring_duplicate_counts,
     ring_segments,
     ring_self_intersections,
     segment_sweep,
@@ -155,9 +157,12 @@ def _count_error_categories(error_points: list, error_lines: list) -> list:
     el = error_lines[0]
     for df in error_lines[1:]:
         el = el.unionByName(df)
+    # the union has a partition per partition of every error frame: one
+    # task per core is enough for the `error` column alone
     return (
         ep.select(F.lit("p").alias("kind"), "error")
         .unionByName(el.select(F.lit("l").alias("kind"), "error"))
+        .coalesce(ep.sparkSession.sparkContext.defaultParallelism)
         .groupBy("kind", "error")
         .count()
         .collect()
@@ -380,8 +385,9 @@ def _run_pipeline(
     _trace("segments")
 
     def sweep():
-        # crossings and duplicate segments in one checkpoint; the
-        # duplicate-key count decides the orphan filter below
+        # crossings, duplicate segments and per-ring duplicate counts in
+        # one checkpoint; the duplicate-key count decides whether gap
+        # closing reads the per-ring counts
         return materialize(segment_sweep(segs, edges, opt.cell_deg), n_dup_keys=F.count("k"))
 
     # G12 Antarctica — the ring id was observed at assembly; a resumed
@@ -390,8 +396,6 @@ def _run_pipeline(
     (open_, found), (swept, sweep_seen) = run_concurrently(
         lambda: close_antarctica_ring(open_, opt.epsg, **antarctica_kw), sweep
     )
-    n_dup_keys = sweep_seen["n_dup_keys"]
-    dup_counts = duplicate_segment_counts(swept)
     error_points.append(
         intersection_pairs(swept).select(
             F.lit(0).cast("long").alias("osm_id"),
@@ -400,7 +404,7 @@ def _run_pipeline(
             "y",
         )
     )
-    error_lines.append(duplicate_segments(dup_counts))
+    error_lines.append(duplicate_segments(duplicate_segment_counts(swept)))
     res.stats["antarctica_closed"] = found
     n_closed_delta = 0  # rings closed after assembly (driver-known)
     if found:
@@ -418,41 +422,19 @@ def _run_pipeline(
     # R2 gap closing. Open rings ENTIRELY made of duplicated segments are
     # leftover duplicate-way artifacts — the reference orphans them via its
     # endpoint-map overwrite semantics (see invalid-duplicate-segments-1);
-    # we detect them explicitly and exclude them from closing.
+    # close_rings finds them on the driver from the sweep's per-ring
+    # duplicate counts and leaves them out of closing. With no duplicate
+    # key on the sweep (the common healthy-data case) no ring can be one,
+    # and close_rings skips the per-ring collect.
     if opt.close_distance > 0:
-        # n_dup_keys was observed on the sweep — if the input has no
-        # duplicate segments at all (the common healthy-data case) the
-        # whole orphan-detection branch (explode + semi-join + two
-        # groupBys + an eager checkpoint, ~5 jobs) is
-        # provably a no-op and is skipped
-        if n_dup_keys:
-            open_segs = ring_segments(open_)
-            dup_keys = dup_counts.drop("k")
-            per_ring = open_segs.groupBy("ring_id").agg(F.count("*").alias("ntot"))
-            dup_per_ring = (
-                open_segs.join(dup_keys, ["x1", "y1", "x2", "y2"], "left_semi")
-                .groupBy("ring_id")
-                .agg(F.count("*").alias("ndup"))
-            )
-            # tiny id set, but its lineage (two groupBys + two joins)
-            # would otherwise re-execute for every consumer:
-            # the close count, the endpoint collect, the orphan semi-join
-            # and the merged checkpoint — four evaluations without this pin
-            orphan_ids, _ = materialize(
-                per_ring.join(dup_per_ring, "ring_id")
-                .filter(F.col("ndup") == F.col("ntot"))
-                .select("ring_id")
-            )
-            orphans = open_.join(orphan_ids, "ring_id", "left_semi")
-            active = open_.join(orphan_ids, "ring_id", "left_anti")
-        else:
-            orphans = None
-            active = open_
-        # `active` is a subset of the open rings counted at assembly: that
-        # count bounds the endpoint collect without a probe
-        merged, cres = close_rings(active, opt.close_distance, max_rows=n_open_pre)
-        if orphans is not None:
-            merged = merged.unionByName(orphans)
+        # the open rings were counted at assembly: that count bounds the
+        # endpoint collect without a probe
+        merged, cres = close_rings(
+            open_,
+            opt.close_distance,
+            max_rows=n_open_pre,
+            ring_duplicates=ring_duplicate_counts(swept) if sweep_seen["n_dup_keys"] else None,
+        )
         merged, _ = materialize(merged)
         res.stats["rings_fixed"] = cres.fixed_rings
         res.stats["unconnected_nodes"] = cres.unconnected_nodes

@@ -192,11 +192,12 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """Rows built on the driver — tuples in the column order of `schema`
     (a DDL string or StructType), list columns as sequences — as a frame
     over a LocalRelation: the rows cross to the JVM as one Arrow table
-    and live in the plan itself. A join broadcasts them and an aggregate
-    reads them without a job or an RDD scan of their own; a plain list
-    handed to `createDataFrame` becomes a parallelized RDD, which pays
-    per-row pickling and a scan stage per consumer. Zero rows give an
-    empty LocalRelation of the same schema."""
+    and live in the plan itself. An aggregate reads them without a job or
+    an RDD scan of their own; a broadcast join still runs one small job
+    (up to a task per core) to build the broadcast. A plain list handed to
+    `createDataFrame` becomes a parallelized RDD, which pays per-row
+    pickling and a scan stage per consumer. Zero rows give an empty
+    LocalRelation of the same schema."""
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(struct)
     cols = list(zip(*rows)) or [()] * len(arrow_schema)

@@ -1,10 +1,10 @@
 """Outputs depend only on inputs and options, not on how Spark partitions
 the work: on a small `dirty`-shaped input (crossing rings, figure eights,
-duplicate ways, gaps, Antarctica), the crossing and overlap counts, the
-error tables and the exit code are the same under several shuffle
-partition counts and with adaptive execution off; so are the land, water
-and line tables and the stats of a small `islands`-shaped run that splits
-its polygons."""
+duplicate ways, gaps, Antarctica), the error, ring and line tables, the
+stats and the exit code are the same under several shuffle partition
+counts and with adaptive execution off; so are the land, water and line
+tables and the stats of a small `islands`-shaped run that splits its
+polygons."""
 
 import pytest
 
@@ -12,6 +12,7 @@ from osmcoastline_spark.plans.pipeline import Options, run_pipeline
 
 # the benchmark's `dirty` options
 DIRTY_OPTIONS = Options(output_rings=True, output_lines=True, output_polygons="none")
+DIRTY_TABLES = ("error_points", "error_lines", "rings", "lines")
 # `islands` with lines, and polygons small enough that split runs several
 # rounds; water then clips split pieces to their owned boxes
 ISLANDS_OPTIONS = Options(output_polygons="both", output_lines=True, max_points_in_polygon=16)
@@ -31,10 +32,8 @@ def _outcome(spark, nodes, ways) -> dict:
     res = run_pipeline(spark, nodes, ways, DIRTY_OPTIONS)
     try:
         return {
-            "intersections": res.stats["intersections"],
-            "overlaps": res.stats["overlaps"],
-            "error_points": digest(res.tables["error_points"])[1],
-            "error_lines": digest(res.tables["error_lines"])[1],
+            **{t: digest(res.tables[t])[1] for t in DIRTY_TABLES},
+            "stats": res.stats,
             "exit_code": res.exit_code,
         }
     finally:
@@ -50,7 +49,7 @@ def dirty_inputs(spark, tmp_path_factory):
     base = _outcome(spark, nodes, ways)
     # 3 figure eights and 2 crossing ring pairs; a ring drawn twice and a
     # repeated way
-    assert base["intersections"] >= 7 and base["overlaps"] > 0
+    assert base["stats"]["intersections"] >= 7 and base["stats"]["overlaps"] > 0
     return nodes, ways, base
 
 

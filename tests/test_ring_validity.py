@@ -1,7 +1,8 @@
 """Segment crossings: the x-slab sweep (intersections.segment_sweep) and
 ring validity as a per-ring kernel (intersections.ring_self_intersections)
-give the same crossing points and duplicate segments as the cell-binned
-join and the groupBy they replaced, kept here as the reference. Also the
+give the same crossing points, duplicate segments and per-ring duplicate
+counts as the cell-binned join, the groupBy and the semi-join they
+replaced, kept here as the reference. Also the
 job cost of the sweep and of the triage, host-independent ring areas, and
 job groups on pool threads."""
 
@@ -24,6 +25,7 @@ from osmcoastline_spark.operators.intersections import (
     duplicate_segment_counts,
     intersection_pairs,
     ring_crossing_points,
+    ring_duplicate_counts,
     ring_segments,
     ring_self_intersections,
     segment_sweep,
@@ -262,7 +264,10 @@ def _sweep_case(case) -> list[tuple[list, list]]:
     adds a copy of every seventh ring (duplicate segments across rings), a
     horizontal segment longer than the whole case, which spans every
     slab, and a vertical segment at a vertex x, where `_edge_sets` puts
-    an edge."""
+    an edge. Far from the rest: a path out and back along itself (a
+    segment repeated inside one ring), and rings whose duplicate segments
+    differ only in the sign of a zero coordinate, starting on the slab
+    edge at 0.0 that `_edge_sets` puts in."""
     if case == "dirty":
         from perfbench.inputs import dirty
 
@@ -275,6 +280,11 @@ def _sweep_case(case) -> list[tuple[list, list]]:
     rings = rings + rings[::7] + [
         ([xs[0] - 1.0, xs[-1] + 1.0], [ys[len(ys) // 2]] * 2),
         ([vx, vx], [ys[0], ys[-1]]),
+        ([600.0, 600.25, 600.5, 600.25, 600.0], [88.5] * 5),
+        ([-0.0, 0.5, 0.5], [88.5, 88.5, 89.0]),
+        ([0.0, 0.5], [88.5, 88.5]),
+        ([700.0, 700.5], [-0.0, -0.0]),
+        ([700.5, 700.0, 700.0], [0.0, 0.0, 0.5]),
     ]
     return [([float(v) for v in xs], [float(v) for v in ys]) for xs, ys in rings]
 
@@ -313,38 +323,60 @@ def _dup_bits(rows) -> set:
     return {(*(float(v).hex() for v in r[:4]), int(r[4])) for r in rows}
 
 
+def _ring_sums(rows) -> dict:
+    """{ring: duplicated segments} from per-slab (ring, n) rows."""
+    out = Counter()
+    for r, n in rows:
+        out[int(r)] += int(n)
+    return dict(out)
+
+
 @pytest.mark.parametrize("case", [1, 7, 42, "dirty"])
 def test_sweep_equals_cell_join_and_group_by(spark, case):
     """The slab kernel, on numpy and in Spark, finds exactly the cell
-    join's crossings (as a multiset, bit for bit) and the groupBy's
-    duplicate segments, for any slab edges: one slab, edges on segment
-    endpoints, an edge under a vertical segment, and many slabs that one
-    segment spans. Slabs share a kernel call as hash partitions share a
-    task."""
-    segs = ring_segments(_frame(spark, _sweep_case(case))).localCheckpoint()
+    join's crossings (as a multiset, bit for bit), the groupBy's
+    duplicate segments and, per ring, the number of its segments the
+    semi-join with those keys keeps, for any slab edges: one slab, edges
+    on segment endpoints, an edge under a vertical segment, and many
+    slabs that one segment spans. Slabs share a kernel call as hash
+    partitions share a task."""
+    rings = _sweep_case(case)
+    segs = ring_segments(_frame(spark, rings)).localCheckpoint()
     seg = segs.toPandas()
     want = _pair_bits(_cell_join(segs, CELL).collect())
-    want_dup = _dup_bits(
-        segs.groupBy("x1", "y1", "x2", "y2").agg(F.count("*").alias("k")).filter("k > 1").collect()
-    )
+    keys = ["x1", "y1", "x2", "y2"]
+    dup_keys = segs.groupBy(*keys).agg(F.count("*").alias("k")).filter("k > 1")
+    want_dup = _dup_bits(dup_keys.collect())
+    want_rings = {
+        r.ring_id: r["count"]
+        for r in segs.join(dup_keys, keys, "left_semi").groupBy("ring_id").count().collect()
+    }
     assert sum(n for (a, b, _x, _y), n in want.items() if a != b) > 10
     assert len(want_dup) > 10
+    # every segment of the out-and-back path and of the signed-zero
+    # copies is duplicated; the rings they copy are only in part
+    n = len(rings)
+    assert [want_rings.get(r) for r in range(n - 5, n)] == [4, 1, 1, 1, 1]
     for name, edges in _edge_sets(seg).items():
         e = np.asarray(edges, dtype=np.float64)
         rows = _slab_rows(seg, edges)
-        got, got_dup = [], []
+        got, got_dup, got_rings = [], [], []
         for part in range(3):
             slab, ring, idx, *xy = (a[rows[0] % 3 == part] for a in rows)
             chunk = 7 if name == "quantiles" else 1 << 16
             for r in slab_crossings(e, slab, ring, idx, *xy, cell_deg=CELL, chunk=chunk):
                 got += zip(*r)
-            got_dup += zip(*slab_duplicates(e, slab, *xy))
+            dups, per_ring = slab_duplicates(e, slab, ring, *xy)
+            got_dup += zip(*dups)
+            got_rings += zip(*per_ring)
         assert _pair_bits(got) == want, name
         assert _dup_bits(got_dup) == want_dup, name
+        assert _ring_sums(got_rings) == want_rings, name
 
         sweep = segment_sweep(segs, edges, CELL).localCheckpoint()
         assert _pair_bits(intersection_pairs(sweep).collect()) == want, name
         assert _dup_bits(duplicate_segment_counts(sweep).collect()) == want_dup, name
+        assert _ring_sums(ring_duplicate_counts(sweep).collect()) == want_rings, name
 
 
 def _next_job_id(spark) -> int:
