@@ -6,7 +6,7 @@ the DuckDB oracle can verify spatial operators without a spatial extension):
 
   relational  : F1/F2 filters, J1 semi, J3 anti, J13 exceptAll, A6 distinct,
                 A2 counters, O1 sort
-  geometry    : J2 location join + A4 haversine, R1 ring assembly (closed
+  geometry    : J2 location join, R1 ring assembly (closed
                 form oracle), J5 intersection math, J6 duplicate segments,
                 G6 point-in-polygon, G15 tile grid, cells, R4 envelope math,
                 F7/F8 edge filters, F4/F5 routing
@@ -17,9 +17,6 @@ the DuckDB oracle can verify spatial operators without a spatial extension):
                 cosine top-k (brute force + LSH + heuristic IVF),
                 phash multi-index Hamming near-dup, cleaning family
                 (line dedup, C4 filters, PII, chunking, packing),
-                the mergeable sketch family (HLL distinct, KMV
-                distinct-sample, count-min frequency, Bloom join
-                pruning, deterministic-sample quantiles),
                 curation chain, vocab counts, duplicated-substring spans
   spatial-idx : raster→vector run-merge (empty-tile water slabs)
   temporal    : gap sessionization; as-of join (joinless union+window,
@@ -255,8 +252,8 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_location_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 + A4: explode way refs → equi-join node locations → re-collect
-    ordered → per-way point count + exact-integer haversine length."""
+    """J2: explode way refs → equi-join node locations → re-collect
+    ordered → per-way point count + exact-integer squared-degree length."""
     li = _read(spark, sf_dir, "lineitem")
     nodes = _nodes(spark, sf_dir)
     refs = li.select(
@@ -279,8 +276,7 @@ def q_location_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correctly-rounded on every engine, and the BIGINT sum is exact and
     # order-independent, so the checksum is bit-identical between Spark
     # and DuckDB by construction (no sin/cos/asin ULP drift, which round-1
-    # and round-2 showed cannot be fully quantized away). The real
-    # haversine (`geom.haversine_m`) stays under pytest: test_geom.py::test_haversine.
+    # and round-2 showed cannot be fully quantized away).
     def leg(i):
         dx = F.element_at(F.col("xs"), i.cast("int")) - F.element_at(
             F.col("xs"), (i - 1).cast("int")
@@ -1203,123 +1199,6 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable HLL cardinality (sketch.hll_sketch + hll_cardinality):
-    per-event-type approximate distinct users at p=5 (m=32 — the raw-
-    estimate regime for the sf cardinalities).  Every step is md5-digit /
-    int64 exact and the one runtime division consumes a Python-precomputed
-    numerator literal, so the DuckDB twin reproduces estimates
-    bit-for-bit.  The sketch shuffle is ≤ m rows per group per task —
-    model-sized at any corpus scale — and merging day-sketches is an
-    exact per-register max (pinned by test)."""
-    from osmcoastline_spark.functions import sketch as SK
-
-    ev = _read(spark, sf_dir, "events")
-    sk = SK.hll_sketch(ev, ["event_type"], "user_id", p=5)
-    return SK.hll_cardinality(sk, ["event_type"], p=5)
-
-
-def q_kmv_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV bottom-k distinct sketch (sketch.kmv_sketch + kmv_cardinality):
-    per-event-type distinct users at k=32 (saturated — exercises the
-    Beyer et al. estimator, not the exact-count fallback).  Bottom-k is
-    exact algebra, so sketch, witnesses and estimate are all
-    deterministic; the numerator (k−1)·2^60 is a shared double literal
-    and the one runtime division is the only FP op — bit-exact twin."""
-    from osmcoastline_spark.functions import sketch as SK
-
-    ev = _read(spark, sf_dir, "events")
-    sk = SK.kmv_sketch(ev, ["event_type"], "user_id", k=32)
-    return SK.kmv_cardinality(sk, ["event_type"], k=32)
-
-
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min frequency sketch (sketch.cms_sketch + cms_estimate):
-    per-event-type user frequencies estimated from d=3 × w=64 int64
-    counters, heavy-hitter flag at est ≥ 48.  The sketch is ONE
-    model-sized exchange (≤ d·w rows per group survive partial agg);
-    the readout is d BROADCAST joins of that tiny state against the
-    candidate keys — zero key-side shuffle.  Every cell and estimate is
-    an exact int64 over md5 buckets, so the DuckDB twin is value-exact
-    (one-sided CMS guarantee est ≥ true is pinned in pytest)."""
-    from osmcoastline_spark.functions import sketch as SK
-
-    ev = _read(spark, sf_dir, "events")
-    sk = SK.cms_sketch(ev, ["event_type"], "user_id", d=3, w=64)
-    keys = (
-        ev.filter(F.col("user_id").isNotNull())
-        .select("event_type", "user_id")
-        .distinct()
-    )
-    est = SK.cms_estimate(sk, keys, ["event_type"], "user_id", d=3, w=64)
-    return est.select(
-        "event_type",
-        "user_id",
-        F.col("est").alias("est"),
-        (F.col("est") >= 48).alias("is_heavy"),
-    )
-
-
-def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter join pruning (sketch.bloom_build + bloom_prune): the
-    orders keys with o_totalprice > 400000 collapse to ≤ m set-bit rows
-    (ONE distinct exchange), then lineitem is pruned IN PLACE by k=3
-    broadcast bit-joins — the probe side is never shuffled, the contract
-    is no-false-negatives + bounded false positives (the same shape as
-    Spark's runtime bloom pruning, explicit and mergeable).  m=2^14 is
-    sized to leave a measurable FP excess over the exact semi-join so
-    the oracle checks the Bloom verdict itself, not a vacuous pass-all.
-    Output: per surviving order key, its lineitem row count."""
-    from osmcoastline_spark.functions import sketch as SK
-
-    orders = _read(spark, sf_dir, "orders")
-    li = _read(spark, sf_dir, "lineitem")
-    build = orders.filter(F.col("o_totalprice") > 400000).select(
-        F.col("o_orderkey").alias("key")
-    )
-    bloom = SK.bloom_build(build, "key", m_bits=1 << 14, k=3)
-    kept = SK.bloom_prune(
-        li.select("l_orderkey"), bloom, "l_orderkey", m_bits=1 << 14, k=3
-    )
-    return kept.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_lines")
-    )
-
-
-def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus overlap from sketches alone (sketch.kmv_overlap):
-    pairwise user-set Jaccard / union / intersection estimates between
-    event types, read entirely off the k=32 bottom-k sketches — the
-    corpus is touched once (by kmv_sketch) and never re-shuffled; the
-    pair lattice operates on ≤ groups·k rows.  Counting is exact
-    integer; the estimate columns are a fixed order of correctly-rounded
-    IEEE ops over exact ints and the shared (k−1)·2^60 literal, so the
-    DuckDB twin is bit-exact."""
-    from osmcoastline_spark.functions import sketch as SK
-
-    ev = _read(spark, sf_dir, "events")
-    sk = SK.kmv_sketch(ev, ["event_type"], "user_id", k=32)
-    return SK.kmv_overlap(sk, "event_type", k=32)
-
-
-def q_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic-sample quantile sketch (sketch.sample_sketch +
-    sample_quantiles): per-event-type p25/p50/p75/p95 of value from a
-    25% md5-Bernoulli row sample.  The sample is a pure function of
-    (salt, event_id, rate) — a NARROW zero-shuffle corpus pass — and
-    the readout's rank is exact integer arithmetic picking a COPIED
-    value (never arithmetic on doubles), so the DuckDB twin is
-    bit-exact.  DKW bounds the rank error; merge = plain union over
-    disjoint-id parts (pinned by test)."""
-    from osmcoastline_spark.functions import sketch as SK
-
-    ev = _read(spark, sf_dir, "events")
-    sk = SK.sample_sketch(
-        ev, ["event_type"], "value", "event_id", rate_hex=16384
-    )
-    return SK.sample_quantiles(sk, ["event_type"])
-
-
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing (clean.pack_sequences) over the chunking stage's
     output: per-bucket pack-and-slice with exact integer running sums —
@@ -1622,12 +1501,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_embedding_ivf_topk": q_embedding_ivf_topk,
         "q_phash_neardup": q_phash_neardup,
         "q_quality_classifier": q_quality_classifier,
-        "q_hll_users_by_type": q_hll_users_by_type,
-        "q_kmv_users_by_type": q_kmv_users_by_type,
-        "q_cms_heavy_hitters": q_cms_heavy_hitters,
-        "q_bloom_prune": q_bloom_prune,
-        "q_value_quantiles": q_value_quantiles,
-        "q_kmv_overlap": q_kmv_overlap,
         "q_pack_sequences": q_pack_sequences,
         "q_vectorize_water": q_vectorize_water,
         "q_sessionize": q_sessionize,
@@ -2317,12 +2190,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q_phash_neardup": _PHASH_NEARDUP_SQL,
         "q_quality_classifier": _QUALITY_SQL,
-        "q_hll_users_by_type": _HLL_SQL,
-        "q_kmv_users_by_type": _KMV_SQL,
-        "q_cms_heavy_hitters": _CMS_SQL,
-        "q_bloom_prune": _BLOOM_SQL,
-        "q_value_quantiles": _QUANTILES_SQL,
-        "q_kmv_overlap": _KMV_OVERLAP_SQL,
         "q_pack_sequences": _PACK_SEQUENCES_SQL,
         # raster→vector scanline run-merge over the J15 empty-tile water
         # set — the window twin of operators/vectorize.py:vectorize_cells
@@ -2454,282 +2321,6 @@ _PHASH_NEARDUP_SQL = f"""
     FROM imgs a JOIN imgs b ON a.image_id < b.image_id
     WHERE bit_count(xor(a.phash, b.phash)) <= 3
 """
-
-
-def _hll_sql(p: int = 5) -> str:
-    """HLL twin: the same md5-digit register pipeline (12-bit hex-prefix
-    bucket >> (12-p), digit-wise leading-zero rho capped at 40, exact
-    int64 harmonic sum scaled by 2^40) with the estimate's numerator as
-    the SAME Python-precomputed double literal the Spark side embeds —
-    the one runtime division is the only FP op, IEEE-identical."""
-    from osmcoastline_spark.functions.sketch import RHO_CAP, _numerator
-
-    m = 1 << p
-    scale = 1 << RHO_CAP
-    hx = "instr('0123456789abcdef', substr({s}, {i}, 1)) - 1"
-    d1 = hx.format(s="tw", i=1)
-    return f"""
-        WITH h AS (
-          SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS hxs
-          FROM events WHERE user_id IS NOT NULL
-        ),
-        t AS (
-          SELECT event_type,
-                 (({hx.format(s='hxs', i=1)}) * 256
-                  + ({hx.format(s='hxs', i=2)}) * 16
-                  + ({hx.format(s='hxs', i=3)})) >> {12 - p} AS bucket,
-                 regexp_replace(substr(hxs, 4, 12), '^0+', '') AS tw
-          FROM h
-        ),
-        r AS (
-          SELECT event_type, bucket,
-                 least(CASE WHEN tw = '' THEN 49
-                       ELSE (12 - length(tw)) * 4
-                            + (CASE WHEN {d1} >= 8 THEN 0
-                                    WHEN {d1} >= 4 THEN 1
-                                    WHEN {d1} >= 2 THEN 2
-                                    ELSE 3 END) + 1 END, {RHO_CAP}) AS rho
-          FROM t
-        ),
-        regs AS (SELECT event_type, bucket, max(rho) AS reg FROM r GROUP BY 1, 2),
-        agg AS (
-          SELECT event_type,
-                 CAST(sum(CAST(1 AS BIGINT) << CAST({RHO_CAP} - reg AS INT)) AS BIGINT) AS sp,
-                 CAST({m} - count(*) AS BIGINT) AS zero_regs
-          FROM regs GROUP BY 1
-        )
-        SELECT event_type,
-               CAST('{_numerator(m)!r}' AS DOUBLE)
-                 / CAST(sp + zero_regs * {scale} AS DOUBLE) AS est_raw,
-               zero_regs
-        FROM agg
-    """
-
-
-_HLL_SQL = _hll_sql()
-
-
-def _kmv_sql(k: int = 32) -> str:
-    """KMV twin: the same bottom-k pipeline computed globally (DuckDB has
-    no partial-agg stage to mirror — bottom-k of per-part bottom-k's IS
-    bottom-k of the union, the mergeability the Spark tests pin).  The
-    15-hex→int64 hash uses digit shifts; the saturated estimator shares
-    the Spark side's double-literal numerator."""
-    from osmcoastline_spark.functions.sketch import KMV_SPACE
-
-    num = float((k - 1) * KMV_SPACE)
-    return f"""
-        WITH h AS (
-          SELECT event_type,
-                 list_sum(list_transform(generate_series(1, 15),
-                   i -> (CAST(instr('0123456789abcdef',
-                              substr(md5(CAST(user_id AS VARCHAR)), i, 1)) - 1
-                         AS BIGINT) << CAST(4 * (15 - i) AS INT)))) AS h,
-                 CAST(user_id AS VARCHAR) AS v
-          FROM events WHERE user_id IS NOT NULL
-        ),
-        mins AS (SELECT event_type, CAST(h AS BIGINT) AS h, min(v) AS v FROM h GROUP BY 1, 2),
-        rk AS (
-          SELECT event_type, h,
-                 row_number() OVER (PARTITION BY event_type ORDER BY h, v) AS pos
-          FROM mins
-        ),
-        sk AS (SELECT event_type, h FROM rk WHERE pos <= {k}),
-        agg AS (
-          SELECT event_type, max(h) AS hk, count(*) AS n FROM sk GROUP BY 1
-        )
-        SELECT event_type,
-               CASE WHEN n < {k} THEN CAST(n AS DOUBLE)
-                    ELSE CAST('{num!r}' AS DOUBLE) / CAST(hk AS DOUBLE)
-               END AS est,
-               CAST(n AS BIGINT) AS sketch_size
-        FROM agg
-    """
-
-
-_KMV_SQL = _kmv_sql()
-
-
-def _cms_sql(d: int = 3, w: int = 64, threshold: int = 48) -> str:
-    """Count-min twin: identical md5 bucket arithmetic (15-hex-digit
-    int64 of md5("<depth>:<value>") mod w), exact int64 cells, min over
-    the d counters per candidate key — no FP anywhere, value-exact."""
-    bucket = """
-        (list_sum(list_transform(generate_series(1, 15),
-           i -> (CAST(instr('0123456789abcdef',
-                      substr(md5(CAST({dep} AS VARCHAR) || ':' || {val}), i, 1)) - 1
-                 AS BIGINT) << CAST(4 * (15 - i) AS INT)))) % {w})
-    """
-    return f"""
-        WITH src AS (
-          SELECT event_type, user_id, CAST(user_id AS VARCHAR) AS v
-          FROM events WHERE user_id IS NOT NULL
-        ),
-        depths AS (SELECT unnest(generate_series(0, {d - 1})) AS depth),
-        cells AS (
-          SELECT event_type, depth,
-                 {bucket.format(dep='depth', val='v', w=w)} AS bucket,
-                 count(*) AS cnt
-          FROM src, depths GROUP BY 1, 2, 3
-        ),
-        keys AS (SELECT DISTINCT event_type, user_id, v FROM src),
-        kb AS (
-          SELECT event_type, user_id, depth,
-                 {bucket.format(dep='depth', val='v', w=w)} AS bucket
-          FROM keys, depths
-        ),
-        est AS (
-          SELECT kb.event_type, kb.user_id,
-                 CAST(min(COALESCE(cells.cnt, 0)) AS BIGINT) AS est
-          FROM kb LEFT JOIN cells USING (event_type, depth, bucket)
-          GROUP BY 1, 2
-        )
-        SELECT event_type, user_id, est, (est >= {threshold}) AS is_heavy
-        FROM est
-    """
-
-
-_CMS_SQL = _cms_sql()
-
-
-def _bloom_sql(m_bits: int = 1 << 14, k: int = 3) -> str:
-    """Bloom-prune twin: identical md5("<i>:<key>") mod m bit positions
-    (the shared CMS hash family), membership = all k bits present —
-    integer-exact, so the FP excess over the exact semi-join is
-    reproduced verbatim."""
-    bit = """
-        (list_sum(list_transform(generate_series(1, 15),
-           i -> (CAST(instr('0123456789abcdef',
-                      substr(md5(CAST({dep} AS VARCHAR) || ':' || {val}), i, 1)) - 1
-                 AS BIGINT) << CAST(4 * (15 - i) AS INT)))) % {m})
-    """
-    return f"""
-        WITH depths AS (SELECT unnest(generate_series(0, {k - 1})) AS depth),
-        bits AS (
-          SELECT DISTINCT
-                 {bit.format(dep='depth', val='CAST(o_orderkey AS VARCHAR)', m=m_bits)} AS bit
-          FROM orders, depths WHERE o_totalprice > 400000
-        ),
-        probe AS (
-          SELECT l_orderkey, CAST(l_orderkey AS VARCHAR) AS v
-          FROM lineitem WHERE l_orderkey IS NOT NULL
-        ),
-        verdict AS (
-          SELECT p.l_orderkey,
-                 bool_and({bit.format(dep='d.depth', val='p.v', m=m_bits)} IN
-                          (SELECT bit FROM bits)) AS keep
-          FROM probe p, depths d
-          GROUP BY p.l_orderkey, p.v
-        )
-        SELECT p.l_orderkey, count(*) AS n_lines
-        FROM probe p JOIN verdict x
-          ON p.l_orderkey = x.l_orderkey AND x.keep
-        GROUP BY p.l_orderkey
-    """
-
-
-_BLOOM_SQL = _bloom_sql()
-
-
-def _kmv_overlap_sql(k: int = 32) -> str:
-    """kmv_overlap twin: same per-group bottom-k (the _kmv_sql pipeline),
-    then per unordered pair the union's bottom-k with exact membership
-    counts and the same fixed IEEE op order for the estimates."""
-    from osmcoastline_spark.functions.sketch import KMV_SPACE
-
-    num = float((k - 1) * KMV_SPACE)
-    return f"""
-        WITH h AS (
-          SELECT event_type AS g,
-                 list_sum(list_transform(generate_series(1, 15),
-                   i -> (CAST(instr('0123456789abcdef',
-                              substr(md5(CAST(user_id AS VARCHAR)), i, 1)) - 1
-                         AS BIGINT) << CAST(4 * (15 - i) AS INT)))) AS h,
-                 CAST(user_id AS VARCHAR) AS v
-          FROM events WHERE user_id IS NOT NULL
-        ),
-        mins AS (SELECT g, CAST(h AS BIGINT) AS h, min(v) AS v FROM h GROUP BY 1, 2),
-        rk AS (
-          SELECT g, h, v,
-                 row_number() OVER (PARTITION BY g ORDER BY h, v) AS pos
-          FROM mins
-        ),
-        sk AS (SELECT g, h FROM rk WHERE pos <= {k}),
-        lat AS (
-          SELECT a.g AS g1, b.g AS g2
-          FROM (SELECT DISTINCT g FROM sk) a, (SELECT DISTINCT g FROM sk) b
-          WHERE a.g < b.g
-        ),
-        u AS (
-          SELECT l.g1, l.g2, s.h,
-                 max(CASE WHEN s.g = l.g1 THEN 1 END) AS ina,
-                 max(CASE WHEN s.g = l.g2 THEN 1 END) AS inb
-          FROM lat l JOIN sk s ON s.g IN (l.g1, l.g2)
-          GROUP BY 1, 2, 3
-        ),
-        topk AS (
-          SELECT * FROM (
-            SELECT g1, g2, h, ina, inb,
-                   row_number() OVER (PARTITION BY g1, g2 ORDER BY h) AS pos
-            FROM u
-          ) WHERE pos <= {k}
-        ),
-        agg AS (
-          SELECT g1, g2,
-                 CAST(sum(CASE WHEN ina = 1 AND inb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS common,
-                 CAST(count(*) AS BIGINT) AS basis,
-                 max(h) AS hk
-          FROM topk GROUP BY 1, 2
-        )
-        SELECT g1, g2, common, basis,
-               CAST(common AS DOUBLE) / CAST(basis AS DOUBLE) AS jaccard_est,
-               CASE WHEN basis < {k} THEN CAST(basis AS DOUBLE)
-                    ELSE CAST('{num!r}' AS DOUBLE) / CAST(hk AS DOUBLE)
-               END AS union_est,
-               (CAST(common AS DOUBLE) / CAST(basis AS DOUBLE))
-                 * (CASE WHEN basis < {k} THEN CAST(basis AS DOUBLE)
-                         ELSE CAST('{num!r}' AS DOUBLE) / CAST(hk AS DOUBLE)
-                    END) AS inter_est
-        FROM agg
-    """
-
-
-_KMV_OVERLAP_SQL = _kmv_overlap_sql()
-
-
-def _quantiles_sql(rate_hex: int = 16384) -> str:
-    """Sample-quantile twin: identical md5 16-bit-prefix Bernoulli
-    verdict, identical exact-integer rank (num·n + den − 1) // den, est
-    copied from the sampled row — bit-exact even on doubles."""
-    from osmcoastline_spark.functions.sketch import QUANTILES
-
-    lattice = ", ".join(
-        f"('{label}', {num}, {den})" for label, (num, den) in QUANTILES.items()
-    )
-    return f"""
-        WITH s AS (
-          SELECT event_type, value
-          FROM events
-          WHERE value IS NOT NULL AND event_id IS NOT NULL
-            AND (list_sum(list_transform(generate_series(1, 4),
-                   i -> (CAST(instr('0123456789abcdef',
-                              substr(md5('q:' || CAST(event_id AS VARCHAR)), i, 1)) - 1
-                         AS BIGINT) << CAST(4 * (4 - i) AS INT))))) < {rate_hex}
-        ),
-        r AS (
-          SELECT event_type, value,
-                 row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-                 count(*) OVER (PARTITION BY event_type) AS n
-          FROM s
-        ),
-        lat AS (SELECT * FROM (VALUES {lattice}) t(q, num, den))
-        SELECT event_type, q, value AS est
-        FROM r, lat
-        WHERE rn = greatest(1, (num * n + den - 1) // den)
-    """
-
-
-_QUANTILES_SQL = _quantiles_sql()
 
 
 # quality-classifier twin: same tokenizer as the repetition twin, same
@@ -2885,7 +2476,8 @@ WHERE substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8) < {_MIX_CASE}
 
 # mixture_sample twin: same IEEE op order as curate.mixture_sample —
 # (CAST(budget) * CAST(w)) / CAST(tok), floor/frac threshold, 32-bit md5
-# prefix via digit shifts (the _kmv_sql idiom). Weight literals are CAST
+# prefix as the sum over its first 8 hex digits of (instr('0123456789abcdef',
+# digit) − 1) << 4·(8 − i), exact BIGINT arithmetic. Weight literals are CAST
 # AS DOUBLE because bare 0.2 is DECIMAL in DuckDB.
 _MIX_W_CASE = " ".join(
     f"WHEN '{s}' THEN CAST({w!r} AS DOUBLE)" for s, w in sorted(MIX_WEIGHTS.items())

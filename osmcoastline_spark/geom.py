@@ -133,18 +133,6 @@ def sq_distance(x1, y1, x2, y2):
     return dx * dx + dy * dy
 
 
-def haversine_m(lon1, lat1, lon2, lat2):
-    """Vectorized haversine distance in meters (reference A4 uses osmium's
-    haversine for total coastline length, src/osmcoastline_ways.cpp:87)."""
-    r = 6371000.0
-    p1 = np.radians(np.asarray(lat1, dtype=np.float64))
-    p2 = np.radians(np.asarray(lat2, dtype=np.float64))
-    dphi = p2 - p1
-    dlmb = np.radians(np.asarray(lon2, dtype=np.float64) - np.asarray(lon1, dtype=np.float64))
-    a = np.sin(dphi / 2.0) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dlmb / 2.0) ** 2
-    return 2.0 * r * np.arcsin(np.sqrt(a))
-
-
 # ------------------------------------------------------------ WebMercator
 
 
@@ -360,40 +348,6 @@ def clip_ring_rect(
         if not pieces:
             break
     return pieces
-
-
-# --------------------------------------------------------- simplification
-
-
-def douglas_peucker(xs, ys, tol: float) -> tuple[np.ndarray, np.ndarray]:
-    """Iterative Douglas–Peucker (reference G14 uses
-    ST_SimplifyPreserveTopology; we provide the standard DP variant)."""
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    n = len(xs)
-    if n < 3:
-        return xs, ys
-    keep = np.zeros(n, dtype=bool)
-    keep[0] = keep[-1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i, j = stack.pop()
-        if j <= i + 1:
-            continue
-        sx, sy, ex, ey = xs[i], ys[i], xs[j], ys[j]
-        seg = np.hypot(ex - sx, ey - sy)
-        mx = xs[i + 1 : j]
-        my = ys[i + 1 : j]
-        if seg == 0:
-            d = np.hypot(mx - sx, my - sy)
-        else:
-            d = np.abs((ex - sx) * (sy - my) - (sx - mx) * (ey - sy)) / seg
-        k = int(np.argmax(d))
-        if d[k] > tol:
-            keep[i + 1 + k] = True
-            stack.append((i, i + 1 + k))
-            stack.append((i + 1 + k, j))
-    return xs[keep], ys[keep]
 
 
 # ----------------------------------------------------- Antarctica closure

@@ -9,8 +9,9 @@ the last committed stage instead of recomputing. Stage order:
     rings_merged                (after R2 close — merged open rings)
     land_polygons / water_polygons / lines / error tables
 
-Resume rule: a stage is loaded iff its manifest exists; everything
-downstream of the first missing stage recomputes. `PipelineRun.loaded`
+Resume rule: a stage is loaded iff its manifest exists and its lineage
+carries this run's fingerprint; everything downstream of the first
+missing or mismatched stage recomputes. `PipelineRun.loaded`
 records which stages came from snapshots (tested in
 tests/test_checkpointed.py).
 """
@@ -66,10 +67,10 @@ def _run_fingerprint(opt: Options, nodes, ways) -> str:
 
 
 def _snapshot_matches(sink: CheckpointSink, stage: str, fp: str) -> bool:
-    """True iff the stage's recorded fingerprint matches (legacy snapshots
-    without one are accepted for backward compatibility)."""
-    recorded = sink.manifest(stage)["lineage"].get("fingerprint")
-    return recorded is None or recorded == fp
+    """True iff the stage is committed with exactly this fingerprint. A
+    manifest without one was not written by `run_checkpointed` and could
+    come from any inputs, so it never matches."""
+    return sink.exists(stage) and sink.manifest(stage)["lineage"].get("fingerprint") == fp
 
 
 def run_checkpointed(
@@ -105,16 +106,12 @@ def run_checkpointed(
     # into an old sink dir silently returned the stale tables
     fp = _run_fingerprint(opt, nodes, ways)
 
-    # _meta_done demands an EXACT fingerprint match (no legacy accept):
-    # it is the one marker that can survive from a DIFFERENT run — e.g.
-    # run B recommits every table with fp2 and crashes before its marker,
-    # leaving run A's fp1 marker next to fp2 tables; resuming would attach
-    # run A's stats/warnings/errors (and exit code) to run B's tables.
-    if (
-        all(sink.exists(t) and _snapshot_matches(sink, t, fp) for t in wanted)
-        and sink.exists("_meta_done")
-        and sink.manifest("_meta_done")["lineage"].get("fingerprint") == fp
-    ):
+    # _meta_done must match too: it is the one marker that can survive
+    # from a DIFFERENT run — e.g. run B recommits every table with fp2 and
+    # crashes before its marker, leaving run A's fp1 marker next to fp2
+    # tables; resuming would attach run A's stats/warnings/errors (and
+    # exit code) to run B's tables.
+    if all(_snapshot_matches(sink, t, fp) for t in [*wanted, "_meta_done"]):
         for t in wanted:
             res.tables[t] = sink.read(spark, t)
             run.loaded.append(t)
@@ -127,13 +124,8 @@ def run_checkpointed(
     # finer-grained resume: a crash after R1 assembly leaves committed
     # rings_closed/rings_open snapshots — restart the pipeline FROM them
     # (skipping the location join + assembly) instead of recomputing
-    if (
-        sink.exists("rings_closed")
-        and sink.exists("rings_open")
-        and _snapshot_matches(sink, "rings_closed", fp)
-        and _snapshot_matches(sink, "rings_open", fp)
-    ):
-        pre = sink.manifest("rings_closed")["lineage"].get("stats_pre", {})
+    if _snapshot_matches(sink, "rings_closed", fp) and _snapshot_matches(sink, "rings_open", fp):
+        pre = sink.manifest("rings_closed")["lineage"]["stats_pre"]
         res2 = run_pipeline(
             spark, nodes, ways, opt,
             preassembled=(sink.read(spark, "rings_closed"),

@@ -96,6 +96,10 @@ from osmcoastline_spark.schemas import (
     MAX_WARNINGS,
 )
 
+# the assembly stats a ring snapshot carries as `stats_pre`, so a resume
+# from it reports what the skipped assembly would have
+_STATS_PRE = ("ways", "rings_from_single_way", "unconnected_nodes_before_close")
+
 
 @dataclass
 class Options:
@@ -307,23 +311,11 @@ def _run_pipeline(
 
     if preassembled is not None:
         closed, open_, pre_stats = preassembled
-        res.stats.update(pre_stats)
+        # indexed: a snapshot missing a key raises instead of `meta`
+        # quietly reporting 0
+        res.stats.update({k: pre_stats[k] for k in _STATS_PRE})
         n_closed_pre = n_open_pre = None
         antarctica_kw = {}
-        # an older snapshot may lack some stats_pre keys (round-3 ADVICE):
-        # recompute the missing counts from the loaded rings instead of
-        # silently reporting 0 in `meta`. `ways` = distinct ways across
-        # both ring sets (cheap explode over the snapshot, no node join).
-        if "rings_from_single_way" not in res.stats:
-            res.stats["rings_from_single_way"] = closed.filter(
-                F.col("nways") == 1
-            ).count()
-        if "unconnected_nodes_before_close" not in res.stats:
-            res.stats["unconnected_nodes_before_close"] = open_.count() * 2
-        if "ways" not in res.stats:
-            res.stats["ways"] = int(
-                closed.select(F.sum("nways")).first()[0] or 0
-            ) + int(open_.select(F.sum("nways")).first()[0] or 0)
     else:
         # pass 1+2 in the reference's order: the ring plan from way node
         # ids, then the location join regrouped straight into rings
@@ -359,11 +351,7 @@ def _run_pipeline(
         res.stats["rings_from_single_way"] = asm_seen["closed_single"]
         res.stats["unconnected_nodes_before_close"] = n_open_pre * 2
         if mid_sink is not None:
-            pre = {
-                k: res.stats[k]
-                for k in ("ways", "rings_from_single_way", "unconnected_nodes_before_close")
-                if k in res.stats
-            }
+            pre = {k: res.stats[k] for k in _STATS_PRE}
             extra = getattr(mid_sink, "run_lineage", {})
             mid_sink.write("rings_closed", closed, lineage={"stats_pre": pre, **extra})
             mid_sink.write("rings_open", open_, lineage={"stats_pre": pre, **extra})

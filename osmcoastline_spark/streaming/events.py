@@ -371,209 +371,3 @@ def stream_sessionize(
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
-
-
-def stream_hll_distinct(
-    stream: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "user_id",
-    p: int = 12,
-) -> DataFrame:
-    """Streaming twin of sketch.hll_sketch → hll_cardinality: an
-    incremental per-key COUNT DISTINCT estimate over an unbounded stream,
-    refreshed every micro-batch that touches the key.
-
-    The register projection (md5 → bucket, rho) runs PLAN-SIDE via the
-    shared sketch.hll_register_exprs, so a value hashes to the identical
-    register here and in the batch sketch; the stateful operator only
-    max-merges registers (associative/commutative/idempotent ⇒ the state
-    after any batch split equals the batch sketch over the union of all
-    arrived rows, and re-delivered rows are absorbed — at-least-once
-    safe). The emitted (_sp, zero_regs) are exact int64 readouts of the
-    register state, and est_raw is computed by the SAME plan expression
-    as the batch twin (sketch.hll_estimate_expr), so after the final
-    batch the streaming estimate equals hll_cardinality over the full
-    input BIT-FOR-BIT (pinned by test_stream_hll_distinct).
-
-    State per key is one m-byte register vector (m = 2^p ≤ 4096) plus a
-    batch counter — O(keys), independent of stream length: the whole
-    point of carrying a sketch instead of a seen-set. NULL values are
-    ignored (COUNT DISTINCT semantics, matching the batch sketch).
-
-    Output: key, updates (number of micro-batches that touched the key —
-    monotone, so "latest row per key" is well-defined under update
-    mode), zero_regs, est_raw.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from osmcoastline_spark.functions import sketch as SK
-
-    bucket, rho = SK.hll_register_exprs(value_col, p)
-    rows = stream.filter(F.col(value_col).isNotNull()).select(
-        F.col(key_col),
-        bucket.cast("int").alias("_bucket"),
-        rho.cast("int").alias("_rho"),
-    )
-    m = 1 << p
-    key_type = stream.schema[key_col].dataType.simpleString()
-
-    def upd(key, pdfs, state):
-        if state.exists:
-            regs_bytes, batches = state.get
-            regs = np.frombuffer(bytes(regs_bytes), dtype=np.uint8).copy()
-        else:
-            regs, batches = np.zeros(m, dtype=np.uint8), 0
-        touched = False
-        for pdf in pdfs:
-            if len(pdf):
-                touched = True
-                np.maximum.at(
-                    regs,
-                    pdf["_bucket"].to_numpy(np.int64),
-                    pdf["_rho"].to_numpy(np.uint8),
-                )
-        if not touched:
-            return iter(())
-        batches += 1
-        state.update((regs.tobytes(), batches))
-        nz = regs[regs > 0].astype(np.int64)
-        # exact int64: each term ≤ 2^(RHO_CAP-1), ≤ 4096 terms ⇒ ≤ 2^51
-        sp = int(np.sum(np.int64(1) << (SK.RHO_CAP - nz))) if nz.size else 0
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        key_col: [key[0]],
-                        "updates": [batches],
-                        "_sp": [sp],
-                        "zero_regs": [int(m - nz.size)],
-                    }
-                )
-            ]
-        )
-
-    out = rows.groupBy(key_col).applyInPandasWithState(
-        upd,
-        outputStructType=(
-            f"{key_col} {key_type}, updates int, _sp long, zero_regs long"
-        ),
-        stateStructType="regs binary, batches int",
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-    return out.withColumn("est_raw", SK.hll_estimate_expr(p)).select(
-        key_col, "updates", "zero_regs", "est_raw"
-    )
-
-
-def stream_cms_counts(
-    stream: DataFrame,
-    probe_values: list[str],
-    key_col: str = "event_type",
-    value_col: str = "user_id",
-    d: int = 4,
-    w: int = 256,
-) -> DataFrame:
-    """Streaming twin of sketch.cms_sketch → cms_estimate: per-key
-    frequency estimates for a fixed watch list of probe values,
-    refreshed every micro-batch that touches the key — the streaming
-    heavy-hitter monitor ("how often has each watched value occurred so
-    far") whose state is d·w int64 counters per key, independent of
-    stream length.
-
-    The bucket projection (md5("<depth>:<value>") 60-bit prefix mod w)
-    runs PLAN-SIDE via the shared sketch._cms_bucket, so a value lands
-    in the identical cell here and in the batch sketch; the stateful
-    operator only ADDS per-batch partial counts into the state matrix
-    (associative/commutative ⇒ the state after any batch split equals
-    cms_sketch over the union of all arrived rows, so after the final
-    batch every probe estimate equals batch cms_estimate BIT-FOR-BIT —
-    pinned by test_stream_cms_counts). Unlike the HLL twin's max-merge,
-    counter ADDS are not idempotent: re-delivered rows double-count
-    (the standard CMS streaming caveat — at-least-once delivery needs
-    upstream dedup, e.g. stream_dedup_first_seen, for exact parity).
-
-    The emitted estimate is min over the d cells each probe value
-    hashes to, computed with hashlib md5 — the same bytes as the plan
-    expression. NULL values are ignored (matching the batch sketch).
-
-    Output: key, updates (micro-batches that touched the key), value
-    (probe), est.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from osmcoastline_spark.functions.sketch import _cms_bucket
-
-    if not probe_values:
-        raise ValueError("stream_cms_counts: probe_values must be non-empty")
-    if d < 1 or w < 2:
-        raise ValueError(f"need d >= 1 and w >= 2, got d={d}, w={w}")
-
-    probe_cells = [
-        [
-            int(hashlib.md5(f"{i}:{v}".encode()).hexdigest()[:15], 16) % w
-            for i in range(d)
-        ]
-        for v in probe_values
-    ]
-    v = F.col(value_col).cast("string")
-    depth = F.explode(F.array(*[F.lit(i) for i in range(d)])).alias("depth")
-    rows = (
-        stream.filter(F.col(value_col).isNotNull())
-        .select(F.col(key_col), v.alias("_v"), depth)
-        .select(
-            key_col,
-            F.col("depth").cast("int").alias("_d"),
-            _cms_bucket(F.col("_v"), F.col("depth"), w).cast("int").alias("_b"),
-        )
-    )
-    key_type = stream.schema[key_col].dataType.simpleString()
-
-    def upd(key, pdfs, state):
-        if state.exists:
-            cells_bytes, batches = state.get
-            cells = np.frombuffer(bytes(cells_bytes), dtype=np.int64).reshape(d, w).copy()
-        else:
-            cells, batches = np.zeros((d, w), dtype=np.int64), 0
-        touched = False
-        for pdf in pdfs:
-            if len(pdf):
-                touched = True
-                np.add.at(
-                    cells,
-                    (pdf["_d"].to_numpy(np.int64), pdf["_b"].to_numpy(np.int64)),
-                    1,
-                )
-        if not touched:
-            return iter(())
-        batches += 1
-        state.update((cells.tobytes(), batches))
-        ests = [
-            int(min(cells[i, c] for i, c in enumerate(pc))) for pc in probe_cells
-        ]
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        key_col: [key[0]] * len(probe_values),
-                        "updates": [batches] * len(probe_values),
-                        "value": list(probe_values),
-                        "est": ests,
-                    }
-                )
-            ]
-        )
-
-    return rows.groupBy(key_col).applyInPandasWithState(
-        upd,
-        outputStructType=(
-            f"{key_col} {key_type}, updates int, value string, est long"
-        ),
-        stateStructType="cells binary, batches int",
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )

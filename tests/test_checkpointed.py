@@ -206,6 +206,48 @@ def test_stale_meta_marker_from_other_run_rejected(spark, tmp_path):
     assert "fingerprint" in meta
 
 
+def test_resume_rejects_unfingerprinted_snapshots(spark, tmp_path):
+    """A snapshot whose manifest carries no fingerprint was not written
+    by run_checkpointed and may come from any inputs: neither the full
+    resume nor the mid-pipeline ring resume may accept it."""
+    import json
+
+    nodes, ways = fixture_df(spark, NODES, WAYS)
+    nodes.write.parquet(str(tmp_path / "n"))
+    ways.write.parquet(str(tmp_path / "w"))
+    n = spark.read.parquet(str(tmp_path / "n"))
+    w = spark.read.parquet(str(tmp_path / "w"))
+
+    root = str(tmp_path / "ckpt_nofp")
+    sink = CheckpointSink(root)
+    opt = Options(output_polygons="land")
+    run1 = run_checkpointed(spark, n, w, opt, sink)
+    land1 = {tuple(r.shell_x) for r in run1.result.tables["land_polygons"].collect()}
+
+    os.remove(os.path.join(root, "_meta_done", "_MANIFEST.json"))
+    stripped = set()
+    for stage in os.listdir(root):
+        mpath = os.path.join(root, stage, "_MANIFEST.json")
+        if not os.path.exists(mpath):
+            continue
+        with open(mpath) as f:
+            m = json.load(f)
+        if m["lineage"].pop("fingerprint", None) is not None:
+            stripped.add(stage)
+        with open(mpath, "w") as f:
+            json.dump(m, f)
+    assert {"rings_closed", "rings_open", "land_polygons"} <= stripped
+
+    run2 = run_checkpointed(spark, n, w, opt, sink)
+    assert run2.loaded == []
+    assert any(t == "land_polygons" for t, _ in run2.committed)
+    land2 = {tuple(r.shell_x) for r in run2.result.tables["land_polygons"].collect()}
+    assert land2 == land1
+    assert run2.result.stats["ways"] == run1.result.stats["ways"]
+    # the recompute re-fingerprints every snapshot, so the next run resumes
+    assert "land_polygons" in run_checkpointed(spark, n, w, opt, sink).loaded
+
+
 def test_zorder_extent_3857(spark):
     """morton_interleave_expr with the WebMercator extent must actually
     spread metre-valued coordinates across the code space — the hardcoded

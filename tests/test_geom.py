@@ -89,16 +89,6 @@ def test_wkt_formatting():
     assert geom.wkt_linestring([1.01, 1.04], [1.01, 1.01]) == "LINESTRING(1.01 1.01, 1.04 1.01)"
 
 
-def test_douglas_peucker():
-    xs = np.array([0.0, 0.5, 1.0, 1.5, 2.0])
-    ys = np.array([0.0, 0.001, 0.0, -0.001, 0.0])
-    sx, sy = geom.douglas_peucker(xs, ys, 0.01)
-    assert len(sx) == 2
-    # tol below the wiggle: extremes kept; the exact-on-line midpoint drops
-    sx2, sy2 = geom.douglas_peucker(xs, ys, 0.0001)
-    assert len(sx2) == 4
-
-
 def test_antarctica_closure():
     lons, lats = geom.antarctica_closure_points(4326)
     assert lats.min() == -90.0
@@ -106,9 +96,3 @@ def test_antarctica_closure():
     lons2, lats2 = geom.antarctica_closure_points(3857)
     assert abs(lats2.min() + 85.0511288) < 1e-9
     assert lons2[-1] == 180.0
-
-
-def test_haversine():
-    # quarter meridian ≈ 10,007,543 m with r=6371000
-    d = geom.haversine_m(0.0, 0.0, 0.0, 90.0)
-    assert abs(d - np.pi / 2 * 6371000.0) < 1.0

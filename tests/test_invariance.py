@@ -1,10 +1,10 @@
 """Outputs depend only on inputs and options, not on how Spark partitions
 the work: on a small `dirty`-shaped input (crossing rings, figure eights,
-duplicate ways, gaps, Antarctica), the error, ring and line tables, the
-stats and the exit code are the same under several shuffle partition
-counts and with adaptive execution off; so are the land, water and line
-tables and the stats of a small `islands`-shaped run that splits its
-polygons."""
+duplicate ways, gaps, Antarctica), the error, ring, line and segment
+tables, the stats and the exit code are the same under several shuffle
+partition counts and with adaptive execution off; so are the land,
+water, line, segment and error tables and the stats of a small
+`islands`-shaped run that splits its polygons."""
 
 import pytest
 
@@ -12,11 +12,11 @@ from osmcoastline_spark.plans.pipeline import Options, run_pipeline
 
 # the benchmark's `dirty` options
 DIRTY_OPTIONS = Options(output_rings=True, output_lines=True, output_polygons="none")
-DIRTY_TABLES = ("error_points", "error_lines", "rings", "lines")
+DIRTY_TABLES = ("error_points", "error_lines", "rings", "lines", "segments")
 # `islands` with lines, and polygons small enough that split runs several
 # rounds; water then clips split pieces to their owned boxes
 ISLANDS_OPTIONS = Options(output_polygons="both", output_lines=True, max_points_in_polygon=16)
-ISLANDS_TABLES = ("land_polygons", "water_polygons", "lines")
+ISLANDS_TABLES = ("land_polygons", "water_polygons", "lines", "segments", "error_points", "error_lines")
 
 CONFIGS = [
     {"spark.sql.shuffle.partitions": "1"},

@@ -7,6 +7,7 @@ import ast
 import importlib
 import os
 import pkgutil
+import types
 
 import osmcoastline_spark
 
@@ -49,6 +50,101 @@ def test_bench_queries_are_entry_queries():
     bench = _literal(os.path.join(ROOT, "bench.py"), "bench_queries")
     assert len(bench) == 10
     assert set(bench) <= set(entry.queries())
+
+
+def _tool_scripts() -> list[str]:
+    """The scripts outside the package and the tests that import it."""
+    paths = [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "bench_extra.py")]
+    for sub in ("BENCH", "tools"):
+        paths += sorted(
+            os.path.join(ROOT, sub, fn)
+            for fn in os.listdir(os.path.join(ROOT, sub))
+            if fn.endswith(".py")
+        )
+    return paths
+
+
+def _script_trees(path: str) -> list[ast.Module]:
+    """The script's own tree, plus the tree of every string literal in it
+    that is a Python program importing the package (the child programs
+    the scaling scripts run with `python -c`)."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    trees = [tree]
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "import" in node.value
+            and "osmcoastline_spark" in node.value
+        ):
+            try:
+                trees.append(ast.parse(node.value))
+            except SyntaxError:
+                pass
+    return trees
+
+
+def _dangling_imports(tree: ast.Module) -> list[str]:
+    """Every `osmcoastline_spark` module the program imports, every name
+    it imports from one, and every attribute it reads off an imported
+    module, that does not resolve."""
+    bad: list[str] = []
+    modules: dict[str, types.ModuleType] = {}  # local alias -> module
+
+    def resolve(name: str, lineno: int):
+        try:
+            return importlib.import_module(name)
+        except ImportError:
+            bad.append(f"{lineno}: no module {name}")
+            return None
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == "osmcoastline_spark":
+                    mod = resolve(alias.name, node.lineno)
+                    if mod is not None and alias.asname:
+                        modules[alias.asname] = mod
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "osmcoastline_spark":
+            mod = resolve(node.module, node.lineno)
+            if mod is None:
+                continue
+            for alias in node.names:
+                if hasattr(mod, alias.name):
+                    obj = getattr(mod, alias.name)
+                else:
+                    try:
+                        obj = importlib.import_module(f"{node.module}.{alias.name}")
+                    except ImportError:
+                        bad.append(f"{node.lineno}: {node.module} has no {alias.name}")
+                        continue
+                if isinstance(obj, types.ModuleType):
+                    modules[alias.asname or alias.name] = obj
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+            and not hasattr(modules[node.value.id], node.attr)
+        ):
+            bad.append(f"{node.lineno}: {modules[node.value.id].__name__} has no {node.attr}")
+    return bad
+
+
+def test_tool_scripts_import_only_what_exists():
+    """bench.py, bench_extra.py, BENCH/*.py and tools/*.py run outside
+    the tests; retiring a module or helper must not leave one of them
+    importing it."""
+    scripts = _tool_scripts()
+    assert os.path.join(ROOT, "bench.py") in scripts and len(scripts) > 3
+    bad = [
+        f"{os.path.relpath(path, ROOT)}: {b}"
+        for path in scripts
+        for tree in _script_trees(path)
+        for b in _dangling_imports(tree)
+    ]
+    assert bad == [], bad
 
 
 def test_traced_layer_functions_are_pipeline_names():

@@ -585,137 +585,3 @@ def test_stream_sessionize_null_ts_and_value_tolerated(spark, tmp_path):
         q.stop()
     # 2 events (the null-ts row dropped), null value adds 0 micros
     assert got == [(1, 1, 2, 1_500_000)]
-
-
-def test_stream_hll_distinct(spark, tmp_path):
-    """Streaming HLL distinct: registers max-merge across MICRO-BATCHES
-    (keyed binary state), duplicates re-delivered in a later batch are
-    absorbed (idempotent merge), and after the final batch the per-key
-    (zero_regs, est_raw) equals the batch hll_sketch → hll_cardinality
-    over the union of all arrived rows BIT-FOR-BIT (shared plan-side
-    register + estimate expressions)."""
-    import json
-
-    from osmcoastline_spark.functions import sketch as SK
-    from osmcoastline_spark.streaming.events import stream_hll_distinct
-
-    src = tmp_path / "ev_in"
-    src.mkdir()
-    b1 = [("a", i) for i in range(40)] + [("b", i) for i in range(7)]
-    # batch 2: overlapping 'a' values (idempotence), one dup 'b', new key 'c'
-    b2 = [("a", i) for i in range(20, 60)] + [("b", 3), ("c", 1)]
-    with open(src / "b1.json", "w") as f:
-        for k, v in b1:
-            f.write(json.dumps({"k": k, "v": v}) + "\n")
-
-    stream = (
-        spark.readStream.schema("k string, v long")
-        .option("maxFilesPerTrigger", "1")
-        .json(str(src))
-    )
-    q = (
-        stream_hll_distinct(stream, key_col="k", value_col="v", p=5)
-        .writeStream.format("memory")
-        .queryName("hll_out")
-        .outputMode("update")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        with open(src / "b2.json", "w") as f:
-            for k, v in b2:
-                f.write(json.dumps({"k": k, "v": v}) + "\n")
-        q.processAllAvailable()
-        rows = spark.sql("select * from hll_out").collect()
-    finally:
-        q.stop()
-
-    latest = {}
-    for r in rows:
-        if r.k not in latest or r.updates > latest[r.k].updates:
-            latest[r.k] = r
-
-    batch = spark.createDataFrame(b1 + b2, "k string, v long")
-    exp = {
-        r.k: r
-        for r in SK.hll_cardinality(
-            SK.hll_sketch(batch, ["k"], "v", p=5), ["k"], p=5
-        ).collect()
-    }
-    assert set(latest) == set(exp)
-    for k in exp:
-        assert latest[k].zero_regs == exp[k].zero_regs, k
-        assert latest[k].est_raw == exp[k].est_raw, k  # bit-exact
-    # 'a' was touched by both micro-batches, 'c' only by the second
-    assert latest["a"].updates == 2 and latest["c"].updates == 1
-
-
-def test_stream_cms_counts(spark, tmp_path):
-    """Streaming CMS: counters ADD across micro-batches (keyed binary
-    state) and after the final batch every probe estimate equals batch
-    cms_sketch -> cms_estimate over the union of all arrived rows
-    BIT-FOR-BIT (shared plan-side bucket hashing)."""
-    import json
-
-    from osmcoastline_spark.functions import sketch as SK
-    from osmcoastline_spark.streaming.events import stream_cms_counts
-
-    src = tmp_path / "cms_in"
-    src.mkdir()
-    b1 = [("a", i % 5) for i in range(40)] + [("b", 1)] * 7
-    b2 = [("a", i % 3) for i in range(30)] + [("b", 2)] * 4 + [("c", 1)]
-    probes = ["0", "1", "2", "9"]  # 9 never occurs: est bounded by collisions
-    with open(src / "b1.json", "w") as f:
-        for k, v in b1:
-            f.write(json.dumps({"k": k, "v": v}) + "\n")
-
-    stream = (
-        spark.readStream.schema("k string, v long")
-        .option("maxFilesPerTrigger", "1")
-        .json(str(src))
-    )
-    q = (
-        stream_cms_counts(stream, probes, key_col="k", value_col="v", d=3, w=16)
-        .writeStream.format("memory")
-        .queryName("cms_out")
-        .outputMode("update")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        with open(src / "b2.json", "w") as f:
-            for k, v in b2:
-                f.write(json.dumps({"k": k, "v": v}) + "\n")
-        q.processAllAvailable()
-        rows = spark.sql("select * from cms_out").collect()
-    finally:
-        q.stop()
-
-    latest = {}
-    for r in rows:
-        cur = latest.get((r.k, r.value))
-        if cur is None or r.updates > cur.updates:
-            latest[(r.k, r.value)] = r
-
-    # batch twin over the union of all arrived rows
-    all_rows = b1 + b2
-    batch = spark.createDataFrame(all_rows, "k string, v long")
-    sk = SK.cms_sketch(batch, ["k"], "v", d=3, w=16)
-    keys = spark.createDataFrame(
-        [(k, p) for k in {r[0] for r in all_rows} for p in probes],
-        "k string, probe string",
-    )
-    est = SK.cms_estimate(sk, keys, ["k"], "probe", d=3, w=16)
-    want = {(r.k, r.probe): r.est for r in est.collect()}
-
-    assert set(latest) == set(want)
-    for kk, r in latest.items():
-        assert r.est == want[kk], (kk, r.est, want[kk])
-    # batch-2-only key arrives with updates == 1; 'a' has two updates
-    assert latest[("c", "1")].updates == 1
-    assert latest[("a", "0")].updates == 2
-    # one-sided guarantee visible: est('a','0') >= true count
-    # (8 zeros in b1's i%5 + 10 in b2's i%3 = 18)
-    assert latest[("a", "0")].est >= 18
