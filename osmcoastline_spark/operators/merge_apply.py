@@ -10,10 +10,6 @@ that the array side joins by broadcast.
 Ring assembly (rings.assemble_rings) needs no separate application: its
 plan is applied while the location join regroups the points, and it
 shares this module's lead rotation (`rotate_closed_to_lead`).
-
-`seq`/`seq2` order parts within a group lexicographically: `seq` is the
-outer position assigned by the planner, `seq2` an inner position (0 for
-every gap-close part).
 """
 
 from __future__ import annotations
@@ -30,7 +26,7 @@ RING_SCHEMA = (
 
 # one row per part: the group's finalize flags ride on each of its parts
 PLAN_SCHEMA = (
-    "ring_id long, group_id long, seq int, seq2 int, skip_first boolean, "
+    "ring_id long, group_id long, seq int, skip_first boolean, "
     "append_first boolean, fake_close boolean, grp_fixed boolean"
 )
 
@@ -65,7 +61,7 @@ def apply_merge_plan(
     passes the rings it leaves out of matching through this way.
     """
     flags = {g: rest for g, *rest in finalize}
-    rows = [(r, g, s, 0, sk, *flags[g]) for r, g, s, sk in plan]
+    rows = [(r, g, s, sk, *flags[g]) for r, g, s, sk in plan]
     plan_df = util.local_frame(open_rings.sparkSession, rows, PLAN_SCHEMA)
     return _merge_catalyst(open_rings.join(F.broadcast(plan_df), "ring_id"))
 
@@ -92,7 +88,6 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
         "fake_close",
         "grp_fixed",
         "seq",
-        "seq2",
         "nways",
         "fixed",
         "ring_id",
@@ -102,10 +97,10 @@ def _merge_catalyst(tagged: DataFrame) -> DataFrame:
         "IF(skip_first, slice(xs, 2, greatest(size(xs) - 1, 0)), xs) AS t_xs",
         "IF(skip_first, slice(ys, 2, greatest(size(ys) - 1, 0)), ys) AS t_ys",
     )
-    # (seq, seq2) is unique per group (planner invariant), so sorting the
+    # seq is unique per group (planner invariant), so sorting the
     # narrower struct orders parts exactly like the reference's wider one
     agg = trimmed.groupBy("group_id", "append_first", "fake_close", "grp_fixed").agg(
-        F.expr("sort_array(collect_list(struct(seq, seq2, t_ids, t_xs, t_ys))) AS parts"),
+        F.expr("sort_array(collect_list(struct(seq, t_ids, t_xs, t_ys))) AS parts"),
         F.expr("sum(nways) AS nways_sum"),
         F.expr("bool_or(fixed) AS any_fixed"),
         F.expr("min(struct(ring_id, lead)) AS ml"),

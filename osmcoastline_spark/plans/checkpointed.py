@@ -11,8 +11,9 @@ the last committed stage instead of recomputing. Stage order:
 
 Resume rule: a stage is loaded iff its manifest exists and its lineage
 carries this run's fingerprint; everything downstream of the first
-missing or mismatched stage recomputes. `PipelineRun.loaded`
-records which stages came from snapshots (tested in
+missing or mismatched stage recomputes. Only file-backed inputs have a
+fingerprint: a run over an in-memory frame commits but never resumes.
+`PipelineRun.loaded` records which stages came from snapshots (tested in
 tests/test_checkpointed.py).
 """
 
@@ -44,21 +45,24 @@ class PipelineRun:
     committed: list = field(default_factory=list)
 
 
-def _run_fingerprint(opt: Options, nodes, ways) -> str:
-    """Identity of (options, inputs) a snapshot was produced from.
+def _run_fingerprint(opt: Options, nodes, ways) -> str | None:
+    """Identity of (options, inputs) a snapshot was produced from, or None
+    when either input has no files.
 
     File-based inputs are identified by their file lists (DataFrame
-    .inputFiles()); in-memory frames have no stable identity and
-    fingerprint as their schema alone — callers resuming across runs are
-    expected to read from files, which is the only case where a stale
-    sink directory can silently shadow new inputs."""
+    .inputFiles()). An in-memory frame has no stable identity (its schema
+    says nothing of its rows), so a run over one gets no fingerprint: it
+    still commits its tables, and no run resumes from them."""
     import hashlib
     import json
 
+    files = [list(nodes.inputFiles()), list(ways.inputFiles())]
+    if not all(files):
+        return None
     blob = json.dumps(
         {
             "options": str(opt),
-            "inputs": sorted(list(nodes.inputFiles()) + list(ways.inputFiles())),
+            "inputs": sorted(files[0] + files[1]),
             "schemas": [nodes.schema.simpleString(), ways.schema.simpleString()],
         },
         sort_keys=True,
@@ -66,11 +70,16 @@ def _run_fingerprint(opt: Options, nodes, ways) -> str:
     return hashlib.md5(blob.encode()).hexdigest()
 
 
-def _snapshot_matches(sink: CheckpointSink, stage: str, fp: str) -> bool:
+def _snapshot_matches(sink: CheckpointSink, stage: str, fp: str | None) -> bool:
     """True iff the stage is committed with exactly this fingerprint. A
     manifest without one was not written by `run_checkpointed` and could
-    come from any inputs, so it never matches."""
-    return sink.exists(stage) and sink.manifest(stage)["lineage"].get("fingerprint") == fp
+    come from any inputs, and a run over in-memory inputs has none (None),
+    so neither ever matches."""
+    return (
+        fp is not None
+        and sink.exists(stage)
+        and sink.manifest(stage)["lineage"].get("fingerprint") == fp
+    )
 
 
 def run_checkpointed(

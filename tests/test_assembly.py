@@ -2,9 +2,13 @@
 way node ids, then one location regroup straight into rings — checked
 against the locate-then-merge assembly it replaced, kept here as the
 reference: every way located into its own arrays first, the plan built
-from the located chains, the arrays merged in a second shuffle."""
+from the located chains (by the driver chaining or by randomized-mating
+rounds), the arrays merged in a second shuffle. `_driver_finish_plan` is
+also checked on its own, without Spark, by a seeded property test."""
 
 from __future__ import annotations
+
+import random
 
 import pandas as pd
 import pytest
@@ -22,6 +26,17 @@ from osmcoastline_spark.synth import fixture_df, synth_nodes_ways
 
 WAYS = "way_id long, node_ids array<long>"
 NODES = "node_id long, lon double, lat double"
+
+# FIXTURES.md F1: one island from two ways
+F1_NODES = [
+    (100, 1.01, 1.01),
+    (101, 1.02, 1.01),
+    (102, 1.03, 1.02),
+    (103, 1.04, 1.02),
+    (104, 1.05, 1.03),
+    (105, 1.01, 1.03),
+]
+F1_WAYS = [(200, [100, 101, 102]), (201, [102, 103, 104, 105, 100])]
 
 
 def _reference_assemble(ways, nodes, driver_threshold=2_000_000, max_rounds=64):
@@ -144,7 +159,7 @@ def _reference_assemble(ways, nodes, driver_threshold=2_000_000, max_rounds=64):
     if driver_plan is not None:
         spark = ways.sparkSession
         repr_plan = spark.createDataFrame(
-            pd.DataFrame(driver_plan[0], columns=["repr", "group_id", "seq", "rskip"]),
+            pd.DataFrame(driver_plan, columns=["repr", "group_id", "seq", "rskip"]),
             "repr long, group_id long, seq int, rskip boolean",
         )
         plan_parts.append(
@@ -164,6 +179,15 @@ def _reference_assemble(ways, nodes, driver_threshold=2_000_000, max_rounds=64):
     plan = plan_parts[0]
     for p in plan_parts[1:]:
         plan = plan.unionByName(p)
+    # _merge_catalyst orders a group's parts by one seq: fold (seq, seq2)
+    plan = plan.select(
+        "ring_id",
+        "group_id",
+        (
+            F.row_number().over(Window.partitionBy("group_id").orderBy("seq", "seq2")) - 1
+        ).alias("seq"),
+        "skip_first",
+    )
     fin = plan.select("group_id").distinct().select(
         "group_id",
         F.lit(False).alias("append_first"),
@@ -201,6 +225,9 @@ def _frames(spark, inp):
 
 
 def _input(spark, case):
+    if case == "f1":
+        nodes, ways = fixture_df(spark, F1_NODES, F1_WAYS)
+        return coastline_ways(ways).select("way_id", "node_ids"), nodes.select("node_id", "lon", "lat")
     if case == "dirty":
         from perfbench.inputs import dirty
 
@@ -209,15 +236,28 @@ def _input(spark, case):
     return coastline_ways(ways).select("way_id", "node_ids"), nodes.select("node_id", "lon", "lat")
 
 
-@pytest.mark.parametrize("threshold", [2_000_000, 0], ids=["driver", "rounds"])
-@pytest.mark.parametrize("case", [1, 7, 42, "dirty"])
+@pytest.mark.parametrize(
+    "case,threshold",
+    [
+        pytest.param(case, threshold, id=f"{case}-{name}")
+        for case in (1, 7, 42, "dirty", "f1")
+        for name, threshold in (("driver", 2_000_000), ("rounds", 0))
+        # the rounds' max-way-id ownership does not chain repeated ways as
+        # the reference's id-order walk does (a way A→B, its reverse B→A
+        # and a copy of A→B under a higher id: the walk closes the first
+        # two, the rounds the last two), so `dirty` is checked against the
+        # driver chaining only
+        if (case, name) != ("dirty", "rounds")
+    ],
+)
 def test_assembly_equals_locate_then_merge(spark, case, threshold):
-    """Exactly the same ring rows as the reference, bit for bit, on the
-    synth islands (open rings among them) and on the `dirty` rings:
-    repeated ways, chains sharing an endpoint (the max-way-id ownership
-    rule), figure eights, the Antarctica arc."""
+    """Exactly the same ring rows as the reference, bit for bit, whether
+    the reference plans by driver chaining or by mating rounds: on the
+    synth islands (open rings among them) and the F1 island of two ways;
+    and against the driver chaining on the `dirty` rings (repeated ways,
+    chains sharing an endpoint, figure eights, the Antarctica arc)."""
     ways, nodes = _input(spark, case)
-    got, seen = _assemble(ways, nodes, driver_threshold=threshold)
+    got, seen = _assemble(ways, nodes)
     want, want_nmiss = _reference_assemble(ways, nodes, driver_threshold=threshold)
     assert _ring_set(got) == _ring_set(want)
     assert seen["nmiss"] == want_nmiss == 0
@@ -244,7 +284,7 @@ def test_assembly_edge_ways_equal_reference(spark, threshold):
         ],
         WAYS,
     )
-    got, seen = _assemble(ways, nodes, driver_threshold=threshold)
+    got, seen = _assemble(ways, nodes)
     want, _ = _reference_assemble(ways, nodes, driver_threshold=threshold)
     assert _ring_set(got) == _ring_set(want)
     assert seen["ways"] == 7 and seen["nmiss"] == 0
@@ -301,3 +341,89 @@ def test_assembly_job_count(spark):
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
     assert len(tracker.getJobIdsForGroup(group)) <= 7
     assert seen["ways"] > 0 and open_.count() > 0 and closed.count() > 0
+
+
+def _ring_ways(seed: int, *, dirty: bool) -> tuple[list, list]:
+    """Open endpoint triples (way_id, first, last) of seeded random rings,
+    each cut into 1-5 ways with shuffled way ids, and the way ids of each
+    ring. A one-way ring is closed and, as in assemble_rings, not planned.
+    `dirty` also drops ways (gaps), repeats ways under new ids and lets a
+    ring start at a node of an earlier ring."""
+    rng = random.Random(seed)
+    rings, cut_nodes, node = [], [], 0
+    for _ in range(rng.randint(5, 30)):
+        m = rng.randint(3, 12)
+        nodes = list(range(node, node + m))
+        node += m
+        if dirty and cut_nodes and rng.random() < 0.25:
+            nodes[0] = rng.choice(rng.choice(cut_nodes))
+        cuts = [0, *sorted(rng.sample(range(1, m), rng.randint(0, min(4, m - 1))))]
+        ends = [nodes[c] for c in cuts]
+        cut_nodes.append(ends)
+        ring = [(ends[i], ends[(i + 1) % len(ends)]) for i in range(len(ends))]
+        if dirty:
+            ring = [w for w in ring if rng.random() > 0.15]
+            ring += [w for w in ring if rng.random() < 0.1]
+        rings.append(ring)
+    n = sum(len(r) for r in rings)
+    ids = iter(rng.sample(range(1, 10 * n + 1), n))
+    eps, ring_ids = [], []
+    for ring in rings:
+        tagged = [(next(ids), a, b) for a, b in ring]
+        eps += [t for t in tagged if t[1] != t[2]]
+        ring_ids.append({t[0] for t in tagged if t[1] != t[2]})
+    return eps, ring_ids
+
+
+def _check_plan(eps: list) -> dict:
+    """The plan invariants of _driver_finish_plan; returns {group id:
+    way ids in seq order}."""
+    plan = _driver_finish_plan(eps)
+    ends = {w: (a, b) for w, a, b in eps}
+    assert sorted(r[0] for r in plan) == sorted(ends)
+    groups: dict[int, list] = {}
+    for way, gid, seq, skip in plan:
+        groups.setdefault(gid, []).append((seq, way, skip))
+    for gid, parts in groups.items():
+        parts.sort()
+        assert gid == min(w for _, w, _ in parts)
+        assert [s for s, _, _ in parts] == list(range(len(parts)))
+        assert all(skip == (s > 0) for s, _, skip in parts)
+        assert all(ends[a][1] == ends[b][0] for (_, a, _), (_, b, _) in zip(parts, parts[1:]))
+    shuffled = list(eps)
+    random.Random(len(eps)).shuffle(shuffled)
+    assert _driver_finish_plan(shuffled) == plan
+    return {gid: [w for _, w, _ in parts] for gid, parts in groups.items()}
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_driver_finish_plan_properties(seed):
+    """Every open way in exactly one plan row, the group id its minimum
+    way id, seq 0..k-1 with skip_first exactly when seq > 0, consecutive
+    parts sharing their endpoint node, and a plan independent of input
+    order: on gaps, repeated ways and rings sharing a node; on clean
+    disjoint rings, one closed group per ring of two or more ways."""
+    _check_plan(_ring_ways(seed, dirty=True)[0])
+    eps, ring_ids = _ring_ways(seed, dirty=False)
+    groups = _check_plan(eps)
+    ends = {w: (a, b) for w, a, b in eps}
+    assert sorted(map(sorted, groups.values())) == sorted(sorted(r) for r in ring_ids if r)
+    assert all(ends[ws[0]][0] == ends[ws[-1]][1] for ws in groups.values())
+
+
+def test_driver_finish_plan_chains_repeated_ways_in_id_order():
+    """A way, its reverse and a copy of the way under a higher id (the
+    `dirty` workload's repeated ways): the walk in way-id order closes the
+    first two into a ring and leaves the copy open, as the reference's
+    endpoint maps do."""
+    assert _check_plan([(1, 10, 11), (2, 11, 10), (3, 10, 11)]) == {1: [1, 2], 3: [3]}
+
+
+def test_driver_finish_plan_prepend_closes_a_ring():
+    """A prepend that closes a ring, which disjoint rings never reach: way
+    3 extends way 2, the chain that took node 10's end-map slot, so way 4
+    (10 → 11) finds no chain ending at 10 and closes way 1 from the front.
+    (The closing prev+nxt merge with a later chain at the tombstoned end
+    is test_milestone1's duplicate-endpoint regression.)"""
+    groups = _check_plan([(1, 11, 10), (2, 12, 10), (3, 10, 13), (4, 10, 11)])
+    assert groups == {1: [4, 1], 2: [2, 3]}

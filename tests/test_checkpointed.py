@@ -16,8 +16,16 @@ NODES = [
 WAYS = [(200, [100, 101, 102]), (201, [102, 103, 104, 105, 100])]
 
 
+def _parquet_inputs(spark, tmp_path, nodes=NODES):
+    """The fixture as file-backed frames: only they have a fingerprint."""
+    n, w = fixture_df(spark, nodes, WAYS)
+    n.write.parquet(str(tmp_path / "nodes"))
+    w.write.parquet(str(tmp_path / "ways"))
+    return spark.read.parquet(str(tmp_path / "nodes")), spark.read.parquet(str(tmp_path / "ways"))
+
+
 def test_checkpoint_then_resume(spark, tmp_path):
-    nodes, ways = fixture_df(spark, NODES, WAYS)
+    nodes, ways = _parquet_inputs(spark, tmp_path)
     sink = CheckpointSink(str(tmp_path / "ckpt"))
     opt = Options(output_polygons="land")
 
@@ -59,6 +67,28 @@ def test_checkpoint_then_resume(spark, tmp_path):
     run4 = run_checkpointed(spark, nodes, ways, opt, sink)
     assert run4.loaded == []
     assert any(t == "land_polygons" for t, _ in run4.committed)
+
+
+def test_in_memory_inputs_never_resume(spark, tmp_path):
+    """In-memory frames have no input files, so their schema would be the
+    whole fingerprint: a second run over the same ways with every node
+    moved must not resume the first run's tables. Both runs commit."""
+    sink = CheckpointSink(str(tmp_path / "ckpt_mem"))
+    opt = Options(output_polygons="land")
+    nodes, ways = fixture_df(spark, NODES, WAYS)
+    run1 = run_checkpointed(spark, nodes, ways, opt, sink)
+    assert run1.loaded == [] and run1.committed
+    shell1 = {x for r in run1.result.tables["land_polygons"].collect() for x in r.shell_x}
+
+    moved = [(n, x + 10, y + 5) for n, x, y in NODES]
+    nodes2, ways2 = fixture_df(spark, moved, WAYS)
+    run2 = run_checkpointed(spark, nodes2, ways2, opt, sink)
+    assert run2.loaded == []
+    assert any(t == "land_polygons" for t, _ in run2.committed)
+    shell2 = {x for r in run2.result.tables["land_polygons"].collect() for x in r.shell_x}
+    assert shell2 == {x + 10 for x in shell1}
+    # an unchanged in-memory rerun recomputes too
+    assert run_checkpointed(spark, nodes2, ways2, opt, sink).loaded == []
 
 
 def test_iceberg_sink_surface(spark, monkeypatch):

@@ -60,20 +60,6 @@ def test_island_from_two_ways(spark):
     assert geom.is_clockwise(p[0].shell_x, p[0].shell_y)
 
 
-def test_distributed_mating_path_matches_driver_path(spark):
-    """driver_threshold=0 forces the distributed mating rounds; results must
-    equal the driver-finish path (same rings, same rotation)."""
-    nodes, ways = fixture_df(spark, F1_NODES, F1_WAYS)
-    ways = coastline_ways(ways)
-    points = ways_with_locations(ways, nodes)
-    c_driver, o_driver, _ = assemble_rings(ways, points)
-    c_dist, o_dist, _ = assemble_rings(ways, points, driver_threshold=0)
-    a = {(r.ring_id, tuple(r.node_ids), r.nways) for r in c_driver.collect()}
-    b = {(r.ring_id, tuple(r.node_ids), r.nways) for r in c_dist.collect()}
-    assert a == b
-    assert o_driver.count() == o_dist.count() == 0
-
-
 def test_closed_single_way_fast_path(spark):
     nodes, ways = fixture_df(
         spark,
@@ -168,7 +154,7 @@ def test_driver_finish_plan_property_random_fragments():
                 next_rid += 1
             want_groups.append((frozenset(rids), closed))
         rng.shuffle(endpoints)
-        plan, finalize = _driver_finish_plan(endpoints)
+        plan = _driver_finish_plan(endpoints)
         # every input chain appears in the plan exactly once
         assert sorted(r for r, _, _, _ in plan) == sorted(r for r, _, _ in endpoints)
         groups = {}
@@ -182,8 +168,6 @@ def test_driver_finish_plan_property_random_fragments():
             assert set().union(*covering) >= want
             if closed:
                 assert covering == [want]
-        # finalize rows correspond 1:1 to surviving groups
-        assert sorted(g for g, *_ in finalize) == sorted(groups)
 
 
 def test_driver_finish_plan_no_chain_lost_at_duplicate_endpoints():
@@ -196,5 +180,5 @@ def test_driver_finish_plan_no_chain_lost_at_duplicate_endpoints():
 
     K, W, X, Y, M = 100, 200, 300, 400, 500
     endpoints = [(1, K, X), (2, K, W), (3, W, K), (4, Y, K), (5, X, Y), (6, K, M)]
-    plan, finalize = _driver_finish_plan(endpoints)
+    plan = _driver_finish_plan(endpoints)
     assert sorted(r for r, _, _, _ in plan) == [1, 2, 3, 4, 5, 6]

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 import os
 import pkgutil
 import types
@@ -85,12 +86,15 @@ def _script_trees(path: str) -> list[ast.Module]:
     return trees
 
 
-def _dangling_imports(tree: ast.Module) -> list[str]:
+def _dangling_imports(tree: ast.Module) -> tuple[list[str], int]:
     """Every `osmcoastline_spark` module the program imports, every name
-    it imports from one, and every attribute it reads off an imported
-    module, that does not resolve."""
+    it imports from one, every attribute it reads off an imported
+    module, and every keyword it passes to an imported package callable
+    whose signature lacks it (callables taking **kwargs accept any), that
+    does not resolve; and the number of keywords checked."""
     bad: list[str] = []
     modules: dict[str, types.ModuleType] = {}  # local alias -> module
+    names: dict[str, object] = {}  # local name -> imported package object
 
     def resolve(name: str, lineno: int):
         try:
@@ -104,8 +108,10 @@ def _dangling_imports(tree: ast.Module) -> list[str]:
             for alias in node.names:
                 if alias.name.split(".")[0] == "osmcoastline_spark":
                     mod = resolve(alias.name, node.lineno)
-                    if mod is not None and alias.asname:
-                        modules[alias.asname] = mod
+                    if mod is not None:
+                        modules[alias.asname or "osmcoastline_spark"] = (
+                            mod if alias.asname else osmcoastline_spark
+                        )
         elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "osmcoastline_spark":
             mod = resolve(node.module, node.lineno)
             if mod is None:
@@ -121,6 +127,20 @@ def _dangling_imports(tree: ast.Module) -> list[str]:
                         continue
                 if isinstance(obj, types.ModuleType):
                     modules[alias.asname or alias.name] = obj
+                else:
+                    names[alias.asname or alias.name] = obj
+
+    def target(func: ast.expr):
+        """The package object a call's func expression names, or None."""
+        if isinstance(func, ast.Name):
+            return names.get(func.id, modules.get(func.id))
+        if isinstance(func, ast.Attribute):
+            owner = target(func.value)
+            if isinstance(owner, types.ModuleType):
+                return getattr(owner, func.attr, None)
+        return None
+
+    checked = 0
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.Attribute)
@@ -129,22 +149,40 @@ def _dangling_imports(tree: ast.Module) -> list[str]:
             and not hasattr(modules[node.value.id], node.attr)
         ):
             bad.append(f"{node.lineno}: {modules[node.value.id].__name__} has no {node.attr}")
-    return bad
+        elif isinstance(node, ast.Call):
+            fn = target(node.func)
+            kws = [k.arg for k in node.keywords if k.arg is not None]
+            if fn is None or isinstance(fn, types.ModuleType) or not kws:
+                continue
+            try:
+                params = inspect.signature(fn).parameters
+            except (TypeError, ValueError):
+                continue
+            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+                continue
+            checked += len(kws)
+            bad += [
+                f"{node.lineno}: {getattr(fn, '__name__', fn)}() takes no keyword {k}"
+                for k in kws
+                if k not in params
+            ]
+    return bad, checked
 
 
 def test_tool_scripts_import_only_what_exists():
     """bench.py, bench_extra.py, BENCH/*.py and tools/*.py run outside
-    the tests; retiring a module or helper must not leave one of them
-    importing it."""
+    the tests; retiring a module, helper or parameter must not leave one
+    of them importing it or passing it."""
     scripts = _tool_scripts()
     assert os.path.join(ROOT, "bench.py") in scripts and len(scripts) > 3
-    bad = [
-        f"{os.path.relpath(path, ROOT)}: {b}"
-        for path in scripts
-        for tree in _script_trees(path)
-        for b in _dangling_imports(tree)
-    ]
+    bad, checked = [], 0
+    for path in scripts:
+        for tree in _script_trees(path):
+            b, n = _dangling_imports(tree)
+            bad += [f"{os.path.relpath(path, ROOT)}: {x}" for x in b]
+            checked += n
     assert bad == [], bad
+    assert checked > 0
 
 
 def test_traced_layer_functions_are_pipeline_names():
