@@ -175,7 +175,13 @@ def segment_sweep(
     kinds of rows, read with `intersection_pairs`,
     `duplicate_segment_counts` and `ring_duplicate_counts`. Only the
     duplicate segment rows fill `k`, so `F.count("k")` over the sweep
-    counts the duplicate keys."""
+    counts the duplicate keys.
+
+    The only Python stage that keeps its partition count
+    (`arrow_stage(keep_partitions=True)`): the kernel holds its whole
+    partition in memory, and `SLAB_SEGMENTS` bounds that only while each
+    slab is a task of its own. Coalescing to the core count would merge
+    up to `SLAB_QUANTILES` slabs into one task."""
     edges_np = np.asarray(edges, dtype=np.float64)
     keys = F.array(*map(F.lit, _partition_keys(len(edges) + 1)))
 
@@ -201,7 +207,12 @@ def segment_sweep(
             F.sequence(_slab_of(F.col("x1"), edges), _slab_of(F.col("x2"), edges))
         ).alias("slab"),
     ).repartition(len(edges) + 1, F.element_at(keys, F.col("slab") + 1))
-    return arrow_stage(copies, kernel, ", ".join(f"{c} {t}" for c, t in _SWEEP_COLUMNS.items()))
+    return arrow_stage(
+        copies,
+        kernel,
+        ", ".join(f"{c} {t}" for c, t in _SWEEP_COLUMNS.items()),
+        keep_partitions=True,
+    )
 
 
 def _sweep_columns(**cols: np.ndarray) -> dict:

@@ -104,8 +104,6 @@ def _driver_finish_plan(endpoints: list[tuple[int, int, int]]) -> list:
             start_nodes.pop(last, None)
             nxt.first = first
             if nxt.closed:
-                if end_nodes.get(nxt.last) is nxt:
-                    end_nodes.pop(nxt.last, None)
                 continue
             start_nodes[nxt.first] = nxt
 

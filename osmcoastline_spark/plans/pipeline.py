@@ -35,7 +35,10 @@ duplicate counts from which gap closing finds the orphan rings.
 Every Python stage — the sweep, ring validity, repair, containment,
 split, water, lines and the 3857 transform — is a mapInArrow stage
 through util.arrow_stage, whose codec hands the kernels numpy views of the
-Arrow list columns and writes their outputs back as Arrow lists. The
+Arrow list columns and writes their outputs back as Arrow lists. Each of
+them runs at most one task per core (the helper coalesces its input to
+the core count, since every Python task pays a fixed worker set-up),
+except the sweep, which keeps one task per x-slab. The
 Antarctica closure and the land-free water tiles are Catalyst
 projections. Known deviations:
   * check_polygons validity is shell-level (the axis-parallel split cuts

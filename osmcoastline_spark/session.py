@@ -56,7 +56,7 @@ def get_spark(
         # 16 MB advisory shuffle chunks (default 64 MB): the big kernel
         # stages otherwise coalesce to fewer tasks than cores×waves
         # (measured: 840 MB regroup shuffle → 15 tasks → half-idle second
-        # wave on 8 cores); minPartitionSize=16k below still prevents the
+        # wave on 8 cores); minPartitionSize=16k above still prevents the
         # tiny-shuffle single-task collapse
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         # 32 MB scan splits (default 128 MB): the geometry kernels cost

@@ -208,13 +208,26 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
 
 
 def arrow_stage(
-    df: DataFrame, kernel: Callable[[Iterator[pa.RecordBatch]], Iterator[dict]], schema
+    df: DataFrame,
+    kernel: Callable[[Iterator[pa.RecordBatch]], Iterator[dict]],
+    schema,
+    keep_partitions: bool = False,
 ) -> DataFrame:
     """`df.mapInArrow` over `kernel`, which maps the partition's Arrow
     batches to output batches given as {column: values}: an Arrow array,
     a numpy array or what `pack` takes, each brought to its type in
     `schema` (a DDL string or StructType, converted to Arrow once, here
-    on the driver). Outputs with no rows are dropped."""
+    on the driver). Outputs with no rows are dropped.
+
+    The stage runs at most one task per core: its input is coalesced to
+    `defaultParallelism` partitions first. Every Python task pays a fixed
+    worker set-up (pyspark's `importlib.invalidate_caches()` among it)
+    whatever its rows, and the inputs here are unions of checkpoints with
+    a few rows in each of many partitions. The coalesce is narrow, so it
+    adds no exchange and no job, and it never raises the partition count.
+    The kernel still sees batches of at most `maxRecordsPerBatch` rows.
+    `keep_partitions` skips it, for a kernel whose partitions are its
+    units of work (`segment_sweep`'s slabs)."""
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(struct)
 
@@ -231,4 +244,6 @@ def arrow_stage(
             if out.num_rows:
                 yield out
 
+    if not keep_partitions:
+        df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     return df.mapInArrow(run, struct)

@@ -2,7 +2,8 @@
 `list_views` / `column_rows` read list columns as numpy views with offsets
 rebased onto the batch, `pack` / `list_array` write them back. Round trips
 are exact to the bit, for nulls, empty lists and batches sliced anywhere,
-and a Spark kernel's output does not depend on the Arrow batch size."""
+and a Spark kernel's output does not depend on the Arrow batch size.
+`arrow_stage` runs at most one task per core, except the sweep's."""
 
 import warnings
 
@@ -10,7 +11,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from osmcoastline_spark.util import column_rows, list_array, list_views, pack
+from osmcoastline_spark.util import arrow_stage, column_rows, list_array, list_views, pack
 
 DOUBLES = pa.list_(pa.field("element", pa.float64()))
 NESTED = pa.list_(pa.field("element", DOUBLES))
@@ -193,3 +194,50 @@ def test_polygonize_with_holes_logs_no_pyspark_warning(spark):
         if issubclass(w.category, UserWarning) and "pyspark" in w.filename
     ]
     assert pyspark_warnings == []
+
+
+def _ids(df):
+    """`df`'s ids through an identity Python stage (a kernel defined here,
+    so Spark pickles it by value: workers cannot import the tests)."""
+
+    def kernel(batches):
+        for b in batches:
+            yield {"id": b.column("id")}
+
+    return arrow_stage(df, kernel, "id long")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_arrow_stage_runs_one_task_per_core(spark):
+    """A union of checkpoints has the partitions of all its parts; the
+    Python stage over it runs one task per core, every row kept."""
+    parts = [spark.range(10 * i, 10 * i + 10, 1, 4) for i in range(3)]
+    union = parts[0].union(parts[1]).union(parts[2])
+    assert union.rdd.getNumPartitions() == 12
+    out = _ids(union)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism == 4
+    assert "Exchange" not in _plan(out)  # a narrow coalesce
+    assert sorted(r.id for r in out.collect()) == list(range(30))
+
+
+def test_arrow_stage_never_adds_partitions_or_an_exchange(spark):
+    out = _ids(spark.range(0, 5, 1, 1))
+    assert out.rdd.getNumPartitions() == 1
+    assert "Exchange" not in _plan(out)
+    assert sorted(r.id for r in out.collect()) == list(range(5))
+
+
+def test_segment_sweep_keeps_one_task_per_slab(spark):
+    """The sweep's kernel holds a whole partition in memory, so its slabs
+    are never merged into the core count's worth of tasks."""
+    from osmcoastline_spark.operators.intersections import segment_sweep
+
+    segs = spark.createDataFrame(
+        [(i, 0, float(i), 0.0, float(i) + 0.5, 1.0) for i in range(12)],
+        "ring_id long, idx int, x1 double, y1 double, x2 double, y2 double",
+    )
+    edges = [float(e) for e in range(1, 9)]
+    assert segment_sweep(segs, edges).rdd.getNumPartitions() == len(edges) + 1 == 9

@@ -2,13 +2,23 @@
 the work: on a small `dirty`-shaped input (crossing rings, figure eights,
 duplicate ways, gaps, Antarctica), the error, ring, line and segment
 tables, the stats and the exit code are the same under several shuffle
-partition counts and with adaptive execution off; so are the land,
-water, line, segment and error tables and the stats of a small
-`islands`-shaped run that splits its polygons."""
+partition counts, with adaptive execution off and on one core; so are
+the land, water, line, segment and error tables and the stats of a small
+`islands`-shaped run that splits its polygons. Every Python stage but
+the sweep runs one task per core, so one core against four changes how
+their rows are grouped into tasks."""
+
+import os
+import pickle
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
 from osmcoastline_spark.plans.pipeline import Options, run_pipeline
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # the benchmark's `dirty` options
 DIRTY_OPTIONS = Options(output_rings=True, output_lines=True, output_polygons="none")
@@ -50,12 +60,12 @@ def dirty_inputs(spark, tmp_path_factory):
     # 3 figure eights and 2 crossing ring pairs; a ring drawn twice and a
     # repeated way
     assert base["stats"]["intersections"] >= 7 and base["stats"]["overlaps"] > 0
-    return nodes, ways, base
+    return nodes, ways, base, (nodes_dir, ways_dir)
 
 
 @pytest.mark.parametrize("conf", CONFIGS, ids=lambda c: "-".join(f"{k[10:]}={v}" for k, v in c.items()))
 def test_error_outputs_independent_of_partitioning(spark, dirty_inputs, conf):
-    nodes, ways, base = dirty_inputs
+    nodes, ways, base, _dirs = dirty_inputs
     before = {k: spark.conf.get(k) for k in conf}
     try:
         for k, v in conf.items():
@@ -90,12 +100,12 @@ def islands_inputs(spark, tmp_path_factory):
     base = _islands_outcome(spark, nodes, ways)
     s = base["stats"]
     assert s["rings"] == 60 and s["land_polygons_after_split"] > s["land_polygons_before_split"]
-    return nodes, ways, base
+    return nodes, ways, base, (nodes_dir, ways_dir)
 
 
 @pytest.mark.parametrize("conf", CONFIGS, ids=lambda c: "-".join(f"{k[10:]}={v}" for k, v in c.items()))
 def test_split_water_lines_independent_of_partitioning(spark, islands_inputs, conf):
-    nodes, ways, base = islands_inputs
+    nodes, ways, base, _dirs = islands_inputs
     before = {k: spark.conf.get(k) for k in conf}
     try:
         for k, v in conf.items():
@@ -104,3 +114,49 @@ def test_split_water_lines_independent_of_partitioning(spark, islands_inputs, co
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+@pytest.fixture(scope="module")
+def one_core_outcomes(dirty_inputs, islands_inputs, tmp_path_factory):
+    """The outcomes of both runs in a local[1] driver of their own (the
+    tests' session is local[4]), with the same shuffle partitions."""
+    out = tmp_path_factory.mktemp("local1") / "outcomes.pickle"
+    script = textwrap.dedent(
+        """
+        import pickle, sys
+        sys.path.insert(0, %r)
+        from osmcoastline_spark.session import get_spark
+        from tests.test_invariance import _islands_outcome, _outcome
+
+        spark = get_spark("invariance-local1", master="local[1]", shuffle_partitions=8)
+        read = spark.read.parquet
+        (dn, dw), (inn, iw) = %r, %r
+        outcomes = {
+            "dirty": _outcome(spark, read(dn), read(dw)),
+            "islands": _islands_outcome(spark, read(inn), read(iw)),
+        }
+        with open(%r, "wb") as f:
+            pickle.dump(outcomes, f)
+        spark.stop()
+        """
+        % (ROOT, dirty_inputs[3], islands_inputs[3], str(out))
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=900,
+        cwd=out.parent,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "2g"},
+    )
+    assert run.returncode == 0 and out.exists(), run.stderr[-3000:]
+    with open(out, "rb") as f:
+        return pickle.load(f)
+
+
+def test_error_outputs_same_on_one_core(dirty_inputs, one_core_outcomes):
+    assert one_core_outcomes["dirty"] == dirty_inputs[2]
+
+
+def test_split_water_lines_same_on_one_core(islands_inputs, one_core_outcomes):
+    assert one_core_outcomes["islands"] == islands_inputs[2]
