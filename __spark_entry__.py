@@ -19,10 +19,7 @@ the DuckDB oracle can verify spatial operators without a spatial extension):
                 (line dedup, C4 filters, PII, chunking, packing),
                 curation chain, vocab counts, duplicated-substring spans
   spatial-idx : raster→vector run-merge (empty-tile water slabs)
-  temporal    : gap sessionization; as-of join (joinless union+window,
-                oracle = DuckDB's native ASOF JOIN); binned range join
-                (oracle = DuckDB's native inequality join)
-  streaming   : tumbling-window agg (batch twin of the streaming plan)
+  streaming   : tumbling-window agg, batch only (no streaming plan remains)
 
 Column names are aliased identically in Spark and SQL (the driver hashes
 values after sorting columns by name).
@@ -579,7 +576,7 @@ def q_stats_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming batch-twin: tumbling 1h window counts over events."""
+    """Tumbling 1h window counts over events (streaming/events.py)."""
     ev = _read(spark, sf_dir, "events")
     out = windowed_counts_batch(ev, minutes=60)
     return out.select(
@@ -1314,135 +1311,6 @@ def q_vectorize_water(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vectorize_cells(empty)
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (functions/temporal.py): 1-day gap over
-    the events table → per-session aggregates; 1214 sessions / 150 users
-    at sf0.01 (non-vacuous splits). Timestamps exported as exact unix
-    micros; the value sum is per-row micro-quantized to int64 so it
-    is order-independent and engine-exact."""
-    from osmcoastline_spark.functions import temporal as T
-
-    ev = _read(spark, sf_dir, "events").withColumn(
-        # per-row exact micro-quantization: the int64 session sums are
-        # order-independent, unlike round(sum(double), 6)
-        "value", F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
-    )
-    s = T.sessionize(ev, gap_seconds=86400)
-    return s.select(
-        "user_id",
-        "session_idx",
-        F.unix_micros(F.col("session_start").cast("timestamp")).alias("start_us"),
-        F.unix_micros(F.col("session_end").cast("timestamp")).alias("end_us"),
-        "n_events",
-        F.col("sum_value").alias("sum_value_micros"),
-    )
-
-
-def q_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (functions/temporal.py): each click event picks up the
-    latest error value at-or-before it for the same user. The Spark side
-    is the union+window plan (NO join node — pinned by test); the oracle
-    is DuckDB's NATIVE ASOF LEFT JOIN, so the row cross-checks two
-    genuinely different algorithms. Errors deduped to max(value) per
-    (user, ts) so right-side ties are engine-independent; unmatched
-    clicks carry the −1 sentinel (a NULL would round-trip as float64 and
-    trip the dtype-strict gate)."""
-    from osmcoastline_spark.functions import temporal as T
-
-    ev = _read(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("value"))
-    )
-    j = T.asof_join(clicks, errors, on="user_id")
-    return j.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.coalesce("asof_value", F.lit(-1.0)).alias("asof_value"),
-        F.coalesce(F.unix_micros(F.col("asof_ts").cast("timestamp")), F.lit(-1)).alias("asof_ts_us"),
-    )
-
-
-def q_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-window rolling stats (functions/temporal.py): per event,
-    the count and int64-micros value sum of the same user's events in the
-    trailing 24 h (RANGE frame — ONE exchange, no self-join; pinned by
-    test) plus the gap to the previous event. RANGE frames are
-    peer-inclusive so the frame columns are tie-safe by construction; the
-    lag gap is made deterministic by the (ts, event_id) tiebreak. 24 h at
-    ~4 events/user-day keeps the frame non-vacuous (n_window spans 1..8+
-    at sf0.01)."""
-    from osmcoastline_spark.functions import temporal as T
-
-    ev = _read(spark, sf_dir, "events")
-    return T.rolling_stats(ev, window_seconds=86400)
-
-
-def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval×interval overlap join (temporal.interval_join): per-event
-    activity intervals [ts, ts + 1..50 min) × a 120-window maintenance
-    lattice (6 h apart, 90 min wide), half-open overlap semantics with
-    exact int64 overlap lengths. Spark bins both sides and emits each
-    pair exactly once via the first-overlap-bin filter; the oracle is
-    DuckDB's native inequality join — two genuinely different
-    algorithms (the q_range_join posture, two-sided)."""
-    from osmcoastline_spark.functions import temporal as T
-
-    ev = _read(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    left = ev.select(
-        "event_id",
-        F.timestamp_micros(us).alias("lo"),
-        F.timestamp_micros(
-            us + (F.lit(1) + F.col("user_id") % 50) * F.lit(60_000_000)
-        ).alias("hi"),
-    )
-    base_us = 1704067200000000  # 2024-01-01T00:00:00Z
-    win = spark.range(120).select(
-        F.col("id").alias("win_id"),
-        F.timestamp_micros(F.lit(base_us) + F.col("id") * F.lit(21_600_000_000)).alias("lo"),
-        F.timestamp_micros(
-            F.lit(base_us) + F.col("id") * F.lit(21_600_000_000) + F.lit(5_400_000_000)
-        ).alias("hi"),
-    )
-    j = T.interval_join(left, win, bin_width_s=5400.0, prefix="w_")
-    return j.select("event_id", F.col("w_win_id").alias("win_id"), "overlap_us")
-
-
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binned range join (functions/temporal.py:range_join): every click
-    within the 6-hour attribution window [err.ts, err.ts + 6h) after
-    an error by the same user. The Spark side bins both streams and
-    equi-joins on (bin, user) — never the cross product a raw inequality
-    join plans as; the oracle is DuckDB's native inequality join, so the
-    row cross-checks two genuinely different algorithms."""
-    from osmcoastline_spark.functions import temporal as T
-
-    ev = _read(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"),
-        "user_id",
-        F.col("ts").alias("lo"),
-        (F.col("ts").cast("timestamp") + F.expr("INTERVAL 6 HOURS")).alias("hi"),
-    )
-    j = T.range_join(clicks, errors, on="user_id", bin_width_s=3600.0)
-    return j.select(
-        F.col("event_id").alias("click_id"),
-        F.col("ivl_err_id").alias("err_id"),
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.col("ivl_lo").cast("timestamp")).alias("err_ts_us"),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "q_filter_ways": q_filter_ways,
@@ -1503,11 +1371,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_quality_classifier": q_quality_classifier,
         "q_pack_sequences": q_pack_sequences,
         "q_vectorize_water": q_vectorize_water,
-        "q_sessionize": q_sessionize,
-        "q_rolling_stats": q_rolling_stats,
-        "q_asof_events": q_asof_events,
-        "q_range_join": q_range_join,
-        "q_interval_join": q_interval_join,
     }
 
 
@@ -2221,77 +2084,6 @@ v1 AS (SELECT x1, x2, y,
 SELECT x1, min(y) AS y1, x2, max(y) AS y2,
        CAST((x2 - x1 + 1) * (max(y) - min(y) + 1) AS BIGINT) AS ncells
 FROM v1 GROUP BY x1, x2, vrun""",
-        # gap sessionization — window twin of functions/temporal.py
-        "q_sessionize": """
-WITH s0 AS (
-  SELECT user_id, ts, value, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                      > CAST(86400 AS BIGINT) * 1000000
-              THEN 1 ELSE 0 END AS st
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-s1 AS (
-  SELECT *, CAST(sum(st) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-  FROM s0)
-SELECT user_id, session_idx,
-       epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
-       count(*) AS n_events,
-       CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_micros
-FROM s1 GROUP BY user_id, session_idx""",
-        # as-of join — DuckDB's NATIVE ASOF operator as an independent
-        # oracle for the Spark union+window plan
-        "q_asof_events": """
-WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-errors AS (SELECT user_id, ts, max(value) AS value
-           FROM events WHERE event_type = 'error' GROUP BY user_id, ts)
-SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
-       coalesce(r.value, -1.0) AS asof_value,
-       coalesce(epoch_us(r.ts), -1) AS asof_ts_us
-FROM clicks l ASOF LEFT JOIN errors r
-  ON l.user_id = r.user_id AND l.ts >= r.ts""",
-        # trailing-window rolling stats — RANGE-frame twin; the frame
-        # columns are tie-safe (peer-inclusive) and the sum is exact int64
-        "q_rolling_stats": """
-WITH e AS (
-  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-         CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS v
-  FROM events)
-SELECT event_id, user_id, ts_us,
-       count(*) OVER w AS n_window,
-       CAST(sum(v) OVER w AS BIGINT) AS sum_window_micros,
-       coalesce(ts_us - lag(ts_us) OVER (PARTITION BY user_id
-                                         ORDER BY ts_us, event_id),
-                CAST(-1 AS BIGINT)) AS gap_prev_us
-FROM e
-WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-             RANGE BETWEEN CAST(86400 AS BIGINT) * 1000000 PRECEDING
-                   AND CURRENT ROW)""",
-        # native inequality join twin (two-sided sibling of q_range_join)
-        "q_interval_join": """
-            WITH left_iv AS (
-              SELECT event_id, epoch_us(ts) AS lo,
-                     epoch_us(ts) + (1 + user_id % 50) * 60000000 AS hi
-              FROM events WHERE event_id % 10 = 0
-            ),
-            win AS (
-              SELECT t.range AS win_id,
-                     1704067200000000 + t.range * 21600000000 AS lo,
-                     1704067200000000 + t.range * 21600000000 + 5400000000 AS hi
-              FROM range(0, 120) t
-            )
-            SELECT l.event_id, CAST(w.win_id AS BIGINT) AS win_id,
-                   CAST(least(l.hi, w.hi) - greatest(l.lo, w.lo) AS BIGINT) AS overlap_us
-            FROM left_iv l JOIN win w ON l.lo < w.hi AND w.lo < l.hi
-        """,
-        "q_range_join": """
-WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-errs AS (SELECT event_id AS err_id, user_id, ts AS lo, ts + INTERVAL 6 HOUR AS hi
-         FROM events WHERE event_type = 'error')
-SELECT c.event_id AS click_id, e.err_id, c.user_id,
-       epoch_us(c.ts) AS ts_us, epoch_us(e.lo) AS err_ts_us
-FROM clicks c JOIN errs e
-  ON c.user_id = e.user_id AND c.ts >= e.lo AND c.ts < e.hi""",
     }
 
 

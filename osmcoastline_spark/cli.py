@@ -148,7 +148,6 @@ def main(argv: list[str] | None = None) -> int:
         close_distance=args.close_distance,
         max_points_in_polygon=args.max_points,
         bbox_overlap=args.bbox_overlap,
-        split_large_polygons=args.max_points > 0,
         output_rings=args.output_rings,
         output_lines=args.output_lines,
         output_polygons=args.output_polygons,

@@ -61,6 +61,7 @@ from osmcoastline_spark.operators.antarctica import antarctica_window, close_ant
 from osmcoastline_spark.operators.close import close_rings
 from osmcoastline_spark.operators.filter import coastline_ways, tagged_node_errors
 from osmcoastline_spark.operators.intersections import (
+    DEFAULT_CELL_DEG,
     duplicate_segment_counts,
     duplicate_segments,
     intersection_pairs,
@@ -110,12 +111,10 @@ class Options:
     close_distance: float = DEFAULT_CLOSE_DISTANCE
     max_points_in_polygon: int = DEFAULT_MAX_POINTS_IN_POLYGON
     bbox_overlap: float | None = None
-    split_large_polygons: bool = True
     output_rings: bool = False
     output_lines: bool = False
     output_polygons: str = "land"  # land | water | both | none
     water_cell_deg: float = 1.0
-    cell_deg: float = 0.5  # owner-cell rule of the crossing kernels
 
     def effective_overlap(self) -> float:
         if self.bbox_overlap is not None:
@@ -216,7 +215,9 @@ def _meta_tables(spark: SparkSession, opt: Options, res: PipelineResult, t0: flo
             float(opt.effective_overlap()),
             float(opt.close_distance),
             int(opt.max_points_in_polygon),
-            int(bool(opt.split_large_polygons)),
+            # split_large_polygons: the reference turns it off only for -m 0
+            # (options.cpp:156-158)
+            int(opt.max_points_in_polygon > 0),
         )],
         "overlap double, close_distance double, max_points_in_polygons int, "
         "split_large_polygons int",
@@ -379,7 +380,7 @@ def _run_pipeline(
         # crossings, duplicate segments and per-ring duplicate counts in
         # one checkpoint; the duplicate-key count decides whether gap
         # closing reads the per-ring counts
-        return materialize(segment_sweep(segs, edges, opt.cell_deg), n_dup_keys=F.count("k"))
+        return materialize(segment_sweep(segs, edges, DEFAULT_CELL_DEG), n_dup_keys=F.count("k"))
 
     # G12 Antarctica — the ring id was observed at assembly; a resumed
     # run's detection aggregate overlaps the sweep (independent jobs over
@@ -520,7 +521,7 @@ def _run_pipeline(
 
         pring = routed["polygonizable"]
         si_first, _ = materialize(
-            ring_self_intersections(pring, opt.cell_deg, repeated=True)
+            ring_self_intersections(pring, DEFAULT_CELL_DEG, repeated=True)
         )
         error_points.append(
             si_first.select(
@@ -554,7 +555,7 @@ def _run_pipeline(
         # branch (lines/questionable/split/water) is skipped, matching the
         # reference's thrown runtime_error (osmcoastline.cpp:355-417).
         pg_in = routed["polygonizable"]
-        polygonizable = buffer0_triage(pg_in, opt.cell_deg)
+        polygonizable = buffer0_triage(pg_in, DEFAULT_CELL_DEG)
         if polygonizable is not pg_in:
             # repairs rewrote arrays — pin them; the clean identity return
             # rides the existing ring checkpoints (no third array write)
@@ -613,7 +614,7 @@ def _run_pipeline(
                     list(error_lines),
                 )
 
-                if opt.split_large_polygons and opt.max_points_in_polygon > 0:
+                if opt.max_points_in_polygon > 0:
                     # split's round checkpoints observe its output row count
                     # and check_polygons' two counts over the cut pieces
                     polys, split_seen = split_polygons(
@@ -642,7 +643,7 @@ def _run_pipeline(
                     # transform, so the binning cell size must be in
                     # OUTPUT units (meters for 3857 — degree-sized cells
                     # over mercator coords would explode the bbox cover).
-                    cp_cell = opt.cell_deg * (
+                    cp_cell = DEFAULT_CELL_DEG * (
                         1.0 if opt.epsg == 4326 else EXTENT_3857[2] / 180.0
                     )
                     pieces = polys.filter("was_split").drop("was_split")

@@ -6,7 +6,8 @@ partition counts, with adaptive execution off and on one core; so are
 the land, water, line, segment and error tables and the stats of a small
 `islands`-shaped run that splits its polygons. Every Python stage but
 the sweep runs one task per core, so one core against four changes how
-their rows are grouped into tasks."""
+their rows are grouped into tasks. Both runs also compare the `options`
+table and the `meta` table without its wall-clock columns."""
 
 import os
 import pickle
@@ -27,6 +28,8 @@ DIRTY_TABLES = ("error_points", "error_lines", "rings", "lines", "segments")
 # rounds; water then clips split pieces to their owned boxes
 ISLANDS_OPTIONS = Options(output_polygons="both", output_lines=True, max_points_in_polygon=16)
 ISLANDS_TABLES = ("land_polygons", "water_polygons", "lines", "segments", "error_points", "error_lines")
+# the `meta` columns that measure the run rather than its output
+META_WALL_CLOCK = ("timestamp", "runtime", "memory_usage")
 
 CONFIGS = [
     {"spark.sql.shuffle.partitions": "1"},
@@ -36,18 +39,27 @@ CONFIGS = [
 ]
 
 
-def _outcome(spark, nodes, ways) -> dict:
+def _run_outcome(spark, nodes, ways, options, tables) -> dict:
+    """Digests of `tables`, the `options` table and `meta` without its
+    wall-clock columns, plus the stats and exit code of one run."""
     from perfbench.check import digest
 
-    res = run_pipeline(spark, nodes, ways, DIRTY_OPTIONS)
+    res = run_pipeline(spark, nodes, ways, options)
     try:
+        frames = {t: res.tables[t] for t in tables}
+        frames["options"] = res.tables["options"]
+        frames["meta"] = res.tables["meta"].drop(*META_WALL_CLOCK)
         return {
-            **{t: digest(res.tables[t])[1] for t in DIRTY_TABLES},
+            **{t: digest(df)[1] for t, df in frames.items()},
             "stats": res.stats,
             "exit_code": res.exit_code,
         }
     finally:
         res.unpersist()
+
+
+def _outcome(spark, nodes, ways) -> dict:
+    return _run_outcome(spark, nodes, ways, DIRTY_OPTIONS, DIRTY_TABLES)
 
 
 @pytest.fixture(scope="module")
@@ -77,17 +89,7 @@ def test_error_outputs_independent_of_partitioning(spark, dirty_inputs, conf):
 
 
 def _islands_outcome(spark, nodes, ways) -> dict:
-    from perfbench.check import digest
-
-    res = run_pipeline(spark, nodes, ways, ISLANDS_OPTIONS)
-    try:
-        return {
-            **{t: digest(res.tables[t])[1] for t in ISLANDS_TABLES},
-            "stats": res.stats,
-            "exit_code": res.exit_code,
-        }
-    finally:
-        res.unpersist()
+    return _run_outcome(spark, nodes, ways, ISLANDS_OPTIONS, ISLANDS_TABLES)
 
 
 @pytest.fixture(scope="module")

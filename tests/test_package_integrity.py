@@ -262,3 +262,23 @@ def test_pipeline_python_stages_cross_one_arrow_boundary():
                     and node.func.attr in ("mapInPandas", "applyInPandas")
                 ]
     assert callers == [], callers
+
+
+def test_every_options_field_has_a_cli_flag():
+    """Each `Options` field is set by `cli.py`'s one `Options(...)` call: a
+    field no CLI flag reaches is a knob no caller turns."""
+    import dataclasses
+
+    from osmcoastline_spark.plans.pipeline import Options
+
+    with open(os.path.join(os.path.dirname(osmcoastline_spark.__file__), "cli.py")) as f:
+        tree = ast.parse(f.read())
+    calls = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "Options"
+    ]
+    assert len(calls) == 1, len(calls)
+    assert {k.arg for k in calls[0].keywords} == {f.name for f in dataclasses.fields(Options)}
