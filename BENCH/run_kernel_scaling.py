@@ -136,7 +136,7 @@ w2 = shuffle_write_bytes(); sw["locjoin_flat"] = w2 - w1
 dt, n = act(collect_locations(ways_with_locations(coastline_ways(ways), nodes))); res["locjoin"] = [dt, n]
 w3 = shuffle_write_bytes(); sw["locjoin"] = w3 - w2
 segs, edges = slab_checkpoint(ring_segments(rings), cpus)  # input for intersect
-dt, n = act(segment_sweep(segs, edges, 0.5)); res["intersect"] = [dt, n]
+dt, n = act(segment_sweep(segs, edges)); res["intersect"] = [dt, n]
 dt, n = act(classify_container_cells(polys.selectExpr("poly_id as ring_id", "shell_x as xs", "shell_y as ys"), 1.0)); res["polygonize"] = [dt, n]
 dt, n = act(water_polygons(polys, 4.0)); res["water"] = [dt, n]
 # 16x-amplified documents (id-offset copies) so the minhash kernel outruns

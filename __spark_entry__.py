@@ -413,7 +413,7 @@ def q_segment_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     segs, edges = slab_checkpoint(segs, spark.sparkContext.defaultParallelism)
-    pts = intersection_pairs(segment_sweep(segs, edges, cell_deg=0.2))
+    pts = intersection_pairs(segment_sweep(segs, edges))
     return pts.select(F.round("x", 9).alias("ix"), F.round("y", 9).alias("iy"))
 
 

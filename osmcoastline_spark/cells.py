@@ -3,10 +3,9 @@ containment join and of the water tiles.
 
 Cell binning assigns geometries to fixed grid cells (with boundary-cell
 duplication for objects spanning cells), shuffles on the cell id, and does
-exact geometry only within a cell. Segment crossings do not bin: they run
-the reference's sorted sweep (src/coastline_ring_collection.cpp:277,313-316)
-per x-slab (operators/intersections.py), and keep the grid only for their
-owner-cell rule.
+exact geometry only within a cell. Segment crossings use no grid: they
+run the reference's sorted sweep (src/coastline_ring_collection.cpp:277,
+313-316) per x-slab (operators/intersections.py).
 
 Cells are pure arithmetic (portable to DuckDB SQL for the oracle checks):
 
@@ -96,17 +95,3 @@ def morton_interleave_expr(
         )
     return code
 
-
-def with_salt(df, salt_col: str = "salt", buckets: int = 16):
-    """Deterministic salt for skew-prone keys, written to `salt_col`:
-    salt = positive hash of the row's content modulo `buckets`. Used to
-    split mega-cells (coastline density skew) before per-cell work that
-    doesn't need cell completeness. Map-typed columns are excluded from
-    the hash (Spark's hash() rejects MapType — e.g. the nodes table's
-    tags column would otherwise make this raise)."""
-    from pyspark.sql.types import MapType
-
-    cols = [f.name for f in df.schema.fields if not isinstance(f.dataType, MapType)]
-    if not cols:
-        raise ValueError("with_salt: no hashable (non-map) columns")
-    return df.withColumn(salt_col, F.pmod(F.hash(*cols), F.lit(buckets)))

@@ -19,11 +19,10 @@ all slabs in parallel, in one mapInArrow stage (`segment_sweep`):
     rings made only of duplicated segments.
 
 The exact intersection arithmetic is the reference's
-(geom.segment_intersections, src/coastline_ring_collection.cpp:202-230).
-A crossing counts only when its point falls in a grid cell (`cell_deg`)
-that both segments' bbox covers share: the owner-cell rule of the
-cell-binned join this sweep replaced, kept so the points stay bit for bit
-the same (rounding can put a point just outside a segment's cells).
+(geom.segment_intersections, src/coastline_ring_collection.cpp:202-230),
+and like the reference the sweep uses no grid: every candidate pair whose
+bboxes overlap is tested, and the slab clamp of `slab_crossings` is the
+only dedup.
 
 Ring validity (G5/G13) needs only a ring's crossings with itself, so
 `ring_self_intersections` runs the same sweep with the ring as the group,
@@ -41,8 +40,6 @@ from pyspark.sql import functions as F
 
 from osmcoastline_spark import geom
 from osmcoastline_spark.util import arrow_stage, list_views, materialize
-
-DEFAULT_CELL_DEG = 0.5
 
 # candidate segment pairs one step of a sweep holds at once: bounds the
 # kernel's memory however large a ring or a slab is
@@ -163,9 +160,7 @@ def _partition_keys(n: int) -> list[int]:
     return [keys[s] for s in range(n)]
 
 
-def segment_sweep(
-    segments: DataFrame, edges: list[float], cell_deg: float = DEFAULT_CELL_DEG
-) -> DataFrame:
+def segment_sweep(segments: DataFrame, edges: list[float]) -> DataFrame:
     """J5 and J6 in one pass: every crossing of two segments and every
     duplicate segment of `segments` (ring_id, idx, x1, y1, x2, y2 as
     `ring_segments` gives them), swept per x-slab of `edges`.
@@ -192,9 +187,7 @@ def segment_sweep(
         t = pa.Table.from_batches(batches)
         c = {name: t.column(name).to_numpy() for name in t.column_names}
         slab, xy = c["slab"], (c["x1"], c["y1"], c["x2"], c["y2"])
-        for a_ring, b_ring, x, y in slab_crossings(
-            edges_np, slab, c["ring_id"], c["idx"], *xy, cell_deg=cell_deg
-        ):
+        for a_ring, b_ring, x, y in slab_crossings(edges_np, slab, c["ring_id"], c["idx"], *xy):
             yield _sweep_columns(a_ring=a_ring, b_ring=b_ring, x=x, y=y)
         (x1, y1, x2, y2, k), (ring, ndup) = slab_duplicates(edges_np, slab, c["ring_id"], *xy)
         yield _sweep_columns(x1=x1, y1=y1, x2=x2, y2=y2, k=k)
@@ -271,7 +264,6 @@ def slab_crossings(
     y1: np.ndarray,
     x2: np.ndarray,
     y2: np.ndarray,
-    cell_deg: float = DEFAULT_CELL_DEG,
     chunk: int = PAIR_CHUNK,
 ) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]]:
     """The crossings of `segment_sweep`'s kernel as (a_ring, b_ring, x, y)
@@ -283,12 +275,13 @@ def slab_crossings(
     `a` is the lower (ring, idx) of a pair. A pair is found in every slab
     both segments reach and emitted in one: the slab of its point's x,
     clamped to the slabs they share, so a point that rounding puts just
-    outside them is neither lost nor emitted twice."""
+    outside them is neither lost nor emitted twice. The clamp is the only
+    dedup: no grid decides which crossings count."""
     o = np.lexsort((idx, ring, slab))
     slab, ring, x1, y1, x2, y2 = slab[o], ring[o], x1[o], y1[o], x2[o], y2[o]
     lo = np.searchsorted(edges, x1, side="right")
     hi = np.searchsorted(edges, x2, side="right")
-    for a, b, px, py in _crossings(slab, x1, y1, x2, y2, cell_deg, chunk):
+    for a, b, px, py in _crossings(slab, x1, y1, x2, y2, chunk):
         home = np.searchsorted(edges, px, side="right")
         own = np.clip(home, np.maximum(lo[a], lo[b]), np.minimum(hi[a], hi[b])) == slab[a]
         if own.any():
@@ -363,36 +356,24 @@ def _candidate_pairs(group, x1, y1, x2, y2, chunk: int) -> Iterator[tuple[np.nda
             yield order[p], order[q]
 
 
-def _crossings(group, x1, y1, x2, y2, cell_deg: float, chunk: int):
+def _crossings(group, x1, y1, x2, y2, chunk: int):
     """Every crossing of two segments of one group, as (a, b, x, y) arrays
     per chunk of candidate pairs; a < b index the segments, normalized as
     `ring_segments` normalizes them.
 
-    `a` is the segment that comes first in the arrays, the bbox test and
+    `a` is the segment that comes first in the arrays; the bbox test and
     `geom.segment_intersections` decide a crossing (which rejects
-    identical and endpoint-sharing pairs), and a crossing counts only when
-    its point falls in a cell both segments' bbox covers share (the
-    owner-cell rule)."""
+    identical and endpoint-sharing pairs), with no cell rule: each
+    candidate pair comes once, so each crossing does."""
     if len(group) == 0:
         return
     ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
-    # bbox cover of every segment, in cells of cell_deg
-    cx_lo = np.floor((x1 + 180.0) / cell_deg)
-    cx_hi = np.floor((x2 + 180.0) / cell_deg)
-    cy_lo = np.floor((ylo + 90.0) / cell_deg)
-    cy_hi = np.floor((yhi + 90.0) / cell_deg)
     for i, j in _candidate_pairs(group, x1, y1, x2, y2, chunk):
         a, b = np.minimum(i, j), np.maximum(i, j)
         near = (ylo[a] <= yhi[b]) & (ylo[b] <= yhi[a]) & (x1[a] <= x2[b]) & (x1[b] <= x2[a])
         a, b = a[near], b[near]
         mask, px, py = geom.segment_intersections(
             x1[a], y1[a], x2[a], y2[a], x1[b], y1[b], x2[b], y2[b]
-        )
-        cx = np.floor((px + 180.0) / cell_deg)
-        cy = np.floor((py + 90.0) / cell_deg)
-        mask &= (
-            (cx >= np.maximum(cx_lo[a], cx_lo[b])) & (cx <= np.minimum(cx_hi[a], cx_hi[b]))
-            & (cy >= np.maximum(cy_lo[a], cy_lo[b])) & (cy <= np.minimum(cy_hi[a], cy_hi[b]))
         )
         if mask.any():
             yield a[mask], b[mask], px[mask], py[mask]
@@ -411,7 +392,6 @@ def ring_crossing_points(
     offsets: np.ndarray,
     xs: np.ndarray,
     ys: np.ndarray,
-    cell_deg: float = DEFAULT_CELL_DEG,
     chunk: int = PAIR_CHUNK,
 ) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Every same-ring crossing of a batch of rings, as (ring, x, y) arrays
@@ -421,13 +401,15 @@ def ring_crossing_points(
     Same rows as the same-ring rows `segment_sweep` finds over
     `ring_segments` of the rings, bit for bit: the ring is the sweep's
     group, and segments are in (ring, idx) order, so `a` is the
-    lower-index segment of a pair."""
+    lower-index segment of a pair. A ring is one group, so every pair of
+    its segments is tested once: no slab clamp and no grid cell decide
+    which crossings count."""
     seg, ring = _heads(np.asarray(offsets, dtype=np.int64))
     ax, ay, bx, by = xs[seg], ys[seg], xs[seg + 1], ys[seg + 1]
     fwd = (ax < bx) | ((ax == bx) & (ay <= by))
     x1, y1 = np.where(fwd, ax, bx), np.where(fwd, ay, by)
     x2, y2 = np.where(fwd, bx, ax), np.where(fwd, by, ay)
-    for a, _b, px, py in _crossings(ring, x1, y1, x2, y2, cell_deg, chunk):
+    for a, _b, px, py in _crossings(ring, x1, y1, x2, y2, chunk):
         yield ring[a], px, py
 
 
@@ -456,9 +438,7 @@ def _first_points(parts: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return r[first], x[first], y[first]
 
 
-def ring_self_intersections(
-    rings: DataFrame, cell_deg: float = DEFAULT_CELL_DEG, repeated: bool = False
-) -> DataFrame:
+def ring_self_intersections(rings: DataFrame, repeated: bool = False) -> DataFrame:
     """G13 backbone: one (ring_id, x, y) row per ring of `rings` (ring_id,
     xs, ys) that crosses itself — or, with `repeated`, repeats an interior
     coordinate — at its lexicographic min (x, y) such point, the same
@@ -480,7 +460,7 @@ def ring_self_intersections(
             if not np.array_equal(offsets, y_offsets):
                 raise ValueError("ring_self_intersections: xs and ys lengths differ")
             # reduce each chunk's crossings to per-ring minima as they come
-            parts = [_first_points([p]) for p in ring_crossing_points(offsets, xs, ys, cell_deg)]
+            parts = [_first_points([p]) for p in ring_crossing_points(offsets, xs, ys)]
             if repeated:
                 parts.append(_repeated_points(offsets, xs, ys))
             r, x, y = _first_points(parts)

@@ -186,7 +186,7 @@ def buffer0_repair(xs: list, ys: list) -> tuple[list, list] | None:
     return rx, ry
 
 
-def buffer0_triage(rings: DataFrame, cell_deg: float = 0.5) -> DataFrame:
+def buffer0_triage(rings: DataFrame) -> DataFrame:
     """Filter/repair polygonizable rings before polygonization.
 
     Input/output columns: ring_id, node_ids, xs, ys, nways, fixed, lead,
@@ -211,7 +211,7 @@ def buffer0_triage(rings: DataFrame, cell_deg: float = 0.5) -> DataFrame:
     flagged_ids = (
         rings.filter(bad)
         .select("ring_id")
-        .unionByName(ring_self_intersections(rings.filter(~bad), cell_deg).select("ring_id"))
+        .unionByName(ring_self_intersections(rings.filter(~bad)).select("ring_id"))
     )
     # the id set is tiny (usually empty) while `rings` carries full
     # coordinate arrays: counting it while it is checkpointed decides
@@ -295,7 +295,6 @@ def check_counts(suspect_col: str) -> dict:
 
 def check_polygons(
     polys: DataFrame,
-    cell_deg: float = 0.5,
     suspect_col: str | None = None,
     counts: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, int]:
@@ -366,7 +365,7 @@ def check_polygons(
             .alias("ys"),
         )
         # the scanned rows exclude base_flag's, so the union needs no distinct
-        crossing_ids = ring_self_intersections(shells, cell_deg).select(
+        crossing_ids = ring_self_intersections(shells).select(
             F.col("ring_id").alias("poly_id")
         )
         flagged_ids, seen = materialize(

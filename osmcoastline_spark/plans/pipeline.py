@@ -61,7 +61,6 @@ from osmcoastline_spark.operators.antarctica import antarctica_window, close_ant
 from osmcoastline_spark.operators.close import close_rings
 from osmcoastline_spark.operators.filter import coastline_ways, tagged_node_errors
 from osmcoastline_spark.operators.intersections import (
-    DEFAULT_CELL_DEG,
     duplicate_segment_counts,
     duplicate_segments,
     intersection_pairs,
@@ -380,7 +379,7 @@ def _run_pipeline(
         # crossings, duplicate segments and per-ring duplicate counts in
         # one checkpoint; the duplicate-key count decides whether gap
         # closing reads the per-ring counts
-        return materialize(segment_sweep(segs, edges, DEFAULT_CELL_DEG), n_dup_keys=F.count("k"))
+        return materialize(segment_sweep(segs, edges), n_dup_keys=F.count("k"))
 
     # G12 Antarctica — the ring id was observed at assembly; a resumed
     # run's detection aggregate overlaps the sweep (independent jobs over
@@ -520,9 +519,7 @@ def _run_pipeline(
         from osmcoastline_spark.operators.polygonize import _area2_expr
 
         pring = routed["polygonizable"]
-        si_first, _ = materialize(
-            ring_self_intersections(pring, DEFAULT_CELL_DEG, repeated=True)
-        )
+        si_first, _ = materialize(ring_self_intersections(pring, repeated=True))
         error_points.append(
             si_first.select(
                 F.col("ring_id").alias("osm_id"),
@@ -555,7 +552,7 @@ def _run_pipeline(
         # branch (lines/questionable/split/water) is skipped, matching the
         # reference's thrown runtime_error (osmcoastline.cpp:355-417).
         pg_in = routed["polygonizable"]
-        polygonizable = buffer0_triage(pg_in, DEFAULT_CELL_DEG)
+        polygonizable = buffer0_triage(pg_in)
         if polygonizable is not pg_in:
             # repairs rewrote arrays — pin them; the clean identity return
             # rides the existing ring checkpoints (no third array write)
@@ -639,13 +636,7 @@ def _run_pipeline(
                     # the strictly-monotonic 3857 transform, so cutting is
                     # the only step that can introduce invalidity — on
                     # unsplit polygons the reference's IsValid loop finds
-                    # nothing by construction. Runs AFTER the SRS
-                    # transform, so the binning cell size must be in
-                    # OUTPUT units (meters for 3857 — degree-sized cells
-                    # over mercator coords would explode the bbox cover).
-                    cp_cell = DEFAULT_CELL_DEG * (
-                        1.0 if opt.epsg == 4326 else EXTENT_3857[2] / 180.0
-                    )
+                    # nothing by construction.
                     pieces = polys.filter("was_split").drop("was_split")
                     untouched = polys.filter(~F.col("was_split")).drop(
                         "was_split", "cut_suspect"
@@ -656,7 +647,6 @@ def _run_pipeline(
                     # the all-clean case costs no job at all
                     checked, cp_warnings = check_polygons(
                         pieces,
-                        cp_cell,
                         suspect_col="cut_suspect",
                         counts=(split_seen["nb"], split_seen["ns"]),
                     )

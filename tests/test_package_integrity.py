@@ -88,10 +88,11 @@ def _script_trees(path: str) -> list[ast.Module]:
 
 def _dangling_imports(tree: ast.Module) -> tuple[list[str], int]:
     """Every `osmcoastline_spark` module the program imports, every name
-    it imports from one, every attribute it reads off an imported
-    module, and every keyword it passes to an imported package callable
-    whose signature lacks it (callables taking **kwargs accept any), that
-    does not resolve; and the number of keywords checked."""
+    it imports from one and every attribute it reads off an imported
+    module that does not resolve, and every call of an imported package
+    callable whose signature cannot bind the call's positional count and
+    keywords (calls passing `*` or `**` arguments are skipped); and the
+    number of arguments checked."""
     bad: list[str] = []
     modules: dict[str, types.ModuleType] = {}  # local alias -> module
     names: dict[str, object] = {}  # local name -> imported package object
@@ -151,21 +152,22 @@ def _dangling_imports(tree: ast.Module) -> tuple[list[str], int]:
             bad.append(f"{node.lineno}: {modules[node.value.id].__name__} has no {node.attr}")
         elif isinstance(node, ast.Call):
             fn = target(node.func)
-            kws = [k.arg for k in node.keywords if k.arg is not None]
-            if fn is None or isinstance(fn, types.ModuleType) or not kws:
+            if (
+                fn is None
+                or isinstance(fn, types.ModuleType)
+                or any(isinstance(a, ast.Starred) for a in node.args)
+                or any(k.arg is None for k in node.keywords)
+            ):
                 continue
             try:
-                params = inspect.signature(fn).parameters
+                sig = inspect.signature(fn)
             except (TypeError, ValueError):
                 continue
-            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
-                continue
-            checked += len(kws)
-            bad += [
-                f"{node.lineno}: {getattr(fn, '__name__', fn)}() takes no keyword {k}"
-                for k in kws
-                if k not in params
-            ]
+            checked += len(node.args) + len(node.keywords)
+            try:
+                sig.bind_partial(*node.args, **{k.arg: k.value for k in node.keywords})
+            except TypeError as e:
+                bad.append(f"{node.lineno}: {getattr(fn, '__name__', fn)}(): {e}")
     return bad, checked
 
 

@@ -1,9 +1,9 @@
 """Segment crossings: the x-slab sweep (intersections.segment_sweep) and
 ring validity as a per-ring kernel (intersections.ring_self_intersections)
-give the same crossing points, duplicate segments and per-ring duplicate
-counts as the cell-binned join, the groupBy and the semi-join they
-replaced, kept here as the reference. Also the
-job cost of the sweep and of the triage, host-independent ring areas, and
+give the same crossing points as an exact all-pairs reference, and the
+same duplicate segments and per-ring duplicate counts as the groupBy and
+the semi-join they replaced, kept here as the reference. Also the job
+cost of the sweep and of the triage, host-independent ring areas, and
 job groups on pool threads."""
 
 import json
@@ -18,7 +18,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osmcoastline_spark.cells import bbox_cover_cells_expr
+from osmcoastline_spark import geom
 from osmcoastline_spark.operators.intersections import (
     _partition_keys,
     _spark_hash_int,
@@ -38,7 +38,7 @@ from osmcoastline_spark.operators.repair import buffer0_triage
 from osmcoastline_spark.util import run_concurrently
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-CELL = 0.5
+GRID = 0.5
 
 
 def _figure_eight(x, y, sx, sy, n):
@@ -48,18 +48,18 @@ def _figure_eight(x, y, sx, sy, n):
 
 def _rings(seed: int) -> list[tuple[list, list]]:
     """Open and closed rings built to hit the sweep's edge cases: origins
-    and most vertices sit on the 0.25 grid, so segments run along cell
-    borders (CELL = 0.5), cross exactly there, share minx, run
-    vertically and overlap collinearly. A comb crosses a cell border
-    many times; a shallow crossing at the border through 0 often rounds
-    to a point outside the cells one segment covers, which the join's
-    owner-cell rule drops."""
+    sit on multiples of GRID and most vertices on the 0.25 grid, so
+    segments run along grid lines, cross exactly there, share minx, run
+    vertically and overlap collinearly. A comb crosses a grid line many
+    times; a shallow crossing of two nearly parallel edges at (0, 0)
+    often rounds to a point just beside 0, across the slab edge
+    `_edge_sets` puts there and outside the bbox of one of its segments."""
     rng = np.random.default_rng(seed)
     out = []
     for k in range(120):
-        ox, oy = rng.integers(-8, 8) * CELL, rng.integers(-8, 8) * CELL
+        ox, oy = rng.integers(-8, 8) * GRID, rng.integers(-8, 8) * GRID
         kind = k % 10
-        if kind == 0:  # figure eight, crossing near or on a cell border
+        if kind == 0:  # figure eight, crossing near or on a grid line
             xs, ys = _figure_eight(ox, oy, rng.uniform(0.3, 2.0), rng.uniform(0.2, 1.5),
                                    int(rng.integers(8, 60)))
             xs, ys = list(xs), list(ys)
@@ -82,12 +82,12 @@ def _rings(seed: int) -> list[tuple[list, list]]:
             m = int(rng.integers(4, 30))
             xs = list(ox + rng.integers(-4, 5, size=m) * 0.25)
             ys = list(oy + rng.integers(-4, 5, size=m) * 0.25)
-        elif kind == 6:  # noisy star across cell borders
+        elif kind == 6:  # noisy star across grid lines
             m = int(rng.integers(10, 120))
             t = np.linspace(0, 2 * np.pi, m, endpoint=False)
             r = rng.uniform(0.2, 1.6, size=m)
             xs, ys = list(ox + r * np.cos(t)), list(oy + r * np.sin(t))
-        elif kind == 7:  # comb on a cell border, vertical or horizontal
+        elif kind == 7:  # comb on a grid line, vertical or horizontal
             m = int(rng.integers(6, 30))
             along = np.sort(rng.uniform(-1, 1, size=m))
             across = rng.uniform(0.05, 1, size=m) * np.where(np.arange(m) % 2, 1, -1)
@@ -126,93 +126,37 @@ def _numpy_points(rings, chunk):
     xs = np.array([v for r in rings for v in r[0]], dtype=np.float64)
     ys = np.array([v for r in rings for v in r[1]], dtype=np.float64)
     rows = []
-    for r, x, y in ring_crossing_points(offsets, xs, ys, CELL, chunk=chunk):
+    for r, x, y in ring_crossing_points(offsets, xs, ys, chunk=chunk):
         rows += zip(r.tolist(), x.tolist(), y.tolist())
     return _bits(rows)
 
 
-def _cell_join(segments, cell_deg):
-    """All crossing segment pairs as (a_ring, b_ring, x, y): the
-    cell-binned self-join the x-slab sweep replaced. Segments are binned to
-    the grid cells their bbox covers, self-joined on the cell with
-    a_id < b_id over the composite (ring_id, idx) id, and the exact
-    arithmetic runs per candidate; a point is emitted only by the cell
-    that contains it (owner-cell rule)."""
-    covered = segments.withColumn("seg_id", F.struct("ring_id", "idx")).withColumn(
-        "cell",
-        F.explode(
-            bbox_cover_cells_expr(
-                F.least("x1", "x2"), F.least("y1", "y2"),
-                F.greatest("x1", "x2"), F.greatest("y1", "y2"),
-                cell_deg,
-            )
-        ),
-    )
-
-    def side(p):
-        return covered.select(
-            "cell",
-            F.col("ring_id").alias(f"{p}_ring"),
-            F.col("seg_id").alias(f"{p}_id"),
-            *(F.col(c).alias(f"{p}{c}") for c in ("x1", "y1", "x2", "y2")),
-        )
-
-    a, b = side("a"), side("b")
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("a_id") < F.col("b_id"))
-        # identical segments are 'overlap', not 'intersection'
-        .filter(
-            (F.col("ax1") != F.col("bx1"))
-            | (F.col("ay1") != F.col("by1"))
-            | (F.col("ax2") != F.col("bx2"))
-            | (F.col("ay2") != F.col("by2"))
-        )
-        .filter(
-            (F.least("ax1", "ax2") <= F.greatest("bx1", "bx2"))
-            & (F.least("bx1", "bx2") <= F.greatest("ax1", "ax2"))
-            & (F.least("ay1", "ay2") <= F.greatest("by1", "by2"))
-            & (F.least("by1", "by2") <= F.greatest("ay1", "ay2"))
-        )
-    )
-
-    def exact(it):
-        from osmcoastline_spark import geom
-
-        for pdf in it:
-            mask, ix, iy = geom.segment_intersections(
-                *(pdf[p + c].to_numpy() for p in "ab" for c in ("x1", "y1", "x2", "y2"))
-            )
-            cx = np.floor((ix + 180.0) / cell_deg).astype(np.int64)
-            cy = np.floor((iy + 90.0) / cell_deg).astype(np.int64)
-            keep = mask & (cx * 1_000_000 + cy == pdf["cell"].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "a_ring": pdf["a_ring"].to_numpy()[keep],
-                    "b_ring": pdf["b_ring"].to_numpy()[keep],
-                    "x": ix[keep],
-                    "y": iy[keep],
-                }
-            )
-
-    return pairs.drop("a_id", "b_id").mapInPandas(
-        exact, "a_ring long, b_ring long, x double, y double"
-    )
+def _all_pairs(seg: pd.DataFrame) -> list[tuple]:
+    """Every crossing of two segments as (a_ring, b_ring, x, y): the exact
+    reference, with no sweep, bbox test or grid. Every pair i < j of the
+    segments in (ring_id, idx) order goes through
+    `geom.segment_intersections`, `a` first, as the kernels order a pair."""
+    seg = seg.sort_values(["ring_id", "idx"])
+    ring = seg["ring_id"].to_numpy()
+    xy = [seg[c].to_numpy() for c in ("x1", "y1", "x2", "y2")]
+    n, rows = len(ring), []
+    for s in range(0, n, 64):
+        i, j = np.nonzero(np.arange(s, min(s + 64, n))[:, None] < np.arange(n))
+        i += s
+        mask, px, py = geom.segment_intersections(*(c[i] for c in xy), *(c[j] for c in xy))
+        rows += zip(*(v[mask].tolist() for v in (ring[i], ring[j], px, py)))
+    return rows
 
 
-def _join_rows(df):
-    """Same-ring rows of the cell-binned join."""
-    return (
-        _cell_join(ring_segments(df), CELL)
-        .filter(F.col("a_ring") == F.col("b_ring"))
-        .select(F.col("a_ring").alias("ring_id"), "x", "y")
-    )
+def _same_ring_rows(df) -> list[tuple]:
+    """(ring_id, x, y) of the reference's same-ring crossings."""
+    return [(a, x, y) for a, b, x, y in _all_pairs(ring_segments(df).toPandas()) if a == b]
 
 
 @pytest.mark.parametrize("seed", [1, 7, 42])
 def test_kernel_points_equal_join_same_ring_rows(spark, seed):
     rings = _rings(seed)
-    want = _bits(_join_rows(_frame(spark, rings)).collect())
+    want = _bits(_same_ring_rows(_frame(spark, rings)))
     assert len({r for r, _x, _y in want}) > 30  # the shapes do cross
     assert _numpy_points(rings, chunk=1) == want
     assert _numpy_points(rings, chunk=1 << 40) == want
@@ -221,14 +165,14 @@ def test_kernel_points_equal_join_same_ring_rows(spark, seed):
 @pytest.mark.parametrize("seed", [3, 42])
 def test_kernel_first_point_per_ring(spark, seed):
     df = _frame(spark, _rings(seed))
-    join = _join_rows(df)
+    ref = spark.createDataFrame(_same_ring_rows(df), "ring_id long, x double, y double")
     first = lambda rows: (  # noqa: E731
         rows.groupBy("ring_id").agg(F.min(F.struct("x", "y")).alias("p"))
         .select("ring_id", "p.x", "p.y")
     )
-    got = ring_self_intersections(df, CELL).collect()
+    got = ring_self_intersections(df).collect()
     assert len(got) == len({r.ring_id for r in got})
-    assert _bits(got) == _bits(first(join).collect())
+    assert _bits(got) == _bits(first(ref).collect())
 
     # with `repeated`: also rings repeating a coordinate among all points
     # but the last, as the grouped explode of the earlier rings-mode path
@@ -241,18 +185,18 @@ def test_kernel_first_point_per_ring(spark, seed):
         .filter("count > 1")
         .select("ring_id", "x", "y")
     )
-    got = ring_self_intersections(df, CELL, repeated=True).collect()
-    assert _bits(got) == _bits(first(join.unionByName(dups)).collect())
+    got = ring_self_intersections(df, repeated=True).collect()
+    assert _bits(got) == _bits(first(ref.unionByName(dups)).collect())
 
 
 def test_kernel_sliced_batches(spark):
     """Arrow batches that are slices of one array share its child values:
     results must not depend on the batch size."""
     df = _frame(spark, _rings(5)).coalesce(1)
-    want = _bits(ring_self_intersections(df, CELL).collect())
+    want = _bits(ring_self_intersections(df).collect())
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        assert _bits(ring_self_intersections(df, CELL).collect()) == want
+        assert _bits(ring_self_intersections(df).collect()) == want
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
@@ -333,8 +277,8 @@ def _ring_sums(rows) -> dict:
 
 @pytest.mark.parametrize("case", [1, 7, 42, "dirty"])
 def test_sweep_equals_cell_join_and_group_by(spark, case):
-    """The slab kernel, on numpy and in Spark, finds exactly the cell
-    join's crossings (as a multiset, bit for bit), the groupBy's
+    """The slab kernel, on numpy and in Spark, finds exactly the all-pairs
+    reference's crossings (as a multiset, bit for bit), the groupBy's
     duplicate segments and, per ring, the number of its segments the
     semi-join with those keys keeps, for any slab edges: one slab, edges
     on segment endpoints, an edge under a vertical segment, and many
@@ -343,7 +287,7 @@ def test_sweep_equals_cell_join_and_group_by(spark, case):
     rings = _sweep_case(case)
     segs = ring_segments(_frame(spark, rings)).localCheckpoint()
     seg = segs.toPandas()
-    want = _pair_bits(_cell_join(segs, CELL).collect())
+    want = _pair_bits(_all_pairs(seg))
     keys = ["x1", "y1", "x2", "y2"]
     dup_keys = segs.groupBy(*keys).agg(F.count("*").alias("k")).filter("k > 1")
     want_dup = _dup_bits(dup_keys.collect())
@@ -364,7 +308,7 @@ def test_sweep_equals_cell_join_and_group_by(spark, case):
         for part in range(3):
             slab, ring, idx, *xy = (a[rows[0] % 3 == part] for a in rows)
             chunk = 7 if name == "quantiles" else 1 << 16
-            for r in slab_crossings(e, slab, ring, idx, *xy, cell_deg=CELL, chunk=chunk):
+            for r in slab_crossings(e, slab, ring, idx, *xy, chunk=chunk):
                 got += zip(*r)
             dups, per_ring = slab_duplicates(e, slab, ring, *xy)
             got_dup += zip(*dups)
@@ -373,7 +317,7 @@ def test_sweep_equals_cell_join_and_group_by(spark, case):
         assert _dup_bits(got_dup) == want_dup, name
         assert _ring_sums(got_rings) == want_rings, name
 
-        sweep = segment_sweep(segs, edges, CELL).localCheckpoint()
+        sweep = segment_sweep(segs, edges).localCheckpoint()
         assert _pair_bits(intersection_pairs(sweep).collect()) == want, name
         assert _dup_bits(duplicate_segment_counts(sweep).collect()) == want_dup, name
         assert _ring_sums(ring_duplicate_counts(sweep).collect()) == want_rings, name
@@ -407,7 +351,7 @@ def test_sweep_job_count(spark, dups):
     df = _frame(spark, rings).localCheckpoint(eager=True)
     j0 = _next_job_id(spark)
     segs, edges = slab_checkpoint(ring_segments(df), 4)
-    sweep, swept = materialize(segment_sweep(segs, edges, CELL), n_dup_keys=F.count("k"))
+    sweep, swept = materialize(segment_sweep(segs, edges), n_dup_keys=F.count("k"))
     assert _next_job_id(spark) - j0 <= 3
     assert len(edges) == 3
     assert swept["n_dup_keys"] == (5 * 40 if dups else 0)
@@ -439,17 +383,30 @@ def test_triage_clean_rings_cost_one_job(spark):
         clean.append(([float(v) for v in xs], [float(v) for v in ys]))
     rings = _polygonizable(spark, clean)
     j0 = _next_job_id(spark)
-    out = buffer0_triage(rings, CELL)
+    out = buffer0_triage(rings)
     assert _next_job_id(spark) - j0 <= 1
     assert out is rings
 
     # a figure eight among them is flagged and repaired to one lobe
     xs, ys = _figure_eight(200.0, 0.0, 1.0, 0.8, 48)
     eight = ([float(v) for v in xs] + [float(xs[0])], [float(v) for v in ys] + [float(ys[0])])
-    out = buffer0_triage(_polygonizable(spark, clean + [eight]), CELL)
+    out = buffer0_triage(_polygonizable(spark, clean + [eight]))
     got = {r.ring_id: r.npoints for r in out.collect()}
     assert set(got) == set(range(41))
     assert got[40] < len(eight[0])
+
+    # a sliver whose only crossing rounds to a point beside 0, just outside
+    # the bbox of one of its segments, is flagged and, unrepairable, dropped
+    sliver = (
+        [-0.4852079434741394, 0.669465798960377, 0.4247030917058705, 0.0, -0.4852079434741394],
+        [-0.25149167753754453, 0.3469957141036197, 0.22013096534219118, 0.0, -0.25149167753754453],
+    )
+    rings = _polygonizable(spark, clean + [sliver])
+    got = _bits(ring_self_intersections(rings).collect())
+    assert got == _bits([(40, -3.4939553706925253e-06, -1.8109775596908406e-06)])
+    out = buffer0_triage(rings)
+    assert out is not rings
+    assert {r.ring_id for r in out.collect()} == set(range(40))
 
 
 def test_run_concurrently_jobs_carry_callers_group(spark):

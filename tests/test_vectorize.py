@@ -101,17 +101,3 @@ def test_vectorize_chunked_matches_flat(spark):
         assert got == flat, (chunk, width)
     assert _covered(flat) == pts
 
-
-def test_with_salt_skips_map_columns(spark):
-    """with_salt must hash around MapType columns (Spark's hash() rejects
-    them) and honor the salt output column name."""
-    from osmcoastline_spark.cells import with_salt
-
-    df = spark.createDataFrame(
-        [(1, {"natural": "coastline"}), (2, {"x": "y"})],
-        "node_id long, tags map<string,string>",
-    )
-    out = with_salt(df, "s", 4)
-    rows = out.collect()
-    assert "s" in out.columns
-    assert all(0 <= r.s < 4 for r in rows)
